@@ -1,9 +1,9 @@
 """Exact-integer PageRank — the oracle-replayable graph iteration.
 
-`operators/graph.pagerank` is rows-only by necessity: each round sums
-float contributions whose cross-partition order is engine-dependent.
-This twin runs the same iteration in pure integer arithmetic (the
-round-7 determinism recipe applied to the graph blocker class):
+A float PageRank cannot be hash-checked: each round sums float
+contributions whose cross-partition order is engine-dependent. This
+core runs the iteration in pure integer arithmetic (the round-7
+determinism recipe applied to the graph blocker class):
 
 - rank mass lives in integer units of `total` (default 1e12) — the
   seed is `total // n` per vertex;
@@ -24,9 +24,10 @@ MATERIALIZED CTE stages (`pagerank_exact_oracle_sql` takes the edge
 CTE from the caller, so the near-dup graph query reuses the same
 shingle/LSH/verify SQL its siblings already replay). `tests/
 test_graph_exact.py` pins rank parity vs a Python integer reference,
-agreement of the top-rank ordering with the float PageRank, and
-bit-determinism under repartitioning. The float operator stays for
-conventional parity (Σ rank = 1 exactly via dangling redistribution).
+agreement with a dense float numpy PageRank, and bit-determinism under
+repartitioning. Consumers that want a fraction of unit mass divide by
+`total` (`doc_simgraph_pagerank`): an exact integer below 2^53 over
+1e12 is one correctly rounded IEEE quotient on every engine.
 """
 
 from __future__ import annotations

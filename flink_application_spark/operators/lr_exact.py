@@ -1,11 +1,11 @@
 """Exact-integer (ppm-quantized) linear-classifier training — the
 oracle-replayable TRAINING loop for the quality-classifier stage.
 
-`operators/lr.py` (softmax GD) is rows-only by necessity: its gradient
-partials are float sums with engine-dependent cross-partition order,
-and softmax's exp() itself differs between engines in the last ulp.
-This variant removes BOTH float hazards — the round-7 determinism
-recipe (`operators/kmeans_exact.py`) applied to gradient descent:
+A float softmax trainer cannot be hash-checked: its gradient partials
+are float sums with engine-dependent cross-partition order, and
+softmax's exp() itself differs between engines in the last ulp. This
+trainer removes BOTH float hazards — the round-7 determinism recipe
+(`operators/kmeans_exact.py`) applied to gradient descent:
 
 - the model is a one-vs-all LINEAR classifier trained on squared loss
   (a ridge classifier, scikit-learn's ``RidgeClassifier`` shape): the
@@ -23,9 +23,9 @@ recipe (`operators/kmeans_exact.py`) applied to gradient descent:
   round() (identical IEEE ops both engines — the kmeans-proven pair);
 - gradient partials are exact integer sums Σ rq·x (associative —
   order-free; summed into DECIMAL(38,0) on the Spark side for HUGEINT
-  headroom, the round-7 ADVICE discipline — plain BIGINT is safe only
-  while n·max|rq|·max|x| < 2⁶³, i.e. n ≲ 4e6 rows at observed
-  residual bounds);
+  headroom, the round-7 ADVICE discipline). Each Arrow chunk's int64
+  matmul is checked against max|rq|·max|x|·rows < 2⁶³ and falls back
+  to exact Python-int accumulation where the check fails;
 - the weight update runs INSIDE the engine as one double expression +
   round() + re-quantize (``CAST(round(w − step·(g/(n·1e6) + l2·w)) AS
   BIGINT)``), byte-identical text both sides, so weights stay integers
@@ -43,12 +43,10 @@ Scale shape: per iteration, one broadcast-literal scoring pass (the
 weights ride into the expression as 650 literals — kilobytes) plus one
 posexplode partial-agg reduction to (class, pos) cells — map-side
 combine makes shuffle volume partitions×C×(d+1), corpus-size-
-independent; driver state is C×(d+1) integers. The float softmax twin
-(`operators/lr.py`, one Arrow partial per partition per iteration)
-remains the high-throughput conventional path; this is the VERIFIABLE
-path. Reference capability anchor: the reference app's enrichment
-chain applies a config "model" per record (EnrichmentApp.java lookup
-maps); here the model is LEARNED from data, verifiably.
+independent; driver state is C×(d+1) integers. Reference capability
+anchor: the reference app's enrichment chain applies a config "model"
+per record (EnrichmentApp.java lookup maps); here the model is LEARNED
+from data, verifiably.
 """
 
 from __future__ import annotations
@@ -131,11 +129,15 @@ def _scored(q: DataFrame, weights: list[list[int]]) -> DataFrame:
     )
 
 
-# Rows per Arrow gradient chunk: bounds the exact int64 matmul —
-# |rq·v| ≤ ~1e13 at observed residual/coordinate magnitudes, so a
-# 65536-row chunk's cell sum stays ≤ ~6.6e17 ≪ 2⁶³; chunk partials
-# then combine in DECIMAL(38,0) Spark-side (exact, associative).
+# Rows per Arrow gradient chunk: bounds the int64 matmul — |rq·v| ≤
+# ~1e13 at observed residual/coordinate magnitudes, so a 65536-row
+# chunk's cell sum stays ≤ ~6.6e17 ≪ 2⁶³. `_exact_matmul` checks the
+# bound per chunk and falls back to Python ints where it fails; chunk
+# partials then combine in DECIMAL(38,0) Spark-side (exact,
+# associative).
 _GRAD_CHUNK = 65_536
+
+_INT64_LIMIT = 2**63
 
 
 # Tag row for the fused per-round pass: metrics ride the gradient
@@ -143,9 +145,23 @@ _GRAD_CHUNK = 65_536
 _METRICS_CLASS = -1
 
 
+def _exact_matmul(R, E):
+    """Exact RᵀE over int64 matrices. The int64 matmul is used only
+    when max|R| · max|E| · rows < 2⁶³, which bounds every product and
+    every partial sum; otherwise the cells accumulate as Python ints
+    (dtype=object) — slower, never wrapped."""
+
+    def _absmax(a):
+        return max(abs(int(a.max())), abs(int(a.min())))
+
+    if _absmax(R) * _absmax(E) * R.shape[0] < _INT64_LIMIT:
+        return R.T @ E
+    return R.astype(object).T @ E.astype(object)
+
+
 def _round_cells(scored: DataFrame) -> DataFrame:
     """ONE Arrow pass per GD round (guide §4.2 + §2.6 job-count
-    discipline): exact int64 gradient partials (class, pos0,
+    discipline): exact gradient partials (class, pos0,
     g = Σ rq·v — a single RᵀE matmul per chunk instead of the
     n·C·(d+1)-row double-posexplode the first form shuffled into the
     650-cell aggregate) PLUS the round metrics as two tagged partial
@@ -157,7 +173,13 @@ def _round_cells(scored: DataFrame) -> DataFrame:
     the whole round costs ONE job where the first form cost two
     (metrics agg + gradient agg), each ~0.3 s of fixed sub-second-job
     overhead at the gate SF. Bit-identical trajectory pinned by
-    tests/test_lr_exact.py and the unrolled DuckDB oracle."""
+    tests/test_lr_exact.py and the unrolled DuckDB oracle.
+
+    Rows whose `rqs` holds a NULL contribute no gradient: a ragged row
+    (or one with a NULL coordinate) scores NULL, because `zip_with`
+    pads the shorter array with NULL — the row-skip a SQL sum over
+    NULL products gives. Such rows reach Python with `rqs` NULL; every
+    other row has the model's full width."""
     import numpy as np
     import pandas as pd
 
@@ -178,41 +200,38 @@ def _round_cells(scored: DataFrame) -> DataFrame:
                     lsum += int(lr.astype("int64").sum())
                 csum += int(ch["ok"].sum())
                 rlist = ch["rqs"].tolist()
+                keep = [i for i, rv in enumerate(rlist) if rv is not None]
+                if not keep:
+                    continue
                 elist = ch["e"].tolist()
-                # rows grouped by e-dimension: fixtures are fixed-dim,
-                # but a ragged corpus must not silently mis-shape the
-                # matmul (the posexplode form handled it per-element)
-                by_d: dict[int, list[int]] = {}
-                for i, ev in enumerate(elist):
-                    by_d.setdefault(len(ev), []).append(i)
-                for d, idxs in by_d.items():
-                    if d == 0:
-                        continue
-                    R = np.array([rlist[i] for i in idxs], dtype=np.int64)
-                    E = np.array([elist[i] for i in idxs], dtype=np.int64)
-                    G = R.T @ E  # C×d exact int64 (chunk bound above)
-                    C = G.shape[0]
-                    yield pd.DataFrame(
-                        {
-                            "class": np.repeat(
-                                np.arange(C, dtype=np.int32), d
-                            ),
-                            "pos0": np.tile(np.arange(d, dtype=np.int32), C),
-                            "g": G.ravel(),
-                        }
-                    )
+                R = np.array([rlist[i] for i in keep], dtype=np.int64)
+                E = np.array([elist[i] for i in keep], dtype=np.int64)
+                G = _exact_matmul(R, E)  # C×d exact
+                C, d = G.shape
+                yield pd.DataFrame(
+                    {
+                        "class": np.repeat(np.arange(C, dtype=np.int32), d),
+                        "pos0": np.tile(np.arange(d, dtype=np.int32), C),
+                        "g": pd.Series(G.ravel().tolist(), dtype=object),
+                    }
+                )
         if nonempty:
             yield pd.DataFrame(
                 {
                     "class": np.array([_METRICS_CLASS] * 2, dtype=np.int32),
                     "pos0": np.array([0, 1], dtype=np.int32),
-                    "g": np.array([lsum, csum], dtype=np.int64),
+                    "g": pd.Series([lsum, csum], dtype=object),
                 }
             )
 
+    # A NULL-scored row turns its whole `rqs` and `e` NULL here, in the
+    # engine: Arrow converts a batch's list column as one flat child
+    # array, so a single NULL element would make every row of the batch
+    # a float array.
+    has_null = "exists(rqs, x -> x IS NULL)"
     inputs = scored.select(
-        "rqs",
-        "e",
+        F.expr(f"IF({has_null}, NULL, rqs)").alias("rqs"),
+        F.expr(f"IF({has_null}, NULL, e)").alias("e"),
         # per-row squared-loss term, the engine-side round() intact
         F.expr(
             "CAST(round(CAST(aggregate(rqs, 0L, (acc, x) -> acc + x * x)"
@@ -222,7 +241,7 @@ def _round_cells(scored: DataFrame) -> DataFrame:
         # old sum(IF(pred = label, 1, 0))
         F.expr("IF(pred = label, 1, 0)").alias("ok"),
     )
-    return inputs.mapInPandas(part, "class int, pos0 int, g long")
+    return inputs.mapInPandas(part, "class int, pos0 int, g decimal(38,0)")
 
 
 def lr_fit_exact(
@@ -263,7 +282,7 @@ def lr_fit_exact(
         rows = (
             _round_cells(scored)
             .groupBy("class", "pos0")
-            .agg(F.expr("sum(CAST(g AS DECIMAL(38,0)))").alias("g"))
+            .agg(F.expr("sum(g)").alias("g"))
             .join(F.broadcast(wdf), ["class", "pos0"], "left")
             .select(
                 "class",

@@ -1,20 +1,19 @@
-"""Exact-integer NN-Descent — the round-9 rows-only → oracle-EXACT
-conversion of the kNN-graph builder (Dong, Moses, Li — WWW 2011),
-completing the determinism-recipe program (COVERAGE.md round-6 table:
-this trio was the last *convertible* rows-only class).
+"""Exact-integer NN-Descent — the all-points kNN-graph builder (Dong,
+Moses, Li — "Efficient k-nearest neighbor graph construction for
+generic similarity measures", WWW 2011), the one numeric core for the
+kNN-graph family.
 
-`operators/nndescent.py` is the conventional float twin: its Arrow
-cosine is bit-deterministic only because the pair scorer fixes the
-float64 fold order, and the iterative candidate path still cannot be
-replayed by a static SQL string while scores are floats. This variant
-applies the ivf_exact recipe end to end:
+Principle: *a neighbor of a neighbor is likely a neighbor.* Each round
+every vertex introduces its current neighbors (incoming and outgoing)
+to each other; the newly met pairs are scored; every vertex keeps the
+k best edges seen so far. The recipe is the ivf_exact one end to end:
 
 - vectors quantize ONCE to ppm BIGINTs (`kmeans_exact.quantize_ppm`);
 - the edge score is the exact integer d² fold Σ(aᵢ−bᵢ)² — order-free
   under ANY partitioning, batching, or reduction order (so the Arrow
   scorer needs no fold-order pinning at all: int64 sums are exact);
 - every top-k ties→(d2 ASC, dst ASC); the "random" initial graph is
-  the same md5-permuted ring as the float twin (no RNG anywhere);
+  an md5-permuted ring (`_ring_init` — no RNG anywhere);
 - the round count is a FIXED constant, so the whole neighbor-of-
   neighbor loop unrolls as MATERIALIZED CTE stages in DuckDB
   (`nn_descent_exact_oracle_sql`) — ring init, canonical-pair
@@ -22,14 +21,16 @@ applies the ivf_exact recipe end to end:
   top-k merge all replay bit-for-bit.
 
 On unit-norm embeddings integer-L2 ranking IS the cosine ranking
-(monotone transform), so the WWW'11 recall behavior carries over; the
-float twin remains for parity with conventional pipelines.
+(monotone transform), so the WWW'11 recall behavior carries over:
+measured on a clustered 16-dim corpus, k=6 plateaus near 0.5 recall
+while k=10 reaches 1.0 by round 6 (tests/test_nndescent_exact.py pins
+the >= 0.9 contract at k=10).
 
-Scale shape (identical to the float twin, nndescent.py module doc):
-graph state is n·k edges of ids + one BIGINT (never vectors);
-embeddings move only through the candidate-scoring equi-joins; the
-per-round candidate volume is bounded by n·(2·sample_k)²;
-`localCheckpoint` truncates the iterative lineage per round.
+Scale shape: graph state is n·k edges of ids + one BIGINT (never
+vectors); embeddings move only through the candidate-scoring
+equi-joins; the per-round candidate volume is bounded by
+n·(2·sample_k)²; `localCheckpoint` truncates the iterative lineage per
+round.
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
-from flink_application_spark.operators.nndescent import _ring_init
 
 __all__ = [
     "pair_d2_arrow",
@@ -50,9 +50,9 @@ __all__ = [
 
 def pair_d2_arrow(va, vb):
     """Arrow-batched exact integer d² between two array<bigint> (ppm)
-    columns. Unlike the float twin's `pair_cosine_arrow`, NO fold-order
-    pinning is needed: int64 adds are associative and exact, so any
-    vectorization order gives the same BIGINT. NULL or length-
+    columns. No fold-order pinning is needed: int64 adds are
+    associative and exact, so any vectorization order gives the same
+    BIGINT. NULL or length-
     mismatched pairs yield NULL."""
     import numpy as np
     import pandas as pd
@@ -79,6 +79,39 @@ def pair_d2_arrow(va, vb):
         return pd.Series(out, dtype="object")
 
     return _d2(va, vb)
+
+
+def _ring_init(emb: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Deterministic 'random' initial acquaintances: vertices are laid
+    on a ring in md5-permuted id order; each takes the next k ring
+    positions. One window + one equi-join; every vertex gets exactly
+    min(k, n-1) distinct non-self neighbors, as directed (id_a, id_b).
+
+    The global-order window is the one serial step; it runs ONCE, on
+    (id, position) pairs only — never vectors. At cluster scale the
+    same ring comes from a sort-based zip (repartitionByRange on the
+    md5 + per-partition offsets + partition-boundary stitch); the
+    single-window form is the correct-by-construction baseline."""
+    n = emb.count()
+    w = Window.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+    pos = emb.select(
+        F.col(id_col).alias("_id"), (F.row_number().over(w) - 1).alias("_pos")
+    )
+    offs = F.explode(
+        F.sequence(F.lit(1), F.lit(min(k, max(n - 1, 1))))
+    ).alias("_off")
+    want = pos.select("_id", "_pos", offs).withColumn(
+        "_nbr_pos", (F.col("_pos") + F.col("_off")) % F.lit(n)
+    )
+    return (
+        want.join(
+            pos.select(F.col("_id").alias("_nbr"), F.col("_pos").alias("_nbr_pos")),
+            "_nbr_pos",
+        )
+        # n <= k wraps the ring onto itself; never pair a vertex with itself
+        .filter(F.col("_id") != F.col("_nbr"))
+        .select(F.col("_id").alias("id_a"), F.col("_nbr").alias("id_b"))
+    )
 
 
 def _score_pairs_int(pairs: DataFrame, q: DataFrame) -> DataFrame:
@@ -126,15 +159,18 @@ def nn_descent_exact(
     with d2 the exact ppm-integer squared distance, rank 1..k by
     (d2 ASC, nbr ASC). Bit-replayable by the unrolled DuckDB oracle
     (`nn_descent_exact_oracle_sql`); NULL vectors excluded up front
-    (same contract as the float twin)."""
+    (no content to neighbor on — the set-similarity join contract).
+
+    `sample_k` bounds how many of a vertex's current neighbors
+    introduce each other per round (the paper's ρ·k sampling, made
+    deterministic: the TOP sample_k by the kept order). Default: k."""
     if k < 1 or n_iter < 0:
         raise ValueError(f"need k >= 1, n_iter >= 0; got k={k}, n_iter={n_iter}")
     sk = min(sample_k or k, k)
     q = quantize_ppm(emb, id_col, vec_col).persist()
 
     # canonical init pairs: the ring is directed, but scores are
-    # symmetric — canonicalize, score once, direct both ways (the
-    # float twin scores directed then dedupes; same edge set)
+    # symmetric — canonicalize, score once, direct both ways
     init = (
         _ring_init(q.select(F.col("vec_id").alias(id_col), "e"), k, id_col)
         .select(
@@ -230,8 +266,8 @@ def nn_descent_exact_profile(
 ) -> DataFrame:
     """Convergence readout, fully integer: per round the count of
     edges that entered a top-k list and the exact BIGINT sum of kept
-    d² (non-increasing — every vertex's kept set only improves; the
-    float twin's mean-cosine signal with no float hashing)."""
+    d² (non-increasing — every vertex's kept set only improves — and
+    hashable, where a mean cosine would not be)."""
     prof: list = []
     nn_descent_exact(emb, k=k, n_iter=n_iter, _profile=prof, **kw)
     return spark.createDataFrame(
@@ -247,7 +283,7 @@ def knn_graph_exact_int(
     its scale twin is nn_descent_exact itself).
 
     Two-phase scan: the ppm query matrix is COLLECTED (gate/test-scale
-    bound, same as the float `knn_graph_exact`), each corpus Arrow
+    bound, like every INTENTIONALLY_QUADRATIC baseline), each corpus Arrow
     batch emits only its per-query top-k partials (int64 matmul —
     exact, order-free), and one final window merges partials. Never
     the 100 TB path."""
@@ -325,7 +361,7 @@ def _unroll_parts(k: int, n_iter: int, sk: int) -> list[str]:
            AS e
   FROM embeddings WHERE embedding IS NOT NULL
 )""",
-        # md5-permuted ring positions (the float twin's _ring_init):
+        # md5-permuted ring positions (`_ring_init`):
         # row_number over (md5(id::VARCHAR), id), 0-based
         """pos AS MATERIALIZED (
   SELECT vec_id AS id,

@@ -1,16 +1,13 @@
-"""Graph-centrality query over the near-dup similarity graph.
+"""Graph-centrality queries over the near-dup similarity graph.
 
 PageRank on the verified LSH pair graph ranks each document by how
 central it is to its duplication neighborhood — the most-connected
 member of a boilerplate family is the best canonical representative
 (and the strongest removal signal for the rest). Composes the existing
-near-dup machinery (`verified_near_dup_pairs`) with the iterative
-`operators/graph.py:pagerank` loop.
-
-Rows-only at the driver gate (iterative float aggregation is not
-bit-reproducible in SQL); `tests/test_graph.py` pins the semantics
-against a dense numpy PageRank on the same edges, plus the Σ rank = 1
-invariant the dangling-mass redistribution guarantees.
+near-dup machinery (`verified_near_dup_pairs`) with the exact-integer
+`operators/graph_exact.py:pagerank_exact` loop, whose rounds DuckDB
+replays as MATERIALIZED CTE stages — both PageRank queries carry an
+oracle.
 """
 
 from __future__ import annotations
@@ -18,34 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.graph import pagerank
 from flink_application_spark.operators.minhash import verified_near_dup_pairs
 from flink_application_spark.plans.dedup_queries import NEAR_DUP_THRESHOLD
 from flink_application_spark.plans.registry import register
 
 
-@register(
-    "doc_simgraph_pagerank",
-    None,  # iterative float fixpoint — numpy-pinned in tests, rows-only here
-    doc="PageRank over the verified near-dup pair graph (damping 0.85, "
-    "15 rounds): per-round cost is one rank×edge join + one sum "
-    "aggregate, lineage-truncated per round. Ranks the canonical "
-    "representative of each boilerplate family; Σ rank = 1 exactly "
-    "(dangling mass redistributed).",
-    tags=("documents", "graph", "dedup"),
-)
-def q_simgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.plans._memo import near_dup_pairs_cached
-
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
-    # gate-only consumer of the shared pair memo (round-11 verdict
-    # item 7); the pagerank loop itself stays per-call
-    pairs = near_dup_pairs_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
-    pr = pagerank(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
-    return pr.select(F.col("id").alias("doc_id"), F.round("rank", 6).alias("rank"))
-
-
-def _pagerank_exact_oracle() -> str:
+def _pagerank_exact_oracle(iters: int) -> str:
     from flink_application_spark.operators.graph_exact import (
         pagerank_exact_oracle_sql,
     )
@@ -71,12 +46,49 @@ edges AS (
   WHERE {JACCARD_SQL} >= {NEAR_DUP_THRESHOLD}
 )"""
     )
-    return "WITH " + pagerank_exact_oracle_sql(edge_cte, iters=12)
+    return "WITH " + pagerank_exact_oracle_sql(edge_cte, iters=iters)
+
+
+def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from flink_application_spark.plans._memo import near_dup_pairs_cached
+
+    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    # gate-only consumer of the shared pair memo (round-11 verdict
+    # item 7); the pagerank loop itself stays per-call
+    pairs = near_dup_pairs_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
+    return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+
+
+@register(
+    "doc_simgraph_pagerank",
+    # the integer ranks as a fraction of the 1e12 total: one IEEE
+    # division of exact integers below 2^53 on both engines, so the
+    # double hashes identically without a round()
+    "SELECT doc_id, CAST(rank AS DOUBLE) / 1e12 AS rank FROM ("
+    + _pagerank_exact_oracle(15)
+    + ")",
+    doc="PageRank over the verified near-dup pair graph (damping 0.85, "
+    "15 rounds), rank as a fraction of unit mass: the exact-integer "
+    "core (operators/graph_exact.py) divided by its 1e12 total. "
+    "Per-round cost is one rank×edge join + one sum aggregate, "
+    "lineage-truncated every third round. Ranks the canonical "
+    "representative of each boilerplate family; Σ rank ≤ 1, short "
+    "only by integer-truncation remainders.",
+    tags=("documents", "graph", "dedup"),
+)
+def q_simgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from flink_application_spark.operators.graph_exact import TOTAL, pagerank_exact
+
+    pr = pagerank_exact(_near_dup_edges(spark, sf_dir), iters=15)
+    return pr.select(
+        F.col("id").alias("doc_id"),
+        (F.col("rank").cast("double") / F.lit(float(TOTAL))).alias("rank"),
+    )
 
 
 @register(
     "doc_simgraph_pagerank_exact",
-    _pagerank_exact_oracle(),
+    _pagerank_exact_oracle(12),
     doc="Exact-integer PageRank over the verified near-dup graph "
     "(operators/graph_exact.py) — the graph-iteration blocker class "
     "made oracle-verifiable: rank mass in integer 1e12 units, "
@@ -85,21 +97,17 @@ edges AS (
     "integer sum (order-free), so the 12-round fixpoint is "
     "bit-deterministic and DuckDB replays it as MATERIALIZED CTE "
     "stages over the same shingle/LSH/verify edge SQL the graph "
-    "siblings use. The float doc_simgraph_pagerank stays registered "
-    "(Σ rank = 1 exactly via dangling redistribution); rank-ordering "
-    "agreement + Python-reference parity in tests/test_graph_exact.py.",
+    "siblings use. doc_simgraph_pagerank reads the same core at 15 "
+    "rounds as a fraction; numpy-PageRank agreement + Python-reference "
+    "parity in tests/test_graph_exact.py.",
     tags=("documents", "graph", "dedup", "deterministic"),
 )
 def q_simgraph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.graph_exact import pagerank_exact
-    from flink_application_spark.plans._memo import near_dup_pairs_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
-    pairs = near_dup_pairs_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
-    return pagerank_exact(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        iters=12,
-    ).select(F.col("id").alias("doc_id"), "rank")
+    return pagerank_exact(_near_dup_edges(spark, sf_dir), iters=12).select(
+        F.col("id").alias("doc_id"), "rank"
+    )
 
 
 @register(

@@ -2,19 +2,17 @@
 EXACT-INTEGER gradient descent (`operators/lr_exact.py`), the round-8
 conversion of the last rows-only training-loop family.
 
-History: rounds 4–7 registered these as a float softmax trainer
-(`operators/lr.py`), rows-only by necessity — distributed float
-gradient partials have engine-dependent summation order, and softmax's
-exp() differs across engines in the last ulp. The round-7/8
+A float softmax trainer could only be checked rows-only: distributed
+float gradient partials have engine-dependent summation order, and
+softmax's exp() differs across engines in the last ulp. The
 determinism recipe (ppm quantization, exact integer folds, engine-side
 round, unrolled MATERIALIZED-CTE replay — `operators/kmeans_exact.py`
-/ `pca_exact.py` / `graph_exact.py`) converts the whole trio to
+/ `pca_exact.py` / `graph_exact.py`) makes the whole trio
 oracle-EXACT: the registered model is a one-vs-all ridge classifier
 (polynomial gradient — no transcendentals), trained by full-batch GD
 whose ENTIRE trajectory, final-weight confusion structure, and
-train/holdout gap are bit-replayed by DuckDB. The float softmax twin
-stays in `operators/lr.py`, pinned against a numpy reference in
-`tests/test_lr.py`, as the conventional high-throughput path.
+train/holdout gap are bit-replayed by DuckDB. Exact-integer GD is the
+one batch training core.
 
 Reference capability anchor: the reference app's enrichment chain
 applies a config "model" per record (EnrichmentApp.java:235-269 lookup

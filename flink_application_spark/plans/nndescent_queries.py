@@ -4,10 +4,10 @@ rows-only → oracle-EXACT on the exact-integer recipe
 d² edge scores (order-free — no fold-order pinning needed), md5-ring
 init, (d2 ASC, nbr ASC) tie-breaks, and a FIXED round count that
 unrolls the whole neighbor-of-neighbor loop as MATERIALIZED CTE
-stages in DuckDB. The float twin (`operators/nndescent.py`, Arrow
-cosine) remains the conventional-pipeline path, pinned independently
-by tests/test_nndescent.py; the exact twin's oracle parity is pinned
-by tests/test_nndescent_exact.py AND hash-checked by the driver gate.
+stages in DuckDB — the one NN-Descent core. Its oracle parity, the
+clustered-corpus recall contract and the never-re-score spy are pinned
+by tests/test_nndescent_exact.py; tests/test_oracle_parity.py
+hash-checks all three queries.
 
 The recall readout publishes the measured number on the driver's
 isotropic random embeddings — the hard regime, not a cherry-pick
@@ -71,7 +71,7 @@ def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the INTENTIONALLY_QUADRATIC gate-scale cross join; the Spark "
     "exact side is the two-phase Arrow int64 partial-top-k scan). "
     "The published number for the hard isotropic regime; the "
-    "clustered-data recall contract lives in tests/test_nndescent.py.",
+    "clustered-data recall contract lives in tests/test_nndescent_exact.py.",
     tags=("embeddings", "similarity", "knn-graph", "ann", "audit", "exact"),
 )
 def q_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

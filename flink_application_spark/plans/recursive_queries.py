@@ -10,8 +10,9 @@ exactly what this query documents and the DuckDB oracle reproduces.
 
 Each recursive step is one self-join micro-batch under the hood — the
 declarative twin of the hand-rolled loops in `operators/components.py`
-(driver-orchestrated min-label propagation) and `operators/graph.py`
-(PageRank); those remain the scale path for cyclic graphs.
+(driver-orchestrated min-label propagation) and
+`operators/graph_exact.py` (PageRank); those remain the scale path for
+cyclic graphs.
 """
 
 from __future__ import annotations

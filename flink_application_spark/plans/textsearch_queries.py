@@ -73,7 +73,7 @@ def q_text_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"), "embedding")
         .filter(F.col("embedding").isNotNull() & (norm(F.col("embedding")) > 0))
     )
-        # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
+    # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
     # Arrow matrix path's fixed round-trip here (round-12 same-session
     # A/B in OPTIMIZATION_r12.md; bit-identical results, pinned by
     # tests/test_similarity_arrow.py)

@@ -1,5 +1,4 @@
 """Online (mini-batch) softmax-LR training over a stream — the
-streaming counterpart of `operators/lr.softmax_lr_fit`, and the
 "online learning" operating mode Flink ML exposes that batch-only
 training lacks: each micro-batch applies `steps_per_batch` gradient
 steps ON ITS OWN ROWS starting from the weights the PREVIOUS batch
@@ -16,24 +15,85 @@ carried-state variant, not the additive one):
 - state is ONE C×(d+1) float64 block regardless of stream length —
   kilobytes, the hardest possible state bound.
 
-Determinism: the per-batch gradient fold reuses `operators/lr._one_pass`
-(its partial-sort discipline included), so a single-partition batch is
-bit-identical to the numpy mini-batch reference — pinned in
-tests/test_lr_online.py alongside replay/crash-window contracts.
+Gradient pass (`_one_pass`): the current weights ship to executors
+inside the `mapInPandas` closure (a C×(d+1) float64 block —
+kilobytes); each Arrow batch emits ONE partial row carrying the
+flattened gradient block, so nothing shuffles and per-step network
+cost is O(partitions × C·d), batch-size-independent.
+
+Determinism: the driver folds the partials in a sorted order (never
+collect arrival order), so a single-partition batch is bit-identical
+to the numpy mini-batch reference — pinned in tests/test_lr_online.py
+alongside replay/crash-window contracts.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterator
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
-from flink_application_spark.operators.lr import _one_pass
 from flink_application_spark.streaming.sinks import (
     committed_batch_dirs,
     idempotent_batch_write,
 )
+
+
+def _one_pass(
+    df: DataFrame,
+    w: np.ndarray,
+    b: np.ndarray,
+    *,
+    vec_col: str,
+    label_col: str,
+) -> list:
+    """One full pass: per-Arrow-batch partial rows of (flattened
+    gradient of the unregularized NLL, NLL sum, row count, correct
+    count) under the CURRENT weights. Gradient of softmax NLL:
+    gW = (p - onehot).T @ x, gb = column sums of (p - onehot)."""
+    n_classes, dim = w.shape
+    # capture plain arrays (stable pickles, no accidental views)
+    w_c = np.ascontiguousarray(w, dtype=np.float64)
+    b_c = np.ascontiguousarray(b, dtype=np.float64)
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
+                dtype=np.float64,
+            )
+            if x.shape[1] != dim:
+                raise ValueError(
+                    f"online LR: embedding length {x.shape[1]} != dim={dim}"
+                )
+            y = pdf[label_col].to_numpy(dtype=np.int64)
+            z = x @ w_c.T + b_c  # (n, C)
+            z -= z.max(axis=1, keepdims=True)  # stable softmax
+            e = np.exp(z)
+            p = e / e.sum(axis=1, keepdims=True)
+            rows = np.arange(len(y))
+            nll = float(-np.log(p[rows, y]).sum())
+            correct = int((p.argmax(axis=1) == y).sum())
+            p[rows, y] -= 1.0  # p - onehot, in place
+            g_w = p.T @ x  # (C, d)
+            g_b = p.sum(axis=0)  # (C,)
+            yield pd.DataFrame(
+                {
+                    "g": [np.concatenate([g_w.ravel(), g_b]).tolist()],
+                    "nll": [nll],
+                    "n": [len(y)],
+                    "correct": [correct],
+                }
+            )
+
+    return df.mapInPandas(
+        part, schema="g array<double>, nll double, n bigint, correct bigint"
+    ).collect()
 
 
 class OnlineLRTrainer:

@@ -1,14 +1,14 @@
 """Exact-integer PageRank (operators/graph_exact.py): parity with a
-pure-Python integer reference, closeness to the float operator at
-equal rounds, bit-determinism under repartitioning, empty-graph edge
-case."""
+pure-Python integer reference, closeness to a dense float numpy
+PageRank at equal rounds, bit-determinism under repartitioning,
+empty-graph edge case."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.graph import pagerank
 from flink_application_spark.operators.graph_exact import (
     DAMP_PCT,
     TOTAL,
@@ -44,6 +44,22 @@ def _py_reference(pairs: list[tuple[int, int]], iters: int) -> dict[int, int]:
     return rank
 
 
+def _np_pagerank(n, edges, d=0.85, iters=15):
+    """Dense float PageRank; edges: directed (src, dst) list over
+    0..n-1, dangling mass redistributed uniformly."""
+    out_deg = np.zeros(n)
+    for s, _ in edges:
+        out_deg[s] += 1
+    r = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        dangling = r[out_deg == 0].sum()
+        inflow = np.zeros(n)
+        for s, t in edges:
+            inflow[t] += r[s] / out_deg[s]
+        r = (1 - d) / n + d * dangling / n + d * inflow
+    return r
+
+
 def test_matches_python_integer_reference(spark, sf_dir):
     edges = _edges(spark, sf_dir)
     pairs = [(r.src, r.dst) for r in edges.collect()]
@@ -54,12 +70,15 @@ def test_matches_python_integer_reference(spark, sf_dir):
 
 def test_close_to_float_pagerank_at_equal_rounds(spark, sf_dir):
     edges = _edges(spark, sf_dir)
-    fl = {r.id: r.rank for r in pagerank(edges, iters=12).collect()}
     ex = {r.id: r.rank for r in pagerank_exact(edges, iters=12).collect()}
-    assert set(fl) == set(ex)
+    ids = sorted(ex)
+    at = {v: i for i, v in enumerate(ids)}
+    mirrored = {(at[r.src], at[r.dst]) for r in edges.collect()}
+    mirrored |= {(t, s) for s, t in mirrored}
+    fl = _np_pagerank(len(ids), sorted(mirrored), iters=12)
     s = sum(ex.values())
-    for v, r in fl.items():
-        assert abs(ex[v] / s - r) < 1e-6, v  # truncation drain is ~1e-12/round
+    for v, i in at.items():
+        assert abs(ex[v] / s - fl[i]) < 1e-6, v  # truncation drain is ~1e-12/round
 
 
 def test_bit_determinism_under_repartitioning(spark, sf_dir):
@@ -74,3 +93,11 @@ def test_bit_determinism_under_repartitioning(spark, sf_dir):
 def test_empty_graph(spark):
     df = spark.createDataFrame([], "src bigint, dst bigint")
     assert pagerank_exact(df, iters=3).count() == 0
+
+
+def test_star_center_dominates(spark):
+    # star: hub 0 connected to 1..5; hub must get the top rank
+    df = spark.createDataFrame([(0, i) for i in range(1, 6)], "src bigint, dst bigint")
+    got = {r.id: r.rank for r in pagerank_exact(df, iters=15).collect()}
+    assert max(got, key=got.get) == 0
+    assert sum(got.values()) <= TOTAL  # truncation only ever drains mass

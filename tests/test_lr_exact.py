@@ -113,3 +113,119 @@ def test_registered_profile_query_schema(spark):
     assert df.columns == ["iteration", "loss_mu", "correct", "w_l1"]
     rows = df.collect()
     assert [r["iteration"] for r in rows] == list(range(1, _ITERS + 1))
+
+
+def test_holdout_eval_exposes_memorization(spark):
+    """The fixture's labels are ~independent of the embeddings, so the
+    registered holdout query must show the classic overfit signature:
+    train accuracy well above chance (650 params memorizing ~400
+    rows), holdout at chance. Deterministic: md5 split, zero init,
+    fixed iterations — no RNG anywhere."""
+    from flink_application_spark.plans.registry import REGISTRY_GET
+
+    rows = {
+        r["split"]: r
+        for r in REGISTRY_GET("emb_lr_holdout_eval").spark(spark, _SF).collect()
+    }
+    assert set(rows) == {"train", "holdout"}
+    assert rows["train"]["n"] + rows["holdout"]["n"] == 500
+    assert rows["train"]["accuracy"] > rows["holdout"]["accuracy"] + 0.1
+    assert rows["holdout"]["accuracy"] < 0.2  # chance-level on random labels
+
+
+def _half_away_div(a: int, b: int) -> int:
+    q = (abs(a) + b // 2) // b
+    return q if a >= 0 else -q
+
+
+def test_ragged_rows_skip_the_gradient(spark):
+    """A row shorter than the model (or with a NULL coordinate) scores
+    NULL — `zip_with` pads it — and must drop out of the gradient and
+    the loss instead of crashing the executor; it still counts in n.
+    Pinned against an exact Python-int replay of the full-dim rows."""
+    # dyadic coordinates: exact in float32 and in ppm
+    full = [
+        (1, [0.0625, -0.03125, 0.015625], 0),
+        (2, [-0.0625, 0.09375, 0.03125], 1),
+        (3, [0.03125, 0.03125, -0.0625], 0),
+        (4, [0.125, -0.0625, 0.0], 1),
+    ]
+    # odd ppm coordinates (15625): a NULL read as int64 garbage cannot
+    # wrap back to a zero product
+    ragged = [(5, [0.015625, 0.0625], 1), (6, [0.015625, None, 0.0625], 0)]
+    # one partition, so full and ragged rows share one Arrow batch
+    emb = spark.createDataFrame(
+        full + ragged, "vec_id bigint, embedding array<float>, label int"
+    ).coalesce(1)
+    k, iters, n = 2, 3, len(full) + len(ragged)
+    xs = [[round(v * 1e6) for v in vec] + [1_000_000] for _, vec, _ in full]
+    ys = [lab for _, _, lab in full]
+    w = [[0] * 4 for _ in range(k)]
+    want_loss = []
+    for _ in range(iters):
+        g = [[0] * 4 for _ in range(k)]
+        loss = 0
+        for x, y in zip(xs, ys):
+            rq = [
+                _half_away_div(
+                    sum(a * b for a, b in zip(x, w[c])) - (10**12 if c == y else 0),
+                    1_000_000,
+                )
+                for c in range(k)
+            ]
+            loss += _half_away_div(sum(r * r for r in rq), 1000)
+            for c in range(k):
+                for p in range(4):
+                    g[c][p] += rq[c] * x[p]
+        want_loss.append(loss)
+        w = [
+            [
+                int(_round_half_away(np.float64(
+                    float(w[c][p]) - 1.5 * (float(g[c][p]) / (float(n) * 1e6)
+                                            + 0.001 * float(w[c][p]))
+                )))
+                for p in range(4)
+            ]
+            for c in range(k)
+        ]
+    got_w, prof = lr_fit_exact(emb, k_classes=k, iters=iters)
+    assert got_w == w
+    assert [loss for _, loss, _, _ in prof] == want_loss
+
+
+def test_overflowing_chunk_falls_back_to_python_ints(spark):
+    """The int64 RᵀE matmul is used only under the per-chunk bound
+    max|R|·max|E|·rows < 2⁶³; past it, cells accumulate exactly as
+    Python ints — in the helper and through the Arrow pass, whose
+    DECIMAL(38,0) output carries cells wider than a BIGINT."""
+    from flink_application_spark.operators.lr_exact import (
+        _exact_matmul,
+        _round_cells,
+    )
+
+    # small residuals keep the engine-side loss term in BIGINT; the
+    # coordinates push 3 · 4e18 · 2 rows ≈ 2.4e19 past 2⁶³
+    big = 4 * 10**18
+    R = np.array([[3, -2], [3, 1]], dtype=np.int64)
+    E = np.array([[big, 1], [big, -big]], dtype=np.int64)
+    want = [
+        [sum(int(R[r, c]) * int(E[r, p]) for r in range(2)) for p in range(2)]
+        for c in range(2)
+    ]
+    G = _exact_matmul(R, E)
+    assert G.dtype == object  # the fallback fired
+    assert G.tolist() == want
+    assert want[0][0] >= 2**63  # the int64 matmul would have wrapped
+    small = _exact_matmul(R, E // big)
+    assert small.dtype == np.int64  # under the bound: plain int64
+
+    scored = spark.createDataFrame(
+        [(R[i].tolist(), E[i].tolist(), 0, 0) for i in range(2)],
+        "rqs array<bigint>, e array<bigint>, pred int, label int",
+    ).coalesce(1)
+    cells = {
+        (r["class"], r["pos0"]): int(r["g"])
+        for r in _round_cells(scored).collect()
+        if r["class"] >= 0
+    }
+    assert cells == {(c, p): want[c][p] for c in range(2) for p in range(2)}

@@ -1,4 +1,5 @@
-"""Online mini-batch LR training (`streaming/lr_online.py`): ordered
+"""Online mini-batch LR training (`streaming/lr_online.py`): the
+gradient pass must agree with central finite differences, ordered
 single-partition waves must reproduce the numpy mini-batch reference
 bit-for-bit, replays must be no-ops (same predecessor weights → same
 committed weights), a crash-partial weight dir must be invisible, and
@@ -6,18 +7,17 @@ the streamed model must descend on the stream it saw."""
 
 from __future__ import annotations
 
-import pytest as _pytest_tier
+import os
+
+import numpy as np
+import pytest
+
+from flink_application_spark.streaming.lr_online import OnlineLRTrainer, _one_pass
 
 # slow tier: e2e streaming / stateful-store / property tests (round-8
 # verdict item 8). Default runs exclude these via pytest.ini addopts;
 # run the full suite with:  python -m pytest tests/ -q -m ''
-pytestmark = _pytest_tier.mark.slow
-
-import os
-
-import numpy as np
-
-from flink_application_spark.streaming.lr_online import OnlineLRTrainer
+_slow = pytest.mark.slow
 
 _SF = "/root/testdata/sf0.001"
 _C, _D = 10, 64
@@ -62,6 +62,51 @@ def _reference_minibatch(batches, step, l2, steps_per_batch=1):
     return w, b
 
 
+def test_gradient_matches_finite_differences(spark):
+    """The softmax-NLL gradient `_one_pass` computes on the executors
+    (p − onehot, folded over the Arrow partials) must agree with
+    central finite differences of the NLL — this breaks the
+    circularity of pinning the stream against a numpy reference that
+    shares its formula."""
+    rng = np.random.default_rng(7)
+    n, c, d = 12, 3, 4
+    x = rng.normal(size=(n, d))
+    y = rng.integers(0, c, size=n)
+    w = rng.normal(scale=0.3, size=(c, d))
+    b = rng.normal(scale=0.3, size=c)
+    df = spark.createDataFrame(
+        [(x[i].tolist(), int(y[i])) for i in range(n)],
+        "embedding array<double>, label int",
+    ).repartition(3)
+
+    def loss(w_, b_):
+        z = x @ w_.T + b_
+        z = z - z.max(axis=1, keepdims=True)
+        p = np.exp(z)
+        p /= p.sum(axis=1, keepdims=True)
+        return float(-np.log(p[np.arange(n), y]).sum())
+
+    partials = _one_pass(df, w, b, vec_col="embedding", label_col="label")
+    g = np.sum([np.asarray(r["g"]) for r in partials], axis=0)
+    assert sum(r["n"] for r in partials) == n
+    assert sum(r["nll"] for r in partials) == pytest.approx(loss(w, b), rel=1e-12)
+    g_w = g[: c * d].reshape(c, d)
+    g_b = g[c * d :]
+
+    eps = 1e-6
+    for idx in [(0, 0), (1, 2), (2, 3)]:
+        wp = w.copy(); wp[idx] += eps
+        wm = w.copy(); wm[idx] -= eps
+        fd = (loss(wp, b) - loss(wm, b)) / (2 * eps)
+        assert abs(fd - g_w[idx]) < 1e-5, (idx, fd, g_w[idx])
+    for j in range(c):
+        bp = b.copy(); bp[j] += eps
+        bm = b.copy(); bm[j] -= eps
+        fd = (loss(w, bp) - loss(w, bm)) / (2 * eps)
+        assert abs(fd - g_b[j]) < 1e-5, (j, fd, g_b[j])
+
+
+@_slow
 def test_stream_matches_minibatch_reference_bit_exactly(spark, tmp_path):
     waves = _waves(spark)
     tr = OnlineLRTrainer(str(tmp_path / "lr"), n_classes=_C, dim=_D, step=16.0)
@@ -74,6 +119,7 @@ def test_stream_matches_minibatch_reference_bit_exactly(spark, tmp_path):
     assert n_seen == sum(wv.count() for wv in waves)
 
 
+@_slow
 def test_replay_is_noop(spark, tmp_path):
     waves = _waves(spark)
     tr = OnlineLRTrainer(str(tmp_path / "lr"), n_classes=_C, dim=_D, step=16.0)
@@ -90,6 +136,7 @@ def test_replay_is_noop(spark, tmp_path):
     assert np.array_equal(tr.weights(spark)[0], rw)
 
 
+@_slow
 def test_uncommitted_weights_are_invisible(spark, tmp_path):
     waves = _waves(spark)
     tr = OnlineLRTrainer(str(tmp_path / "lr"), n_classes=_C, dim=_D, step=16.0)
@@ -108,6 +155,7 @@ def test_uncommitted_weights_are_invisible(spark, tmp_path):
     assert np.array_equal(tr.weights(spark)[0], rw)
 
 
+@_slow
 def test_streamed_model_descends_on_seen_data(spark, tmp_path):
     waves = _waves(spark)
     tr = OnlineLRTrainer(
@@ -125,6 +173,7 @@ def test_streamed_model_descends_on_seen_data(spark, tmp_path):
     assert nll < np.log(_C)  # better than the zero-init model
 
 
+@_slow
 def test_attached_file_stream_trains(spark, tmp_path):
     import time
 

@@ -1,12 +1,14 @@
 """Exact-integer NN-Descent (operators/nndescent_exact.py): oracle
 parity for all three registered modes, the quadratic integer baseline
 against a pure-Python reference, Arrow-scorer == JVM-fold equality,
-and partitioning invariance (integer sums are order-free — the whole
-point of the conversion)."""
+partitioning invariance (integer sums are order-free — the whole
+point of the conversion), recall >= 0.9 on a clustered corpus, and
+the scored-ever anti-join (no pair is ever scored twice)."""
 
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 from pyspark.sql import functions as F
 
 from flink_application_spark.catalog import register_views
@@ -120,3 +122,71 @@ def test_graph_invariant_under_repartition(spark, sf_dir):
         )
     )
     assert a == b
+
+
+def _clustered_corpus(spark, n_clusters=10, per_cluster=40, dim=16, seed=5):
+    """Synthetic corpus WITH cluster structure (same rationale as
+    tests/test_ivf.py: the fixture embeddings are isotropic random, so
+    high-recall contracts only make sense where neighbors concentrate
+    — the regime graph-ANN exists for)."""
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(size=(n_clusters, dim)) * 5.0
+    rows = []
+    for c in range(n_clusters):
+        pts = centers[c] + rng.normal(size=(per_cluster, dim))
+        rows += [
+            (c * per_cluster + i, pts[i].astype(np.float32).tolist())
+            for i in range(per_cluster)
+        ]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_recall_on_clustered_corpus(spark):
+    """>= 0.9 edge recall vs the exact integer graph after a few rounds
+    on clustered data — the regime the operator exists for (the
+    fixture's isotropic embeddings are the documented hard floor,
+    published by the emb_knn_graph_recall registry entry instead).
+
+    k matters (WWW'11 §5): recall rises with k because a larger kept
+    set keeps more bridge edges alive for the local join. Measured on
+    this corpus: k=6 plateaus ~0.5 (converged local optimum), k=10
+    reaches 1.0 by round 6 — so the >= 0.9 contract is pinned at k=10,
+    the honest operating point, not at a k where the algorithm is
+    known-degraded."""
+    emb = _clustered_corpus(spark)
+    k = 10
+    exact = {
+        (r.vec_id, r.nbr_id) for r in knn_graph_exact_int(emb, k=k).collect()
+    }
+    approx = {
+        (r.vec_id, r.nbr_id)
+        for r in nn_descent_exact(emb, k=k, n_iter=6).collect()
+    }
+    recall = len(exact & approx) / len(exact)
+    assert recall >= 0.9, f"recall {recall:.3f} too low"
+
+
+def test_rescored_pairs_never_regenerate(spark, sf_dir, monkeypatch):
+    """The anti-join excludes ALL ever-scored pairs, not just pairs
+    currently in the graph (the WWW'11 new/old-flag role): a pair
+    scored and rejected in round 1 must not be re-scored in round 2.
+    Pinned by recording every pair handed to the Arrow scorer."""
+    import flink_application_spark.operators.nndescent_exact as nde
+
+    emb = _emb(spark, sf_dir).filter(F.col("vec_id") < 60)
+    seen: set = set()
+    orig = nde._score_pairs_int
+
+    def spy(pairs, q):
+        batch = {
+            (r.id_a, r.id_b) if r.id_a < r.id_b else (r.id_b, r.id_a)
+            for r in pairs.select("id_a", "id_b").collect()
+        }
+        dup = batch & seen
+        assert not dup, f"re-scored pairs: {sorted(dup)[:5]}"
+        seen.update(batch)
+        return orig(pairs, q)
+
+    monkeypatch.setattr(nde, "_score_pairs_int", spy)
+    nn_descent_exact(emb, k=4, n_iter=3)
+    assert seen  # the spy actually observed scoring work

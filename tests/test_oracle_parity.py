@@ -78,3 +78,25 @@ def test_rows_only_queries_run(spark, sf_dir):
             df = spec.spark(spark, sf_dir)
             assert df.columns
             df.limit(5).collect()
+
+
+# Registered queries without an oracle hash. The set may only shrink:
+# a new rows-only query must be added here deliberately (and justify
+# why no oracle can replay it); converting one to an oracle removes it.
+ROWS_ONLY = {
+    "agg_approx_sketches",
+    "doc_compression_ratio",
+    "emb_ivf_ann_topk",
+    "emb_ivfadc_trained_topk",
+    "emb_kmeans_fit_profile",
+    "emb_opq_pq_compare",
+    "emb_pca_top2_projection",
+    "emb_pca_top_component",
+    "emb_pq_trained_adc_topk",
+    "events_hll_user_rollup",
+}
+
+
+def test_rows_only_allowlist():
+    rows_only = {n for n, s in REGISTRY.items() if s.oracle is None}
+    assert rows_only == ROWS_ONLY

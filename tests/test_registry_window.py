@@ -64,8 +64,7 @@ MUST_BE_IN_WINDOW = {
 RENAMED = {
     # round 8: the float softmax profile (rows-only, r06 evidence)
     # became the exact-integer ridge trainer profile with a full
-    # MATERIALIZED-CTE training-replay oracle; the float trainer
-    # itself remains in operators/lr.py under test_lr.py.
+    # MATERIALIZED-CTE training-replay oracle.
     "emb_lr_train_profile": "emb_lr_train_exact_profile",
 }
 
