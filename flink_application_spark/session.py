@@ -48,6 +48,16 @@ def get_spark(
         # The driver's events.parquet stores TIMESTAMP(NANOS) which Spark's
         # parquet reader rejects; read as long ns and convert in catalog.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Streaming offset/commit/source logs and state-store files
+        # commit with FileSystem.rename (atomic on the local file system
+        # and HDFS) instead of FileContext's rename-with-overwrite, which
+        # on a file system without native helpers forks a `readlink`
+        # child process per call (about 40 ms vs under 1 ms).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

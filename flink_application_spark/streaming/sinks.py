@@ -8,10 +8,15 @@ INSERTs into one sink table (EnrichmentAppWithoutExplode.java:103-104),
 checkpointing every 180 s (EnrichmentApp.java:48).
 
 Spark mapping: the micro-batch trigger plays the rollover-interval
-role (one file per partition per batch); `maxRecordsPerFile`
+role (one file per partition per batch); a per-file record cap
 approximates the size cap; `checkpointLocation` is per-query exactly
 like Flink's per-job checkpoint path. Two-queries-one-path fights over
 the committer, so multi-sink fan-in is union-before-write (R4).
+
+The foreachBatch stores (`idempotent_batch_write`, the size-rolled
+sink) run no Spark write job: each micro-batch is collected to the
+driver as one Arrow table, bounded by ``spark.driver.maxResultSize``,
+and written with pyarrow.
 """
 
 from __future__ import annotations
@@ -51,44 +56,142 @@ def write_partitioned_parquet(
     return writer.start()
 
 
+# Spark's ExternalCatalogUtils.escapePathName: these characters become
+# %XX in a partition directory name; everything else (space, non-ASCII)
+# stays raw. NULL and "" both become the Hive default partition.
+_PATH_ESCAPES = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+def _partition_dir_names(values, col: str):
+    """One ``col=value`` directory name per row, spelled as Spark's
+    writer spells it; ``values`` is the column already cast to string
+    by Spark (so timestamps, doubles and decimals print as Spark
+    prints them)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(values).combine_chunks()
+    key = _escape_path_name(col)
+    names = [
+        f"{key}={_escape_path_name(v) if v else _HIVE_DEFAULT_PARTITION}"
+        for v in enc.dictionary.to_pylist()
+    ]
+    names.append(f"{key}={_HIVE_DEFAULT_PARTITION}")  # the NULL slot
+    return pc.take(pa.array(names, pa.string()), pc.fill_null(enc.indices, len(names) - 1))
+
+
+def _collect_batch(batch_df: DataFrame, partition_by: tuple[str, ...]):
+    """The micro-batch as one Arrow table on the driver, partition
+    columns cast to their string form."""
+    if partition_by:
+        batch_df = batch_df.withColumns(
+            {c: batch_df[c].cast("string") for c in partition_by}
+        )
+    return batch_df.toArrow()
+
+
+def _commit_arrow_batch(
+    table,
+    root: str,
+    batch_id: int,
+    partition_by: tuple[str, ...],
+    max_records_per_file: int | None,
+) -> list[tuple[str, int, int]]:
+    """Write ``table`` (from `_collect_batch`) as ``root/_batch=<id>``:
+    stage, swap in, then ``_SUCCESS``. Returns (path, rows, bytes) per
+    data file."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    sub = os.path.join(root, f"_batch={batch_id}")
+    # a dot-prefixed name: neither the `_batch=*` glob nor Spark's
+    # partition discovery sees a half-written batch
+    staging = os.path.join(root, f".staging_batch={batch_id}")
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    files: list[tuple[str, int, int]] = []
+    if table.num_rows == 0 and not partition_by:
+        # as Spark does: an empty batch still leaves one schema-only file
+        path = os.path.join(staging, "part-0.parquet")
+        pq.write_table(table, path)
+        files.append((path, 0, os.path.getsize(path)))
+    elif table.num_rows:
+        partitioning = None
+        if partition_by:
+            for c in partition_by:
+                i = table.schema.get_field_index(c)
+                table = table.set_column(i, c, _partition_dir_names(table[c], c))
+            partitioning = ds.DirectoryPartitioning(
+                pa.schema([(c, pa.string()) for c in partition_by]),
+                segment_encoding="none",
+            )
+        # one row group per file (Spark's 128 MB row groups hold a whole
+        # rolled file): without the minimum, every incoming Arrow record
+        # batch becomes its own row group
+        rows = max_records_per_file or table.num_rows
+        ds.write_dataset(
+            table,
+            staging,
+            format="parquet",
+            partitioning=partitioning,
+            max_partitions=table.num_rows,
+            max_rows_per_file=rows,
+            min_rows_per_group=rows,
+            max_rows_per_group=rows,
+            file_visitor=lambda f: files.append((f.path, f.metadata.num_rows, f.size)),
+        )
+    if os.path.exists(sub):
+        shutil.rmtree(sub)
+    os.rename(staging, sub)
+    open(os.path.join(sub, "_SUCCESS"), "wb").close()
+    return [(os.path.join(sub, os.path.relpath(p, staging)), r, b) for p, r, b in files]
+
+
 def idempotent_batch_write(
     batch_df: DataFrame,
     root: str,
     batch_id: int,
     partition_by: tuple[str, ...] = (),
     max_records_per_file: int | None = None,
-) -> str:
+) -> list[tuple[str, int, int]]:
     """Crash-safe foreachBatch commit: the batch lands in its own
-    hive-style ``_batch=<id>/`` subdirectory with ``mode("overwrite")``.
+    hive-style ``_batch=<id>/`` subdirectory, replacing whatever an
+    earlier attempt left there, and ``_SUCCESS`` is written last.
 
     A checkpoint-replayed micro-batch — whether the previous attempt
-    wrote nothing, some files, or everything — simply overwrites its
+    wrote nothing, some files, or everything — simply replaces its
     own subdirectory, so the sink never holds duplicate rows for a
     batch REGARDLESS of where a crash landed. (A marker-file scheme is
     not crash-safe: marker-after-write duplicates on a crash between
     the two, marker-before-write loses data.) Readers see ``_batch``
-    as an ordinary partition column via partition discovery.
+    as an ordinary partition column via partition discovery, and
+    `committed_batch_dirs` skips a directory without ``_SUCCESS``.
 
-    Returns the batch subdirectory path (for per-batch bookkeeping)."""
-    import os
+    No Spark write job runs: the micro-batch is collected to the driver
+    as one Arrow table (so a batch is bounded by
+    ``spark.driver.maxResultSize``) and written with pyarrow into a
+    staging directory, hive-partitioned by ``partition_by`` with
+    Spark's directory names, at most ``max_records_per_file`` rows and
+    one row group per file; the staging directory is then renamed into
+    place.
 
-    sub = os.path.join(root, f"_batch={batch_id}")
-    if partition_by:
-        # cluster rows by partition value first: without this every
-        # write task opens a file in EVERY hive cell it sees (tasks ×
-        # cells tiny files — measured 24 s for a 20k-row 256-cell band
-        # store). Capping the shuffle at defaultParallelism keeps task
-        # count bounded while still giving each cell a single writer
-        # (one task handles several whole cells sequentially).
-        n = batch_df.sparkSession.sparkContext.defaultParallelism
-        batch_df = batch_df.repartition(n, *[batch_df[c] for c in partition_by])
-    writer = batch_df.write
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode("overwrite").parquet(sub)
-    return sub
+    Returns (path, rows, bytes) for each data file written."""
+    return _commit_arrow_batch(
+        _collect_batch(batch_df, partition_by),
+        root,
+        batch_id,
+        partition_by,
+        max_records_per_file,
+    )
 
 
 def committed_batch_dirs(root: str) -> list[str]:
@@ -333,19 +436,21 @@ class SizeCalibratedRoller:
     """foreachBatch writer that approximates a byte-size rolling policy
     (flink.conf:54-55: sink.rolling-policy.file-size = 110 MB).
 
-    Spark's parquet writer rolls on RECORD count (`maxRecordsPerFile`),
-    not bytes, so the cap is enforced by calibration. The FIRST batch
-    pre-calibrates by writing a small sample of itself to a scratch
-    subdirectory and measuring encoded bytes-per-row (so the byte
-    ceiling holds even for very wide rows — no record-count guess is
-    trusted); every subsequent batch refines the estimate from the parquet
-    footers it just produced (pyarrow metadata — footer-only reads,
-    incremental: only the new batch's files are opened, so per-batch
-    overhead stays O(files-per-batch) for the stream's lifetime).
+    The writer rolls on RECORD count (``max_records_per_file``), not
+    bytes, so the cap is enforced by calibration. The FIRST batch
+    encodes its first ``calibration_sample_rows`` rows to parquet in
+    memory and measures bytes-per-row before anything is written (so
+    the byte ceiling holds even for very wide rows — no record-count
+    guess is trusted); every batch then refines the estimate from the
+    rows and bytes `idempotent_batch_write`'s writer reports for the
+    files it just wrote.
 
-    Restart semantics: each batch overwrites its own ``_batch=<id>``
-    subdirectory via `idempotent_batch_write` — replays are exact
-    overwrites, never appends, at any crash point."""
+    The whole micro-batch is held on the driver as Arrow while it is
+    written, so one batch is bounded by ``spark.driver.maxResultSize``.
+
+    Restart semantics: each batch replaces its own ``_batch=<id>``
+    subdirectory through `idempotent_batch_write`'s commit — replays
+    are exact overwrites, never appends, at any crash point."""
 
     def __init__(
         self,
@@ -365,69 +470,36 @@ class SizeCalibratedRoller:
         self._total_bytes = 0
         self._total_rows = 0
 
-    @staticmethod
-    def _footer_stats(path: str) -> tuple[int, int]:
-        import os
+    def _cap(self, nbytes: float, rows: int) -> int:
+        return max(1, int(self.target * self.headroom / max(nbytes / rows, 1e-9)))
 
+    def _sample_calibrate(self, table) -> None:
+        """Bytes-per-row of the batch's first rows, encoded in memory
+        as the writer would encode them (partition columns live in
+        directory names, not in the files). An empty batch leaves the
+        cap unset for the next one."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        total_bytes = 0
-        total_rows = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, f)
-                total_bytes += os.path.getsize(full)
-                total_rows += pq.ParquetFile(full).metadata.num_rows
-        return total_bytes, total_rows
-
-    def _absorb(self, batch_dir: str) -> None:
-        b, r = self._footer_stats(batch_dir)
-        self._total_bytes += b
-        self._total_rows += r
-        if self._total_rows:
-            bytes_per_row = max(self._total_bytes / self._total_rows, 1e-9)
-            self.max_records = max(1, int(self.target * self.headroom / bytes_per_row))
-
-    def _sample_calibrate(self, batch_df: DataFrame) -> None:
-        """Measure encoded bytes-per-row on a small sample BEFORE the
-        first real write, so the ceiling holds from batch 0."""
-        import os
-        import shutil
-
-        scratch = os.path.join(self.path, "_calibration_sample")
-        batch_df.limit(self.sample_rows).write.mode("overwrite").parquet(scratch)
-        b, r = self._footer_stats(scratch)
-        shutil.rmtree(scratch, ignore_errors=True)
-        if r:
+        sample = table.slice(0, self.sample_rows).drop_columns(list(self.partition_by))
+        if sample.num_rows:
+            buf = pa.BufferOutputStream()
+            pq.write_table(sample, buf)
             # small samples overweigh the fixed footer; still a safe
             # (over-)estimate of bytes/row → an under-estimate of the cap
-            self.max_records = max(1, int(self.target * self.headroom / (b / r)))
-        else:
-            self.max_records = 1
+            self.max_records = self._cap(buf.tell(), sample.num_rows)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        first = self.max_records is None
-        if first:
-            # the calibration sample re-evaluates the micro-batch plan
-            # (limit() does not avoid upstream aggregations — the
-            # enrichment's session-window agg ran TWICE on batch 0, the
-            # whole stream for availableNow runs). Persist for the
-            # sample + real write, release immediately; later batches
-            # calibrate from footers and never pay this.
-            batch_df = batch_df.persist()
-            self._sample_calibrate(batch_df)
-        sub = idempotent_batch_write(
-            batch_df,
-            self.path,
-            batch_id,
-            partition_by=self.partition_by,
-            max_records_per_file=self.max_records,
+        table = _collect_batch(batch_df, self.partition_by)
+        if self.max_records is None:
+            self._sample_calibrate(table)
+        files = _commit_arrow_batch(
+            table, self.path, batch_id, self.partition_by, self.max_records
         )
-        if first:
-            batch_df.unpersist()
-        self._absorb(sub)
+        self._total_rows += sum(r for _, r, _ in files)
+        self._total_bytes += sum(b for _, _, b in files)
+        if self._total_rows:
+            self.max_records = self._cap(self._total_bytes, self._total_rows)
 
 
 def write_partitioned_parquet_size_rolled(
@@ -443,8 +515,8 @@ def write_partitioned_parquet_size_rolled(
     """S4 with the byte-size rolling policy: every produced file stays
     under `target_file_bytes`. The first batch sample-calibrates the
     record cap from actual encoded bytes-per-row (pass
-    `initial_records_per_file` to skip the sample write if the row
-    width is known); later batches refine it from their own footers.
+    `initial_records_per_file` to skip the sample if the row width is
+    known); every batch refines it from the files it wrote.
     Output is partitioned by `_batch` (crash-safe replay) then the
     user partitions."""
     roller = SizeCalibratedRoller(

@@ -1,0 +1,163 @@
+"""The `_batch` store writer (`sinks.idempotent_batch_write`): a
+micro-batch collected as Arrow and written with pyarrow must read back
+exactly as the Spark-written batch it replaces — same partition
+directory names, same rows, same schema — with one row group per file."""
+
+from __future__ import annotations
+
+import datetime as dt
+import glob
+import os
+
+import duckdb
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+
+from flink_application_spark.streaming.sinks import (
+    _collect_batch,
+    idempotent_batch_write,
+)
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_one_row_group_per_file_under_the_cap(spark, tmp_path):
+    df = spark.range(0, 4000, numPartitions=8).select(
+        "id", (F.col("id") % 3).cast("string").alias("p")
+    )
+    # precondition: the collected table arrives in several record
+    # batches, the case that used to cut one row group per batch
+    assert _collect_batch(df, ("p",)).column("id").num_chunks >= 4
+    files = idempotent_batch_write(
+        df, str(tmp_path), 0, partition_by=("p",), max_records_per_file=10_000
+    )
+    assert len(files) == 3  # one file per partition cell
+    for path, rows, nbytes in files:
+        meta = pq.ParquetFile(path).metadata
+        assert meta.num_row_groups == 1, path
+        assert (meta.num_rows, os.path.getsize(path)) == (rows, nbytes)
+    assert sum(r for _, r, _ in files) == 4000
+    # over the cap: files roll on the record count
+    files = idempotent_batch_write(
+        df, str(tmp_path), 1, partition_by=("p",), max_records_per_file=500
+    )
+    assert max(r for _, r, _ in files) == 500
+    assert all(pq.ParquetFile(p).metadata.num_row_groups == 1 for p, _, _ in files)
+
+
+def _partition_dirs(root):
+    return sorted(
+        os.path.relpath(d, root)
+        for d in glob.glob(os.path.join(root, "**", "*=*"), recursive=True)
+        if os.path.isdir(d)
+    )
+
+
+def test_partition_directory_names_match_spark(spark, tmp_path):
+    values = [None, "", "a/b", "x=y", "pct%", "sp ace", "c:d", "{b}[r]^", "tab\tq"]
+    df = spark.createDataFrame(
+        [(i, v, i % 2) for i, v in enumerate(values)], "id int, p string, q int"
+    )
+    twin = str(tmp_path / "spark")
+    df.write.partitionBy("p", "q").parquet(twin)
+    root = str(tmp_path / "store")
+    idempotent_batch_write(df, root, 0, partition_by=("p", "q"))
+    sub = os.path.join(root, "_batch=0")
+    assert _partition_dirs(sub) == _partition_dirs(twin)
+    got = spark.read.option("basePath", root).parquet(sub).drop("_batch")
+    want = spark.read.parquet(twin)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def test_partition_values_print_as_spark_prints_them(spark, tmp_path):
+    df = spark.sql(
+        "SELECT 1 AS id, timestamp'2024-01-02 03:04:05.5' AS ts, "
+        "date'2024-01-02' AS d, 1e20D AS big, true AS b, 1.25BD AS dec"
+    )
+    parts = ("ts", "d", "big", "b", "dec")
+    twin = str(tmp_path / "spark")
+    df.write.partitionBy(*parts).parquet(twin)
+    root = str(tmp_path / "store")
+    idempotent_batch_write(df, root, 0, partition_by=parts)
+    assert _partition_dirs(os.path.join(root, "_batch=0")) == _partition_dirs(twin)
+
+
+def test_types_round_trip(spark, tmp_path):
+    schema = (
+        "ts timestamp, ntz timestamp_ntz, d date, dec string, "
+        "ad array<double>, al array<bigint>, m map<string,bigint>, "
+        "bin binary, s struct<a: int, b: string>"
+    )
+    big = "9" * 38
+    rows = [
+        (
+            dt.datetime(2024, 1, 2, 3, 4, 5, 123456, tzinfo=dt.timezone.utc),
+            dt.datetime(2024, 1, 2, 3, 4, 5, 654321),
+            dt.date(2024, 1, 2),
+            big,
+            [1.5, None, -0.0],
+            [1, None, 2**62],
+            {"a": 1, "b": None},
+            bytes(range(256)),
+            (7, "x"),
+        ),
+        (
+            dt.datetime(1969, 12, 31, 23, 59, 59, 1, tzinfo=dt.timezone.utc),
+            dt.datetime(1900, 1, 1),
+            dt.date(1, 1, 1),
+            "-" + big,
+            [],
+            [],
+            {},
+            b"",
+            (None, None),
+        ),
+        (None,) * 9,
+    ]
+    # the widest decimal goes in as a string: Python decimals above
+    # 2^63 do not survive createDataFrame
+    df = spark.createDataFrame(rows, schema).withColumn(
+        "dec", F.col("dec").cast("decimal(38,0)")
+    )
+    root = str(tmp_path / "store")
+    idempotent_batch_write(df, root, 3)
+    back = (
+        spark.read.option("basePath", root)
+        .parquet(os.path.join(root, "_batch=3"))
+        .drop("_batch")
+    )
+    assert back.schema == df.schema
+    assert _rows(back) == _rows(df)
+
+    want = _rows(
+        df.select(F.unix_micros("ts"), F.unix_micros(F.col("ntz").cast("timestamp")))
+    )
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    got = con.execute(
+        "SELECT epoch_us(ts), epoch_us(ntz) FROM read_parquet(?)",
+        [os.path.join(root, "_batch=3", "*.parquet")],
+    ).fetchall()
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
+def test_empty_batches_commit_like_spark(spark, tmp_path):
+    empty = spark.createDataFrame([], "id bigint, p string")
+    root = str(tmp_path)
+    # unpartitioned: one schema-only file, so readers still get a schema
+    idempotent_batch_write(empty, root, 0)
+    assert spark.read.parquet(os.path.join(root, "_batch=0")).schema == empty.schema
+    idempotent_batch_write(empty, root, 1, partition_by=("p",))
+    assert sorted(os.listdir(os.path.join(root, "_batch=1"))) == ["_SUCCESS"]
+
+
+def test_replay_replaces_the_batch_and_leaves_no_staging(spark, tmp_path):
+    root = str(tmp_path)
+    df = spark.range(10).select("id", (F.col("id") % 2).alias("p"))
+    idempotent_batch_write(df, root, 0, partition_by=("p",))
+    idempotent_batch_write(df.filter("id < 4"), root, 0, partition_by=("p",))
+    assert sorted(os.listdir(root)) == ["_batch=0"]
+    assert spark.read.parquet(root).count() == 4
