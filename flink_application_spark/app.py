@@ -20,6 +20,12 @@ flink.conf's so a reference operator can map their deployment 1:1):
 
 Batch and streaming share the pipeline (streaming_enrichment works on
 both; its session dedup runs as a batch aggregation in batch mode).
+A streaming parquet sink with a rolling file size or TTL dims instead
+closes the Path-B sessions on the driver (`dedup.SessionCloser`, state
+in ``<checkpoint>/sessions``): a session is emitted in the micro-batch
+whose watermark passes its end, one trigger before Spark's own
+session window would emit it. Open sessions in a checkpoint written by
+Spark's stateful plan are not carried over to this path.
 """
 
 from __future__ import annotations
@@ -313,91 +319,104 @@ def build_pipeline(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     )
 
 
+def _start_closing_query(spark: SparkSession, cfg: dict[str, Any], ttl_ms: int | None):
+    """The size-rolled and TTL parquet paths: `enrichment_candidates` →
+    `SessionCloser` → Arrow writer, all inside foreachBatch. No Spark
+    stateful operator runs; the open Path-B sessions and the watermark
+    live in ``<checkpoint>/sessions``."""
+    import os
+
+    from flink_application_spark.streaming.dedup import SessionCloser
+    from flink_application_spark.streaming.pipeline import (
+        closing_batch_fn,
+        enrichment_candidates,
+        refreshing_enrichment_batch_fn,
+    )
+    from flink_application_spark.streaming.sinks import (
+        SizeCalibratedRoller,
+        _commit_arrow_batch,
+        trigger_kwargs,
+    )
+
+    sink, dims, dd = cfg["sink"], cfg["dims"], cfg.get("dedup", {})
+    part = tuple(sink.get("partition_by", ("event_date", "probe")))
+    # flink.conf parity: sink.rolling-policy.file-size selects the
+    # byte-size-calibrated roller (flink.conf:54-55, 110 MB) with or
+    # without TTL dims
+    roll_bytes = sink.get("sink.rolling-policy.file-size")
+    if roll_bytes is not None:
+        write_arrow = SizeCalibratedRoller(sink["path"], part, int(roll_bytes)).write_arrow
+    else:
+
+        def write_arrow(table, batch_id: int) -> None:
+            _commit_arrow_batch(table, sink["path"], batch_id, part, None)
+
+    closer = SessionCloser(
+        spark,
+        os.path.join(sink["checkpoint"], "sessions"),
+        gap=dd.get("gap", "1 second"),
+        watermark_delay=dd.get("watermark", "2 seconds"),
+    )
+    path_a_how = cfg.get("path_a_how", "inner")
+    if ttl_ms:
+        stream = build_source(spark, cfg)
+        fn = refreshing_enrichment_batch_fn(
+            lambda: _load_dim(spark, dims["imsi_msisdn"]),
+            lambda: _load_dim(spark, dims["ms_ip"]),
+            write_arrow,
+            closer=closer,
+            partition_by=part,
+            ttl_seconds=ttl_ms / 1000.0,
+            path_a_how=path_a_how,
+        )
+    else:
+        stream = enrichment_candidates(
+            build_source(spark, cfg),
+            _load_dim(spark, dims["imsi_msisdn"]),
+            _load_dim(spark, dims["ms_ip"]),
+            path_a_how=path_a_how,
+        )
+        fn = closing_batch_fn(closer, write_arrow, part)
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .queryName(sink.get("name", "enrichment_sink"))
+        .option("checkpointLocation", sink["checkpoint"])
+        .trigger(**trigger_kwargs(sink.get("trigger", "20 seconds")))
+        .start()
+    )
+
+
 def run(spark: SparkSession, config: str | dict[str, Any]):
     """Execute the configured pipeline. Batch: returns the result
     DataFrame (caller writes/collects). Streaming: starts the sink
     query and returns the StreamingQuery handle.
 
-    Streaming dims that carry ``cache_ttl_ms`` (what the flink.conf
-    translation produces from ``lookup.partial-cache.expire-after-
-    write``) run through the RefreshingDim foreachBatch path: dim
-    reloads are bounded to one per TTL and updates become visible
-    within TTL — Flink's partial-cache contract, not the per-trigger
-    rescan of a plain stream-static join."""
+    A streaming parquet sink with a rolling file size, or with dims
+    that carry ``cache_ttl_ms`` (what the flink.conf translation
+    produces from ``lookup.partial-cache.expire-after-write``), runs
+    `_start_closing_query`: each Path-B session is emitted in the
+    micro-batch whose watermark passes its end. TTL dims are reloaded
+    at most once per TTL and their updates become visible within TTL —
+    Flink's partial-cache contract; a plain static dim keeps the files
+    it listed when the query started. Other sinks run
+    `streaming_enrichment` with Spark's own session window."""
     cfg = load_config(config)
     sink = cfg.get("sink", {"format": "console"})
-    if cfg.get("mode", "batch") == "streaming":
-        dims = cfg["dims"]
+    streaming = cfg.get("mode", "batch") == "streaming"
+    if streaming and sink.get("format") == "parquet":
         ttls = [
             spec.get("cache_ttl_ms")
-            for spec in dims.values()
+            for spec in cfg["dims"].values()
             if isinstance(spec, dict)
         ]
         ttl_ms = next((t for t in ttls if t), None)
-        if ttl_ms and sink.get("format") == "parquet":
-            from flink_application_spark.streaming.pipeline import (
-                refreshing_enrichment_batch_fn,
-            )
-            from flink_application_spark.streaming.sinks import (
-                SizeCalibratedRoller,
-                idempotent_batch_write,
-            )
-
-            dd = cfg.get("dedup", {})
-            part = tuple(sink.get("partition_by", ("event_date", "probe")))
-            # flink.conf parity on THIS path too (round-6 ADVICE): the
-            # rolling-policy file-size cap applies whether or not the
-            # dims carry a TTL — SizeCalibratedRoller commits through
-            # the same idempotent per-batch overwrite
-            roll_bytes = sink.get("sink.rolling-policy.file-size")
-            if roll_bytes is not None:
-                write_fn = SizeCalibratedRoller(sink["path"], part, int(roll_bytes))
-            else:
-                write_fn = lambda df, bid: idempotent_batch_write(  # noqa: E731
-                    df, sink["path"], bid, partition_by=part
-                )
-            fn = refreshing_enrichment_batch_fn(
-                lambda: _load_dim(spark, dims["imsi_msisdn"]),
-                lambda: _load_dim(spark, dims["ms_ip"]),
-                write_fn,
-                ttl_seconds=ttl_ms / 1000.0,
-                path_a_how=cfg.get("path_a_how", "inner"),
-                gap=dd.get("gap", "1 second"),
-            )
-            writer = (
-                build_source(spark, cfg)
-                .writeStream.foreachBatch(fn)
-                .queryName(sink.get("name", "enrichment_sink"))
-                .option("checkpointLocation", sink["checkpoint"])
-            )
-            trigger = sink.get("trigger", "20 seconds")
-            if trigger:
-                writer = writer.trigger(processingTime=trigger)
-            else:
-                writer = writer.trigger(availableNow=True)
-            return writer.start()
+        if ttl_ms or sink.get("sink.rolling-policy.file-size") is not None:
+            return _start_closing_query(spark, cfg, ttl_ms)
     result = build_pipeline(spark, cfg)
-    if cfg.get("mode", "batch") != "streaming":
+    if not streaming:
         return result
     fmt = sink.get("format", "console")
     if fmt == "parquet":
-        # flink.conf parity: sink.rolling-policy.file-size selects the
-        # byte-size-calibrated roller (flink.conf:54-55, 110 MB)
-        roll_bytes = sink.get("sink.rolling-policy.file-size")
-        if roll_bytes is not None:
-            from flink_application_spark.streaming.sinks import (
-                write_partitioned_parquet_size_rolled,
-            )
-
-            return write_partitioned_parquet_size_rolled(
-                result,
-                sink["path"],
-                checkpoint=sink["checkpoint"],
-                partition_by=tuple(sink.get("partition_by", ("event_date", "probe"))),
-                target_file_bytes=int(roll_bytes),
-                trigger=sink.get("trigger", "20 seconds"),
-                query_name=sink.get("name", "enrichment_sink"),
-            )
         return write_partitioned_parquet(
             result,
             sink["path"],

@@ -105,10 +105,14 @@ def lookup_join(
 
     Spark mapping of Flink's `FOR SYSTEM_TIME AS OF proc_time` lookup
     join (EnrichmentApp.java:300-318): in streaming this is a
-    stream-static join whose static side is re-planned per micro-batch —
-    "as of processing time" at batch granularity. The dimension is
-    broadcast by default (it is the small side; Flink bounds it with a
-    100/1000-row lookup cache instead, flink.conf:37-38,47-48).
+    stream-static join. Every micro-batch executes it against the same
+    static relation: a JDBC dim re-runs its query, but a parquet dim
+    keeps the file listing it took when the DataFrame was created, so a
+    file added later is never joined. Dims that must change while a
+    query runs go through `streaming/dim_refresh.RefreshingDim`. The
+    dimension is broadcast by default (it is the small side; Flink
+    bounds it with a 100/1000-row lookup cache instead,
+    flink.conf:37-38,47-48).
     """
     dim = dim_df.select(*[F.col(src).alias(dst) for dst, src in project.items()])
     if broadcast_dim:

@@ -3,10 +3,10 @@
 The reference's JDBC lookup source caches point lookups with a
 row-level TTL (`lookup.partial-cache.expire-after-write = 60s`,
 EnrichmentApp.java:246-248, flink.conf:37-38). Spark's stream-static
-join re-plans the static side every micro-batch — fresher than the
-reference when the trigger is shorter than 60 s, but it re-reads the
-dim even when a cached copy would do, and with a long trigger there is
-no way to pin a *minimum* freshness.
+join executes the static side every micro-batch against the relation
+built at query start: a JDBC dim is re-queried even when a cached copy
+would do, and a parquet dim never sees a file added after its listing
+was taken — there is no way to pin a freshness bound.
 
 `RefreshingDim` closes that gap with the `foreachBatch` pattern: the
 dim is loaded once, eagerly local-checkpointed (materialized to

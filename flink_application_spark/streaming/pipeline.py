@@ -11,8 +11,19 @@ Topology (EnrichmentApp.run(), :59-110):
                          → session-window arg-max (W1/W2)
       → unionByName → canonical schema → sink     (S4/S5, R4)
 
+`enrichment_candidates` is the stateless part: Path-A rows and Path-B
+as-of candidates in one schema. Two dedup stages consume it:
+
+- `streaming_enrichment` runs Spark's streaming session window
+  (`dedup.session_argmax_dedup`); Spark emits a closed session one
+  micro-batch after the batch that closed it. The memory, console and
+  non-rolled file sinks, and every batch caller, use it.
+- `closing_batch_fn` runs `dedup.SessionCloser` inside foreachBatch,
+  which emits a session in the micro-batch whose watermark passes its
+  end. `app.run`'s size-rolled and TTL parquet paths use it.
+
 The batch pipeline in ``plans/cdr.py`` shares every operator; only the
-dedup stage differs (streaming session window with watermark vs batch
+dedup stage differs (session window with watermark vs batch
 window-rank) — tests assert batch output ≡ stream output on the same
 input (SURVEY §5 batch-vs-stream equivalence).
 """
@@ -31,40 +42,41 @@ from flink_application_spark.operators.enrichment import (
     with_proc_time,
 )
 from flink_application_spark.plans.cdr import _ASOF_ORDER_SPARK, CANONICAL
-from flink_application_spark.streaming.dedup import session_argmax_dedup
+from flink_application_spark.streaming.dedup import SessionCloser, session_argmax_dedup
 
 
-def streaming_enrichment(
+# Columns `enrichment_candidates` adds to CANONICAL besides the `_asof`
+# flag: the as-of order keys the canonical columns lack, and the
+# session axis.
+_CANDIDATE_KEYS = ["_start_time", "_msisdn", "proc_time"]
+
+
+def enrichment_candidates(
     src: DataFrame,
     imsi_msisdn: DataFrame,
     ms_ip: DataFrame,
     *,
     path_a_how: str = "inner",
-    gap: str = "1 second",
-    watermark_delay: str = "2 seconds",
     clock: Column | None = None,
 ) -> DataFrame:
-    """Full enrichment on a streaming `src`; dims are static DataFrames
-    (re-planned per micro-batch = lookup-join-as-of-processing-time at
-    batch granularity, SURVEY §2.3 J1).
+    """The stateless part of the enrichment: Path-A rows (final) and
+    Path-B as-of candidates (to be reduced per session), in one schema:
+    CANONICAL with the coalesce writeback applied, plus `_start_time`,
+    `_msisdn`, `proc_time` and the `_asof` flag. `_asof` is false on
+    Path-A rows, whose other three extra columns are NULL.
+
+    The dims are static DataFrames joined stream-static: Spark plans
+    each micro-batch against the same relation, so a plain
+    ``spark.read.parquet(dir)`` dim keeps the file listing it took when
+    it was created — a file added to ``dir`` later is never joined.
+    Dims that must change while the query runs go through
+    `refreshing_enrichment_batch_fn`.
 
     `clock` injects a deterministic proc-time for tests (P6); the
     default uses the event's own start_time as the session axis, which
     makes the stream replayable (proc-time wall clocks are not).
     """
     extended = extend_with_partition_cols(src)
-
-    # Path A — imsi present
-    a = lookup_join(
-        extended.filter(F.col("imsi").isNotNull()),
-        imsi_msisdn,
-        on=F.col("imsi") == F.col("_imsi"),
-        project={"_imsi": "imsi", "_msisdn": "msisdn"},
-        how=path_a_how,
-    )
-    a = select_canonical(
-        coalesce_enrich(a, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
 
     # Path B — imsi missing
     exploded = explode_delimited(
@@ -87,29 +99,84 @@ def streaming_enrichment(
     candidates = with_proc_time(
         candidates, clock if clock is not None else F.col("start_time")
     )
+    # the coalesce writeback, keeping `_msisdn` as an order key
+    b = select_canonical(
+        candidates.withColumns(
+            {c: F.coalesce(F.col(f"_{c}"), F.col(c)) for c in ("imsi", "msisdn")}
+        ),
+        CANONICAL + _CANDIDATE_KEYS,
+    ).withColumn("_asof", F.lit(True))
+
+    # Path A — imsi present
+    a = lookup_join(
+        extended.filter(F.col("imsi").isNotNull()),
+        imsi_msisdn,
+        on=F.col("imsi") == F.col("_imsi"),
+        project={"_imsi": "imsi", "_msisdn": "msisdn"},
+        how=path_a_how,
+    )
+    a = select_canonical(
+        coalesce_enrich(a, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
+    ).withColumns(
+        {c: F.lit(None).cast(b.schema[c].dataType) for c in _CANDIDATE_KEYS}
+        | {"_asof": F.lit(False)}
+    )
+    return a.unionByName(b)
+
+
+def streaming_enrichment(
+    src: DataFrame,
+    imsi_msisdn: DataFrame,
+    ms_ip: DataFrame,
+    *,
+    path_a_how: str = "inner",
+    gap: str = "1 second",
+    watermark_delay: str = "2 seconds",
+    clock: Column | None = None,
+) -> DataFrame:
+    """Full enrichment on a streaming or batch `src`:
+    `enrichment_candidates`, then Spark's session-window arg-max over
+    the Path-B candidates (`dedup.session_argmax_dedup`), in CANONICAL
+    columns."""
+    cands = enrichment_candidates(
+        src, imsi_msisdn, ms_ip, path_a_how=path_a_how, clock=clock
+    )
+    a = cands.filter(~F.col("_asof")).select(*CANONICAL)
     best = session_argmax_dedup(
-        candidates,
+        cands.filter(F.col("_asof")),
         key_cols=["unique_cdr_id"],
         order_col=F.struct(*[F.col(c) for c in _ASOF_ORDER_SPARK]),
         ts_col="proc_time",
         gap=gap,
         watermark_delay=watermark_delay,
     )
-    b = select_canonical(
-        coalesce_enrich(best, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
+    return a.unionByName(best.select(*CANONICAL))
 
-    return a.unionByName(b)
+
+def closing_batch_fn(closer: SessionCloser, write_arrow, partition_by: tuple[str, ...]):
+    """A ``foreachBatch`` function over `enrichment_candidates` rows:
+    collects the micro-batch once as Arrow (partition columns cast to
+    their string form), closes sessions with `closer` and hands the
+    CANONICAL rows to ``write_arrow(table, batch_id)`` — e.g.
+    `SizeCalibratedRoller.write_arrow`."""
+    from flink_application_spark.streaming.sinks import _collect_batch
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        rows = closer(_collect_batch(batch_df, partition_by), batch_id)
+        write_arrow(rows.select(CANONICAL), batch_id)
+
+    return _process
 
 
 def refreshing_enrichment_batch_fn(
     imsi_msisdn_loader,
     ms_ip_loader,
-    write_fn,
+    write_arrow,
     *,
+    closer: SessionCloser,
+    partition_by: tuple[str, ...] = (),
     ttl_seconds: float = 60.0,
     path_a_how: str = "inner",
-    gap: str = "1 second",
     clock: Column | None = None,
     clock_fn=None,
 ):
@@ -118,9 +185,9 @@ def refreshing_enrichment_batch_fn(
     `EnrichmentApp.java:246-248`) — the round-5 verdict's last
     documented semantic divergence, closed:
 
-    A plain stream-static join re-executes the dim scan EVERY
-    micro-batch (fresher than Flink but one dim scan per trigger — the
-    load the partial cache exists to avoid), and a persisted dim never
+    A stream-static join against a plain ``spark.read.parquet(dir)``
+    dim never sees a file added to ``dir`` after the query started
+    (the relation keeps its first listing), and a persisted dim never
     refreshes at all. This wrapper threads both dims through
     `RefreshingDim` (streaming/dim_refresh.py): each is reloaded at
     most once per `ttl_seconds` and served as a lineage-truncated
@@ -129,29 +196,28 @@ def refreshing_enrichment_batch_fn(
     bounded by 1/TTL regardless of trigger cadence (pinned in
     tests/test_streaming.py::test_dim_update_visible_within_ttl).
 
-    Returns a ``foreachBatch`` function; each micro-batch runs the
-    FULL shared enrichment (`streaming_enrichment` works on batch
-    frames — the session dedup degrades to the batch window form
-    within each micro-batch, the same per-batch scope every other
-    foreachBatch operator in this package has) and hands the result to
-    `write_fn(df, batch_id)`. `clock_fn` injects a deterministic clock
+    Returns a ``foreachBatch`` function; each micro-batch runs
+    `enrichment_candidates` against the current dim generations and
+    `closing_batch_fn`: `closer` carries the Path-B sessions across
+    micro-batches, and ``write_arrow(table, batch_id)`` receives the
+    CANONICAL rows as Arrow. `clock_fn` injects a deterministic clock
     into the TTL caches for tests."""
     from flink_application_spark.streaming.dim_refresh import RefreshingDim
 
     kw = {} if clock_fn is None else {"clock": clock_fn}
     imsi_dim = RefreshingDim(imsi_msisdn_loader, ttl_seconds, **kw)
     ms_ip_dim = RefreshingDim(ms_ip_loader, ttl_seconds, **kw)
+    close_and_write = closing_batch_fn(closer, write_arrow, partition_by)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = streaming_enrichment(
+        cands = enrichment_candidates(
             batch_df,
             imsi_dim.get(),
             ms_ip_dim.get(),
             path_a_how=path_a_how,
-            gap=gap,
             clock=clock,
         )
-        write_fn(out, batch_id)
+        close_and_write(cands, batch_id)
 
     # expose the caches so callers/tests can read refresh_count
     _process.imsi_dim = imsi_dim  # type: ignore[attr-defined]

@@ -490,7 +490,11 @@ class SizeCalibratedRoller:
             self.max_records = self._cap(buf.tell(), sample.num_rows)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        table = _collect_batch(batch_df, self.partition_by)
+        self.write_arrow(_collect_batch(batch_df, self.partition_by), batch_id)
+
+    def write_arrow(self, table, batch_id: int) -> None:
+        """Commit a micro-batch already collected as Arrow, its
+        partition columns in their string form (`_collect_batch`)."""
         if self.max_records is None:
             self._sample_calibrate(table)
         files = _commit_arrow_batch(

@@ -193,10 +193,22 @@ def test_flink_conf_builds_and_runs_pipeline(spark, app_dirs, tmp_path):
 def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
     """Dims with cache_ttl_ms (the flink.conf translation's output)
     route streaming runs through the RefreshingDim foreachBatch path —
-    output matches the plain stream-static wiring on a static dim."""
+    output matches the plain stream-static wiring on a static dim. The
+    source ends with a far-future event whose watermark closes every
+    session."""
+    src = str(tmp_path / "src")
+    spark.read.parquet(str(app_dirs / "src")).write.parquet(src)
+    dim_row = spark.read.parquet(str(app_dirs / "ms_ip")).first()
+    spark.sql(
+        f"""SELECT CAST('2200-01-01 00:00:00' AS TIMESTAMP) AS start_time,
+                   '{dim_row.probe}-flush' AS measuring_probe_name,
+                   CAST(NULL AS BIGINT) AS imsi, CAST(NULL AS BIGINT) AS msisdn,
+                   '{dim_row.ms_ip_address}' AS ms_ip_address,
+                   CAST(-1 AS BIGINT) AS unique_cdr_id"""
+    ).write.mode("append").parquet(src)
     cfg = {
         "mode": "streaming",
-        "source": {"format": "parquet", "path": str(app_dirs / "src")},
+        "source": {"format": "parquet", "path": src},
         "dims": {
             "imsi_msisdn": {
                 "format": "jdbc",
@@ -219,7 +231,7 @@ def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
     }
     q = run(spark, cfg)
     q.awaitTermination(300)
-    back = spark.read.parquet(str(tmp_path / "out"))
+    back = spark.read.parquet(str(tmp_path / "out")).filter(F.col("unique_cdr_id") != -1)
     assert back.count() > 0
     assert set(back.columns) >= {"imsi", "msisdn", "event_date", "probe"}
     # batch reference through the plain path

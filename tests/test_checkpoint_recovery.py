@@ -122,3 +122,107 @@ def test_stateful_restart_equals_batch(spark, sf_dir, tmp_path):
         watermark_delay="0 seconds",
     )
     assert canonical(got) == canonical(want)
+
+
+def _files(root):
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                p = os.path.join(d, n)
+                with open(p, "rb") as f:
+                    out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_app_run_restart_and_replay_equal_batch(spark, sf_dir, tmp_path):
+    """`app.run`'s size-rolled path closes sessions on the driver with
+    its state in ``<checkpoint>/sessions``. The first availableNow run
+    leaves sessions open; a restart that only sees a far-future event
+    closes them, and the sink equals the batch pipeline as a multiset.
+    A batch replayed because its commit-log entry is missing rewrites
+    the same bytes in its sink and session-state directories."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flink_application_spark.app import run
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    v = cdr_views(spark, sf_dir)
+    cdr = v["cdr_src"].withColumn("start_time", F.col("start_time").cast("timestamp"))
+    cdr.write.parquet(src)
+    ms_ip = v["ms_ip"].withColumn("start_time", F.col("start_time").cast("timestamp"))
+    v["imsi_msisdn"].write.parquet(str(tmp_path / "imsi_msisdn"))
+    ms_ip.write.parquet(str(tmp_path / "ms_ip"))
+    cfg = {
+        "mode": "streaming",
+        "source": {"format": "parquet", "path": src},
+        "dims": {"imsi_msisdn": str(tmp_path / "imsi_msisdn"), "ms_ip": str(tmp_path / "ms_ip")},
+        "sink": {
+            "format": "parquet",
+            "path": out,
+            "checkpoint": ckpt,
+            "trigger": None,
+            "sink.rolling-policy.file-size": 110 * 1024 * 1024,
+        },
+        "dedup": {"gap": "1 hour", "watermark": "0 seconds"},
+    }
+
+    def open_sessions():
+        (last,) = committed_batch_dirs(os.path.join(ckpt, "sessions"))[-1:]
+        return pq.read_table(glob.glob(os.path.join(last, "*.parquet"))[0]).num_rows
+
+    run(spark, cfg).awaitTermination(300)
+    assert not os.path.exists(os.path.join(ckpt, "state"))  # no Spark state store
+    assert open_sessions() > 0
+    n_first = len(committed_batch_dirs(out))
+
+    dim_row = ms_ip.first()
+    cdr.limit(1).select(
+        F.lit("2099-01-01 00:00:00").cast("timestamp").alias("start_time"),
+        F.lit(dim_row.probe + "-sentinel").alias("measuring_probe_name"),
+        F.lit(None).cast("bigint").alias("imsi"),
+        F.lit(None).cast("bigint").alias("msisdn"),
+        F.lit(dim_row.ms_ip_address).alias("ms_ip_address"),
+        F.lit(-1).cast("bigint").alias("unique_cdr_id"),
+    ).write.mode("append").parquet(src)
+    run(spark, cfg).awaitTermination(300)
+    assert open_sessions() == 1  # the flush event's own session
+
+    def canonical(df):
+        return sorted(
+            (tuple(r) for r in df.select(*[F.col(c).cast("string") for c in CANONICAL]).collect()),
+            key=repr,
+        )
+
+    got = spark.read.option("basePath", out).parquet(*committed_batch_dirs(out))
+    assert got.filter(F.col("_batch") >= n_first).count() > 0
+    want = streaming_enrichment(
+        spark.read.parquet(src).filter(F.col("unique_cdr_id") != -1),
+        v["imsi_msisdn"],
+        ms_ip,
+        gap="1 hour",
+        watermark_delay="0 seconds",
+    )
+    assert canonical(got) == canonical(want)
+
+    # replay: the last batch's sink commit happened, its commit-log entry
+    # did not
+    last = max(int(p.rsplit("=", 1)[1]) for p in committed_batch_dirs(out))
+    sink_dir = os.path.join(out, f"_batch={last}")
+    state_dir = os.path.join(ckpt, "sessions", f"_batch={last}")
+    before = (_files(sink_dir), _files(state_dir))
+    stamps = [os.stat(os.path.join(d, "_SUCCESS")).st_mtime_ns for d in (sink_dir, state_dir)]
+    os.remove(os.path.join(ckpt, "commits", str(last)))
+    q = run(spark, cfg)
+    q.awaitTermination(300)
+    assert q.lastProgress["batchId"] == last
+    # rewritten, not left in place
+    for d, stamp in zip((sink_dir, state_dir), stamps):
+        assert os.stat(os.path.join(d, "_SUCCESS")).st_mtime_ns > stamp
+    assert (_files(sink_dir), _files(state_dir)) == before
+    assert before[0] and before[1]

@@ -469,6 +469,7 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
     regardless of trigger cadence)."""
     import time as _time
 
+    from flink_application_spark.streaming.dedup import SessionCloser
     from flink_application_spark.streaming.pipeline import (
         refreshing_enrichment_batch_fn,
     )
@@ -498,16 +499,16 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
     now = [0.0]
     collected: list[tuple[int, int | None]] = []  # (unique_cdr_id, msisdn)
 
-    def write_fn(df, batch_id):
+    def write_fn(table, batch_id):
         collected.extend(
-            (r.unique_cdr_id, r.msisdn)
-            for r in df.select("unique_cdr_id", "msisdn").collect()
+            zip(table["unique_cdr_id"].to_pylist(), table["msisdn"].to_pylist())
         )
 
     fn = refreshing_enrichment_batch_fn(
         lambda: spark.read.parquet(str(dim_dir)),
         lambda: ms_ip,
         write_fn,
+        closer=SessionCloser(spark, str(tmp_path / "ckpt" / "sessions")),
         ttl_seconds=60.0,
         path_a_how="left",  # unmatched imsi emits with NULL msisdn
         clock_fn=lambda: now[0],
@@ -549,3 +550,39 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
         assert (3, None) not in collected
     finally:
         q.stop()
+
+
+def test_plain_static_dim_keeps_its_first_listing(spark, cdr_parquet, tmp_path):
+    """Without TTL dims the stream-static join runs every micro-batch
+    against the relation built when the query started: a file added to
+    the dim directory mid-stream is never listed, so its key is never
+    joined. Fresh dims need `refreshing_enrichment_batch_fn`."""
+    dim_dir, src_dir = str(tmp_path / "dim"), str(tmp_path / "src")
+    dim_schema = "imsi bigint, msisdn bigint"
+    spark.createDataFrame([(222, 70000000002)], dim_schema).write.parquet(dim_dir)
+
+    def src_row(cdr_id):
+        spark.sql(
+            f"""SELECT CAST('2024-01-01 00:00:00' AS TIMESTAMP) AS start_time,
+                       'mo-probe' AS measuring_probe_name, CAST(111 AS BIGINT) AS imsi,
+                       CAST(NULL AS BIGINT) AS msisdn, ';10.0.0.1;' AS ms_ip_address,
+                       CAST({cdr_id} AS BIGINT) AS unique_cdr_id"""
+        ).write.mode("append").parquet(src_dir)
+
+    src_row(1)
+    out = streaming_enrichment(
+        file_stream(spark, src_dir),
+        spark.read.parquet(dim_dir),
+        spark.read.parquet(str(cdr_parquet / "ms_ip")),
+        path_a_how="left",
+    )
+    q = write_memory(out, "static_dim_out", trigger="200 milliseconds")
+    try:
+        q.processAllAvailable()
+        spark.createDataFrame([(111, 70000000001)], dim_schema).write.mode("append").parquet(dim_dir)
+        src_row(2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {(r.unique_cdr_id, r.msisdn) for r in spark.table("static_dim_out").collect()}
+    assert got == {(1, None), (2, None)}
