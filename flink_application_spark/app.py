@@ -21,11 +21,16 @@ flink.conf's so a reference operator can map their deployment 1:1):
 Batch and streaming share the pipeline (streaming_enrichment works on
 both; its session dedup runs as a batch aggregation in batch mode).
 A streaming parquet sink with a rolling file size or TTL dims instead
-closes the Path-B sessions on the driver (`dedup.SessionCloser`, state
-in ``<checkpoint>/sessions``): a session is emitted in the micro-batch
-whose watermark passes its end, one trigger before Spark's own
-session window would emit it. Open sessions in a checkpoint written by
-Spark's stateful plan are not carried over to this path.
+runs the closing path (`_start_closing_query`): Spark runs only the
+per-row projection and one collect per micro-batch; both dim lookups
+run on the driver in Arrow against tables loaded once per query (a
+file dim), once per TTL (a dim with ``cache_ttl_ms``) or every batch
+(a JDBC dim without one); and the Path-B sessions close on the driver
+(`dedup.SessionCloser`, state in ``<checkpoint>/sessions``): a session
+is emitted in the micro-batch whose watermark passes its end, one
+trigger before Spark's own session window would emit it. Open
+sessions in a checkpoint written by Spark's stateful plan are not
+carried over to this path.
 """
 
 from __future__ import annotations
@@ -319,18 +324,39 @@ def build_pipeline(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     )
 
 
-def _start_closing_query(spark: SparkSession, cfg: dict[str, Any], ttl_ms: int | None):
-    """The size-rolled and TTL parquet paths: `enrichment_candidates` →
-    `SessionCloser` → Arrow writer, all inside foreachBatch. No Spark
-    stateful operator runs; the open Path-B sessions and the watermark
-    live in ``<checkpoint>/sessions``."""
+def _dim_ttl_seconds(spec: str | dict[str, Any]) -> float:
+    """How long a loaded dim serves the closing path before it reloads:
+    its ``cache_ttl_ms``; else every batch for a JDBC dim (a
+    stream-static join re-queries it every batch) and never for a file
+    dim (a stream-static join keeps the files it listed at query
+    start)."""
+    import math
+
+    if isinstance(spec, dict):
+        if spec.get("cache_ttl_ms"):
+            return spec["cache_ttl_ms"] / 1000.0
+        if spec.get("format", "jdbc") == "jdbc" and spec.get("parquet_fallback") is None:
+            return 0.0
+    return math.inf
+
+
+def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
+    """The size-rolled and TTL parquet paths: `lookup_projection` →
+    foreachBatch(`closing_batch_fn`): both dims are looked up on the
+    driver in Arrow against `RefreshingDim` tables, loaded here and
+    reloaded by `_dim_ttl_seconds`; `SessionCloser` closes the Path-B
+    sessions; an Arrow writer commits the rows. One Spark job per
+    micro-batch; the open sessions and the watermark live in
+    ``<checkpoint>/sessions``."""
     import os
 
     from flink_application_spark.streaming.dedup import SessionCloser
+    from flink_application_spark.streaming.dim_refresh import RefreshingDim
     from flink_application_spark.streaming.pipeline import (
         closing_batch_fn,
-        enrichment_candidates,
-        refreshing_enrichment_batch_fn,
+        imsi_lookup_dim,
+        lookup_projection,
+        ms_ip_lookup_dim,
     )
     from flink_application_spark.streaming.sinks import (
         SizeCalibratedRoller,
@@ -357,28 +383,23 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any], ttl_ms: int |
         gap=dd.get("gap", "1 second"),
         watermark_delay=dd.get("watermark", "2 seconds"),
     )
-    path_a_how = cfg.get("path_a_how", "inner")
-    if ttl_ms:
-        stream = build_source(spark, cfg)
-        fn = refreshing_enrichment_batch_fn(
-            lambda: _load_dim(spark, dims["imsi_msisdn"]),
-            lambda: _load_dim(spark, dims["ms_ip"]),
-            write_arrow,
-            closer=closer,
-            partition_by=part,
-            ttl_seconds=ttl_ms / 1000.0,
-            path_a_how=path_a_how,
-        )
-    else:
-        stream = enrichment_candidates(
-            build_source(spark, cfg),
-            _load_dim(spark, dims["imsi_msisdn"]),
-            _load_dim(spark, dims["ms_ip"]),
-            path_a_how=path_a_how,
-        )
-        fn = closing_batch_fn(closer, write_arrow, part)
+
+    def dim(name: str, prepare) -> RefreshingDim:
+        spec = dims[name]
+        d = RefreshingDim(lambda: prepare(_load_dim(spark, spec)), _dim_ttl_seconds(spec))
+        d.get()  # the first generation, at query start
+        return d
+
+    fn = closing_batch_fn(
+        dim("imsi_msisdn", imsi_lookup_dim),
+        dim("ms_ip", ms_ip_lookup_dim),
+        closer,
+        write_arrow,
+        path_a_how=cfg.get("path_a_how", "inner"),
+    )
     return (
-        stream.writeStream.foreachBatch(fn)
+        lookup_projection(build_source(spark, cfg), part)
+        .writeStream.foreachBatch(fn)
         .queryName(sink.get("name", "enrichment_sink"))
         .option("checkpointLocation", sink["checkpoint"])
         .trigger(**trigger_kwargs(sink.get("trigger", "20 seconds")))
@@ -397,21 +418,17 @@ def run(spark: SparkSession, config: str | dict[str, Any]):
     `_start_closing_query`: each Path-B session is emitted in the
     micro-batch whose watermark passes its end. TTL dims are reloaded
     at most once per TTL and their updates become visible within TTL —
-    Flink's partial-cache contract; a plain static dim keeps the files
-    it listed when the query started. Other sinks run
+    Flink's partial-cache contract; a file dim without a TTL is loaded
+    once, from the files it lists when the query starts, and a JDBC dim
+    without one every micro-batch. Other sinks run
     `streaming_enrichment` with Spark's own session window."""
     cfg = load_config(config)
     sink = cfg.get("sink", {"format": "console"})
     streaming = cfg.get("mode", "batch") == "streaming"
     if streaming and sink.get("format") == "parquet":
-        ttls = [
-            spec.get("cache_ttl_ms")
-            for spec in cfg["dims"].values()
-            if isinstance(spec, dict)
-        ]
-        ttl_ms = next((t for t in ttls if t), None)
-        if ttl_ms or sink.get("sink.rolling-policy.file-size") is not None:
-            return _start_closing_query(spark, cfg, ttl_ms)
+        ttl = any(isinstance(spec, dict) and spec.get("cache_ttl_ms") for spec in cfg["dims"].values())
+        if ttl or sink.get("sink.rolling-policy.file-size") is not None:
+            return _start_closing_query(spark, cfg)
     result = build_pipeline(spark, cfg)
     if not streaming:
         return result

@@ -108,11 +108,13 @@ def lookup_join(
     stream-static join. Every micro-batch executes it against the same
     static relation: a JDBC dim re-runs its query, but a parquet dim
     keeps the file listing it took when the DataFrame was created, so a
-    file added later is never joined. Dims that must change while a
-    query runs go through `streaming/dim_refresh.RefreshingDim`. The
-    dimension is broadcast by default (it is the small side; Flink
-    bounds it with a 100/1000-row lookup cache instead,
-    flink.conf:37-38,47-48).
+    file added later is never joined. The dimension is broadcast by
+    default (it is the small side; Flink bounds it with a 100/1000-row
+    lookup cache instead, flink.conf:37-38,47-48). `app.run`'s
+    size-rolled and TTL paths do not use this join: they look the dims
+    up on the driver in Arrow (`streaming/pipeline.lookup_candidates`)
+    against `streaming/dim_refresh.RefreshingDim` tables, which is also
+    how a dim changes while a query runs.
     """
     dim = dim_df.select(*[F.col(src).alias(dst) for dst, src in project.items()])
     if broadcast_dim:

@@ -109,7 +109,8 @@ class SessionCloser:
     """Driver-side session-window arg-max over one micro-batch at a time.
 
     Called from foreachBatch with the batch as an Arrow table of
-    `pipeline.enrichment_candidates` rows: those with ``_asof`` set are
+    `pipeline.enrichment_candidates` rows (`pipeline.lookup_candidates`
+    builds them on the driver): those with ``_asof`` set are
     Path-B candidates, the others pass through. Per batch, vectorised
     over Arrow and numpy:
 

@@ -1,4 +1,5 @@
-"""TTL-refreshed dimension tables for stream enrichment (SURVEY §2.1 S3).
+"""Dimension tables held on the driver for stream enrichment
+(SURVEY §2.1 S3).
 
 The reference's JDBC lookup source caches point lookups with a
 row-level TTL (`lookup.partial-cache.expire-after-write = 60s`,
@@ -6,24 +7,26 @@ EnrichmentApp.java:246-248, flink.conf:37-38). Spark's stream-static
 join executes the static side every micro-batch against the relation
 built at query start: a JDBC dim is re-queried even when a cached copy
 would do, and a parquet dim never sees a file added after its listing
-was taken — there is no way to pin a freshness bound.
+was taken.
 
-`RefreshingDim` closes that gap with the `foreachBatch` pattern: the
-dim is loaded once, eagerly local-checkpointed (materialized to
-executor-local blocks with lineage truncated), and reloaded only when
-its wall-clock age exceeds `ttl_seconds` at a micro-batch boundary.
-This is exactly the reference's expire-after-write cache, at batch
-granularity — the only granularity at which Spark's execution model
-can swap a join input.
+`RefreshingDim` holds one generation of a dim as an Arrow table on the
+driver, collected with ``toArrow()``, and reloads it at a micro-batch
+boundary once its wall-clock age reaches `ttl_seconds` — the
+reference's expire-after-write cache, at batch granularity. The same
+class carries the two reload rules of a stream-static join:
+``ttl_seconds=math.inf`` loads once (a plain parquet dim: the files
+listed at query start) and ``0`` reloads every batch (a JDBC dim
+without a TTL is re-queried every batch).
 
-Scale notes: for small dims Catalyst broadcasts the join anyway, so
-refresh cost is one scan + one broadcast per TTL expiry rather than
-per batch. Superseded generations are unreferenced after refresh and
-reclaimed by the ContextCleaner, bounding storage at ~one generation.
+Scale notes: a generation lives in driver memory, as a broadcast dim
+already did, and a superseded one is freed when the next replaces it.
+Load cost is one Spark job per load: once per query, once per TTL, or
+once per batch by the rule above.
 """
 
 from __future__ import annotations
 
+import math
 import time
 from collections.abc import Callable
 
@@ -31,49 +34,33 @@ from pyspark.sql import DataFrame
 
 
 class RefreshingDim:
-    """Wall-clock-TTL cache around a dimension loader.
+    """Wall-clock-TTL cache of a dimension as an Arrow table.
 
     `loader()` must return a fresh DataFrame reading the source (it is
     re-invoked on expiry; a closure over `spark.read...` is the normal
-    shape). A monotonic clock is injectable for deterministic tests.
+    shape); `get()` collects it with ``toArrow()``. A monotonic clock
+    is injectable for deterministic tests.
     """
 
     def __init__(
         self,
         loader: Callable[[], DataFrame],
-        ttl_seconds: float,
+        ttl_seconds: float = math.inf,
         clock: Callable[[], float] = time.monotonic,
     ) -> None:
         self._loader = loader
         self._ttl = ttl_seconds
         self._clock = clock
-        self._df: DataFrame | None = None
+        self._table = None
         self._loaded_at: float = float("-inf")
         self.refresh_count = 0
 
-    def get(self) -> DataFrame:
+    def get(self):
+        """The current generation (a ``pyarrow.Table``), reloaded first
+        if it is at least `ttl_seconds` old."""
         now = self._clock()
-        if self._df is None or now - self._loaded_at > self._ttl:
-            # localCheckpoint (eager), NOT persist: persist keeps the
-            # scan in the plan and Spark's CacheManager *recaches by
-            # path* when the source directory is overwritten — the
-            # "cached" dim would silently follow source mutations.
-            # Checkpointing truncates lineage to the materialized
-            # blocks, pinning the generation until the next refresh.
-            self._df = self._loader().localCheckpoint(eager=True)
+        if self._table is None or now - self._loaded_at >= self._ttl:
+            self._table = self._loader().toArrow()
             self._loaded_at = now
             self.refresh_count += 1
-        return self._df
-
-    def foreach_batch(
-        self,
-        join_fn: Callable[[DataFrame, DataFrame], DataFrame],
-        write_fn: Callable[[DataFrame, int], None],
-    ) -> Callable[[DataFrame, int], None]:
-        """Build a `foreachBatch` function: each micro-batch is joined
-        against the TTL-cached dim snapshot and handed to `write_fn`."""
-
-        def _process(batch_df: DataFrame, batch_id: int) -> None:
-            write_fn(join_fn(batch_df, self.get()), batch_id)
-
-        return _process
+        return self._table

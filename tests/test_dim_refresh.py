@@ -2,9 +2,10 @@
 
 Scenario mirroring the reference's expire-after-write cache: the dim
 changes between micro-batches; with an expired TTL the next batch sees
-the new rows, with an unexpired TTL it keeps the cached snapshot.
-Driven batch-by-batch through the foreachBatch function directly (the
-streaming engine calls it exactly this way, sequentially per batch).
+the new rows, with an unexpired TTL it keeps the cached Arrow
+generation. Driven batch-by-batch through a foreachBatch-shaped
+function directly (the streaming engine calls it exactly this way,
+sequentially per batch).
 """
 
 from __future__ import annotations
@@ -16,13 +17,18 @@ import pytest as _pytest_tier
 # run the full suite with:  python -m pytest tests/ -q -m ''
 pytestmark = _pytest_tier.mark.slow
 
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 from flink_application_spark.streaming.dim_refresh import RefreshingDim
 
 
 def _mk_dim_loader(spark, path):
     return lambda: spark.read.parquet(path)
+
+
+def _left_join(batch, dim):
+    out = batch.join(dim, "imsi", join_type="left outer")
+    return sorted(zip(out["imsi"].to_pylist(), out["msisdn"].to_pylist()))
 
 
 def _write_dim(spark, path, rows):
@@ -40,12 +46,11 @@ def test_ttl_zero_sees_dim_updates(spark, tmp_path):
         _mk_dim_loader(spark, dim_path), ttl_seconds=10.0, clock=lambda: clock["t"]
     )
     outputs: dict[int, list] = {}
-    process = dim.foreach_batch(
-        join_fn=lambda batch, d: batch.join(d, "imsi", "left"),
-        write_fn=lambda df, bid: outputs.__setitem__(bid, sorted(map(tuple, df.collect()))),
-    )
 
-    batch0 = spark.createDataFrame([(1,), (3,)], "imsi bigint")
+    def process(batch, bid):
+        outputs[bid] = _left_join(batch, dim.get())
+
+    batch0 = pa.table({"imsi": pa.array([1, 3], pa.int64())})
     process(batch0, 0)
     assert outputs[0] == [(1, 100), (3, None)]
     assert dim.refresh_count == 1
@@ -74,10 +79,10 @@ def test_streaming_end_to_end_with_refreshing_dim(spark, tmp_path):
 
     dim = RefreshingDim(_mk_dim_loader(spark, dim_path), ttl_seconds=3600.0)
     rows: list = []
-    process = dim.foreach_batch(
-        join_fn=lambda batch, d: batch.join(F.broadcast(d), "imsi", "left"),
-        write_fn=lambda df, bid: rows.extend(map(tuple, df.collect())),
-    )
+
+    def process(batch_df, bid):
+        rows.extend(_left_join(batch_df.toArrow(), dim.get()))
+
     q = (
         spark.readStream.schema("imsi bigint")
         .parquet(src)

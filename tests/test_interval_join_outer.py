@@ -19,6 +19,8 @@ import pytest as _pytest_tier
 # run the full suite with:  python -m pytest tests/ -q -m ''
 pytestmark = _pytest_tier.mark.slow
 
+import glob
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -47,23 +49,23 @@ def _run(left, right):
     )
 
 
+def _write_wave(df, path: str, wave: int, t0: float) -> None:
+    """Append ``df`` to ``path`` as one file, stamped with modification
+    time ``t0 + wave`` seconds. One file per wave keeps a wave in one
+    micro-batch: spread over several files, a wave's rows would reach
+    the join in an arbitrary order, and a row behind the watermark that
+    an earlier file advanced is dropped as late."""
+    before = set(glob.glob(os.path.join(path, "*.parquet")))
+    df.coalesce(1).write.mode("append").parquet(path)
+    (f,) = set(glob.glob(os.path.join(path, "*.parquet"))) - before
+    os.utime(f, (t0 + wave, t0 + wave))
+
+
 def test_left_outer_interval_join_stream_converges_to_batch(spark, tmp_path):
-    """Convergence contract with ONE full-isolation retry: the
-    scenario's wave files are modTime-ordered (the sleep between
-    writes), and under an extremely loaded box (full suite, 32-way
-    parallel Spark) a write can slip past the separation window and
-    scramble batch order — a transient of the HARNESS, not of the
-    join. A fresh-directory retry re-establishes the ordering; a real
-    semantics bug fails BOTH attempts deterministically. (r05 verdict
-    item 9; the first hardening — 5 flush waves, 600 s awaits —
-    survived bench-level load but not full-suite load.)"""
-    try:
-        _scenario(spark, tmp_path / "try1")
-    except AssertionError:
-        _scenario(spark, tmp_path / "try2")
-
-
-def _scenario(spark, tmp_path):
+    """The file source orders a stream's files by modification time, so
+    each wave is one file with an explicit one (`_write_wave`): the data
+    wave, then the sentinels, then each flush wave, whatever the load on
+    the box."""
     imp_rows = [
         (1, "2024-01-01 00:00:00"),
         (2, "2024-01-01 00:00:10"),
@@ -89,17 +91,15 @@ def _scenario(spark, tmp_path):
             F.col("click_time").cast("timestamp").alias("click_time"),
         )
 
-    import pathlib
-
-    tmp_path = pathlib.Path(tmp_path)
-    tmp_path.mkdir(parents=True, exist_ok=True)
     imp_dir, clk_dir = str(tmp_path / "imp"), str(tmp_path / "clk")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    _imp(imp_rows).write.mode("append").parquet(imp_dir)
-    _clk(clk_rows).write.mode("append").parquet(clk_dir)
-    time.sleep(1.2)  # wave ordering: sentinels must land in a LATER batch
-    _imp(sentinel_imp).write.mode("append").parquet(imp_dir)
-    _clk(sentinel_clk).write.mode("append").parquet(clk_dir)
+    # modification times in the past, well inside the source's maxFileAge
+    t0 = time.time() - 3600
+    _write_wave(_imp(imp_rows), imp_dir, 0, t0)
+    _write_wave(_clk(clk_rows), clk_dir, 0, t0)
+    # sentinels must land in a LATER batch
+    _write_wave(_imp(sentinel_imp), imp_dir, 1, t0)
+    _write_wave(_clk(sentinel_clk), clk_dir, 1, t0)
 
     def _one_run(max_files=None):
         out = _run(
@@ -132,11 +132,10 @@ def _scenario(spark, tmp_path):
     expected = sorted(map(tuple, want.collect()))
     got = None
     for attempt in range(5):
-        time.sleep(1.2)
         flush_id = 100 + attempt
         ts = f"2099-{6 + attempt:02d}-01 00:00:00"
-        _imp([(flush_id, ts)]).write.mode("append").parquet(imp_dir)
-        _clk([(flush_id, ts)]).write.mode("append").parquet(clk_dir)
+        _write_wave(_imp([(flush_id, ts)]), imp_dir, 2 + attempt, t0)
+        _write_wave(_clk([(flush_id, ts)]), clk_dir, 2 + attempt, t0)
         _one_run(max_files=1)
         got = (
             spark.read.parquet(sink)

@@ -234,7 +234,13 @@ def test_intervals_are_read_by_spark(spark, tmp_path):
 def test_ttl_path_keeps_one_session_across_batches(spark, tmp_path):
     """One CDR id whose two source rows land in consecutive micro-batches
     within `gap` yields one row (a per-batch dedup splits the session)."""
-    from flink_application_spark.streaming.pipeline import refreshing_enrichment_batch_fn
+    from flink_application_spark.streaming.dim_refresh import RefreshingDim
+    from flink_application_spark.streaming.pipeline import (
+        closing_batch_fn,
+        imsi_lookup_dim,
+        lookup_projection,
+        ms_ip_lookup_dim,
+    )
 
     imsi = spark.createDataFrame([(222, 70000000002)], "imsi bigint, msisdn bigint")
     ms_ip = spark.sql(
@@ -251,15 +257,15 @@ def test_ttl_path_keeps_one_session_across_batches(spark, tmp_path):
         )
 
     got: list[tuple] = []
-    fn = refreshing_enrichment_batch_fn(
-        lambda: imsi,
-        lambda: ms_ip,
+    fn = closing_batch_fn(
+        RefreshingDim(lambda: imsi_lookup_dim(imsi)),
+        RefreshingDim(lambda: ms_ip_lookup_dim(ms_ip)),
+        SessionCloser(spark, str(tmp_path / "sessions")),
         lambda t, b: got.extend(zip(t["unique_cdr_id"].to_pylist(), t["imsi"].to_pylist())),
-        closer=SessionCloser(spark, str(tmp_path / "sessions")),
     )
-    fn(src(5, "2024-01-01 00:00:00"), 0)
-    fn(src(5, "2024-01-01 00:00:00.5"), 1)
-    fn(src(-1, "2099-01-01 00:00:00"), 2)  # the watermark passes key 5's session
+    fn(lookup_projection(src(5, "2024-01-01 00:00:00")), 0)
+    fn(lookup_projection(src(5, "2024-01-01 00:00:00.5")), 1)
+    fn(lookup_projection(src(-1, "2099-01-01 00:00:00")), 2)  # the watermark passes key 5's session
     assert got == [(5, 555)]
 
 

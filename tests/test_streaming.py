@@ -462,7 +462,8 @@ def test_observed_metrics_per_microbatch(spark, cdr_parquet):
 
 def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
     """Flink lookup-cache TTL parity (flink.conf:37-38, round-5 verdict
-    item 7): with dims wired through RefreshingDim, a dimension UPDATE
+    item 7): with dims held by RefreshingDim on the closing path
+    (`lookup_projection` → `closing_batch_fn`), a dimension UPDATE
     becomes visible to a RUNNING query once the TTL expires — no
     restart — while batches inside the TTL window keep serving the
     cached generation (bounded dim load: ≤ one reload per TTL,
@@ -470,8 +471,12 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
     import time as _time
 
     from flink_application_spark.streaming.dedup import SessionCloser
+    from flink_application_spark.streaming.dim_refresh import RefreshingDim
     from flink_application_spark.streaming.pipeline import (
-        refreshing_enrichment_batch_fn,
+        closing_batch_fn,
+        imsi_lookup_dim,
+        lookup_projection,
+        ms_ip_lookup_dim,
     )
 
     dim_dir = tmp_path / "dim"
@@ -504,17 +509,18 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
             zip(table["unique_cdr_id"].to_pylist(), table["msisdn"].to_pylist())
         )
 
-    fn = refreshing_enrichment_batch_fn(
-        lambda: spark.read.parquet(str(dim_dir)),
-        lambda: ms_ip,
+    imsi_dim = RefreshingDim(
+        lambda: imsi_lookup_dim(spark.read.parquet(str(dim_dir))), 60.0, clock=lambda: now[0]
+    )
+    fn = closing_batch_fn(
+        imsi_dim,
+        RefreshingDim(lambda: ms_ip_lookup_dim(ms_ip), 60.0, clock=lambda: now[0]),
+        SessionCloser(spark, str(tmp_path / "ckpt" / "sessions")),
         write_fn,
-        closer=SessionCloser(spark, str(tmp_path / "ckpt" / "sessions")),
-        ttl_seconds=60.0,
         path_a_how="left",  # unmatched imsi emits with NULL msisdn
-        clock_fn=lambda: now[0],
     )
     q = (
-        file_stream(spark, str(src_dir))
+        lookup_projection(file_stream(spark, str(src_dir)))
         .writeStream.foreachBatch(fn)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
@@ -539,14 +545,14 @@ def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
         ).write.mode("append").parquet(str(dim_dir))
         _src_row(2).write.mode("append").parquet(str(src_dir))
         _wait_for(lambda: (2, None) in collected)
-        assert fn.imsi_dim.refresh_count == 1  # inside TTL: no reload
+        assert imsi_dim.refresh_count == 1  # inside TTL: no reload
 
         # clock passes the TTL → the update becomes visible to the
         # SAME running query
         now[0] = 61.0
         _src_row(3).write.mode("append").parquet(str(src_dir))
         _wait_for(lambda: (3, new_msisdn) in collected)
-        assert fn.imsi_dim.refresh_count == 2
+        assert imsi_dim.refresh_count == 2
         assert (3, None) not in collected
     finally:
         q.stop()
@@ -556,7 +562,7 @@ def test_plain_static_dim_keeps_its_first_listing(spark, cdr_parquet, tmp_path):
     """Without TTL dims the stream-static join runs every micro-batch
     against the relation built when the query started: a file added to
     the dim directory mid-stream is never listed, so its key is never
-    joined. Fresh dims need `refreshing_enrichment_batch_fn`."""
+    joined. Fresh dims need a TTL (`RefreshingDim`)."""
     dim_dir, src_dir = str(tmp_path / "dim"), str(tmp_path / "src")
     dim_schema = "imsi bigint, msisdn bigint"
     spark.createDataFrame([(222, 70000000002)], dim_schema).write.parquet(dim_dir)
