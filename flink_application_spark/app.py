@@ -25,7 +25,10 @@ runs the closing path (`_start_closing_query`): Spark runs only the
 per-row projection and one collect per micro-batch; both dim lookups
 run on the driver in Arrow against tables loaded once per query (a
 file dim), once per TTL (a dim with ``cache_ttl_ms``) or every batch
-(a JDBC dim without one); and the Path-B sessions close on the driver
+(a JDBC dim without one) — the first generations load in the
+background while the source and the query start, and `run` returns
+only once both are loaded (or raises the loader's error, with the
+query stopped); and the Path-B sessions close on the driver
 (`dedup.SessionCloser`, state in ``<checkpoint>/sessions``): a session
 is emitted in the micro-batch whose watermark passes its end, one
 trigger before Spark's own session window would emit it. Open
@@ -36,6 +39,7 @@ carried over to this path.
 from __future__ import annotations
 
 import json
+from concurrent.futures import Future, wait
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -340,14 +344,39 @@ def _dim_ttl_seconds(spec: str | dict[str, Any]) -> float:
     return math.inf
 
 
+def _load_in_background(spark: SparkSession, dim) -> Future:
+    """Start `dim`'s first ``get()`` on an `InheritableThread`, so its
+    jobs run under the caller's job group and local properties. The
+    future holds the table, or the loader's own exception."""
+    from pyspark import InheritableThread
+
+    done: Future = Future()
+
+    def load() -> None:
+        try:
+            done.set_result(dim.get())
+        except BaseException as e:
+            done.set_exception(e)
+
+    InheritableThread(load, session=spark).start()
+    return done
+
+
 def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     """The size-rolled and TTL parquet paths: `lookup_projection` →
     foreachBatch(`closing_batch_fn`): both dims are looked up on the
-    driver in Arrow against `RefreshingDim` tables, loaded here and
-    reloaded by `_dim_ttl_seconds`; `SessionCloser` closes the Path-B
-    sessions; an Arrow writer commits the rows. One Spark job per
-    micro-batch; the open sessions and the watermark live in
-    ``<checkpoint>/sessions``."""
+    driver in Arrow against `RefreshingDim` tables, reloaded by
+    `_dim_ttl_seconds`; `SessionCloser` closes the Path-B sessions; an
+    Arrow writer commits the rows. One Spark job per micro-batch; the
+    open sessions and the watermark live in ``<checkpoint>/sessions``.
+
+    Start-up overlaps three cold chains: both dims' first generations
+    load on background threads while this thread builds the source
+    (schema inference included) and starts the query. A micro-batch
+    that reaches a dim before its load ends waits for that load. Both
+    loads are joined before this returns: a running query with both
+    first generations loaded, or — if a load fails — the query stopped
+    and the loader's exception raised."""
     import os
 
     from flink_application_spark.streaming.dedup import SessionCloser
@@ -365,46 +394,52 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     )
 
     sink, dims, dd = cfg["sink"], cfg["dims"], cfg.get("dedup", {})
-    part = tuple(sink.get("partition_by", ("event_date", "probe")))
-    # flink.conf parity: sink.rolling-policy.file-size selects the
-    # byte-size-calibrated roller (flink.conf:54-55, 110 MB) with or
-    # without TTL dims
-    roll_bytes = sink.get("sink.rolling-policy.file-size")
-    if roll_bytes is not None:
-        write_arrow = SizeCalibratedRoller(sink["path"], part, int(roll_bytes)).write_arrow
-    else:
-
-        def write_arrow(table, batch_id: int) -> None:
-            _commit_arrow_batch(table, sink["path"], batch_id, part, None)
-
-    closer = SessionCloser(
-        spark,
-        os.path.join(sink["checkpoint"], "sessions"),
-        gap=dd.get("gap", "1 second"),
-        watermark_delay=dd.get("watermark", "2 seconds"),
-    )
 
     def dim(name: str, prepare) -> RefreshingDim:
         spec = dims[name]
-        d = RefreshingDim(lambda: prepare(_load_dim(spark, spec)), _dim_ttl_seconds(spec))
-        d.get()  # the first generation, at query start
-        return d
+        return RefreshingDim(lambda: prepare(_load_dim(spark, spec)), _dim_ttl_seconds(spec))
 
-    fn = closing_batch_fn(
-        dim("imsi_msisdn", imsi_lookup_dim),
-        dim("ms_ip", ms_ip_lookup_dim),
-        closer,
-        write_arrow,
-        path_a_how=cfg.get("path_a_how", "inner"),
-    )
-    return (
-        lookup_projection(build_source(spark, cfg), part)
-        .writeStream.foreachBatch(fn)
-        .queryName(sink.get("name", "enrichment_sink"))
-        .option("checkpointLocation", sink["checkpoint"])
-        .trigger(**trigger_kwargs(sink.get("trigger", "20 seconds")))
-        .start()
-    )
+    imsi_msisdn, ms_ip = dim("imsi_msisdn", imsi_lookup_dim), dim("ms_ip", ms_ip_lookup_dim)
+    loads = [_load_in_background(spark, d) for d in (imsi_msisdn, ms_ip)]
+    try:
+        part = tuple(sink.get("partition_by", ("event_date", "probe")))
+        # flink.conf parity: sink.rolling-policy.file-size selects the
+        # byte-size-calibrated roller (flink.conf:54-55, 110 MB) with or
+        # without TTL dims
+        roll_bytes = sink.get("sink.rolling-policy.file-size")
+        if roll_bytes is not None:
+            write_arrow = SizeCalibratedRoller(sink["path"], part, int(roll_bytes)).write_arrow
+        else:
+
+            def write_arrow(table, batch_id: int) -> None:
+                _commit_arrow_batch(table, sink["path"], batch_id, part, None)
+
+        closer = SessionCloser(
+            spark,
+            os.path.join(sink["checkpoint"], "sessions"),
+            gap=dd.get("gap", "1 second"),
+            watermark_delay=dd.get("watermark", "2 seconds"),
+        )
+        fn = closing_batch_fn(
+            imsi_msisdn, ms_ip, closer, write_arrow, path_a_how=cfg.get("path_a_how", "inner")
+        )
+        query = (
+            lookup_projection(build_source(spark, cfg), part)
+            .writeStream.foreachBatch(fn)
+            .queryName(sink.get("name", "enrichment_sink"))
+            .option("checkpointLocation", sink["checkpoint"])
+            .trigger(**trigger_kwargs(sink.get("trigger", "20 seconds")))
+            .start()
+        )
+    finally:
+        wait(loads)
+    try:
+        for load in loads:
+            load.result()
+    except BaseException:
+        query.stop()
+        raise
+    return query
 
 
 def run(spark: SparkSession, config: str | dict[str, Any]):
@@ -420,8 +455,11 @@ def run(spark: SparkSession, config: str | dict[str, Any]):
     at most once per TTL and their updates become visible within TTL —
     Flink's partial-cache contract; a file dim without a TTL is loaded
     once, from the files it lists when the query starts, and a JDBC dim
-    without one every micro-batch. Other sinks run
-    `streaming_enrichment` with Spark's own session window."""
+    without one every micro-batch. The dims' first loads overlap the
+    source and query start-up; the query is returned once both have
+    loaded, and if one fails the query is stopped and the loader's
+    exception raised. Other sinks run `streaming_enrichment` with
+    Spark's own session window."""
     cfg = load_config(config)
     sink = cfg.get("sink", {"format": "console"})
     streaming = cfg.get("mode", "batch") == "streaming"

@@ -24,7 +24,9 @@ as-of candidates in one schema. It exists in two engines:
   of the source; `closing_batch_fn` collects each micro-batch once as
   Arrow, `lookup_candidates` joins it with Acero against dim tables
   `dim_refresh.RefreshingDim` holds (loaded once per query, once per
-  TTL, or every batch for a JDBC dim without a TTL), and
+  TTL, or every batch for a JDBC dim without a TTL; the first
+  generations load in the background while the query starts, and a
+  batch that gets there first waits for them), and
   `dedup.SessionCloser` emits a session in the micro-batch whose
   watermark passes its end. One Spark job per micro-batch.
 

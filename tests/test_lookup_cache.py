@@ -155,13 +155,19 @@ def test_streaming_foreachbatch_enrichment_with_cache(spark, tmp_path):
             1
         ).write.mode("append").parquet(str(src))
         _time.sleep(1.2)
+    # both waves are on disk: availableNow drains them (one file per
+    # batch) and ends the query
     q = (
         file_stream(spark, str(src), max_files_per_trigger=1)
         .writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     got = spark.read.parquet(out)
     full = spark.createDataFrame(
         [r for w in waves for r in w], "row_id bigint, imsi bigint"

@@ -179,3 +179,31 @@ def test_closing_query_runs_one_job_per_batch_and_loads_dims_once(spark, tmp_pat
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
     assert "Join" not in plan and "Broadcast" not in plan
     assert dict(loads) == {str(tmp_path / "imsi"): 1, str(tmp_path / "ms_ip"): 1}
+
+
+def test_closing_query_raises_the_loaders_error_and_stops(spark, tmp_path):
+    """The dims load while the query starts; a failed load still fails
+    `app.run` itself, with the loader's own exception, and leaves no
+    query running."""
+    from pyspark.errors import AnalysisException
+
+    from flink_application_spark import app
+
+    src, _, _ = _frames(spark, tmp_path)
+    missing = str(tmp_path / "no_such_dim")
+    cfg = {
+        "mode": "streaming",
+        "source": {"format": "parquet", "path": str(tmp_path / "src")},
+        "dims": {"imsi_msisdn": missing, "ms_ip": str(tmp_path / "ms_ip")},
+        "sink": {
+            "format": "parquet",
+            "path": str(tmp_path / "out"),
+            "checkpoint": str(tmp_path / "ckpt"),
+            "trigger": "200 milliseconds",
+            "sink.rolling-policy.file-size": 1 << 20,
+        },
+    }
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND") as err:
+        app.run(spark, cfg)
+    assert missing in str(err.value)
+    assert spark.streams.active == []

@@ -45,3 +45,20 @@ def test_near_dup_components_memo_matches_inline(spark, sf_dir):
     g = sorted((r["v"], r["component"]) for r in got.collect())
     w = sorted((r["v"], r["component"]) for r in want.collect())
     assert g == w and len(g) > 0
+
+
+def test_near_dup_pairs_memo_keeps_one_live_entry_per_application(spark, sf_dir):
+    from pyspark import StorageLevel
+
+    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    app_id = spark.sparkContext.applicationId
+    first = _memo.near_dup_pairs_cached(spark, docs, sf_dir, 0.6)
+    comp = _memo.near_dup_components_cached(spark, docs, sf_dir, 0.6)
+    assert first.storageLevel != StorageLevel.NONE
+    second = _memo.near_dup_pairs_cached(spark, docs, sf_dir, 0.7)
+    assert [k for k in _memo._PAIRS if k[0] == app_id] == [(app_id, sf_dir, 0.7)]
+    assert first.storageLevel == StorageLevel.NONE
+    assert second.storageLevel != StorageLevel.NONE
+    # the components derived from the replaced pair frame go with it
+    assert not [k for k in _memo._COMPONENTS if k[0] == app_id]
+    assert comp.storageLevel == StorageLevel.NONE
