@@ -18,22 +18,20 @@ flink.conf's so a reference operator can map their deployment 1:1):
   "path_a_how": "inner" | "left"
 }
 
-Batch and streaming share the pipeline (streaming_enrichment works on
-both; its session dedup runs as a batch aggregation in batch mode).
-A streaming parquet sink with a rolling file size or TTL dims instead
-runs the closing path (`_start_closing_query`): Spark runs only the
-per-row projection and one collect per micro-batch; both dim lookups
-run on the driver in Arrow against tables loaded once per query (a
-file dim), once per TTL (a dim with ``cache_ttl_ms``) or every batch
-(a JDBC dim without one) — the first generations load in the
+Batch mode returns `build_pipeline`: `streaming_enrichment` on a batch
+source, its session dedup run as a batch aggregation. Streaming mode,
+for every sink, runs one engine (`_start_closing_query`): Spark runs
+only the per-row projection and one collect per micro-batch; both dim
+lookups run on the driver in Arrow against tables loaded once per
+query (a file dim), once per TTL (a dim with ``cache_ttl_ms``) or every
+batch (a JDBC dim without one) — the first generations load in the
 background while the source and the query start, and `run` returns
 only once both are loaded (or raises the loader's error, with the
 query stopped); and the Path-B sessions close on the driver
 (`dedup.SessionCloser`, state in ``<checkpoint>/sessions``): a session
-is emitted in the micro-batch whose watermark passes its end, one
-trigger before Spark's own session window would emit it. Open
+is emitted in the micro-batch whose watermark passes its end. Open
 sessions in a checkpoint written by Spark's stateful plan are not
-carried over to this path.
+carried over.
 """
 
 from __future__ import annotations
@@ -50,11 +48,6 @@ from flink_application_spark.sources.streams import (
     kafka_csv_stream,
 )
 from flink_application_spark.streaming.pipeline import streaming_enrichment
-from flink_application_spark.streaming.sinks import (
-    write_console,
-    write_memory,
-    write_partitioned_parquet,
-)
 
 
 def load_config(path_or_dict: str | dict[str, Any]) -> dict[str, Any]:
@@ -93,9 +86,10 @@ def flink_conf_to_config(
 
     - ``kafka.*`` → streaming CSV-over-Kafka source (S1);
     - ``imsi_msisdn`` / ``ms_ip`` JDBC blocks → dimension specs, with
-      ``lookup.partial-cache.max-rows`` / ``expire-after-write``
-      carried through for the PartialLookupCache / RefreshingDim
-      layers (S3);
+      ``lookup.partial-cache.expire-after-write`` carried through as
+      the dim's ``cache_ttl_ms`` (`RefreshingDim`, S3);
+      ``lookup.partial-cache.max-rows`` is ignored: the whole dim is
+      held on the driver;
     - ``hdfs.*`` → partitioned parquet sink with the byte-size rolling
       policy (``fileSize = "110MB"`` → target_file_bytes, S4);
     - ``checkpoint.interval`` / ``job.parallelism`` → runtime knobs
@@ -122,10 +116,7 @@ def flink_conf_to_config(
             "user": block.get("user"),
             "password": block.get("password"),
         }
-        max_rows = hocon_get(block, "lookup.partial-cache.max-rows")
         ttl = hocon_get(block, "lookup.partial-cache.expire-after-write")
-        if max_rows is not None:
-            spec["cache_max_rows"] = int(max_rows)
         if ttl is not None:
             spec["cache_ttl_ms"] = parse_duration_ms(ttl)
         return spec
@@ -362,13 +353,30 @@ def _load_in_background(spark: SparkSession, dim) -> Future:
     return done
 
 
+# each sink format's default trigger (None: availableNow) and query name
+_SINK_DEFAULTS = {
+    "parquet": ("20 seconds", "enrichment_sink"),
+    "memory": (None, "enrichment_out"),
+    "console": (None, "enrichment"),
+}
+
+
 def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
-    """The size-rolled and TTL parquet paths: `lookup_projection` →
+    """Every streaming sink: `lookup_projection` →
     foreachBatch(`closing_batch_fn`): both dims are looked up on the
     driver in Arrow against `RefreshingDim` tables, reloaded by
     `_dim_ttl_seconds`; `SessionCloser` closes the Path-B sessions; an
     Arrow writer commits the rows. One Spark job per micro-batch; the
     open sessions and the watermark live in ``<checkpoint>/sessions``.
+
+    The writer follows the sink format: parquet goes to
+    `SizeCalibratedRoller` with a rolling file size and to
+    `_commit_arrow_batch` without one, both laid out as
+    ``_batch=<id>/<partition_by>…``; memory to `memory_table_writer`;
+    console to `console_write_arrow`. Only parquet casts its partition
+    columns to strings; memory and console rows keep the batch
+    pipeline's column types. A memory or console sink without a
+    ``checkpoint`` checkpoints to a fresh temporary directory.
 
     Start-up overlaps three cold chains: both dims' first generations
     load on background threads while this thread builds the source
@@ -378,6 +386,7 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     first generations loaded, or — if a load fails — the query stopped
     and the loader's exception raised."""
     import os
+    import tempfile
 
     from flink_application_spark.streaming.dedup import SessionCloser
     from flink_application_spark.streaming.dim_refresh import RefreshingDim
@@ -390,24 +399,40 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     from flink_application_spark.streaming.sinks import (
         SizeCalibratedRoller,
         _commit_arrow_batch,
+        console_write_arrow,
+        memory_table_writer,
         trigger_kwargs,
     )
 
-    sink, dims, dd = cfg["sink"], cfg["dims"], cfg.get("dedup", {})
+    sink, dims, dd = cfg.get("sink", {"format": "console"}), cfg["dims"], cfg.get("dedup", {})
+    fmt = sink.get("format", "console")
+    if fmt not in _SINK_DEFAULTS:
+        raise ValueError(
+            f"unknown sink format {fmt!r}: the supported formats are parquet, memory and console"
+        )
+    trigger, name = _SINK_DEFAULTS[fmt]
+    trigger, name = sink.get("trigger", trigger), sink.get("name", name)
+    if fmt == "parquet":
+        part = tuple(sink.get("partition_by", ("event_date", "probe")))
+        checkpoint = sink["checkpoint"]
+    else:
+        part, checkpoint = (), sink.get("checkpoint") or tempfile.mkdtemp()
 
-    def dim(name: str, prepare) -> RefreshingDim:
-        spec = dims[name]
+    def dim(key: str, prepare) -> RefreshingDim:
+        spec = dims[key]
         return RefreshingDim(lambda: prepare(_load_dim(spark, spec)), _dim_ttl_seconds(spec))
 
     imsi_msisdn, ms_ip = dim("imsi_msisdn", imsi_lookup_dim), dim("ms_ip", ms_ip_lookup_dim)
     loads = [_load_in_background(spark, d) for d in (imsi_msisdn, ms_ip)]
     try:
-        part = tuple(sink.get("partition_by", ("event_date", "probe")))
         # flink.conf parity: sink.rolling-policy.file-size selects the
-        # byte-size-calibrated roller (flink.conf:54-55, 110 MB) with or
-        # without TTL dims
+        # byte-size-calibrated roller (flink.conf:54-55, 110 MB)
         roll_bytes = sink.get("sink.rolling-policy.file-size")
-        if roll_bytes is not None:
+        if fmt == "memory":
+            write_arrow = memory_table_writer(spark, name)
+        elif fmt == "console":
+            write_arrow = console_write_arrow
+        elif roll_bytes is not None:
             write_arrow = SizeCalibratedRoller(sink["path"], part, int(roll_bytes)).write_arrow
         else:
 
@@ -416,7 +441,7 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
 
         closer = SessionCloser(
             spark,
-            os.path.join(sink["checkpoint"], "sessions"),
+            os.path.join(checkpoint, "sessions"),
             gap=dd.get("gap", "1 second"),
             watermark_delay=dd.get("watermark", "2 seconds"),
         )
@@ -426,9 +451,9 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
         query = (
             lookup_projection(build_source(spark, cfg), part)
             .writeStream.foreachBatch(fn)
-            .queryName(sink.get("name", "enrichment_sink"))
-            .option("checkpointLocation", sink["checkpoint"])
-            .trigger(**trigger_kwargs(sink.get("trigger", "20 seconds")))
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(**trigger_kwargs(trigger))
             .start()
         )
     finally:
@@ -445,44 +470,24 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
 def run(spark: SparkSession, config: str | dict[str, Any]):
     """Execute the configured pipeline. Batch: returns the result
     DataFrame (caller writes/collects). Streaming: starts the sink
-    query and returns the StreamingQuery handle.
+    query (`_start_closing_query`, for every sink format) and returns
+    the StreamingQuery handle; a sink format other than parquet, memory
+    or console raises ``ValueError`` before anything loads or starts.
 
-    A streaming parquet sink with a rolling file size, or with dims
-    that carry ``cache_ttl_ms`` (what the flink.conf translation
-    produces from ``lookup.partial-cache.expire-after-write``), runs
-    `_start_closing_query`: each Path-B session is emitted in the
-    micro-batch whose watermark passes its end. TTL dims are reloaded
-    at most once per TTL and their updates become visible within TTL —
-    Flink's partial-cache contract; a file dim without a TTL is loaded
-    once, from the files it lists when the query starts, and a JDBC dim
-    without one every micro-batch. The dims' first loads overlap the
-    source and query start-up; the query is returned once both have
-    loaded, and if one fails the query is stopped and the loader's
-    exception raised. Other sinks run `streaming_enrichment` with
-    Spark's own session window."""
+    Each Path-B session is emitted in the micro-batch whose watermark
+    passes its end. Dims with ``cache_ttl_ms`` (what the flink.conf
+    translation produces from ``lookup.partial-cache.expire-after-write``)
+    are reloaded at most once per TTL and their updates become visible
+    within TTL — Flink's partial-cache contract; a file dim without a
+    TTL is loaded once, from the files it lists when the query starts,
+    and a JDBC dim without one every micro-batch. The dims' first loads
+    overlap the source and query start-up; the query is returned once
+    both have loaded, and if one fails the query is stopped and the
+    loader's exception raised."""
     cfg = load_config(config)
-    sink = cfg.get("sink", {"format": "console"})
-    streaming = cfg.get("mode", "batch") == "streaming"
-    if streaming and sink.get("format") == "parquet":
-        ttl = any(isinstance(spec, dict) and spec.get("cache_ttl_ms") for spec in cfg["dims"].values())
-        if ttl or sink.get("sink.rolling-policy.file-size") is not None:
-            return _start_closing_query(spark, cfg)
-    result = build_pipeline(spark, cfg)
-    if not streaming:
-        return result
-    fmt = sink.get("format", "console")
-    if fmt == "parquet":
-        return write_partitioned_parquet(
-            result,
-            sink["path"],
-            checkpoint=sink["checkpoint"],
-            partition_by=tuple(sink.get("partition_by", ("event_date", "probe"))),
-            trigger=sink.get("trigger", "20 seconds"),
-            query_name=sink.get("name", "enrichment_sink"),
-        )
-    if fmt == "memory":
-        return write_memory(result, sink.get("name", "enrichment_out"), trigger=sink.get("trigger"))
-    return write_console(result, sink.get("name", "enrichment"), trigger=sink.get("trigger"))
+    if cfg.get("mode", "batch") == "streaming":
+        return _start_closing_query(spark, cfg)
+    return build_pipeline(spark, cfg)
 
 
 def main(argv: list[str] | None = None) -> None:  # pragma: no cover - thin CLI

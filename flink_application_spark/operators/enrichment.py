@@ -111,7 +111,7 @@ def lookup_join(
     file added later is never joined. The dimension is broadcast by
     default (it is the small side; Flink bounds it with a 100/1000-row
     lookup cache instead, flink.conf:37-38,47-48). `app.run`'s
-    size-rolled and TTL paths do not use this join: they look the dims
+    stream sinks do not use this join: they look the dims
     up on the driver in Arrow (`streaming/pipeline.lookup_candidates`)
     against `streaming/dim_refresh.RefreshingDim` tables, which is also
     how a dim changes while a query runs.

@@ -13,12 +13,11 @@ Flink's processing-time trigger, which makes the stream replayable
   `F.session_window(ts, gap)` + `F.max_by(struct)` in the streaming
   state store. Spark evicts a session using the watermark of the
   PREVIOUS micro-batch, so a closed session is emitted one trigger
-  after the batch that closed it. The memory, console and non-rolled
-  file sinks use it, as does every batch caller.
+  after the batch that closed it. Every batch caller uses it.
 - `SessionCloser` closes sessions on the driver inside foreachBatch,
   against a watermark that includes the current batch, as Flink fires
-  a window once the watermark passes its end. The size-rolled and TTL
-  parquet paths of `app.run` use it. Its open sessions and watermark
+  a window once the watermark passes its end. Every stream sink of
+  `app.run` uses it. Its open sessions and watermark
   live in ``<checkpoint>/sessions``.
 
 `dropDuplicatesWithinWatermark` is the bounded-state alternative when

@@ -12,23 +12,22 @@ Topology (EnrichmentApp.run(), :59-110):
       → unionByName → canonical schema → sink     (S4/S5, R4)
 
 `enrichment_candidates` is the stateless part: Path-A rows and Path-B
-as-of candidates in one schema. It exists in two engines:
+as-of candidates in one schema. `app.run` runs one engine for every
+stream sink, on the driver: Spark runs only `lookup_projection`'s
+per-row expressions, one scan of the source; `closing_batch_fn`
+collects each micro-batch once as Arrow, `lookup_candidates` joins it
+with Acero against dim tables `dim_refresh.RefreshingDim` holds (loaded
+once per query, once per TTL, or every batch for a JDBC dim without a
+TTL; the first generations load in the background while the query
+starts, and a batch that gets there first waits for them), and
+`dedup.SessionCloser` emits a session in the micro-batch whose
+watermark passes its end. One Spark job per micro-batch.
 
-- in Spark, `enrichment_candidates` joins the dims stream-static, and
-  `streaming_enrichment` runs Spark's streaming session window on it
-  (`dedup.session_argmax_dedup`); Spark emits a closed session one
-  micro-batch after the batch that closed it. The memory, console and
-  non-rolled file sinks, and every batch caller, use it.
-- on the driver, for `app.run`'s size-rolled and TTL parquet paths:
-  Spark runs only `lookup_projection`'s per-row expressions, one scan
-  of the source; `closing_batch_fn` collects each micro-batch once as
-  Arrow, `lookup_candidates` joins it with Acero against dim tables
-  `dim_refresh.RefreshingDim` holds (loaded once per query, once per
-  TTL, or every batch for a JDBC dim without a TTL; the first
-  generations load in the background while the query starts, and a
-  batch that gets there first waits for them), and
-  `dedup.SessionCloser` emits a session in the micro-batch whose
-  watermark passes its end. One Spark job per micro-batch.
+`streaming_enrichment` is the Spark form: `enrichment_candidates`
+joins the dims stream-static and Spark's session window
+(`dedup.session_argmax_dedup`) reduces the candidates. It is the batch
+plan of ``app.run`` and the reference the driver engine is tested
+against.
 
 The batch pipeline in ``plans/cdr.py`` shares every operator; only the
 dedup stage differs (session window with watermark vs batch
@@ -272,8 +271,8 @@ def closing_batch_fn(
     *,
     path_a_how: str = "inner",
 ):
-    """A ``foreachBatch`` function over `lookup_projection` rows, the
-    size-rolled and TTL parquet paths of ``app.run``: collects the
+    """A ``foreachBatch`` function over `lookup_projection` rows, every
+    stream sink of ``app.run``: collects the
     micro-batch once as Arrow (its one Spark job), looks both dims up
     with `lookup_candidates` against the tables ``imsi_msisdn`` and
     ``ms_ip`` hold now, closes sessions with `closer` and hands the

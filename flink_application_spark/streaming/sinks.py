@@ -13,10 +13,10 @@ approximates the size cap; `checkpointLocation` is per-query exactly
 like Flink's per-job checkpoint path. Two-queries-one-path fights over
 the committer, so multi-sink fan-in is union-before-write (R4).
 
-The foreachBatch stores (`idempotent_batch_write`, the size-rolled
-sink) run no Spark write job: each micro-batch is collected to the
-driver as one Arrow table, bounded by ``spark.driver.maxResultSize``,
-and written with pyarrow.
+The foreachBatch stores (`idempotent_batch_write`, the parquet sinks,
+the memory and console writers) run no Spark write job: each
+micro-batch is collected to the driver as one Arrow table, bounded by
+``spark.driver.maxResultSize``, and written with pyarrow.
 """
 
 from __future__ import annotations
@@ -31,29 +31,6 @@ def trigger_kwargs(trigger: str | None) -> dict:
     if trigger is None or trigger == "availableNow":
         return {"availableNow": True}
     return {"processingTime": trigger}
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: tuple[str, ...] = ("event_date", "probe"),
-    trigger: str | None = "20 seconds",
-    max_records_per_file: int | None = None,
-    query_name: str = "parquet_sink",
-) -> StreamingQuery:
-    """S4: partitioned parquet sink with trigger + checkpoint."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(*partition_by)
-        .queryName(query_name)
-        .trigger(**trigger_kwargs(trigger))
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    return writer.start()
 
 
 # Spark's ExternalCatalogUtils.escapePathName: these characters become
@@ -506,6 +483,32 @@ class SizeCalibratedRoller:
             self.max_records = self._cap(self._total_bytes, self._total_rows)
 
 
+def memory_table_writer(spark, name: str):
+    """A ``write_arrow(table, batch_id)`` for the memory sink: after
+    each batch, ``spark.table(name)`` in ``spark`` returns every row
+    written so far. A replayed batch replaces its own rows."""
+    import pyarrow as pa
+
+    batches: dict[int, object] = {}
+
+    def write_arrow(table, batch_id: int) -> None:
+        batches[batch_id] = table
+        rows = pa.concat_tables([batches[b] for b in sorted(batches)])
+        spark.createDataFrame(rows).createOrReplaceTempView(name)
+
+    return write_arrow
+
+
+def console_write_arrow(table, batch_id: int, num_rows: int = 20) -> None:
+    """The console sink's ``write_arrow`` (EnrichmentApp.java:97-103):
+    Spark's console-sink ``Batch: <id>`` header, then the first
+    ``num_rows`` rows, printed from the Arrow table without a Spark
+    job."""
+    rule = "-" * 43
+    print(f"{rule}\nBatch: {batch_id}\n{rule}")
+    print(table.slice(0, num_rows).to_pandas().to_string(index=False))
+
+
 def write_partitioned_parquet_size_rolled(
     df: DataFrame,
     path: str,
@@ -530,21 +533,6 @@ def write_partitioned_parquet_size_rolled(
         df.writeStream.foreachBatch(roller)
         .option("checkpointLocation", checkpoint)
         .queryName(query_name)
-        .trigger(**trigger_kwargs(trigger))
-        .start()
-    )
-
-
-def write_console(
-    df: DataFrame, label: str, trigger: str | None = None, num_rows: int = 20
-) -> StreamingQuery:
-    """S5: labeled console sink (print names 'immediately_known...' etc.,
-    EnrichmentApp.java:97-103)."""
-    return (
-        df.writeStream.format("console")
-        .queryName(label)
-        .option("numRows", num_rows)
-        .option("truncate", "false")
         .trigger(**trigger_kwargs(trigger))
         .start()
     )

@@ -68,10 +68,8 @@ def test_streaming_parquet_sink(spark, app_dirs, tmp_path):
         "trigger": None,
         "name": "app_sink_test",
     }
-    # small gap: parquet sink is append-mode → only watermark-closed
-    # sessions emit; batch-equivalence under availableNow is covered in
-    # test_streaming.py — here we check the app wiring end to end for
-    # the path-A rows (no watermark dependency)
+    # the app wiring end to end: sessions the watermark closes and the
+    # path-A rows land under the per-batch layout
     cfg = _cfg(app_dirs, "streaming", sink)
     cfg["dedup"] = {"gap": "1 second", "watermark": "0 seconds"}
     q = run(spark, cfg)
@@ -80,7 +78,7 @@ def test_streaming_parquet_sink(spark, app_dirs, tmp_path):
     assert back.count() > 0
     import glob
 
-    assert glob.glob(str(tmp_path / "out" / "event_date=*"))
+    assert glob.glob(str(tmp_path / "out" / "_batch=*" / "event_date=*"))
 
 
 def test_streaming_size_rolled_sink_via_config(spark, app_dirs, tmp_path):
@@ -180,9 +178,9 @@ def test_flink_conf_builds_and_runs_pipeline(spark, app_dirs, tmp_path):
     assert cfg["parallelism"] == 1
     assert cfg["sink"]["partition_by"] == ["event_date", "probe"]
     assert cfg["sink"]["sink.rolling-policy.file-size"] == 110 * 1024 * 1024
-    assert cfg["dims"]["imsi_msisdn"]["cache_max_rows"] == 100
+    assert "cache_max_rows" not in cfg["dims"]["imsi_msisdn"]
     assert cfg["dims"]["imsi_msisdn"]["cache_ttl_ms"] == 60_000
-    assert cfg["dims"]["ms_ip_exploded"]["cache_max_rows"] == 1000
+    assert "cache_max_rows" not in cfg["dims"]["ms_ip_exploded"]
     assert cfg["source"]["kafka"] is None  # override took
     # and the pipeline built from it runs
     out = build_pipeline(spark, cfg)

@@ -6,8 +6,9 @@ Parity: on a seeded random batch plus the edge rows the two engines
 could read differently (NULL keys and values, odd IP lists, duplicate
 dim keys, a dim version starting exactly at the event, a non-ASCII
 probe), the Arrow rows equal Spark's as multisets, in Spark's schema.
-Cost: a closing query started by `app.run` runs one Spark job per
-micro-batch, plans no join, and loads a plain dim once.
+Cost: a query started by `app.run`, for every sink format, runs one
+Spark job per micro-batch, plans no join and no stateful operator, and
+loads a plain dim once.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import datetime as dt
 import glob
 import os
 import random
+import re
 import time
 from collections import Counter
 
@@ -123,40 +125,39 @@ def _status_jobs(spark, run_id) -> int:
     return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(run_id)))
 
 
-def test_closing_query_runs_one_job_per_batch_and_loads_dims_once(spark, tmp_path, monkeypatch):
+# the sinks `app.run` starts; a parquet sink gets a path and a
+# checkpoint, memory and console run without one
+SINKS = {
+    "rolled_parquet": {"format": "parquet", "sink.rolling-policy.file-size": 1 << 20},
+    "plain_parquet": {"format": "parquet"},
+    "memory": {"format": "memory", "name": "closing_memory_out"},
+    "console": {"format": "console"},
+}
+
+
+def _closing_run(spark, tmp_path, root, src, sink):
+    """`app.run` on ``sink``, fed ``src`` as three one-file waves, one
+    micro-batch each; returns the stopped query."""
     from flink_application_spark import app
 
-    src, imsi, ms_ip = _frames(spark, tmp_path)
-    loads = Counter()
-    load_dim = app._load_dim
-
-    def counting(spark_, spec):
-        loads[spec] += 1
-        return load_dim(spark_, spec)
-
-    monkeypatch.setattr(app, "_load_dim", counting)
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
+    stream_dir = root / "stream"
+    stream_dir.mkdir(parents=True)
 
     def release(k):
         # one file per micro-batch, moved in whole
-        stage = str(tmp_path / f"stage{k}")
+        stage = str(root / f"stage{k}")
         src.filter(src.unique_cdr_id % 3 == k).coalesce(1).write.parquet(stage)
         (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
         os.rename(part, stream_dir / f"{k}.parquet")
 
+    if sink["format"] == "parquet":
+        sink = {**sink, "path": str(root / "out"), "checkpoint": str(root / "ckpt")}
     release(0)
     cfg = {
         "mode": "streaming",
         "source": {"format": "parquet", "path": str(stream_dir)},
         "dims": {"imsi_msisdn": str(tmp_path / "imsi"), "ms_ip": str(tmp_path / "ms_ip")},
-        "sink": {
-            "format": "parquet",
-            "path": str(tmp_path / "out"),
-            "checkpoint": str(tmp_path / "ckpt"),
-            "trigger": "200 milliseconds",
-            "sink.rolling-policy.file-size": 1 << 20,
-        },
+        "sink": {**sink, "trigger": "200 milliseconds"},
     }
     q = app.run(spark, cfg)
     try:
@@ -173,12 +174,59 @@ def test_closing_query_runs_one_job_per_batch_and_loads_dims_once(spark, tmp_pat
                 time.sleep(0.2)
     finally:
         q.stop()
-    n = batches()
-    assert n == 3 and len(q.recentProgress) == n
-    assert _status_jobs(spark, q.runId) == n
+    assert batches() == 3
+    return q
+
+
+@pytest.mark.parametrize("sink", list(SINKS))
+def test_closing_query_runs_one_job_per_batch_and_loads_dims_once(
+    spark, tmp_path, monkeypatch, capsys, sink
+):
+    from flink_application_spark import app
+
+    src, _, _ = _frames(spark, tmp_path)
+    loads = Counter()
+    load_dim = app._load_dim
+
+    def counting(spark_, spec):
+        loads[spec] += 1
+        return load_dim(spark_, spec)
+
+    monkeypatch.setattr(app, "_load_dim", counting)
+    q = _closing_run(spark, tmp_path, tmp_path / sink, src, SINKS[sink])
+    assert all(p["stateOperators"] == [] for p in q.recentProgress)
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
     assert "Join" not in plan and "Broadcast" not in plan
+    # no watermark in Spark's plan, so no no-data batch
+    assert len(q.recentProgress) == 3 and _status_jobs(spark, q.runId) == 3
     assert dict(loads) == {str(tmp_path / "imsi"): 1, str(tmp_path / "ms_ip"): 1}
+    if sink == "console":
+        assert re.findall(r"^Batch: (\d+)$", capsys.readouterr().out, re.M) == ["0", "1", "2"]
+    if sink == "memory":
+        got = spark.table(SINKS["memory"]["name"])
+        _closing_run(spark, tmp_path, tmp_path / "plain", src, SINKS["plain_parquet"])
+        want = spark.read.parquet(str(tmp_path / "plain" / "out")).drop("_batch")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        rows = Counter(map(tuple, got.collect()))
+        assert rows and rows == Counter(map(tuple, want.collect()))
+
+
+def test_unknown_sink_format_fails_before_loading_or_starting(spark, tmp_path, monkeypatch):
+    from flink_application_spark import app
+
+    loads = []
+    monkeypatch.setattr(app, "_load_dim", lambda *a: loads.append(a))
+    cfg = {
+        "mode": "streaming",
+        "source": {"format": "parquet", "path": str(tmp_path / "src")},
+        "dims": {"imsi_msisdn": str(tmp_path / "imsi"), "ms_ip": str(tmp_path / "ms_ip")},
+        "sink": {"format": "kafka", "checkpoint": str(tmp_path / "ckpt")},
+    }
+    with pytest.raises(ValueError, match="'kafka': the supported formats are parquet, memory and console"):
+        app.run(spark, cfg)
+    assert loads == [] and spark.streams.active == []
 
 
 def test_closing_query_raises_the_loaders_error_and_stops(spark, tmp_path):

@@ -4,13 +4,10 @@ The same operator library runs the CDR pipeline in batch
 (plans/cdr.py) and streaming (streaming/pipeline.py); these tests
 assert the stream output equals the batch output on identical input,
 plus unit coverage of the stream-only pieces (CSV decode semantics,
-session-gap splitting, partitioned parquet sink, rate generator).
+session-gap splitting, union fan-in, rate generator).
 """
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -27,7 +24,6 @@ from flink_application_spark.streaming.pipeline import streaming_enrichment
 from flink_application_spark.streaming.sinks import (
     fanout_union,
     write_memory,
-    write_partitioned_parquet,
 )
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -249,33 +245,8 @@ def _batch_reference(spark, src, imsi_msisdn, ms_ip):
 
 
 # ---------------------------------------------------------------------------
-# Partitioned parquet sink (S4) + union fan-in (S6/R4)
+# Union fan-in (S6/R4)
 # ---------------------------------------------------------------------------
-
-
-def test_partitioned_parquet_sink(spark, cdr_parquet, tmp_path):
-    src_stream = file_stream(spark, str(cdr_parquet / "src"))
-    from flink_application_spark.operators.enrichment import (
-        extend_with_partition_cols,
-    )
-
-    extended = extend_with_partition_cols(src_stream)
-    out = str(tmp_path / "sink")
-    q = write_partitioned_parquet(
-        extended,
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-        trigger=None,
-        max_records_per_file=100_000,
-        query_name="sink_test",
-    )
-    q.awaitTermination(300)
-
-    parts = glob.glob(os.path.join(out, "event_date=*", "probe=*"))
-    assert parts, "expected hive-style event_date=/probe= partition dirs"
-    back = spark.read.parquet(out)
-    n_src = spark.read.parquet(str(cdr_parquet / "src")).count()
-    assert back.count() == n_src
 
 
 def test_fanout_union_single_committer(spark, cdr_parquet):
