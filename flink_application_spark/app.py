@@ -376,7 +376,8 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     console to `console_write_arrow`. Only parquet casts its partition
     columns to strings; memory and console rows keep the batch
     pipeline's column types. A memory or console sink without a
-    ``checkpoint`` checkpoints to a fresh temporary directory.
+    ``checkpoint`` checkpoints to a fresh directory in Spark's driver
+    scratch directory, which ``spark.stop()`` deletes.
 
     Start-up overlaps three cold chains: both dims' first generations
     load on background threads while this thread builds the source
@@ -387,6 +388,8 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
     and the loader's exception raised."""
     import os
     import tempfile
+
+    from pyspark import SparkFiles
 
     from flink_application_spark.streaming.dedup import SessionCloser
     from flink_application_spark.streaming.dim_refresh import RefreshingDim
@@ -416,7 +419,12 @@ def _start_closing_query(spark: SparkSession, cfg: dict[str, Any]):
         part = tuple(sink.get("partition_by", ("event_date", "probe")))
         checkpoint = sink["checkpoint"]
     else:
-        part, checkpoint = (), sink.get("checkpoint") or tempfile.mkdtemp()
+        # in the driver's scratch directory, which spark.stop() deletes:
+        # only the driver writes the checkpoint and sessions/ files
+        part = ()
+        checkpoint = sink.get("checkpoint") or tempfile.mkdtemp(
+            dir=SparkFiles.getRootDirectory()
+        )
 
     def dim(key: str, prepare) -> RefreshingDim:
         spec = dims[key]

@@ -11,9 +11,6 @@ trim, split on runs of whitespace.
 
 from __future__ import annotations
 
-# pandas is module-level so pandas_udf type hints (stringified by PEP
-# 563 above) resolve against module globals at registration time
-import pandas as pd
 from pyspark.sql import Column, functions as F
 
 # English stopword markers used for quality scoring / language ID.
@@ -108,30 +105,3 @@ def fingerprint(text: Column) -> Column:
     (Exact-dup key; near-dup is the minhash family in operators/.)"""
     normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
     return F.md5(normalized)
-
-
-def unicode_normalize(col: Column, form: str = "NFKC") -> Column:
-    """Unicode normalization (UAX #15) as an Arrow-batched pandas UDF —
-    the one text primitive that genuinely needs Python: Spark has no
-    built-in normalizer, and a multilingual corpus mixes composed and
-    decomposed forms (é vs e+◌́), full-width ASCII, and compatibility
-    ligatures that break tokenization, dedup fingerprints, and
-    stopword matching if left unnormalized. NFKC is the corpus-
-    curation default (NFC + compatibility folding). NULL → NULL.
-
-    Scan-local per-row transform — no shuffle; at 100 TB the cost is
-    one Arrow round-trip over the text column, so place it ONCE at
-    ingest (before fingerprints are computed), not per query."""
-    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form}")
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(
-            lambda t: unicodedata.normalize(form, t) if t is not None else None
-        )
-
-    return _norm(col)

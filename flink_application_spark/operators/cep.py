@@ -235,7 +235,7 @@ def greedy_scan(
     The head-expiry rewind (within-horizon violated by the candidate
     next step) re-seeks from just past the old first binding, which
     can move BEFORE `start` — callers retaining a suffix across calls
-    must keep everything from bound[0] on (streaming/cep.py does)."""
+    must keep everything from bound[0] on."""
     matches: list[list[int]] = []
     i = start
     while i < n:

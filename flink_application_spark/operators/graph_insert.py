@@ -12,8 +12,7 @@ takes the top-k of its final beam as out-neighbors, back-links each
 neighbor to itself, and all touched adjacency lists re-prune to top-k
 by (d2 ASC, dst ASC). Vectors within one wave do not see each other;
 vectors in LATER waves see every earlier wave — exactly a streaming
-ingest folding one micro-batch at a time (`streaming/graph_ingest.py`
-pins stream == batch on this contract).
+ingest folding one micro-batch at a time.
 
 Exact-integer throughout (the shared recipe): ppm vectors, BIGINT d²,
 (d2 ASC, id ASC) ties, entry points = the `beam` smallest BASE

@@ -212,7 +212,7 @@ def uniform_sample_rows(
     and when sample_rows ≥ corpus rows the sample IS the corpus, so
     small-scale results are bit-identical to the unsampled path. The
     id-sorted return keeps k-smallest-id centroid seeding deterministic
-    (same discipline as streaming/reservoir.py's bottom-k-by-md5)."""
+    (a bottom-k-by-md5 sample)."""
     rank = F.md5(F.col(id_col).cast("string"))
     rows = (
         df.select(id_col, *cols)

@@ -20,9 +20,8 @@ can't flip).
 
 Scale shape: one shuffle each side on the key (the changelog is
 usually ≪ snapshot → broadcastable), then a hash join; output rewrite
-is the table-format's job (pair with
-`streaming/incremental.py`'s dynamic-partition overwrite to rewrite
-only touched partitions at 100 TB).
+is the table-format's job (pair with a dynamic-partition overwrite
+to rewrite only touched partitions at 100 TB).
 """
 
 from __future__ import annotations

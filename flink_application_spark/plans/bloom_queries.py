@@ -91,9 +91,7 @@ def bloom_positions(
 ) -> DataFrame:
     """(id_col, pos) — the k distinct md5-derived Bloom bit positions
     of each non-NULL-text document's canonical (lower+trim) form.
-    Shared by the batch audit below and the streaming filter
-    (`streaming/bloom_dedup.py`), so stream == batch is an identity of
-    set algebra, not of two hash implementations."""
+    Used by the batch audit below."""
     canon = F.lower(F.trim(F.col(text_col)))
     return (
         docs.filter(F.col(text_col).isNotNull())

@@ -8,8 +8,8 @@ rebuild.
 The demonstration split holds out the corpus's 4 largest vec_ids,
 builds the base graph over the rest, then folds the held-out vectors
 back in over 2 waves (ascending id; wave members search the frozen
-pre-wave graph — exactly what `streaming/graph_ingest.py` does per
-micro-batch, pinned stream == batch in tests/test_graph_insert.py).
+pre-wave graph — what a streaming ingest folding one wave per
+micro-batch would do).
 Both queries replay bit-for-bit in DuckDB: base build + every wave's
 beam chain + every re-prune unroll as MATERIALIZED CTE stages.
 """

@@ -1,8 +1,7 @@
 """Seasonal-baseline anomaly detection: per (event_type, iso-dow,
 hour) median baselines with spike counts — the calendar-seasonality
-profile `events_anomaly_zscore` (global moments) and
-`streaming/anomaly.py` (online moments) deliberately lack, and the
-standard first model for traffic/metrics monitoring.
+profile `events_anomaly_zscore` (global moments) deliberately
+lacks, and the standard first model for traffic/metrics monitoring.
 
 Shape: one exact-median aggregate over (type, dow, hour) — 5×7×24
 groups regardless of corpus size — then a broadcast-back join flags

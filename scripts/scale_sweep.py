@@ -245,57 +245,6 @@ def sweep_doc_queries(spark, sf_dir: str, replicas: list[int]) -> dict:
     return results
 
 
-def sweep_stream_components(spark, sf_dir: str, replicas: list[int]) -> dict:
-    """The streaming connected-components store (round-6 addition):
-    batch 0 ingests the whole replicated corpus's verified near-dup
-    pairs (cost ~ pairs + snapshot write), then a FIXED-SIZE delta
-    batch re-submits 64 of those pairs — the bounded-delta claim says
-    its recompute touches only those pairs' components, so the delta
-    wall should grow only with the snapshot's O(nodes) rewrite IO,
-    never with corpus-sized recompute. Pair computation itself is
-    excluded from the timing (localCheckpoint barrier) — it is already
-    swept as lsh_near_dup_pipeline."""
-    import shutil
-    import tempfile
-
-    from flink_application_spark.catalog import register_views
-    from flink_application_spark.operators.minhash import verified_near_dup_pairs
-    from flink_application_spark.streaming.components import StreamingComponents
-
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
-    results: dict[str, dict[int, float]] = {
-        "stream_components_full_batch": {},
-        "stream_components_fixed_delta": {},
-    }
-    root = tempfile.mkdtemp(prefix="scale_sweep_cc_")
-    try:
-        for r in replicas:
-            pairs = (
-                verified_near_dup_pairs(replicate(docs, r), threshold=0.5)
-                .select("id_a", "id_b")
-                .localCheckpoint(eager=True)
-            )
-            sc = StreamingComponents(f"{root}/x{r}")
-            t0 = time.time()
-            sc.process_batch(pairs, 0)
-            w0 = round(time.time() - t0, 3)
-            delta = pairs.orderBy("id_a", "id_b").limit(64).localCheckpoint(eager=True)
-            t0 = time.time()
-            sc.process_batch(delta, 1)
-            w1 = round(time.time() - t0, 3)
-            results["stream_components_full_batch"][r] = w0
-            results["stream_components_fixed_delta"][r] = w1
-            n = sc.mapping(spark).count()
-            print(
-                f"stream_components          x{r}: full {w0:7.3f} s, "
-                f"delta {w1:7.3f} s  (mapping rows {n})",
-                flush=True,
-            )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return results
-
-
 def replicate_emb(emb: DataFrame, r: int) -> DataFrame:
     parts = [
         emb.withColumn("vec_id", F.col("vec_id") + F.lit(i * _STRIDE))
@@ -364,7 +313,6 @@ def main() -> None:
             print(f"{name:26s} x{r}: {dt:7.3f} s  (result rows {n})", flush=True)
     results.update(sweep_emb_queries(spark, sf_dir, replicas))
     results.update(sweep_doc_queries(spark, sf_dir, replicas))
-    results.update(sweep_stream_components(spark, sf_dir, replicas))
     summary = {
         name: {
             "walls": walls,

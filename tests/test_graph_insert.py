@@ -1,16 +1,14 @@
-"""Incremental kNN-graph insertion (operators/graph_insert.py +
-streaming/graph_ingest.py) — the round-10 maintenance leg.
+"""Incremental kNN-graph maintenance (operators/graph_insert.py,
+operators/graph_delete.py).
 
-Oracle parity for the two registered queries is the oracle harness's
+Oracle parity for the registered queries is the oracle harness's
 job (tests/test_oracle_parity.py runs them like everything else);
 here we pin the OPERATOR contracts: inserted vertices are fully
-wired (k out-edges each, back-links present), stream == batch on the
-same wave split, replay is a no-op, and crash partials stay
-invisible."""
+wired (k out-edges each, back-links present), and delete repair
+prunes deleted ids, re-fills every survivor to k edges and keeps
+untouched vertices' rows."""
 
 from __future__ import annotations
-
-import os
 
 import pytest as _pytest_tier
 
@@ -20,8 +18,6 @@ from pyspark.sql import functions as F
 
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.graph_insert import graph_insert_waves
-from flink_application_spark.operators.kmeans_exact import quantize_ppm
-from flink_application_spark.streaming.graph_ingest import GraphIngest
 
 _K, _BEAM, _HOPS, _NI, _NW = 6, 8, 2, 4, 2
 
@@ -30,16 +26,6 @@ def _emb(spark, sf_dir):
     return register_views(spark, sf_dir, tables=("embeddings",))[
         "embeddings"
     ].filter(F.col("embedding").isNotNull())
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.select("src", "dst", "d2", "rank").collect())
-
-
-def _grows(df):
-    return sorted(
-        tuple(r) for r in df.select("vec_id", "nbr_id", "d2", "rank").collect()
-    )
 
 
 def _split(spark, sf_dir):
@@ -75,186 +61,6 @@ def test_inserted_vertices_fully_wired(spark, sf_dir):
         .count()
     )
     assert indeg == _NI
-    g.unpersist()
-
-
-def test_stream_equals_batch_same_wave_split(spark, sf_dir, tmp_path):
-    emb, base, ins_ids = _split(spark, sf_dir)
-    want = _grows(
-        graph_insert_waves(
-            emb, k=_K, beam=_BEAM, hops=_HOPS, n_insert=_NI, n_waves=_NW
-        )
-    )
-    st = GraphIngest(str(tmp_path / "store"), k=_K, beam=_BEAM, hops=_HOPS)
-    st.seed_from_embeddings(spark, base)
-    per = -(-_NI // _NW)
-    for w in range(_NW):
-        wave = ins_ids[w * per : (w + 1) * per]
-        st.process_batch(
-            emb.filter(F.col("vec_id").isin([int(i) for i in wave])), w
-        )
-    got = sorted(
-        (r["src"], r["dst"], r["d2"], r["rank"])
-        for r in st.graph(spark).collect()
-    )
-    assert got == want  # stream of waves == one batch run, bit-equal
-
-
-def test_attach_real_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The writeStream path (`GraphIngest.attach` + file source): the
-    4 held-out vectors arrive as two parquet files consumed one file
-    per trigger — the resulting graph must equal the batch
-    `graph_insert_waves` run with the same wave split (the same pin
-    as the direct process_batch test, but through a real streaming
-    query with checkpointing)."""
-    import time
-
-    from flink_application_spark.sources.streams import file_stream
-
-    emb, base, ins_ids = _split(spark, sf_dir)
-    want = _grows(
-        graph_insert_waves(
-            emb, k=_K, beam=_BEAM, hops=_HOPS, n_insert=_NI, n_waves=_NW
-        )
-    )
-    src = str(tmp_path / "src")
-    per = -(-_NI // _NW)
-    waves = [ins_ids[w * per : (w + 1) * per] for w in range(_NW)]
-    emb.filter(F.col("vec_id").isin([int(i) for i in waves[0]])).select(
-        "vec_id", "embedding"
-    ).coalesce(1).write.parquet(src)
-    time.sleep(1.2)  # file-stream batch order is modTime-based
-    emb.filter(F.col("vec_id").isin([int(i) for i in waves[1]])).select(
-        "vec_id", "embedding"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    st = GraphIngest(str(tmp_path / "store"), k=_K, beam=_BEAM, hops=_HOPS)
-    st.seed_from_embeddings(spark, base)
-    q = st.attach(
-        file_stream(spark, src, max_files_per_trigger=1),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["src"], r["dst"], r["d2"], r["rank"])
-        for r in st.graph(spark).collect()
-    )
-    assert got == want
-
-
-def test_upsert_stream_equals_sequential_operators(spark, sf_dir, tmp_path):
-    """Mixed CDC-style changelog batches: batch 0 inserts two held-out
-    vectors; batch 1 deletes one of them AND a base vertex while
-    inserting the remaining two. The store's final graph must equal
-    applying graph_delete_batch then graph_insert_batch sequentially
-    with the same per-step state — deletes before inserts within a
-    batch, entries re-derived from surviving vertices."""
-    from flink_application_spark.operators.graph_delete import graph_delete_batch
-    from flink_application_spark.operators.graph_insert import graph_insert_batch
-    from flink_application_spark.operators.nndescent_exact import nn_descent_exact
-
-    emb, base, ins_ids = _split(spark, sf_dir)
-    base_ids = sorted(
-        r["vec_id"] for r in base.select("vec_id").orderBy("vec_id").collect()
-    )
-    victim = base_ids[len(base_ids) // 2]  # a mid-range base vertex
-    w0_ins, w1_del, w1_ins = ins_ids[:2], [ins_ids[0], victim], ins_ids[2:]
-
-    st = GraphIngest(str(tmp_path / "store"), k=_K, beam=_BEAM, hops=_HOPS)
-    st.seed_from_embeddings(spark, base)
-    st.process_batch(
-        emb.filter(F.col("vec_id").isin([int(i) for i in w0_ins])), 0
-    )
-    mixed = emb.filter(
-        F.col("vec_id").isin([int(i) for i in w1_ins])
-    ).withColumn("op", F.lit("insert")).unionByName(
-        emb.filter(F.col("vec_id").isin([int(i) for i in w1_del]))
-        .withColumn("op", F.lit("delete"))
-    )
-    st.process_batch(mixed.select("vec_id", "embedding", "op"), 1)
-    got = _rows(st.graph(spark))
-
-    # reference: the same steps via the batch operators
-    q = quantize_ppm(emb).persist()
-    graph = (
-        nn_descent_exact(base, k=_K, n_iter=3)
-        .select(
-            F.col("vec_id").alias("src"), F.col("nbr_id").alias("dst"),
-            "d2", "rank",
-        )
-        .localCheckpoint()
-    )
-    coords = q.filter(
-        F.col("vec_id").isin([int(i) for i in base_ids])
-    ).localCheckpoint()
-
-    def ent(c):
-        return [r["vec_id"] for r in c.orderBy("vec_id").limit(_BEAM).collect()]
-
-    graph, coords = graph_insert_batch(
-        graph, coords, q.filter(F.col("vec_id").isin([int(i) for i in w0_ins])),
-        k=_K, beam=_BEAM, hops=_HOPS, entry_ids=ent(coords),
-    )
-    graph, coords = graph.localCheckpoint(), coords.localCheckpoint()
-    surv = coords.filter(~F.col("vec_id").isin([int(i) for i in w1_del]))
-    graph, coords = graph_delete_batch(
-        graph, coords, w1_del, k=_K, beam=_BEAM, hops=_HOPS, entry_ids=ent(surv),
-    )
-    graph, coords = graph.localCheckpoint(), coords.localCheckpoint()
-    graph, coords = graph_insert_batch(
-        graph, coords, q.filter(F.col("vec_id").isin([int(i) for i in w1_ins])),
-        k=_K, beam=_BEAM, hops=_HOPS, entry_ids=ent(coords),
-    )
-    want = _rows(graph)
-    q.unpersist()
-    assert got == want
-    # the deleted ids are gone from both endpoints of the final graph
-    gone = {int(i) for i in w1_del}
-    assert not any(s in gone or d in gone for s, d, _, _ in got)
-
-
-def test_delete_then_reinsert_restores_vertex(spark, sf_dir, tmp_path):
-    """Batch-aware tombstones: an id deleted in batch N and re-inserted
-    in a LATER batch M comes back — present in coordinate
-    reconstruction (so it is scorable as a search/repair candidate)
-    and fully wired in the graph (k out-edges, >=1 in-edge). Also the
-    same-batch upsert: delete+insert of one id within one changelog
-    batch keeps the insert (deletes apply first)."""
-    emb, base, ins_ids = _split(spark, sf_dir)
-    a, b = ins_ids[0], ins_ids[1]
-    st = GraphIngest(str(tmp_path / "store"), k=_K, beam=_BEAM, hops=_HOPS)
-    st.seed_from_embeddings(spark, base)
-
-    def batch(ins, dels):
-        f = emb.filter(F.col("vec_id").isin([int(i) for i in ins])).withColumn(
-            "op", F.lit("insert")
-        )
-        if dels:
-            f = f.unionByName(
-                emb.filter(F.col("vec_id").isin([int(i) for i in dels]))
-                .withColumn("op", F.lit("delete"))
-            )
-        return f.select("vec_id", "embedding", "op")
-
-    st.process_batch(batch([a, b], []), 0)       # insert a, b
-    st.process_batch(batch([], [a]), 1)          # delete a
-    gone = st._coords(spark)
-    assert gone.filter(F.col("vec_id") == int(a)).count() == 0
-    st.process_batch(batch([a], []), 2)          # re-insert a
-    coords = st._coords(spark)
-    assert coords.filter(F.col("vec_id") == int(a)).count() == 1
-    g = st.graph(spark).persist()
-    assert g.filter(F.col("src") == int(a)).count() == _K
-    assert g.filter(F.col("dst") == int(a)).count() >= 1
-    # same-batch upsert of b: delete+insert in one changelog batch
-    st.process_batch(batch([b], [b]), 3)
-    coords = st._coords(spark)
-    assert coords.filter(F.col("vec_id") == int(b)).count() == 1
-    g2 = st.graph(spark)
-    assert g2.filter(F.col("src") == int(b)).count() == _K
-    # no id ever appears twice in reconstruction
-    n_ids = coords.count()
-    assert coords.select("vec_id").distinct().count() == n_ids
     g.unpersist()
 
 
@@ -383,22 +189,3 @@ def test_delete_backlink_restores_in_edges(spark, sf_dir):
     base.unpersist()
     g0.unpersist()
     g1.unpersist()
-
-
-def test_replay_is_noop_and_crash_partial_invisible(spark, sf_dir, tmp_path):
-    emb, base, ins_ids = _split(spark, sf_dir)
-    st = GraphIngest(str(tmp_path / "store"), k=_K, beam=_BEAM, hops=_HOPS)
-    st.seed_from_embeddings(spark, base)
-    w0 = emb.filter(F.col("vec_id").isin([int(i) for i in ins_ids[:2]]))
-    w1 = emb.filter(F.col("vec_id").isin([int(i) for i in ins_ids[2:]]))
-    st.process_batch(w0, 0)
-    st.process_batch(w1, 1)
-    want = _rows(st.graph(spark))
-    st.process_batch(w1, 1)  # replay — reads strictly-before state
-    assert _rows(st.graph(spark)) == want
-    # crash partial: strip _SUCCESS from the newest snapshot — readers
-    # must fall back to the previous committed one
-    newest = os.path.join(str(tmp_path / "store"), "graph", "_batch=1")
-    os.remove(os.path.join(newest, "_SUCCESS"))
-    prev = _rows(st.graph(spark))
-    assert prev == _rows(st.graph(spark, before=1))  # batch-0 snapshot

@@ -18,6 +18,7 @@ import glob
 import os
 import random
 import re
+import tempfile
 import time
 from collections import Counter
 
@@ -193,7 +194,12 @@ def test_closing_query_runs_one_job_per_batch_and_loads_dims_once(
         return load_dim(spark_, spec)
 
     monkeypatch.setattr(app, "_load_dim", counting)
+    # a sink without a checkpoint leaves nothing in the system temp dir
+    systmp = tmp_path / "systmp"
+    systmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(systmp))
     q = _closing_run(spark, tmp_path, tmp_path / sink, src, SINKS[sink])
+    assert list(systmp.iterdir()) == []
     assert all(p["stateOperators"] == [] for p in q.recentProgress)
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
     assert "Join" not in plan and "Broadcast" not in plan
