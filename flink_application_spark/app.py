@@ -179,13 +179,13 @@ def compact_sink(spark: SparkSession, config: str | dict[str, Any]) -> int:
     the sink's own partition layout so downstream pruning survives.
 
     Gated by the sink's ``auto-compaction`` key (Flink's filesystem-
-    sink option name; default off) — call it after `run(...)`'s query
-    has STOPPED. Replay safety mirrors vacuum_snapshots' discipline:
-    the newest committed batch stays live (a restart may re-run the
-    last micro-batch, which must still find its own ``_batch`` dir to
-    overwrite — `idempotent_batch_write`'s contract), so only batches
-    strictly below it fold. Returns the number absorbed (0 when
-    disabled, empty, or nothing old enough)."""
+    sink option name; default off); `main` runs it once `run(...)`'s
+    query has STOPPED. Replay safety mirrors vacuum_snapshots'
+    discipline: the newest committed batch stays live (a restart may
+    re-run the last micro-batch, which must still find its own
+    ``_batch`` dir to overwrite), so only batches strictly below it
+    fold. Returns the number absorbed (0 when disabled, empty, or
+    nothing old enough)."""
     import os
 
     from flink_application_spark.streaming.sinks import (
@@ -258,29 +258,6 @@ def build_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     if streaming:
         return file_stream(spark, src["path"], fmt=fmt)
     return spark.read.format(fmt).load(src["path"])
-
-
-def generator_kwargs(cfg: dict[str, Any]) -> dict[str, Any]:
-    """Map a config's `generator` block (the flink.conf translation
-    keeps the reference's own key names, flink.conf:4-11) onto
-    `sources.generator.synthesize_cdr` keyword arguments, so the
-    reference's generator job runs with ITS configured distributions:
-
-        kw = generator_kwargs(load_config("flink.conf"))
-        batch_cdr(spark, dim, n_rows=1000, **kw)              # bounded
-        stream_cdr(spark, dim, rows_per_second=rps, **kw)     # S7 shape
-    """
-    g = cfg.get("generator", {})
-    out: dict[str, Any] = {}
-    if "imsiNotNullProbability" in g:
-        out["imsi_not_null_p"] = float(g["imsiNotNullProbability"])
-    if "msisdnNotNullProbability" in g:
-        out["msisdn_not_null_p"] = float(g["msisdnNotNullProbability"])
-    if "startTime_min" in g:
-        out["start_min_ms"] = int(g["startTime_min"])
-    if "startTime_max" in g:
-        out["start_max_ms"] = int(g["startTime_max"])
-    return out
 
 
 def _load_dim(spark: SparkSession, spec: str | dict[str, Any]) -> DataFrame:
@@ -512,6 +489,7 @@ def main(argv: list[str] | None = None) -> None:  # pragma: no cover - thin CLI
         out.show(20, truncate=False)
     else:
         out.awaitTermination()
+        compact_sink(spark, args[0])
 
 
 if __name__ == "__main__":  # pragma: no cover

@@ -121,47 +121,3 @@ def asof_join(
 
     grouped = l_b.groupBy(_BUCKET).cogroup(r_b.groupBy(_BUCKET))
     return grouped.applyInPandas(merge, schema=out_schema)
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    equi_keys: list[tuple[str, str]],
-    left_ts: str,
-    right_ts: str,
-    right_payload: list[str],
-    how: str = "inner",
-    tolerance=None,
-    salt: int = 8,
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """As-of join for skewed equi-keys: the hot-key fix promised in the
-    module header.
-
-    A single hot key lands all its left rows in one cogroup task. The
-    fix splits the LEFT side `salt` ways (deterministic hash of the
-    whole row — reproducible across retries, unlike rand()) and
-    REPLICATES the right side into every salt lane, because as-of
-    semantics need the full version history of a key visible to each
-    left row; salting the right side instead would drop matches.
-    Cost: right-side shuffle volume ×salt — use for genuinely hot key
-    histograms, where right is the (small) version dimension.
-    """
-    salt_col = "__asof_salt"
-    left_s = left.withColumn(
-        salt_col, F.pmod(F.hash(*[F.col(c) for c in left.columns]), F.lit(salt))
-    )
-    lanes = F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    right_s = right.withColumn(salt_col, lanes)
-    out = asof_join(
-        left_s,
-        right_s,
-        equi_keys=[*equi_keys, (salt_col, salt_col)],
-        left_ts=left_ts,
-        right_ts=right_ts,
-        right_payload=right_payload,
-        how=how,
-        tolerance=tolerance,
-        num_buckets=num_buckets,
-    )
-    return out.drop(salt_col)

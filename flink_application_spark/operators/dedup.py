@@ -36,23 +36,6 @@ def argmax_dedup(
     )
 
 
-def exact_dedup(df: DataFrame, on_cols: list[str], keep_min: str) -> DataFrame:
-    """Exact duplicate removal: group identical `on_cols` values, keep
-    the row with the smallest `keep_min` (deterministic canonical
-    representative).
-
-    Scale note: single shuffle on a hash of the dedup columns. For wide
-    text columns pre-hash (`F.xxhash64`) so the shuffle key is 8 bytes,
-    not the document body.
-    """
-    w = Window.partitionBy(*on_cols).orderBy(F.col(keep_min).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def segment_rows(
     docs: DataFrame, seg: int = 16, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:

@@ -1,79 +1,14 @@
-"""Table-maintenance operators: small-file compaction.
+"""Table-maintenance expressions: the Z-order (Morton) clustering key.
 
 The reference manages file sizing at WRITE time only — its rolling
 policy targets 110 MB files against a 128 MB HDFS block
-(flink.conf:54-55, EnrichmentApp.java:199-201). A streaming sink still
-fragments over time: one file per partition per micro-batch means a
-20 s rollover emits ~4.3k files/day/partition, and at 100 TB the
-resulting scan-planning and NameNode/listing overhead dominates reads.
-Compaction is the read-side complement the reference lacks.
-
-`compact_parquet` rewrites a parquet directory into size-targeted,
-range-clustered files:
-
-- `repartitionByRange(n, sort_cols)` gives non-overlapping sort-key
-  ranges per output file, so downstream range predicates skip whole
-  files via parquet row-group min/max stats (poor man's clustering —
-  the OSS-Spark analogue of Delta OPTIMIZE ... ZORDER on one axis).
-- `sortWithinPartitions` makes row groups internally ordered, which
-  tightens per-row-group min/max bounds and improves compression.
-- `maxRecordsPerFile` caps file size from above; the partition count
-  targets it from below. Both derive from a row count the caller
-  already pays for (one pass) — at cluster scale you'd use
-  `spark.sql.files.maxRecordsPerFile` with table statistics instead.
-
-The rewrite is a full read→write of the directory (compaction always
-is); it never collects rows to the driver.
+(flink.conf:54-55, EnrichmentApp.java:199-201); it has no read-side
+layout story. Range-partitioning a table by the Morton key of two
+columns gives every output file a tight bounding box in both, so
+predicates on either skip files via parquet min/max stats.
 """
 
 from __future__ import annotations
-
-import math
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    *,
-    sort_cols: list[str],
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Compact `src_dir` (parquet) into `dst_dir` with ~target-sized,
-    range-clustered files. Returns the number of output partitions.
-
-    Write to a NEW directory and swap atomically at the metastore /
-    symlink layer — compacting in place races concurrent readers.
-    """
-    df = spark.read.parquet(src_dir)
-    n_rows = df.count()
-    n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .parquet(dst_dir)
-    )
-    return n_files
-
-
-def file_range_stats(spark: SparkSession, path: str, col: str) -> DataFrame:
-    """Per-file (min, max, count) of `col` — the audit query for
-    range-clustering: after compaction, files' [min, max] intervals
-    must not overlap. Distributed (groupBy on file name), no collect."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.min(col).alias("min_val"),
-            F.max(col).alias("max_val"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
 
 
 def zvalue_expr(x, y, bits: int = 16):
@@ -99,134 +34,3 @@ def zvalue_expr(x, y, bits: int = 16):
             + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return z
-
-
-def zorder_cluster(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    *,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Rewrite `src_dir` Z-order-clustered on (x_col, y_col).
-
-    Both columns are min/max-normalized to [0, 2^bits) with integer
-    arithmetic (two-pass: one tiny agg for the bounds, then the
-    rewrite — the agg reads only the two columns, so the parquet scan
-    prunes the rest). Returns the number of output partitions.
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(src_dir)
-    b = df.agg(
-        F.min(x_col).alias("x0"),
-        F.max(x_col).alias("x1"),
-        F.min(y_col).alias("y0"),
-        F.max(y_col).alias("y1"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    top = (1 << bits) - 1
-
-    def norm(col, lo, hi):
-        span = max(1, hi - lo)
-        return ((F.col(col).cast("long") - F.lit(lo)) * top / F.lit(span)).cast(
-            "long"
-        )
-
-    n_files = max(1, math.ceil(b.n / target_rows_per_file))
-    keyed = df.withColumn(
-        "_z", zvalue_expr(norm(x_col, b.x0, b.x1), norm(y_col, b.y0, b.y1), bits)
-    )
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .parquet(dst_dir)
-    )
-    return n_files
-
-
-def files_containing(spark: SparkSession, path: str, col: str, value) -> int:
-    """How many files a point predicate on `col` must touch, judged by
-    per-file min/max — the data-skipping audit for clustering layouts."""
-    from pyspark.sql import functions as F
-
-    return (
-        file_range_stats(spark, path, col)
-        .filter((F.col("min_val") <= value) & (F.col("max_val") >= value))
-        .count()
-    )
-
-
-def expire_partitions(
-    spark: SparkSession,
-    path: str,
-    *,
-    partition_col: str,
-    keep_from: str,
-) -> list[str]:
-    """Retention for a hive-partitioned parquet table: drop whole
-    partition directories whose `partition_col=value` sorts below
-    `keep_from` (ISO date strings compare lexicographically, matching
-    the reference sink's event_date partitioning, EnrichmentApp.java:195).
-
-    Directory-level deletes only — no data rewrite, concurrent readers
-    of surviving partitions are untouched (partition isolation is the
-    point of partitioning the sink). On a real deployment this is a
-    metastore DROP PARTITION + object-store lifecycle rule; the
-    mechanics here are the filesystem form. Returns dropped values.
-    """
-    import os
-    import shutil
-    from urllib.parse import unquote
-
-    dropped = []
-    prefix = f"{partition_col}="
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(prefix):
-            continue
-        value = unquote(entry[len(prefix):])
-        if value < keep_from:
-            shutil.rmtree(os.path.join(path, entry))
-            dropped.append(value)
-    return dropped
-
-
-def retract_rows(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    *,
-    key_col: str,
-    keys: DataFrame,
-) -> dict:
-    """Takedown / right-to-be-forgotten: rewrite `src_dir` minus every
-    row whose `key_col` appears in `keys` (a one-column DataFrame).
-
-    LEFT ANTI join — Catalyst broadcasts the takedown list when it is
-    small (the usual case: thousands of ids against billions of rows),
-    so the rewrite is a single scan with a hash-lookup filter, no
-    shuffle of the corpus. With a huge list AQE falls back to a
-    shuffled anti join. Returns an audit dict; the removed-count check
-    is exact (before − after), not inferred from the list size —
-    absent keys must not count.
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(src_dir)
-    key_list = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
-    kept = df.join(key_list, on=key_col, how="left_anti")
-    kept.write.parquet(dst_dir)
-
-    before = df.count()
-    after = spark.read.parquet(dst_dir).count()
-    return {
-        "rows_before": before,
-        "rows_after": after,
-        "rows_removed": before - after,
-        "n_keys_requested": key_list.count(),
-    }

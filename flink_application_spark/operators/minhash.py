@@ -183,9 +183,7 @@ def band_keys_long(
     bands: int = DEFAULT_BANDS,
 ) -> DataFrame:
     """(id, band_key) long form of the LSH fingerprint — `bands` small
-    rows per document. This is both the self-join input below and the
-    append-only store layout of the incremental index
-    (streaming/dedup_index.py). A frame that already carries the mh0..
+    rows per document: the self-join input below. A frame that already carries the mh0..
     mh{k-1} signature columns is used as-is — callers that need the
     signatures AGAIN downstream (the estimate-vs-exact audit joins them
     to every candidate pair) sign once, persist, and pass the signed

@@ -2,11 +2,10 @@
 
 Large-scale training pipelines carry media as opaque ``binary``
 columns plus typed metadata, and run decode / feature-extraction /
-resize / frame-sampling as Arrow-batched Python stages. This module
-implements that plumbing for real — schemas, ``mapInPandas`` batch
-shapes, partitioning — against a deterministic container format, with
-the *actual* image/audio codecs stubbed behind an import-try (PIL /
-torchvision / ffmpeg are not in this container).
+frame-sampling as Arrow-batched Python stages. This module implements
+that plumbing for real — schemas, ``mapInPandas`` batch shapes,
+partitioning — against a deterministic container format in place of
+real image/audio codecs (PIL / torchvision / ffmpeg).
 
 Container format **SGB1** (spark-graft binary, deliberately trivial):
 
@@ -96,7 +95,7 @@ def synth_media(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decode / feature extraction / resize / frame sampling
+# Decode / feature extraction / frame sampling
 # ---------------------------------------------------------------------------
 
 
@@ -156,36 +155,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(feats, schema=FEATURE_SCHEMA)
-
-
-def resize_media(media: DataFrame, out_width: int, out_height: int) -> DataFrame:
-    """'Resize': nearest-neighbor subsample of the payload to
-    out_width×out_height bytes (the real kernel would be PIL/opencv —
-    see `decode_image_real`). Returns new blobs with updated headers;
-    demonstrates binary-in/binary-out Python stages."""
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for i, blob in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(blob)
-                w, h, c = unpack_header(b)
-                payload = np.frombuffer(b, dtype=np.uint8, offset=HEADER_LEN)
-                n = out_width * out_height
-                if payload.size == 0:
-                    sampled = np.zeros(n, dtype=np.uint8)
-                else:
-                    idx = (np.arange(n) * payload.size // n) % payload.size
-                    sampled = payload[idx]
-                out.append(
-                    (int(i), pack_header(out_width, out_height, c) + sampled.tobytes())
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    return media.mapInPandas(resize, schema="doc_id bigint, media binary")
 
 
 def sample_frames(
@@ -352,40 +321,3 @@ def audio_window_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(feats, schema=AUDIO_FEATURE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Real-codec stubs (libs not in this container)
-# ---------------------------------------------------------------------------
-
-
-def decode_image_real(media: DataFrame) -> DataFrame:
-    """Decode real image bytes (JPEG/PNG) to (width, height, mode) via
-    PIL. STUB in this container: PIL is not installed; the Spark-side
-    shape is identical to `decode_meta` with PIL.Image.open in place of
-    `unpack_header`."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env without PIL
-        raise NotImplementedError(
-            "real image decode requires PIL; this container ships none — "
-            "use decode_meta/extract_features (SGB1) for the tested path"
-        ) from e
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # pragma: no cover
-        import io
-
-        import pandas as pd
-        from PIL import Image
-
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf["doc_id"], pdf["media"]):
-                img = Image.open(io.BytesIO(bytes(blob)))
-                rows.append((int(i), img.format, img.width, img.height, len(img.getbands()), len(blob)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "width", "height", "channels", "payload_len"],
-            )
-
-    return media.mapInPandas(decode, schema=META_SCHEMA)

@@ -103,18 +103,3 @@ def compare(
         hash_spark=_hash_rows(s_cols, s_rows),
         hash_oracle=_hash_rows(o_cols, o_rows),
     )
-
-
-def run_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    from flink_application_spark.plans.registry import REGISTRY, _load_all
-
-    _load_all()
-    con = duckdb_connect(sf_dir)
-    results = []
-    for name, spec in REGISTRY.items():
-        if names and name not in names:
-            continue
-        if spec.oracle is None:
-            continue
-        results.append(compare(name, spec.spark(spark, sf_dir), spec.oracle, con))
-    return results

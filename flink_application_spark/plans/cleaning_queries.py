@@ -310,11 +310,11 @@ SELECT event_id,
 FROM events
 """,
     doc="Morton (Z-order) interleaving key over two event dimensions — "
-    "the clustering key operators/maintenance.py:zorder_cluster "
-    "range-partitions by. Pure bitwise Catalyst expressions (16 "
-    "shift/mask terms at 8 bits), scan-local, bit-exact across "
-    "engines; tests/test_maintenance.py proves the resulting layout "
-    "actually skips files on BOTH dimensions.",
+    "the key to range-partition a table by so each file bounds BOTH "
+    "dimensions. Pure bitwise Catalyst expressions (16 shift/mask "
+    "terms at 8 bits), scan-local, bit-exact across engines; "
+    "tests/test_maintenance.py pins the key's bijection and its "
+    "monotonicity along each axis.",
     tags=("maintenance", "clustering", "events"),
 )
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:

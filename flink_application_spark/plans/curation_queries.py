@@ -16,9 +16,6 @@ posting-list scrub, one 8-byte-key dedup shuffle (xxhash of the
 scrubbed text would be the 100 TB key; md5 here for engine parity),
 and an integer-only final aggregate. Nothing new materializes; Spark
 pipelines the stages into one DAG.
-
-(The streaming counterpart is `streaming/ingestion.py`; this is the
-batch form with a full-corpus LM-free gate.)
 """
 
 from __future__ import annotations

@@ -29,6 +29,8 @@ Distributions mirrored exactly:
 
 from __future__ import annotations
 
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 # CsvData.java:49
@@ -136,6 +138,29 @@ def stream_cdr(
     (rate source ≈ DataGeneratorSource at rowsPerSecond, flink.conf:7).
     Chain with `sources.csv_decode.encode_csv_value` + a Kafka/file sink
     for full generator parity (Generator.java:49-64)."""
-    from flink_application_spark.sources.streams import rate_stream
+    # Spark's rate source: (timestamp TIMESTAMP, value BIGINT) rows
+    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
+    return synthesize_cdr(rate, dim, seed=seed, **kw)
 
-    return synthesize_cdr(rate_stream(spark, rows_per_second), dim, seed=seed, **kw)
+
+def generator_kwargs(cfg: dict[str, Any]) -> dict[str, Any]:
+    """Map a config's `generator` block (the flink.conf translation
+    keeps the reference's own key names, flink.conf:4-11) onto
+    `synthesize_cdr` keyword arguments, so the reference's generator
+    job runs with ITS configured distributions:
+
+        kw = generator_kwargs(app.load_config("flink.conf"))
+        batch_cdr(spark, dim, n_rows=1000, **kw)              # bounded
+        stream_cdr(spark, dim, rows_per_second=rps, **kw)     # S7 shape
+    """
+    g = cfg.get("generator", {})
+    out: dict[str, Any] = {}
+    if "imsiNotNullProbability" in g:
+        out["imsi_not_null_p"] = float(g["imsiNotNullProbability"])
+    if "msisdnNotNullProbability" in g:
+        out["msisdn_not_null_p"] = float(g["msisdnNotNullProbability"])
+    if "startTime_min" in g:
+        out["start_min_ms"] = int(g["startTime_min"])
+    if "startTime_max" in g:
+        out["start_max_ms"] = int(g["startTime_max"])
+    return out

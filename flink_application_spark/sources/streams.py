@@ -1,8 +1,8 @@
-"""Streaming source constructors (SURVEY §2.1 S1/S2/S3/S7).
+"""Streaming source constructors (SURVEY §2.1 S1/S2/S3).
 
 Each returns a streaming DataFrame; the Kafka/JDBC variants are thin
 config builders whose endpoints aren't present in the test container,
-so hermetic tests use the file/rate sources through the *same*
+so hermetic tests use the file sources through the *same*
 downstream operators (Spark's unified API makes the pipeline code
 identical).
 """
@@ -52,17 +52,6 @@ def csv_line_stream(
     """
     raw = spark.readStream.format("text").load(path).withColumnRenamed("value", "value")
     return decode_csv_value(raw, schema_ddl, drop_malformed=drop_malformed)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """S7: rate-limited synthetic source (DataGeneratorSource,
-    Generator.java:38-47; rowsPerSecond=10 per flink.conf:7).
-    Columns: (timestamp TIMESTAMP, value BIGINT)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
 
 
 def kafka_startup_options(

@@ -63,17 +63,6 @@ def session_argmax_dedup(
     return out
 
 
-def drop_duplicates_within_watermark(
-    df: DataFrame, key_cols: list[str], ts_col: str, delay: str = "10 seconds"
-) -> DataFrame:
-    """Bounded-state exact dedup: first row per key wins, state expires
-    with the watermark (the late-straggler policy SURVEY §7.4 #5 calls
-    for — the reference has no late-data story at all)."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(key_cols)
-    return df.dropDuplicates(key_cols)
-
-
 def _gap_us(spark: SparkSession, gap: str) -> int:
     """``gap`` in µs, read as ``session_window`` reads it: the string is
     cast to an interval by Spark's own parser. A month-valued gap has no

@@ -1,30 +1,30 @@
-"""Streaming sinks + runner policies (SURVEY §2.1 S4/S5/S6/S8, §2.6 R1/R4).
+"""Streaming sinks (SURVEY §2.1 S4/S5, §2.6 R1).
 
 Reference sink surface: labeled console print (EnrichmentApp.java:
-97-103), partitioned parquet on HDFS with a rolling policy
+97-103) and partitioned parquet on HDFS with a rolling policy
 (EnrichmentApp.java:183-204: PARTITIONED BY (event_date, probe),
-file-size 110 MB / check 5 s / rollover 20 s; flink.conf:51-59), two
-INSERTs into one sink table (EnrichmentAppWithoutExplode.java:103-104),
+file-size 110 MB / check 5 s / rollover 20 s; flink.conf:51-59),
 checkpointing every 180 s (EnrichmentApp.java:48).
 
-Spark mapping: the micro-batch trigger plays the rollover-interval
-role (one file per partition per batch); a per-file record cap
-approximates the size cap; `checkpointLocation` is per-query exactly
-like Flink's per-job checkpoint path. Two-queries-one-path fights over
-the committer, so multi-sink fan-in is union-before-write (R4).
+`app.run`'s streaming query hands each micro-batch to one of the
+``write_arrow(table, batch_id)`` writers here as an Arrow table
+collected on the driver (`_collect_batch`), so no writer runs a Spark
+job and a batch is bounded by ``spark.driver.maxResultSize``:
 
-The foreachBatch stores (`idempotent_batch_write`, the parquet sinks,
-the memory and console writers) run no Spark write job: each
-micro-batch is collected to the driver as one Arrow table, bounded by
-``spark.driver.maxResultSize``, and written with pyarrow.
+- parquet: `SizeCalibratedRoller` commits the batch as
+  ``_batch=<id>/<partition_by>…`` with pyarrow (`_commit_arrow_batch`:
+  stage, swap in, ``_SUCCESS``), rolling files at a calibrated record
+  cap so each stays under the configured byte size;
+- memory: `memory_table_writer`; console: `console_write_arrow`.
+
+`committed_batch_dirs` is the read side of the ``_batch`` commit;
+`compact_batches` folds committed batches of the parquet sink and
+`vacuum_snapshots` drops superseded snapshots of a snapshot store.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
 
 def trigger_kwargs(trigger: str | None) -> dict:
@@ -133,54 +133,14 @@ def _commit_arrow_batch(
     return [(os.path.join(sub, os.path.relpath(p, staging)), r, b) for p, r, b in files]
 
 
-def idempotent_batch_write(
-    batch_df: DataFrame,
-    root: str,
-    batch_id: int,
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int | None = None,
-) -> list[tuple[str, int, int]]:
-    """Crash-safe foreachBatch commit: the batch lands in its own
-    hive-style ``_batch=<id>/`` subdirectory, replacing whatever an
-    earlier attempt left there, and ``_SUCCESS`` is written last.
-
-    A checkpoint-replayed micro-batch — whether the previous attempt
-    wrote nothing, some files, or everything — simply replaces its
-    own subdirectory, so the sink never holds duplicate rows for a
-    batch REGARDLESS of where a crash landed. (A marker-file scheme is
-    not crash-safe: marker-after-write duplicates on a crash between
-    the two, marker-before-write loses data.) Readers see ``_batch``
-    as an ordinary partition column via partition discovery, and
-    `committed_batch_dirs` skips a directory without ``_SUCCESS``.
-
-    No Spark write job runs: the micro-batch is collected to the driver
-    as one Arrow table (so a batch is bounded by
-    ``spark.driver.maxResultSize``) and written with pyarrow into a
-    staging directory, hive-partitioned by ``partition_by`` with
-    Spark's directory names, at most ``max_records_per_file`` rows and
-    one row group per file; the staging directory is then renamed into
-    place.
-
-    Returns (path, rows, bytes) for each data file written."""
-    return _commit_arrow_batch(
-        _collect_batch(batch_df, partition_by),
-        root,
-        batch_id,
-        partition_by,
-        max_records_per_file,
-    )
-
-
 def committed_batch_dirs(root: str) -> list[str]:
     """``_batch=<id>`` subdirectories bearing Spark's ``_SUCCESS``
-    commit marker — the read-side half of ``idempotent_batch_write``'s
-    crash-safety contract, shared by every additive per-batch store
-    (Bloom dedup, segment scrub, reservoir sample). A crash mid-write
-    leaves a partial ``_batch`` dir whose parquet files would read as a
-    silently-short batch; the replay overwrites it, but a read BETWEEN
-    crash and restart must not see it. Keeping the discipline in ONE
-    place means a future commit-scheme change cannot silently reopen
-    the crash window in one store but not another."""
+    commit marker — the read-side half of `_commit_arrow_batch`'s
+    crash-safety contract, shared by the parquet sink, its compaction
+    and the session closer's state. A crash mid-write leaves a partial
+    ``_batch`` dir whose parquet files would read as a silently-short
+    batch; the replay overwrites it, but a read BETWEEN crash and
+    restart must not see it."""
     import glob
     import os
 
@@ -213,10 +173,7 @@ def compact_batches(
     root: str,
     *,
     min_live_batch: int,
-    combine: dict[str, str] | None = None,
-    group_cols: tuple[str, ...] = (),
     partition_by: tuple[str, ...] = (),
-    max_records_per_file: int | None = None,
 ) -> int:
     """Fold all ``_batch=<id>`` partitions with id < ``min_live_batch``
     into one consolidated partition — the file-count control an
@@ -230,29 +187,21 @@ def compact_batches(
     land in ``_batch=<min_live_batch * -1 - 1>`` (a negative id no
     real batch can collide with, distinct per compaction horizon);
     prior consolidated partitions are re-absorbed by each compaction.
+    Rows are concatenated unchanged. Returns the number of partitions
+    absorbed.
 
-    ``combine``: aggregation per value column (e.g. ``{"c": "sum"}``)
-    with ``group_cols`` as keys — the additive-merge that keeps the
-    consolidated partial semantically identical to the batches it
-    replaces. With ``combine=None`` rows are concatenated unchanged
-    (event stores). Returns the number of partitions absorbed.
-
-    ``partition_by`` (event-sink mode, round-8): for the size-rolled
-    EVENT sink (`write_partitioned_parquet_size_rolled`, whose layout
-    is ``_batch=N/event_date=…/probe=…``), per-batch-per-task writes
-    leave one ~10 KB file per (batch × task × user-partition) at small
-    batch sizes. Passing the user partition columns re-writes the
-    consolidated rows PARTITIONED BY them (one writer task → one file
-    per partition dir, optionally re-rolled via
-    ``max_records_per_file``), so downstream partition pruning is
-    preserved while the file count collapses to ~the user-partition
-    cardinality. In this mode a SINGLE committed batch is already
-    worth folding (the fan-out is within the batch, not across)."""
+    ``partition_by``: the parquet sink's layout is
+    ``_batch=N/event_date=…/probe=…``, so at low event rates each batch
+    leaves one small file per partition value. Passing the sink's
+    partition columns re-writes the consolidated rows PARTITIONED BY
+    them (one writer task → one file per partition dir), so downstream
+    partition pruning is preserved while the file count collapses to
+    ~the partition cardinality. In this mode a SINGLE committed batch
+    is already worth folding (the fan-out is within the batch, not
+    across)."""
     import glob as _glob
     import os
     import shutil
-
-    from pyspark.sql import functions as F
 
     # Crash recovery BEFORE scanning fold targets: `.compact_old` is
     # the prior consolidated dir moved aside mid-swap. If any
@@ -315,8 +264,7 @@ def compact_batches(
         # throws CONFLICTING_DIRECTORY_STRUCTURES. Safe only when the
         # requested layout matches the live batches' layout — refuse
         # otherwise rather than corrupt the store's readability
-        # (round-8 ADVICE; bench/tests fold ALL batches so never live
-        # through this).
+        # (round-8 ADVICE; a fold of ALL batches never gets here).
         sink_keys = _partition_keys(olds[0][1])
         if list(partition_by) != sink_keys:
             raise ValueError(
@@ -335,18 +283,11 @@ def compact_batches(
         .parquet(*[p for _, p in olds])
         .drop("_batch")
     )
-    if combine:
-        df = df.groupBy(*group_cols).agg(
-            *[getattr(F, fn)(c).alias(c) for c, fn in combine.items()]
-        )
     tmp = consolidated + ".tmp"
+    writer = df.coalesce(1).write.mode("overwrite")
     if partition_by:
-        writer = df.coalesce(1).write.mode("overwrite").partitionBy(*partition_by)
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.parquet(tmp)
-    else:
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
     # absorb-then-swap: readers between the rm and the rename could
     # see a partial store, so swap the consolidated dir in FIRST,
     # then drop the absorbed partitions (transient double-count beats
@@ -419,15 +360,15 @@ class SizeCalibratedRoller:
     memory and measures bytes-per-row before anything is written (so
     the byte ceiling holds even for very wide rows — no record-count
     guess is trusted); every batch then refines the estimate from the
-    rows and bytes `idempotent_batch_write`'s writer reports for the
-    files it just wrote.
+    rows and bytes `_commit_arrow_batch` reports for the files it just
+    wrote.
 
     The whole micro-batch is held on the driver as Arrow while it is
     written, so one batch is bounded by ``spark.driver.maxResultSize``.
 
     Restart semantics: each batch replaces its own ``_batch=<id>``
-    subdirectory through `idempotent_batch_write`'s commit — replays
-    are exact overwrites, never appends, at any crash point."""
+    subdirectory through `_commit_arrow_batch` — replays are exact
+    overwrites, never appends, at any crash point."""
 
     def __init__(
         self,
@@ -507,101 +448,3 @@ def console_write_arrow(table, batch_id: int, num_rows: int = 20) -> None:
     rule = "-" * 43
     print(f"{rule}\nBatch: {batch_id}\n{rule}")
     print(table.slice(0, num_rows).to_pandas().to_string(index=False))
-
-
-def write_partitioned_parquet_size_rolled(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: tuple[str, ...] = ("event_date", "probe"),
-    target_file_bytes: int = 110 * 1024 * 1024,
-    initial_records_per_file: int | None = None,
-    trigger: str | None = None,
-    query_name: str = "parquet_sink_size_rolled",
-) -> StreamingQuery:
-    """S4 with the byte-size rolling policy: every produced file stays
-    under `target_file_bytes`. The first batch sample-calibrates the
-    record cap from actual encoded bytes-per-row (pass
-    `initial_records_per_file` to skip the sample if the row width is
-    known); every batch refines it from the files it wrote.
-    Output is partitioned by `_batch` (crash-safe replay) then the
-    user partitions."""
-    roller = SizeCalibratedRoller(
-        path, partition_by, target_file_bytes, initial_records_per_file
-    )
-    return (
-        df.writeStream.foreachBatch(roller)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(**trigger_kwargs(trigger))
-        .start()
-    )
-
-
-def write_memory(
-    df: DataFrame, table_name: str, trigger: str | None = None
-) -> StreamingQuery:
-    """Test sink: results land in an in-memory table (batch≡stream
-    equivalence checks read it back with spark.table)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append" if not _has_aggregation(df) else "complete")
-        .trigger(**trigger_kwargs(trigger))
-        .start()
-    )
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    # session-window aggregations with watermark support append mode;
-    # detect plain (un-watermarked) aggregates that need complete mode.
-    plan = df._jdf.queryExecution().logical().toString()
-    return "Aggregate" in plan and "EventTimeWatermark" not in plan
-
-
-def write_kafka_csv(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint: str,
-    transactional_id_prefix: str | None = None,
-    trigger: str | None = None,
-) -> StreamingQuery:
-    """S8: Kafka producer sink (Generator.java:51-64 — string serializer,
-    transactional-id prefix). Expects a `value` column (use
-    csv_decode.encode_csv_value). Untestable without a broker."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger_kwargs(trigger))
-    )
-    if transactional_id_prefix is not None:
-        writer = writer.option("kafka.transactional.id", transactional_id_prefix)
-    return writer.start()
-
-
-def fanout_union(dfs: list[DataFrame]) -> DataFrame:
-    """S6/R4: route N result streams into ONE sink — union-before-write
-    keeps a single committer on the output path (the Spark-safe form of
-    the reference's two INSERTs into one sink table)."""
-    return reduce(lambda a, b: a.unionByName(b), dfs)
-
-
-def with_pipeline_metrics(df: DataFrame, name: str = "pipeline_metrics") -> DataFrame:
-    """Attach per-micro-batch observability counters (`df.observe`):
-    row count and null-enrichment count, surfaced on every
-    StreamingQueryProgress under `observedMetrics[name]` — the Spark
-    analogue of the reference's labeled console sinks + Flink metric
-    groups (EnrichmentApp.java:97-103 is its only observability).
-    Metrics ride the existing plan (an extra CollectMetrics node, no
-    second pass / no extra shuffle) and work identically in batch via
-    the QueryExecutionListener."""
-    from pyspark.sql import functions as F
-
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("msisdn").isNull(), 1)).alias("n_unenriched_msisdn"),
-    )

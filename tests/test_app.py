@@ -303,9 +303,9 @@ def test_generator_runs_with_reference_flink_conf_distributions(spark):
     drives our generator: probabilities and timestamp bounds flow
     through generator_kwargs, and the synthesized corpus respects
     them."""
-    from flink_application_spark.app import flink_conf_to_config, generator_kwargs
+    from flink_application_spark.app import flink_conf_to_config
     from flink_application_spark.hocon import parse_hocon_file
-    from flink_application_spark.sources.generator import batch_cdr
+    from flink_application_spark.sources.generator import batch_cdr, generator_kwargs
 
     cfg = flink_conf_to_config(
         parse_hocon_file("/root/reference/src/main/resources/flink.conf")
@@ -411,3 +411,45 @@ def test_flink_conf_auto_compaction_post_run(spark, app_dirs, tmp_path):
     # default-off: without the key, compact_sink is a no-op
     cfg_off = {**cfg, "sink": {**cfg["sink"], "auto-compaction": False}}
     assert compact_sink(spark, cfg_off) == 0
+
+
+def test_main_compacts_the_sink_after_the_query_stops(spark, app_dirs, tmp_path):
+    """`python -m flink_application_spark.app cfg.json` with the sink's
+    ``auto-compaction`` set: once the query stops, `main` folds every
+    committed batch below the newest into one consolidated partition
+    (`compact_sink`) that keeps the sink's partition layout."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    from flink_application_spark.app import main
+
+    src = tmp_path / "src"
+    src.mkdir()
+    parts = sorted(glob.glob(str(app_dirs / "src" / "*.parquet")))
+    root = tmp_path / "out"
+    cfg = _cfg(app_dirs, "streaming", {
+        "format": "parquet",
+        "path": str(root),
+        "checkpoint": str(tmp_path / "ckpt"),
+        "trigger": None,
+        "name": "app_main_compact_test",
+        "auto-compaction": True,
+    })
+    cfg["source"]["path"] = str(src)
+    cfg_path = tmp_path / "app.json"
+    cfg_path.write_text(json.dumps(cfg))
+
+    # two runs through the same checkpoint -> committed batches 0 and 1
+    for wave, sl in enumerate((parts[: len(parts) // 2] or parts, parts)):
+        for p in sl:
+            shutil.copy(p, src / f"w{wave}_{os.path.basename(p)}")
+        time.sleep(1.2)  # file-stream batch order is modTime-based
+        main([str(cfg_path)])
+    batch_dirs = sorted(os.path.basename(p) for p in glob.glob(str(root / "_batch=*")))
+    # the first run's fold had only its own (newest) batch: nothing to do;
+    # the second folds batch 0 into _batch=-2 and keeps batch 1 live
+    assert batch_dirs == ["_batch=-2", "_batch=1"]
+    assert glob.glob(str(root / "_batch=-2" / "event_date=*" / "probe=*"))
+    assert spark.read.option("basePath", str(root)).parquet(str(root)).count() > 0

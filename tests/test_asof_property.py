@@ -83,45 +83,3 @@ def test_asof_join_matches_brute_force(spark, how, left_rows, right_rows):
         key=lambda r: tuple(str(x) for x in r),
     )
     assert got_rows == _brute_force(left_rows, right_rows, how)
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(left_rows=_left_rows, right_rows=_right_rows)
-def test_salted_asof_equals_unsalted(spark, how, left_rows, right_rows):
-    """Salting is a pure execution-layout change — results must be
-    identical, including on hot-key histograms (hypothesis's repeated
-    keys provide them)."""
-    from flink_application_spark.operators.asof import asof_join_salted
-
-    left = spark.createDataFrame(
-        left_rows or [("_x", BASE)], "k string, lt timestamp"
-    )
-    if not left_rows:
-        left = left.filter("k <> '_x'")
-    right = spark.createDataFrame(
-        right_rows or [("_x", BASE, "a")], "k string, rt timestamp, pay string"
-    )
-    if not right_rows:
-        right = right.filter("k <> '_x'")
-
-    got = asof_join_salted(
-        left,
-        right,
-        equi_keys=[("k", "k")],
-        left_ts="lt",
-        right_ts="rt",
-        right_payload=["pay"],
-        how=how,
-        salt=4,
-        num_buckets=4,
-    ).collect()
-    got_rows = sorted(
-        [(r.k, r.lt, r.rt, r.pay) for r in got],
-        key=lambda r: tuple(str(x) for x in r),
-    )
-    assert got_rows == _brute_force(left_rows, right_rows, how)

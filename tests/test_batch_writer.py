@@ -1,7 +1,8 @@
-"""The `_batch` store writer (`sinks.idempotent_batch_write`): a
-micro-batch collected as Arrow and written with pyarrow must read back
-exactly as the Spark-written batch it replaces — same partition
-directory names, same rows, same schema — with one row group per file."""
+"""The `_batch` store writer (`sinks._commit_arrow_batch`, what the
+parquet sink runs per micro-batch): a micro-batch collected as Arrow
+and written with pyarrow must read back exactly as the Spark-written
+batch it replaces — same partition directory names, same rows, same
+schema — with one row group per file."""
 
 from __future__ import annotations
 
@@ -15,8 +16,14 @@ from pyspark.sql import functions as F
 
 from flink_application_spark.streaming.sinks import (
     _collect_batch,
-    idempotent_batch_write,
+    _commit_arrow_batch,
 )
+
+
+def _write_batch(df, root, batch_id, partition_by=(), max_records_per_file=None):
+    return _commit_arrow_batch(
+        _collect_batch(df, partition_by), root, batch_id, partition_by, max_records_per_file
+    )
 
 
 def _rows(df):
@@ -30,7 +37,7 @@ def test_one_row_group_per_file_under_the_cap(spark, tmp_path):
     # precondition: the collected table arrives in several record
     # batches, the case that used to cut one row group per batch
     assert _collect_batch(df, ("p",)).column("id").num_chunks >= 4
-    files = idempotent_batch_write(
+    files = _write_batch(
         df, str(tmp_path), 0, partition_by=("p",), max_records_per_file=10_000
     )
     assert len(files) == 3  # one file per partition cell
@@ -40,7 +47,7 @@ def test_one_row_group_per_file_under_the_cap(spark, tmp_path):
         assert (meta.num_rows, os.path.getsize(path)) == (rows, nbytes)
     assert sum(r for _, r, _ in files) == 4000
     # over the cap: files roll on the record count
-    files = idempotent_batch_write(
+    files = _write_batch(
         df, str(tmp_path), 1, partition_by=("p",), max_records_per_file=500
     )
     assert max(r for _, r, _ in files) == 500
@@ -63,7 +70,7 @@ def test_partition_directory_names_match_spark(spark, tmp_path):
     twin = str(tmp_path / "spark")
     df.write.partitionBy("p", "q").parquet(twin)
     root = str(tmp_path / "store")
-    idempotent_batch_write(df, root, 0, partition_by=("p", "q"))
+    _write_batch(df, root, 0, partition_by=("p", "q"))
     sub = os.path.join(root, "_batch=0")
     assert _partition_dirs(sub) == _partition_dirs(twin)
     got = spark.read.option("basePath", root).parquet(sub).drop("_batch")
@@ -81,7 +88,7 @@ def test_partition_values_print_as_spark_prints_them(spark, tmp_path):
     twin = str(tmp_path / "spark")
     df.write.partitionBy(*parts).parquet(twin)
     root = str(tmp_path / "store")
-    idempotent_batch_write(df, root, 0, partition_by=parts)
+    _write_batch(df, root, 0, partition_by=parts)
     assert _partition_dirs(os.path.join(root, "_batch=0")) == _partition_dirs(twin)
 
 
@@ -123,7 +130,7 @@ def test_types_round_trip(spark, tmp_path):
         "dec", F.col("dec").cast("decimal(38,0)")
     )
     root = str(tmp_path / "store")
-    idempotent_batch_write(df, root, 3)
+    _write_batch(df, root, 3)
     back = (
         spark.read.option("basePath", root)
         .parquet(os.path.join(root, "_batch=3"))
@@ -148,16 +155,16 @@ def test_empty_batches_commit_like_spark(spark, tmp_path):
     empty = spark.createDataFrame([], "id bigint, p string")
     root = str(tmp_path)
     # unpartitioned: one schema-only file, so readers still get a schema
-    idempotent_batch_write(empty, root, 0)
+    _write_batch(empty, root, 0)
     assert spark.read.parquet(os.path.join(root, "_batch=0")).schema == empty.schema
-    idempotent_batch_write(empty, root, 1, partition_by=("p",))
+    _write_batch(empty, root, 1, partition_by=("p",))
     assert sorted(os.listdir(os.path.join(root, "_batch=1"))) == ["_SUCCESS"]
 
 
 def test_replay_replaces_the_batch_and_leaves_no_staging(spark, tmp_path):
     root = str(tmp_path)
     df = spark.range(10).select("id", (F.col("id") % 2).alias("p"))
-    idempotent_batch_write(df, root, 0, partition_by=("p",))
-    idempotent_batch_write(df.filter("id < 4"), root, 0, partition_by=("p",))
+    _write_batch(df, root, 0, partition_by=("p",))
+    _write_batch(df.filter("id < 4"), root, 0, partition_by=("p",))
     assert sorted(os.listdir(root)) == ["_batch=0"]
     assert spark.read.parquet(root).count() == 4

@@ -1,6 +1,7 @@
-"""The bench stdout line must fit the driver's 2000-char tail capture
-— the process failure that cost rounds 3 AND 4 their parsed headline.
-These tests run without Spark (bench.format_stdout_line is pure)."""
+"""bench.py's contract, checked without Spark: every ``HEADLINE`` name is
+a registered query with an oracle (or on the rows-only allowlist), and
+the one JSON line it prints stays short enough for a tail capture of
+2,000 characters."""
 
 from __future__ import annotations
 
@@ -10,97 +11,39 @@ import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from bench import HEADLINE, format_stdout_line, prev_aggregation  # noqa: E402
+from bench import HEADLINE, result_line  # noqa: E402
+
+from flink_application_spark.plans.registry import all_oracles, all_queries  # noqa: E402
+
+# Headline queries with no SQL oracle: the driver checks their row count only.
+ROWS_ONLY_HEADLINE = {"emb_ivfadc_trained_topk"}
+
+# Widest realistic timing: seconds with 3 decimals past 1,000 s.
+_WIDE = 1234.567
 
 
-def _synthetic_result(names: list[str]) -> dict:
-    # realistic widths: the ACTUAL headline names, 3-decimal floats
-    return {
-        "metric": "headline_queries_total_wall",
-        "value": 123.456,
-        "unit": "sec",
-        "queries": {n: 1.234 for n in names},
-        "sf": 0.1,
-        "samples_per_query": 3,
-        "aggregation": "median",
-        "streaming_samples": 3,
-        "streaming_aggregation": "median",
-        "deltas_vs_prev_round": {n: -0.123 for n in names},
-        "deltas_vs_prev_round_normalized": {n: -0.123 for n in names},
-        "deltas_prev_aggregation": "median",
-        "calib_tpch_q1_sec": 0.322,
-        "calib_write_sec": 1.234,
-        "cpu_ratio_vs_prev": 1.253,
-        "io_ratio_vs_prev": 1.107,
-        "stream_events_per_sec": 27044.4,
-        "stream_wall_sec": 3.698,
-        "stream_events": 100000,
-        "stream_sink_events_per_sec": 11854.9,
-        "stream_sink_wall_sec": 8.435,
-        "stream_sink": "size_rolled_partitioned_parquet",
-        "max_sink_file_mb": 0.01,
-        "ingest_docs_per_sec": 999.4,
-        "ingest_wall_sec": 5.003,
-        "ingest_docs": 5000,
-        "flinkconf_events_per_sec": 11234.5,
-        "flinkconf_wall_sec": 8.912,
-        "roll_proof_max_file_mb": 98.92,
-        "roll_proof_total_mb": 244.6,
-        "roll_proof_files": 3,
-        "roll_proof_wall_sec": 2.704,
-        "roll_proof_wall2_sec": 2.698,
-        "pre_compact_files": 123,
-        "post_compact_files": 8,
-        "post_compact_max_mb": 1.23,
-    }
+def _line(names: list[str]) -> str:
+    return result_line({n: _WIDE for n in names}, 0.1)
+
+
+def test_headline_names_are_registered_with_oracles():
+    queries, oracles = all_queries(), all_oracles()
+    assert len(set(HEADLINE)) == len(HEADLINE)
+    assert not set(HEADLINE) - set(queries)
+    assert {n for n in HEADLINE if n not in oracles} == ROWS_ONLY_HEADLINE
 
 
 def test_line_fits_tail_capture_at_current_headline_size():
-    line = format_stdout_line(_synthetic_result(list(HEADLINE)))
-    assert len(line) <= 1900, len(line)
+    line = _line(HEADLINE)
+    assert "\n" not in line and len(line) <= 1900, len(line)
     doc = json.loads(line)
-    # deltas + static methodology descriptors are shed to BENCH_LOCAL;
-    # the required keys survive
-    assert "deltas_vs_prev_round" not in doc
-    assert "deltas_vs_prev_round_normalized" not in doc
-    assert "stream_sink" not in doc
-    assert doc["metric"] == "headline_queries_total_wall"
-    assert len(doc["queries"]) == len(HEADLINE)
-    # the calibration scalars must ride the stdout line (the whole
-    # point is that the driver's BENCH_r{N}.json records them)
-    assert doc["calib_tpch_q1_sec"] == 0.322
-    assert doc["cpu_ratio_vs_prev"] == 1.253
+    assert set(doc) == {"metric", "value", "unit", "queries", "sf"}
+    assert list(doc["queries"]) == HEADLINE
+    assert doc["value"] == round(_WIDE * len(HEADLINE), 3)
 
 
 def test_headline_growth_headroom():
-    """Fail BEFORE the driver does: if HEADLINE grows past what the
-    tail window can hold with queries intact, this trips first and the
-    fix is deliberate (shorter names / fewer queries / shed policy)."""
-    extra = [f"doc_round6_addition_{i}" for i in range(5)]
-    line = format_stdout_line(_synthetic_result(list(HEADLINE) + extra))
-    doc = json.loads(line)
-    assert "queries" in doc, (
-        "within 5 queries of shedding the queries dict from the stdout "
-        "line — trim HEADLINE or shorten query names"
-    )
-
-
-def test_prev_aggregation_fallback_by_round():
-    """A tail-captured BENCH_r artifact lacks the shed 'aggregation'
-    key; the fallback must reflect what that round actually ran
-    (min-of-2 only existed in r01/r02) — round-6 ADVICE."""
-    assert prev_aggregation({"aggregation": "median"}, 2) == "median"
-    assert prev_aggregation({}, 1) == "min_of_2"
-    assert prev_aggregation({}, 2) == "min_of_2"
-    assert prev_aggregation({}, 3) == "median"
-    assert prev_aggregation({}, 6) == "median"
-
-
-def test_oversized_result_sheds_queries_but_stays_parseable():
-    line = format_stdout_line(
-        _synthetic_result([f"doc_some_long_query_name_{i:03d}" for i in range(200)])
-    )
-    assert len(line) <= 1900
-    doc = json.loads(line)
-    assert doc["shed_keys_see_bench_local"] == "queries"
-    assert doc["value"] == 123.456
+    """Five more queries still fit: adding to HEADLINE trips this before
+    the printed line outgrows the capture."""
+    extra = [f"doc_future_headline_addition_{i}" for i in range(5)]
+    assert len(_line(HEADLINE + extra)) <= 1900

@@ -20,8 +20,8 @@ from flink_application_spark.plans.cdr import CANONICAL, cdr_views
 from flink_application_spark.sources.streams import file_stream
 from flink_application_spark.streaming.pipeline import streaming_enrichment
 from flink_application_spark.streaming.sinks import (
+    SizeCalibratedRoller,
     committed_batch_dirs,
-    write_partitioned_parquet_size_rolled,
 )
 
 
@@ -76,8 +76,12 @@ def test_stateful_restart_equals_batch(spark, sf_dir, tmp_path):
             gap="1 hour",
             watermark_delay="0 seconds",
         )
-        q = write_partitioned_parquet_size_rolled(
-            enriched, out, ckpt, partition_by=("event_date", "probe")
+        roller = SizeCalibratedRoller(out, ("event_date", "probe"), 110 * 1024 * 1024)
+        q = (
+            enriched.writeStream.foreachBatch(roller)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination(300)
         return q

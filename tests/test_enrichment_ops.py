@@ -8,7 +8,7 @@ import datetime as dt
 
 from pyspark.sql import Row, functions as F
 
-from flink_application_spark.operators.dedup import argmax_dedup, exact_dedup
+from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.operators.enrichment import (
     coalesce_enrich,
     explode_delimited,
@@ -96,11 +96,3 @@ def test_argmax_dedup_tiebreak(spark):
     )
     out = argmax_dedup(df, ["k"], ["v", "t"]).collect()
     assert len(out) == 1 and out[0].t == "b"
-
-
-def test_exact_dedup_keeps_min(spark):
-    df = spark.createDataFrame(
-        [(3, "x"), (1, "x"), (2, "y")], ["id", "body"]
-    )
-    out = exact_dedup(df, ["body"], keep_min="id")
-    assert {(r.id, r.body) for r in out.collect()} == {(1, "x"), (2, "y")}

@@ -1,5 +1,4 @@
-"""Small-file compaction: row-preserving, file-count-targeted, and
-range-clustered (non-overlapping per-file sort-key intervals)."""
+"""The Z-order (Morton) clustering key `operators.maintenance.zvalue_expr`."""
 
 from __future__ import annotations
 
@@ -11,107 +10,6 @@ import pytest as _pytest_tier
 pytestmark = _pytest_tier.mark.slow
 
 from pyspark.sql import functions as F
-
-from flink_application_spark.operators.maintenance import (
-    compact_parquet,
-    file_range_stats,
-)
-
-
-def test_compaction_rows_files_and_ranges(spark, tmp_path):
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-
-    # simulate a streaming sink's fragmentation: 64 tiny files
-    spark.range(10_000).withColumn("k", F.col("id") % 997).repartition(
-        64
-    ).write.parquet(src)
-    assert len(spark.read.parquet(src).inputFiles()) >= 64
-
-    n_parts = compact_parquet(
-        spark, src, dst, sort_cols=["id"], target_rows_per_file=2_500
-    )
-    assert n_parts == 4
-
-    out = spark.read.parquet(dst)
-    # row-preserving (same multiset)
-    assert out.count() == 10_000
-    assert out.select(F.sum("id")).first()[0] == sum(range(10_000))
-    # file count collapsed to ~target
-    assert len(out.inputFiles()) <= 8
-
-    # range clustering: per-file [min,max] of the sort key do not overlap
-    stats = file_range_stats(spark, dst, "id").orderBy("min_val").collect()
-    assert all(s.n_rows > 0 for s in stats)
-    for prev, cur in zip(stats, stats[1:]):
-        assert prev.max_val < cur.min_val
-
-
-def test_zorder_cluster_skips_on_both_dimensions(spark, tmp_path):
-    from flink_application_spark.operators.maintenance import (
-        files_containing,
-        zorder_cluster,
-    )
-
-    src = str(tmp_path / "grid")
-    linear = str(tmp_path / "linear")
-    zordered = str(tmp_path / "zordered")
-
-    # 256x256 grid of (x, y) points, randomly laid out on disk
-    spark.range(65536).select(
-        (F.col("id") % 256).alias("x"), (F.col("id") / 256).cast("long").alias("y")
-    ).repartition(16).write.parquet(src)
-
-    # baseline: range-clustered on x only
-    compact_parquet(spark, src, linear, sort_cols=["x"], target_rows_per_file=4096)
-    n = zorder_cluster(
-        spark, src, zordered, x_col="x", y_col="y", bits=8, target_rows_per_file=4096
-    )
-    assert n == 16
-
-    out = spark.read.parquet(zordered)
-    assert out.count() == 65536
-    assert out.select(F.sum("x"), F.sum("y")).first() == spark.read.parquet(
-        src
-    ).select(F.sum("x"), F.sum("y")).first()
-
-    # x-sorted layout: every file spans all of y -> a y point predicate
-    # touches every file; the Z-order layout must touch at most half
-    # the files on y AND stay selective on x (maxRecordsPerFile may
-    # split uneven range partitions, so compare against actual counts)
-    n_linear = len(spark.read.parquet(linear).inputFiles())
-    n_z = len(out.inputFiles())
-    y_linear = files_containing(spark, linear, "y", 17)
-    y_z = files_containing(spark, zordered, "y", 17)
-    x_z = files_containing(spark, zordered, "x", 17)
-    assert y_linear == n_linear
-    assert y_z <= n_z / 2, (y_z, n_z)
-    assert x_z <= n_z / 2, (x_z, n_z)
-
-
-def test_expire_partitions_drops_only_old(spark, tmp_path):
-    from flink_application_spark.operators.maintenance import expire_partitions
-
-    path = str(tmp_path / "sink")
-    df = spark.range(100).select(
-        F.col("id"),
-        F.date_format(
-            F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 10).cast("int")),
-            "yyyy-MM-dd",
-        ).alias("event_date"),
-    )
-    df.write.partitionBy("event_date").parquet(path)
-    assert spark.read.parquet(path).select("event_date").distinct().count() == 10
-
-    dropped = expire_partitions(
-        spark, path, partition_col="event_date", keep_from="2024-01-04"
-    )
-    assert dropped == ["2024-01-01", "2024-01-02", "2024-01-03"]
-
-    left = spark.read.parquet(path)
-    assert left.select("event_date").distinct().count() == 7
-    assert left.filter(F.col("event_date") < "2024-01-04").count() == 0
-    assert left.count() == 70
 
 
 def test_zvalue_properties(spark):
@@ -156,37 +54,3 @@ def test_zvalue_properties(spark):
             assert sample[(x, y + 1)] > sample[(x, y)]
 
     matches_pure_python()
-
-
-def test_retract_rows_exact_and_audited(spark, tmp_path):
-    from flink_application_spark.operators.maintenance import retract_rows
-
-    src = str(tmp_path / "corpus")
-    dst = str(tmp_path / "scrubbed")
-    spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("payload")
-    ).write.parquet(src)
-
-    # 10 real keys + 3 that don't exist (must not inflate the audit)
-    keys = spark.createDataFrame(
-        [(i,) for i in range(0, 100, 10)] + [(5000,), (6000,), (7000,)], "k bigint"
-    )
-    audit = retract_rows(spark, src, dst, key_col="doc_id", keys=keys)
-    assert audit == {
-        "rows_before": 1000,
-        "rows_after": 990,
-        "rows_removed": 10,
-        "n_keys_requested": 13,
-    }
-    out = spark.read.parquet(dst)
-    assert out.filter(F.col("doc_id").isin(list(range(0, 100, 10)))).count() == 0
-
-    # the anti join must end up broadcasting the small takedown list —
-    # the local keys df has no stats, so it's AQE that converts the
-    # static SMJ at runtime; check the FINAL adaptive plan post-action
-    df = spark.read.parquet(src)
-    joined = df.join(keys.select(F.col("k").alias("doc_id")), "doc_id", "left_anti")
-    joined.collect()
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan, plan
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan

@@ -9,11 +9,9 @@ from pyspark.sql import functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.multimodal import (
     HEADER_LEN,
-    decode_image_real,
     decode_meta,
     extract_features,
     pack_header,
-    resize_media,
     sample_frames,
     synth_media,
     unpack_header,
@@ -63,17 +61,6 @@ def test_features_mean_byte_range(spark, media):
     assert feats.filter(F.col("n_pixels") != F.col("width") * F.col("height") * F.col("channels")).count() == 0
 
 
-def test_resize_changes_header_and_payload_len(spark, media):
-    resized = resize_media(media, 32, 16)
-    meta = decode_meta(resized)
-    assert meta.filter((F.col("width") != 32) | (F.col("height") != 16)).count() == 0
-    assert meta.filter(F.col("payload_len") != 32 * 16).count() == 0
-    # channels preserved from the source header
-    src_c = {r.doc_id: r.channels for r in decode_meta(media).collect()}
-    out_c = {r.doc_id: r.channels for r in meta.collect()}
-    assert src_c == out_c
-
-
 def test_sample_frames_stride_and_sums(spark, media):
     frames = sample_frames(media, frame_len=100, stride=2).cache()
     assert frames.filter(F.col("frame_idx") % 2 != 0).count() == 0
@@ -81,14 +68,3 @@ def test_sample_frames_stride_and_sums(spark, media):
     # frame byte-sums of ascii text are bounded per 100-byte frame
     assert frames.filter((F.col("frame_sum") < 100 * 32) | (F.col("frame_sum") > 100 * 122)).count() == 0
     frames.unpersist()
-
-
-def test_real_codec_stub_raises(spark, media):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present in this env; stub not applicable")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_image_real(media)

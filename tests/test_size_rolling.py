@@ -20,10 +20,19 @@ from pyspark.sql import functions as F
 from flink_application_spark.sources.streams import file_stream
 from flink_application_spark.streaming.sinks import (
     SizeCalibratedRoller,
-    write_partitioned_parquet_size_rolled,
+    _collect_batch,
+    _commit_arrow_batch,
 )
 
 _TARGET = 64 * 1024  # 64 KiB stand-in for the 110 MB production cap
+
+
+def _write_batch(df, root, batch_id, partition_by=()):
+    """Commit ``df`` as ``root/_batch=<batch_id>``, one file per
+    partition directory."""
+    return _commit_arrow_batch(
+        _collect_batch(df, partition_by), root, batch_id, partition_by, None
+    )
 
 
 @pytest.fixture()
@@ -51,14 +60,11 @@ def _data_files(path):
 def test_size_rolled_sink_respects_byte_ceiling(spark, wide_rows_dir, tmp_path):
     out = str(tmp_path / "sink")
     stream = file_stream(spark, str(wide_rows_dir), max_files_per_trigger=1)
-    q = write_partitioned_parquet_size_rolled(
-        stream,
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-        partition_by=(),
-        target_file_bytes=_TARGET,
-        initial_records_per_file=50,
-        trigger=None,
+    q = (
+        stream.writeStream.foreachBatch(SizeCalibratedRoller(out, (), _TARGET, 50))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(300)
 
@@ -110,7 +116,6 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
     from flink_application_spark.streaming.sinks import (
         compact_batches,
         committed_batch_dirs,
-        idempotent_batch_write,
     )
 
     root = str(tmp_path / "sink")
@@ -121,7 +126,7 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
     )
     # 4 committed batches × 8 writer tasks × 15 partition combos
     for b in range(4):
-        idempotent_batch_write(
+        _write_batch(
             rows.filter(F.col("id") % 4 == b).repartition(8),
             root,
             b,
@@ -147,7 +152,7 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
     pruned = post.filter("event_date = '1' AND probe = '2'")
     assert pruned.count() == 200
 
-    # coarsen-on-compact (the bench's shape): re-compact the already-
+    # coarsen-on-compact: re-compact the already-
     # consolidated store down to the date axis alone — probe becomes a
     # plain column, the file count collapses to ~#dates, rows invariant
     absorbed2 = compact_batches(
@@ -164,7 +169,7 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
     # single-batch fold: a fresh sink with ONE committed batch still
     # compacts in event-sink mode (refused in additive-store mode)
     root2 = str(tmp_path / "sink2")
-    idempotent_batch_write(
+    _write_batch(
         rows.repartition(8), root2, 0, partition_by=("event_date", "probe")
     )
     assert compact_batches(spark, root2, min_live_batch=1) == 0  # store mode: <2
@@ -183,17 +188,14 @@ def test_compact_batches_skips_uncommitted_partials(spark, tmp_path):
     replay still finds the directory to overwrite (round-8 ADVICE)."""
     import pytest
 
-    from flink_application_spark.streaming.sinks import (
-        compact_batches,
-        idempotent_batch_write,
-    )
+    from flink_application_spark.streaming.sinks import compact_batches
 
     root = str(tmp_path / "sink")
     rows = spark.range(0, 300).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
     )
     for b in range(3):
-        idempotent_batch_write(rows.filter(F.col("id") % 3 == b), root, b)
+        _write_batch(rows.filter(F.col("id") % 3 == b), root, b)
     os.remove(os.path.join(root, "_batch=1", "_SUCCESS"))  # crash partial
     assert compact_batches(spark, root, min_live_batch=3) == 2  # 0 and 2 only
     assert os.path.isdir(os.path.join(root, "_batch=1"))  # awaits its replay
@@ -206,7 +208,7 @@ def test_compact_batches_skips_uncommitted_partials(spark, tmp_path):
     root2 = str(tmp_path / "sink2")
     rows2 = rows.withColumn("probe", (F.col("id") % 5).cast("string"))
     for b in range(2):
-        idempotent_batch_write(
+        _write_batch(
             rows2.filter(F.col("id") % 2 == b),
             root2,
             b,
@@ -231,17 +233,14 @@ def test_compact_rerun_unchanged_horizon_is_noop(spark, tmp_path):
     no-op (return 0, bytes untouched) — not a phantom absorb that
     rewrites the store and briefly hides consolidated rows. New data
     at the same horizon still folds, via the rename-aside swap."""
-    from flink_application_spark.streaming.sinks import (
-        compact_batches,
-        idempotent_batch_write,
-    )
+    from flink_application_spark.streaming.sinks import compact_batches
 
     root = str(tmp_path / "sink")
     rows = spark.range(0, 300).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
     )
     for b in range(2):
-        idempotent_batch_write(
+        _write_batch(
             rows.filter(F.col("id") % 2 == b),
             root,
             b,
@@ -270,7 +269,7 @@ def test_compact_rerun_unchanged_horizon_is_noop(spark, tmp_path):
     extra = spark.range(300, 400).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
     )
-    idempotent_batch_write(extra, root, 1, partition_by=("event_date",))
+    _write_batch(extra, root, 1, partition_by=("event_date",))
     assert (
         compact_batches(spark, root, min_live_batch=2, partition_by=("event_date",))
         == 2
@@ -288,17 +287,14 @@ def test_compact_crash_between_swap_renames_recovers(spark, tmp_path):
     still treat the aside as debris, without double-counting."""
     import shutil
 
-    from flink_application_spark.streaming.sinks import (
-        compact_batches,
-        idempotent_batch_write,
-    )
+    from flink_application_spark.streaming.sinks import compact_batches
 
     root = str(tmp_path / "sink")
     rows = spark.range(0, 300).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
     )
     for b in range(2):
-        idempotent_batch_write(
+        _write_batch(
             rows.filter(F.col("id") % 2 == b), root, b,
             partition_by=("event_date",),
         )
@@ -307,7 +303,7 @@ def test_compact_crash_between_swap_renames_recovers(spark, tmp_path):
     assert os.path.isdir(consolidated)
     # --- crash BETWEEN the two renames: consolidated gone, aside only copy
     os.rename(consolidated, os.path.join(root, ".compact_old"))
-    idempotent_batch_write(
+    _write_batch(
         spark.range(300, 400).select(
             F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
         ),
@@ -320,7 +316,7 @@ def test_compact_crash_between_swap_renames_recovers(spark, tmp_path):
     # duplicate of rows already inside the new consolidated — debris
     new_consolidated = glob.glob(os.path.join(root, "_batch=-*"))[0]
     shutil.copytree(new_consolidated, os.path.join(root, ".compact_old"))
-    idempotent_batch_write(
+    _write_batch(
         spark.range(400, 450).select(
             F.col("id"), (F.col("id") % 3).cast("string").alias("event_date")
         ),

@@ -21,12 +21,21 @@ from flink_application_spark.sources.generator import PROBES, batch_cdr, stream_
 from flink_application_spark.sources.streams import file_stream
 from flink_application_spark.streaming.dedup import session_argmax_dedup
 from flink_application_spark.streaming.pipeline import streaming_enrichment
-from flink_application_spark.streaming.sinks import (
-    fanout_union,
-    write_memory,
-)
+from flink_application_spark.streaming.sinks import trigger_kwargs
 
 pytestmark = pytest.mark.usefixtures("spark")
+
+
+def write_memory(df, table_name, trigger=None):
+    """Append ``df``'s rows to the in-memory table ``table_name``, read
+    back with ``spark.table``."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode("append")
+        .trigger(**trigger_kwargs(trigger))
+        .start()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -245,17 +254,6 @@ def _batch_reference(spark, src, imsi_msisdn, ms_ip):
 
 
 # ---------------------------------------------------------------------------
-# Union fan-in (S6/R4)
-# ---------------------------------------------------------------------------
-
-
-def test_fanout_union_single_committer(spark, cdr_parquet):
-    a = spark.read.parquet(str(cdr_parquet / "src")).limit(5)
-    b = spark.read.parquet(str(cdr_parquet / "src")).limit(3)
-    assert fanout_union([a, b]).count() == 8
-
-
-# ---------------------------------------------------------------------------
 # Generator (S7-S9 / M4)
 # ---------------------------------------------------------------------------
 
@@ -408,27 +406,6 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     assert "b" in tags
     assert any(t in tags for t in ("a", "a-dup", "a-again"))
     assert not ("a" in tags and "a-dup" in tags)
-
-
-def test_observed_metrics_per_microbatch(spark, cdr_parquet):
-    """df.observe counters appear on StreamingQueryProgress for every
-    micro-batch and count exactly the sink-bound rows."""
-    from flink_application_spark.streaming.sinks import with_pipeline_metrics
-
-    src_stream = file_stream(spark, str(cdr_parquet / "src"))
-    imsi_msisdn = spark.read.parquet(str(cdr_parquet / "imsi_msisdn"))
-    ms_ip = spark.read.parquet(str(cdr_parquet / "ms_ip"))
-    result = with_pipeline_metrics(
-        streaming_enrichment(
-            src_stream, imsi_msisdn, ms_ip, gap="1 hour", watermark_delay="0 seconds"
-        )
-    )
-    q = write_memory(result, "observed_out")
-    q.awaitTermination(300)
-    progresses = [p for p in q.recentProgress if "pipeline_metrics" in (p["observedMetrics"] or {})]
-    assert progresses, "no progress carried observedMetrics"
-    total = sum(p["observedMetrics"]["pipeline_metrics"]["n_rows"] for p in progresses)
-    assert total == spark.table("observed_out").count()
 
 
 def test_dim_update_visible_within_ttl(spark, cdr_parquet, tmp_path):
