@@ -1,30 +1,16 @@
-"""Distributed k-means (Lloyd's) over an embedding column.
+"""Float k-means ASSIGNMENT against given centroids, plus the
+deterministic seeding and sampling helpers — the pieces the seeded
+(untrained) index queries use. Training is exact-integer Lloyd's
+(`operators/kmeans_exact.py`).
 
-Scale design (the 100 TB shape):
+Assignment is a scan-local fold against *broadcast literal*
+centroids: per row, k squared-L2 distances computed as JVM-side
+``zip_with``/``aggregate`` folds (no shuffle), argmin via
+``array_min`` over ``(d2, cluster)`` structs — lexicographic min gives
+the deterministic lowest-cluster tie-break. Cost per row is O(k·d);
+the embeddings never move.
 
-- **Assignment** is a scan-local fold against *broadcast literal*
-  centroids: per row, k squared-L2 distances computed as JVM-side
-  ``zip_with``/``aggregate`` folds (no Python, no shuffle), argmin via
-  ``array_min`` over ``(d2, cluster)`` structs — lexicographic min
-  gives the deterministic lowest-cluster tie-break. Cost per row is
-  O(k·d) inside whole-stage codegen; the embeddings never move.
-- **Update** reuses the posexplode partial-agg shape from
-  ``operators/pca.mean_vector``: the shuffle carries k·d partial sums
-  per map partition — independent of corpus size, which is what makes
-  an iteration 1000-executor-safe. The k×d centroid matrix comes back
-  to the driver (tiny) and is re-broadcast as literals.
-- **Iterations** are driver-orchestrated; each is one job. k-means at
-  corpus scale is bounded by iterations × one-pass cost, and both
-  halves above are single narrow/partial-agg passes.
-
-This is the same sketch-to-driver / broadcast-back altitude as the
-reference's enrichment loop (a huge table reduced to a tiny model and
-re-joined to every row, cf. /root/reference/src/main/java/org/example/
-EnrichmentApp.java lookup-dimension shape) — and it is exactly the
-centroid machinery IVF ANN indexing needs (`operators/similarity.py`
-trains its coarse quantizer the same way).
-
-Determinism contract: init = embeddings of the k smallest ids (no
+Determinism contract: seeds = embeddings of the k smallest ids (no
 RNG); assignment math is sequential double folds so the DuckDB oracle
 reproduces it bit-for-bit (same pattern as `similarity_queries._COS`).
 """
@@ -151,51 +137,6 @@ def init_centroids(
     return [[float(x) for x in r[0]] for r in rows]
 
 
-def update_centroids(assigned: DataFrame, k: int, col: str = "embedding") -> list[list[float]]:
-    """Recompute means per cluster via posexplode partial agg (shuffle
-    carries (cluster, pos) partials, never vectors). Empty clusters
-    keep a zero vector (callers may re-seed; deterministic either way)."""
-    rows = (
-        assigned.select("cluster", F.posexplode(col).alias("pos", "val"))
-        .groupBy("cluster", "pos")
-        .agg(F.avg("val").alias("m"))
-        .collect()
-    )
-    dim = 1 + max(r["pos"] for r in rows)
-    cents = [[0.0] * dim for _ in range(k)]
-    for r in rows:
-        cents[r["cluster"]][r["pos"]] = float(r["m"])
-    return cents
-
-
-def kmeans_fit(
-    df: DataFrame,
-    k: int,
-    id_col: str,
-    col: str = "embedding",
-    max_iters: int = 20,
-    tol: float = 1e-6,
-) -> tuple[list[list[float]], int]:
-    """Lloyd's iterations until max centroid squared-shift ≤ tol.
-    Returns (centroids, n_iters_run). Each iteration is two jobs:
-    one assignment+update pass (they fuse — update reads the assigned
-    frame) and the driver-side shift check."""
-    df = df.filter(F.col(col).isNotNull())
-    cents = init_centroids(df, k, id_col, col)
-    iters = 0
-    for _ in range(max_iters):
-        iters += 1
-        new = update_centroids(assign_clusters(df, cents, col), k, col)
-        shift = max(
-            sum((a - b) * (a - b) for a, b in zip(cn, co))
-            for cn, co in zip(new, cents)
-        )
-        cents = new
-        if shift <= tol:
-            break
-    return cents, iters
-
-
 def uniform_sample_rows(
     df: DataFrame,
     id_col: str,
@@ -222,69 +163,3 @@ def uniform_sample_rows(
     )
     rows.sort(key=lambda r: r[0])
     return rows
-
-
-def kmeans_fit_local(
-    df: DataFrame,
-    k: int,
-    id_col: str,
-    col: str = "embedding",
-    max_iters: int = 20,
-    tol: float = 1e-6,
-    sample_rows: int = 65536,
-) -> tuple[list[list[float]], int]:
-    """Lloyd's on a DRIVER-BOUNDED deterministic sample — the codebook-
-    training shape production ANN systems use (FAISS trains coarse and
-    product quantizers on a bounded training sample, not the corpus;
-    k·d centroids never justify corpus-wide iteration passes). The
-    sample is UNIFORM — bottom-`sample_rows` by md5(id) rank via
-    `uniform_sample_rows` (one distributed TakeOrdered, one collect;
-    an id-prefix would train on a biased head since ids correlate with
-    ingest order) — then numpy Lloyd's with the SAME semantics as the
-    distributed trainer: k-smallest-id-in-sample init, first-minimum
-    argmin (lowest cluster on ties), empty cluster → zero vector, the
-    same squared-shift stop rule. Below `sample_rows` corpus rows the
-    sample is the whole corpus and results match `kmeans_fit` exactly.
-
-    Use `kmeans_fit` when the model must train on every row (it scales
-    as bounded partial-agg passes); use this when a bounded sample is
-    statistically sufficient — 10 iterations go from 10 distributed
-    jobs to one collect + microseconds (emb_ivfadc_trained_topk:
-    18 s → ~1 s at sf0.1)."""
-    import numpy as np
-
-    rows = uniform_sample_rows(
-        df.filter(F.col(col).isNotNull()), id_col, [col], sample_rows
-    )
-    if len(rows) < k:
-        raise ValueError(f"kmeans_fit_local: need {k} rows, found {len(rows)}")
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    cents = x[:k].copy()  # k smallest ids — init_centroids' seeds
-    iters = 0
-    for _ in range(max_iters):
-        iters += 1
-        d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        cl = np.argmin(d2, axis=1)  # first min ⇒ lowest cluster
-        new = np.zeros_like(cents)
-        for c in range(k):
-            members = x[cl == c]
-            if len(members):
-                new[c] = members.mean(axis=0)
-        shift = float(((new - cents) ** 2).sum(axis=1).max())
-        cents = new
-        if shift <= tol:
-            break
-    return [[float(v) for v in c] for c in cents], iters
-
-
-def cluster_profile(assigned: DataFrame) -> DataFrame:
-    """Per-cluster size and mean within-cluster squared distance —
-    the standard convergence/health readout."""
-    return (
-        assigned.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("d2"), 4).alias("sum_d2"),
-        )
-        .orderBy("cluster")
-    )

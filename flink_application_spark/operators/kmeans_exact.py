@@ -1,10 +1,10 @@
-"""Exact-integer (ppm-quantized) Lloyd's k-means — the oracle-
-replayable TRAINING loop.
+"""Exact-integer (ppm-quantized) Lloyd's k-means — the one k-means
+trainer, replayable in SQL.
 
-`operators/kmeans.kmeans_fit` is rows-only by necessity: its centroid
-updates are float means whose cross-partition summation order is
-engine-dependent. This variant removes the float reductions entirely —
-the round-7 determinism recipe applied to distributed training:
+Float Lloyd's updates are means whose cross-partition summation order
+is engine-dependent, so no oracle can replay them. This trainer
+removes the float reductions entirely — the round-7 determinism
+recipe applied to distributed training:
 
 - inputs quantize ONCE to ppm integers (CAST(round(v·1e6) AS BIGINT));
 - distances are exact BIGINT folds (Σ (aᵢ−cᵢ)², coords ≤ ~1e6 →
@@ -23,21 +23,28 @@ the update — both exact BIGINTs) pins the ENTIRE training trajectory
 in the driver's value hash: the DuckDB oracle unrolls the `iters`
 Lloyd's rounds as CTE stages (`kmeans_exact_oracle_sql`) and must
 reproduce every number bit-for-bit. Quantization costs ~1e-6 relative
-coordinate error versus the float trainer — irrelevant next to
-k-means' own local-optimum variance — and buys a verifiable trainer;
-the float path (`kmeans_fit` / `kmeans_fit_local`) remains for parity
-with conventional pipelines.
+coordinate error — irrelevant next to k-means' own local-optimum
+variance — and buys a verifiable trainer. The PQ codebooks
+(`pq_exact`), the IVF and IVFADC coarse quantizers and the OPQ
+comparison all train through `lloyd_ppm`.
 
-Scale shape: identical to the float trainer — one broadcast-literal
-assignment pass plus one posexplode partial-agg reduction per
-iteration; driver state is k·d integers.
+Scale shape: one broadcast-literal assignment pass fused with one
+posexplode partial-agg reduction per iteration (a single Spark job,
+for all PQ subspaces at once); driver state is k·d integers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 SCALE = 1_000_000
+
+
+def ppm(col: str = "embedding") -> Column:
+    """The array column as ppm BIGINTs — the one quantization rule."""
+    return F.expr(
+        f"transform({col}, v -> CAST(round(CAST(v AS DOUBLE) * {SCALE}) AS BIGINT))"
+    )
 
 
 def quantize_ppm(
@@ -45,25 +52,99 @@ def quantize_ppm(
 ) -> DataFrame:
     """(id, e) with e = the embedding as ppm BIGINTs."""
     return emb.filter(F.col(col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(
-            f"transform({col}, v -> CAST(round(CAST(v AS DOUBLE) * {SCALE})"
-            " AS BIGINT))"
-        ).alias("e"),
+        F.col(id_col).alias("vec_id"), ppm(col).alias("e")
     )
 
 
-def _assign_expr(cents: list[list[int]]) -> str:
-    """SQL picking (d2, cluster) of the nearest centroid — one exact
-    integer fold per centroid, array_sort tie-break on cluster asc."""
+def int_array(v: list[int]) -> str:
+    """SQL literal array<bigint>."""
+    return "array(" + ", ".join(f"{int(x)}L" for x in v) + ")"
+
+
+def d2_sql(vec: str, cv: list[int]) -> str:
+    """SQL: exact integer squared L2 from `vec` to a literal vector."""
+    return (
+        f"aggregate(zip_with({vec}, {int_array(cv)}, (a, b) -> (a - b) * (a - b)),"
+        " 0L, (acc, x) -> acc + x)"
+    )
+
+
+def sorted_cand_array(cents: list[list[int]], vec: str = "e") -> str:
+    """SQL: the centroids' (d2, cluster) structs for `vec`, sorted
+    ascending — the head is the assignment (ties → cluster asc), the
+    first n slots are an IVF probe list."""
     structs = ", ".join(
-        "named_struct('d2', aggregate(zip_with(e, array("
-        + ", ".join(f"{int(c)}L" for c in cv)
-        + "), (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x), "
-        f"'cluster', {i})"
+        f"named_struct('d2', {d2_sql(vec, cv)}, 'cluster', {i})"
         for i, cv in enumerate(cents)
     )
-    return f"element_at(array_sort(array({structs})), 1)"
+    return f"array_sort(array({structs}))"
+
+
+def _assign_expr(cents: list[list[int]], vec: str = "e") -> str:
+    """SQL picking (d2, cluster) of the nearest centroid to `vec`."""
+    return f"element_at({sorted_cand_array(cents, vec)}, 1)"
+
+
+def lloyd_ppm(
+    q: DataFrame, k: int = 8, iters: int = 5, m: int = 1
+) -> tuple[list[list[list[int]]], list[tuple[int, int, int]]]:
+    """Run `iters` exact-integer Lloyd's rounds over already-quantized
+    ``(vec_id, e)`` rows, independently on each of the m contiguous
+    equal slices of e (m = 1: plain k-means; m > 1: the per-subspace
+    PQ codebooks). Seeds are the k smallest vec_ids' slices (the shared
+    no-RNG convention). Returns (per-slice ppm centroids, profile rows
+    (iteration, inertia, centroid_l1) summed over slices).
+
+    Each round is ONE Spark job for all m slices: rows explode to
+    (slice, nearest centroid) and then to coordinates, and the
+    (slice, cluster, pos) groups carry the exact coordinate sums plus,
+    on their pos-0 row, the group's d² sum — inertia needs no second
+    pass."""
+    q = q.select("vec_id", "e").persist()
+    seed_rows = q.orderBy("vec_id").limit(k).collect()
+    if not seed_rows:  # empty / all-NULL input: no seeds, so "training"
+        # is undefined — return an empty profile instead of crashing
+        # in _assign_expr on a zero-length struct array
+        q.unpersist()
+        return [[] for _ in range(m)], []
+    dsub = len(seed_rows[0]["e"]) // m
+    books = [
+        [list(r["e"][s * dsub : (s + 1) * dsub]) for r in seed_rows]
+        for s in range(m)
+    ]
+    prof: list[tuple[int, int, int]] = []
+    for t in range(1, iters + 1):
+        best = "array(" + ", ".join(
+            _assign_expr(books[s], f"slice(e, {s * dsub + 1}, {dsub})")
+            for s in range(m)
+        ) + ")"
+        # exact integer coordinate sums per (slice, cluster, dim); ONE
+        # double division + round per coordinate (identical in the oracle)
+        means = (
+            q.select("e", F.posexplode(F.expr(best)).alias("s", "b"))
+            .select(
+                "s",
+                "b",
+                F.posexplode(F.expr(f"slice(e, s * {dsub} + 1, {dsub})")).alias(
+                    "pos", "v"
+                ),
+            )
+            .groupBy("s", F.col("b.cluster").alias("cluster"), "pos")
+            .agg(
+                F.expr(
+                    "CAST(round(CAST(sum(v) AS DOUBLE) / count(1)) AS BIGINT)"
+                ).alias("cv"),
+                F.expr("sum(CASE WHEN pos = 0 THEN b.d2 END)").alias("d2"),
+            )
+            .collect()
+        )
+        inertia = sum(int(r["d2"]) for r in means if r["pos"] == 0)
+        for r in means:  # a cluster no row chose keeps its centroid
+            books[r["s"]][r["cluster"]][r["pos"]] = r["cv"]
+        l1 = sum(abs(x) for book in books for cv in book for x in cv)
+        prof.append((t, inertia, l1))
+    q.unpersist()
+    return books, prof
 
 
 def kmeans_fit_exact(
@@ -73,49 +154,10 @@ def kmeans_fit_exact(
     id_col: str = "vec_id",
     col: str = "embedding",
 ) -> tuple[list[list[int]], list[tuple[int, int, int]]]:
-    """Run `iters` exact-integer Lloyd's rounds (seed = embeddings of
-    the k smallest ids, the shared no-RNG convention) and return
-    (final ppm centroids, profile rows) — the centroids feed the
-    exact-TRAINED retrieval index (round 8), the profile is the
-    bit-replayable trajectory."""
-    q = quantize_ppm(emb, id_col, col).persist()
-    seed_rows = q.orderBy("vec_id").limit(k).collect()
-    cents = [list(r["e"]) for r in seed_rows]
-    if not cents:  # empty / all-NULL input: no seeds, so "training"
-        # is undefined — return an empty profile instead of crashing
-        # in _assign_expr on a zero-length struct array (the driver
-        # fixtures are never empty; this is a robustness guard)
-        q.unpersist()
-        return [], []
-    prof: list[tuple[int, int, int]] = []
-    for t in range(1, iters + 1):
-        assigned = q.select(
-            "vec_id", "e", F.expr(_assign_expr(cents)).alias("b")
-        ).select("vec_id", "e", F.col("b.d2").alias("d2"), F.col("b.cluster").alias("cluster"))
-        inertia = int(assigned.agg(F.sum("d2")).collect()[0][0])
-        # exact integer coordinate sums per (cluster, dim); ONE double
-        # division + round per coordinate (identical in the oracle)
-        means = (
-            assigned.select("cluster", F.posexplode("e").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(
-                F.expr(
-                    "CAST(round(CAST(sum(v) AS DOUBLE) / count(1)) AS BIGINT)"
-                ).alias("cv")
-            )
-            .collect()
-        )
-        new_cents = [list(cv) for cv in cents]  # empty cluster → keep
-        by_cluster: dict[int, dict[int, int]] = {}
-        for r in means:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["cv"]
-        for c, dims in by_cluster.items():
-            new_cents[c] = [dims[p] for p in sorted(dims)]
-        cents = new_cents
-        l1 = sum(abs(x) for cv in cents for x in cv)
-        prof.append((t, inertia, l1))
-    q.unpersist()
-    return cents, prof
+    """`lloyd_ppm` over the ppm quantization of a float embedding
+    column — (final ppm centroids, profile rows)."""
+    books, prof = lloyd_ppm(quantize_ppm(emb, id_col, col), k, iters)
+    return books[0], prof
 
 
 def kmeans_fit_exact_profile(

@@ -1,30 +1,19 @@
-"""Distributed PCA (top principal component) over an embedding column.
+"""Float Gram sketch and mean of an embedding column — the shared
+statistics pass under `emb_pca_gram` and the OPQ rotation
+(`operators/opq.py`). The trained PCA itself is exact-integer
+(`operators/pca_exact.py`).
 
-Scale design (the part that must survive 100 TB):
-
-- The only full-data pass is the **Gram accumulation**: a
-  ``mapInPandas`` stage computes a per-Arrow-batch partial ``XᵀX``
-  (one numpy matmul per batch — vectorized, no per-row Python) and
-  emits it in long form ``(i, j, s)`` — d·(d+1)/2 rows per batch for
-  the upper triangle. A ``groupBy(i, j).sum`` then combines partials
-  map-side, so the shuffle carries O(d²) values per partition, never
-  row data. For d = 64 that is 2,080 doubles per task — independent
-  of corpus size, which is exactly the property that makes this a
-  1000-executor-safe reduction (same shape as MLlib's
-  ``RowMatrix.computeGramianMatrix``; re-derived here from the public
-  algorithm, not imported, to keep the engine DataFrame-native).
-- The **eigen step** runs on the driver over the d×d Gram — O(d²)
-  memory, no data-size dependence. Power iteration with a
-  deterministic start vector gives the top component without
-  depending on LAPACK iteration order.
-- The **projection** is a second scan with the component broadcast as
-  a literal array — a JVM-side zip_with/aggregate fold, no Python.
-
-The composition (sketch-to-driver then broadcast-back) mirrors the
-reference's enrichment shape at a different altitude: reduce a huge
-table to a tiny model, then re-join the model to every row
-(cf. /root/reference/src/main/java/org/example/EnrichmentApp.java:300-340,
-where the "model" is a JDBC dimension).
+Scale design: the only full-data pass is the **Gram accumulation**: a
+``mapInPandas`` stage computes a per-Arrow-batch partial ``XᵀX`` (one
+numpy matmul per batch — vectorized, no per-row Python) and emits it
+in long form ``(i, j, s)`` — d·(d+1)/2 rows per batch for the upper
+triangle. A ``groupBy(i, j).sum`` then combines partials map-side, so
+the shuffle carries O(d²) values per partition, never row data. For
+d = 64 that is 2,080 doubles per task — independent of corpus size,
+which is exactly the property that makes this a 1000-executor-safe
+reduction (same shape as MLlib's
+``RowMatrix.computeGramianMatrix``; re-derived here from the public
+algorithm, not imported, to keep the engine DataFrame-native).
 """
 
 from __future__ import annotations
@@ -33,7 +22,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from flink_application_spark.operators.pq import lit_double_array
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
@@ -102,118 +90,6 @@ def collect_gram(df: DataFrame, col: str = "embedding", dim: int = 64):
     return g, n
 
 
-def _power_iterate(
-    cov: np.ndarray, v0: np.ndarray, iters: int, tol: float
-) -> tuple[np.ndarray, bool, float]:
-    v = v0 / np.linalg.norm(v0)
-    for _ in range(iters):
-        w = cov @ v
-        nrm = np.linalg.norm(w)
-        if nrm == 0.0:
-            return v, False, float("inf")
-        v = w / nrm
-    lam = float(v @ cov @ v)
-    residual = float(np.linalg.norm(cov @ v - lam * v))
-    rel = residual / max(abs(lam), 1e-30)
-    return v, rel <= tol, rel
-
-
-def top_component(
-    gram: np.ndarray, n: int, mean: np.ndarray, iters: int = 200, tol: float = 1e-6
-) -> np.ndarray:
-    """Top eigenvector of the covariance (Gram/n − μμᵀ) by power
-    iteration. Deterministic but not axis-aligned: the start vector is
-    a fixed pseudo-random ramp (sin of the index), so it is never
-    orthogonal-by-construction to a data-aligned eigenvector the way
-    all-ones can be. Convergence is checked via the eigen-residual
-    ‖Cv − λv‖ ≤ tol·|λ|; on failure a second deterministic start is
-    tried before giving up with the best iterate. Sign normalized so
-    the largest-|.| entry is positive."""
-    cov = gram / max(n, 1) - np.outer(mean, mean)
-    d = cov.shape[0]
-    v, ok, res1 = _power_iterate(cov, np.sin(np.arange(1, d + 1)), iters, tol)
-    if not ok:
-        v2, _, res2 = _power_iterate(
-            cov, np.cos(np.arange(1, d + 1) * 0.7) + 0.1, iters, tol
-        )
-        if res2 < res1:  # keep the better iterate, not blindly the second
-            v = v2
-    pivot = int(np.argmax(np.abs(v)))
-    if v[pivot] < 0:
-        v = -v
-    return v
-
-
-def top_components(
-    gram: np.ndarray,
-    n: int,
-    mean: np.ndarray,
-    k: int = 2,
-    iters: int = 200,
-    tol: float = 1e-6,
-) -> np.ndarray:
-    """Top-k eigenvectors of the covariance by power iteration with
-    Hotelling deflation: after extracting component v with Rayleigh
-    quotient λ, iterate on cov − λ·vvᵀ for the next one. Each
-    component is sign-normalized like `top_component`. Returns a
-    (k, d) array. Deflation error compounds ~k·tol — fine for the
-    small k (2-16) a feature-reduction pipeline wants; a full
-    decomposition should collect the d×d Gram and run eigh directly
-    (same driver-side cost)."""
-    cov = gram / max(n, 1) - np.outer(mean, mean)
-    d = cov.shape[0]
-    comps = []
-    for _ in range(k):
-        v, ok, res1 = _power_iterate(cov, np.sin(np.arange(1, d + 1)), iters, tol)
-        if not ok:
-            v2, _, res2 = _power_iterate(
-                cov, np.cos(np.arange(1, d + 1) * 0.7) + 0.1, iters, tol
-            )
-            if res2 < res1:
-                v = v2
-        pivot = int(np.argmax(np.abs(v)))
-        if v[pivot] < 0:
-            v = -v
-        lam = float(v @ cov @ v)
-        comps.append(v)
-        cov = cov - lam * np.outer(v, v)
-    return np.asarray(comps)
-
-
-def pca_project_k(
-    df: DataFrame, components: np.ndarray, mean: np.ndarray, col: str = "embedding"
-) -> DataFrame:
-    """Project each centered vector onto k components — one ``pc{i}``
-    column per component, all JVM-side folds against broadcast
-    literals (a k×d matrix of literals; fine for feature-reduction k)."""
-    mu = lit_double_array(mean)
-    centered = F.zip_with(F.col(col), mu, lambda x, m: x.cast("double") - m)
-    out = df.withColumn("_centered", centered)
-    for i, comp in enumerate(components):
-        c = lit_double_array(comp)
-        proj = F.aggregate(
-            F.zip_with(F.col("_centered"), c, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        out = out.withColumn(f"pc{i + 1}", F.round(proj, 4))
-    return out.drop("_centered")
-
-
-def pca_topk_projection(
-    df: DataFrame, k: int = 2, col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """End-to-end k-component PCA: one Gram sketch pass, k driver-side
-    deflation rounds, one broadcast projection pass. The distributed
-    cost is identical to the single-component form — the extra
-    components are O(k·d²) driver math."""
-    df = df.filter(F.col(col).isNotNull())
-    mu = mean_vector(df, col, dim)
-    gram, n = collect_gram(df, col, dim)
-    comps = top_components(gram, n, mu, k=k)
-    return pca_project_k(df, comps, mu, col)
-
-
 def mean_vector(df: DataFrame, col: str = "embedding", dim: int = 64) -> np.ndarray:
     """Element-wise mean via posexplode + partial agg (shuffle carries
     d partials per partition, not vectors)."""
@@ -227,34 +103,3 @@ def mean_vector(df: DataFrame, col: str = "embedding", dim: int = 64) -> np.ndar
     for r in rows:
         mu[r["pos"]] = r["m"]
     return mu
-
-
-def pca_project(
-    df: DataFrame, component: np.ndarray, mean: np.ndarray, col: str = "embedding"
-) -> DataFrame:
-    """Project each (centered) vector onto the component: a JVM-side
-    fold against broadcast literal arrays — no Python in the scan."""
-    comp = lit_double_array(component)
-    mu = lit_double_array(mean)
-    centered = F.zip_with(F.col(col), mu, lambda x, m: x.cast("double") - m)
-    proj = F.aggregate(
-        F.zip_with(centered, comp, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.withColumn("pc1", F.round(proj, 4))
-
-
-def pca_top_component_projection(
-    df: DataFrame, col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """End-to-end: Gram sketch → driver power iteration → broadcast
-    projection. Returns the (non-null-embedding) input plus a ``pc1``
-    column. The null filter is applied ONCE here so the mean, Gram,
-    and projection all see the same row set (posexplode silently drops
-    null arrays while the numpy stage would crash on them)."""
-    df = df.filter(F.col(col).isNotNull())
-    mu = mean_vector(df, col, dim)
-    gram, n = collect_gram(df, col, dim)
-    v = top_component(gram, n, mu)
-    return pca_project(df, v, mu, col)

@@ -1,10 +1,10 @@
 """Exact-integer power iteration — the oracle-replayable spectral
 step.
 
-`operators/pca.top_component` is rows-only by necessity: the Gram
-accumulation is a float sum (order-dependent ulps) and the driver
-eigensolver (numpy eigh / float power iteration) has no SQL replay.
-This variant applies the round-7 determinism recipe to the spectral
+A float PCA cannot be replayed: its Gram accumulation is a float sum
+(order-dependent ulps) and a driver eigensolver (numpy eigh / float
+power iteration) has no SQL replay. This module, the one PCA trainer,
+applies the round-7 determinism recipe to the spectral
 blocker class, completing the trio (seeded indexes → retrieval,
 integer MMR/Lloyd's → greedy & training, THIS → iterative linear
 algebra):
@@ -31,21 +31,23 @@ deliberately isotropic — top eigengap ≈ 1.07 — so convergence there is
 slow for ANY power method; on the fixture the pinned property is the
 guaranteed one, Rayleigh-quotient monotonicity), an exact int64
 numpy-reference check of the Gram, and bit-determinism under
-repartitioning. The float path (emb_pca_gram / emb_pca_top_component)
-stays registered; its blocker row now points here.
+repartitioning. `pca_top2_exact_projection` extends the recipe to two
+components of the integer covariance (emb_pca_top2_projection).
 
-Scale shape: identical to the float PCA — one Gram pass whose shuffle
-carries O(d²) integers per partition, then O(d²)-per-iteration driver
-math; the corpus is never touched again.
+Scale shape: identical to the float Gram sketch (`pca.gram_long`) —
+one Gram pass whose shuffle carries O(d²) integers per partition, then
+O(d²)-per-iteration driver math; only the top-2 projection scans the
+corpus once more.
 """
 
 from __future__ import annotations
 
+from math import isqrt
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from flink_application_spark.operators.kmeans_exact import quantize_ppm
+from flink_application_spark.operators.kmeans_exact import SCALE, int_array, ppm, quantize_ppm
 
 
 def int_gram_long(q: DataFrame, dim: int = 64) -> DataFrame:
@@ -79,8 +81,6 @@ def int_gram_long(q: DataFrame, dim: int = 64) -> DataFrame:
                     {"i": ii.ravel(), "j": jj.ravel(), "g": (blk.T @ blk).ravel()}
                 )
 
-    from pyspark.sql import functions as F
-
     return (
         fan_out(q.select("e"))
         .mapInPandas(part, schema="i int, j int, g long")
@@ -113,14 +113,62 @@ def pca_power_exact_trajectory(
     G = [[0] * dim for _ in range(dim)]
     for r in cells:
         G[r["i"]][r["j"]] = int(r["g"])
-    v = [10**6] * dim
+    v = [SCALE] * dim
     rows: list[tuple[int, int, int]] = []
     for t in range(1, iters + 1):
-        w = [sum(G[i][j] * v[j] for j in range(dim)) for i in range(dim)]
-        mw = max(abs(x) for x in w) or 1
-        v = [_trunc_div(x * 10**6, mw) for x in w]
+        v = _power_round(G, v)
         rows.extend((t, p, v[p]) for p in range(dim))
     return spark.createDataFrame(rows, "iteration bigint, pos bigint, v bigint")
+
+
+def _renorm(w: list[int]) -> list[int]:
+    """Scale so the max-|w| coordinate is ±SCALE (truncating division;
+    an all-zero w stays zero)."""
+    mw = max(abs(x) for x in w) or 1
+    return [_trunc_div(x * SCALE, mw) for x in w]
+
+
+def _power_round(mat: list[list[int]], v: list[int]) -> list[int]:
+    """One power-iteration round: w = mat·v, renormalized."""
+    return _renorm([sum(a * b for a, b in zip(row, v)) for row in mat])
+
+
+def _base_ctes(dim: int, cols: str = "") -> list[str]:
+    """The replays' q (ppm vectors, plus `cols`) and g (HUGEINT Gram
+    cells (i, j, x)) stages."""
+    return [
+        f"""q AS MATERIALIZED (
+  SELECT {cols}list_transform(embedding,
+                        v -> CAST(round(CAST(v AS DOUBLE) * {SCALE}) AS BIGINT))
+           AS e
+  FROM embeddings WHERE embedding IS NOT NULL
+)""",
+        f"""g AS MATERIALIZED (
+  SELECT i.i AS i, j.j AS j,
+         sum(CAST(e[i.i + 1] AS HUGEINT) * e[j.j + 1]) AS x
+  FROM q
+  CROSS JOIN (SELECT unnest(range(0, {dim})) AS i) i
+  CROSS JOIN (SELECT unnest(range(0, {dim})) AS j) j
+  GROUP BY 1, 2
+)""",
+    ]
+
+
+def _matvec_cte(name: str, mat: str, src: str) -> str:
+    """{name}(pos, w): the matrix cells {mat}(i, j, x) times {src}(pos, v)."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT m.i AS pos, sum(m.x * s.v) AS w
+  FROM {mat} m JOIN {src} s ON s.pos = m.j
+  GROUP BY m.i
+)"""
+
+
+def _renorm_cte(name: str, src: str, col: str = "w") -> str:
+    """{name}(pos, v): {src}.{col} renormalized (`_renorm`)."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT pos, ({col} * {SCALE}) // greatest((SELECT max(abs({col})) FROM {src}), 1) AS v
+  FROM {src}
+)"""
 
 
 def pca_power_exact_oracle_sql(iters: int = 8, dim: int = 64) -> str:
@@ -130,39 +178,14 @@ def pca_power_exact_oracle_sql(iters: int = 8, dim: int = 64) -> str:
     with v{t} referencing w{t} twice the unrolled chain would
     re-expand the 12M-row Gram aggregation 2^iters times (measured:
     the un-materialized form ran >9 min; materialized, seconds)."""
-    parts = [
-        f"""q AS MATERIALIZED (
-  SELECT list_transform(embedding,
-                        v -> CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))
-           AS e
-  FROM embeddings WHERE embedding IS NOT NULL
-)""",
-        f"""g AS MATERIALIZED (
-  SELECT i.i AS i, j.j AS j,
-         sum(CAST(e[i.i + 1] AS HUGEINT) * e[j.j + 1]) AS g
-  FROM q
-  CROSS JOIN (SELECT unnest(range(0, {dim})) AS i) i
-  CROSS JOIN (SELECT unnest(range(0, {dim})) AS j) j
-  GROUP BY 1, 2
-)""",
+    parts = _base_ctes(dim) + [
         f"""v0 AS MATERIALIZED (
-  SELECT unnest(range(0, {dim})) AS pos, CAST(1000000 AS HUGEINT) AS v
+  SELECT unnest(range(0, {dim})) AS pos, CAST({SCALE} AS HUGEINT) AS v
 )""",
     ]
     for t in range(1, iters + 1):
-        parts.append(
-            f"""w{t} AS MATERIALIZED (
-  SELECT g.i AS pos, sum(g.g * v.v) AS w
-  FROM g JOIN v{t - 1} v ON v.pos = g.j
-  GROUP BY g.i
-)""",
-        )
-        parts.append(
-            f"""v{t} AS MATERIALIZED (
-  SELECT pos, (w * 1000000) // greatest((SELECT max(abs(w)) FROM w{t}), 1) AS v
-  FROM w{t}
-)""",
-        )
+        parts.append(_matvec_cte(f"w{t}", "g", f"v{t - 1}"))
+        parts.append(_renorm_cte(f"v{t}", f"w{t}"))
     union = "\nUNION ALL\n".join(
         f"SELECT {t} AS iteration, CAST(pos AS BIGINT) AS pos,"
         f" CAST(v AS BIGINT) AS v FROM v{t}"
@@ -170,3 +193,154 @@ def pca_power_exact_oracle_sql(iters: int = 8, dim: int = 64) -> str:
     )
     body = ",\n".join(parts)
     return f"WITH {body}\n{union}"
+
+
+# DuckDB's HUGEINT, the replay's widest integer
+_HUGEINT_MAX = 2**127 - 1
+
+
+def _ramp(dim: int) -> list[int]:
+    """Power-iteration start (p+1)·⌊SCALE/dim⌋: unlike all-ones it is
+    not orthogonal to a zero-sum direction such as e₀ − e₁."""
+    return [(p + 1) * (SCALE // dim) for p in range(dim)]
+
+
+def _round_half_away(s: int, n: int) -> int:
+    """s/n rounded half away from zero, in integers (n > 0)."""
+    q = (2 * abs(s) + n) // (2 * n)
+    return q if s >= 0 else -q
+
+
+def int_moments(q: DataFrame, dim: int = 64) -> tuple[int, list[int], list[list[int]]]:
+    """(n, s, G) of the ppm rows ``q(e)``: row count, coordinate sums
+    and exact Gram — one `int_gram_long` pass over e with a constant 1
+    appended, whose last row and column are s and n."""
+    cells = int_gram_long(
+        q.select(F.concat("e", F.array(F.lit(1).cast("bigint"))).alias("e")), dim + 1
+    ).collect()
+    g = [[0] * (dim + 1) for _ in range(dim + 1)]
+    for r in cells:
+        g[r["i"]][r["j"]] = int(r["g"])
+    return g[dim][dim], g[dim][:dim], [row[:dim] for row in g[:dim]]
+
+
+def top2_components_exact(
+    cov: list[list[int]], iters: int = 8
+) -> tuple[list[int], list[int]]:
+    """The two leading eigen-directions of an integer covariance as ppm
+    vectors. Component 1 is `iters` max-|w| power rounds from the ramp;
+    component 2 runs the same rounds with an integer Gram–Schmidt step
+    against component 1 in each: p = renorm(C·v), then
+    v = renorm(p·(u·u) − (p·u)·u)."""
+    dim = len(cov)
+    u = _ramp(dim)
+    for _ in range(iters):
+        u = _power_round(cov, u)
+    uu = sum(x * x for x in u)
+    v = _ramp(dim)
+    for _ in range(iters):
+        p = _power_round(cov, v)
+        pu = sum(a * b for a, b in zip(p, u))
+        v = _renorm([a * uu - pu * b for a, b in zip(p, u)])
+    return u, v
+
+
+def pca_top2_exact_projection(
+    emb: DataFrame, iters: int = 8, dim: int = 64
+) -> DataFrame:
+    """The non-null-embedding rows of `emb` plus ``pc1``/``pc2``: exact
+    BIGINT projections Σⱼ (eⱼ − μⱼ)·cⱼ of the ppm vector e onto the two
+    `top2_components_exact` directions of the integer covariance
+    C = n·G − s·sᵀ (n²× the population covariance), centered by the
+    ppm mean μ = round(s/n) (half away from zero). Bit-identical to
+    `pca_top2_exact_oracle_sql`.
+
+    HUGEINT headroom: the replay's widest value is w·SCALE in a power
+    round, at most dim·max(n·max|G|, max|C|)·SCALE². The driver raises
+    ValueError when that reaches 2¹²⁷ instead of letting the replay
+    overflow; for |coordinates| ≤ 1 (ppm ≤ SCALE) at dim 64 the bound
+    holds up to about 1.6M rows. It also raises when a projection could
+    leave BIGINT (Σⱼ (√Gⱼⱼ + |μⱼ|)·SCALE ≥ 2⁶³)."""
+    emb = emb.filter(F.col("embedding").isNotNull()).withColumn("_e", ppm())
+    n, s, G = int_moments(emb.select(F.col("_e").alias("e")), dim)
+    cov = [[n * G[i][j] - s[i] * s[j] for j in range(dim)] for i in range(dim)]
+    widest = max(n * max(map(abs, row)) for row in G)
+    widest = max(widest, max(abs(x) for row in cov for x in row))
+    if dim * widest * SCALE**2 > _HUGEINT_MAX:
+        raise ValueError(
+            f"pca_top2_exact_projection: {n} rows overflow the HUGEINT replay"
+        )
+    mu = [_round_half_away(x, n) for x in s] if n else [0] * dim
+    if sum(isqrt(G[j][j]) + 1 + abs(mu[j]) for j in range(dim)) * SCALE >= 2**63:
+        raise ValueError("pca_top2_exact_projection: projections overflow BIGINT")
+    centered = f"zip_with(_e, {int_array(mu)}, (a, b) -> a - b)"
+    pcs = [
+        F.expr(
+            f"aggregate(zip_with({centered}, {int_array(c)}, (a, b) -> a * b),"
+            " 0L, (acc, x) -> acc + x)"
+        ).alias(f"pc{i + 1}")
+        for i, c in enumerate(top2_components_exact(cov, iters))
+    ]
+    return emb.select("*", *pcs).drop("_e")
+
+
+def pca_top2_exact_oracle_sql(iters: int = 8, dim: int = 64) -> str:
+    """DuckDB replay of `pca_top2_exact_projection` over the embeddings
+    table, (vec_id, label, pc1, pc2): HUGEINT moments and covariance,
+    the ppm mean, then component 1's `iters` power rounds (u{t}) and
+    component 2's rounds with the Gram–Schmidt step (v{t}) as
+    MATERIALIZED CTE stages, and the exact projections."""
+    ramp = f"""AS MATERIALIZED (
+  SELECT pos, CAST((pos + 1) * {SCALE // dim} AS HUGEINT) AS v
+  FROM (SELECT unnest(range(0, {dim})) AS pos)
+)"""
+    parts = _base_ctes(dim, "vec_id, label, ") + [
+        f"""s AS MATERIALIZED (
+  SELECT p.pos, sum(CAST(e[p.pos + 1] AS HUGEINT)) AS s, count(*) AS n
+  FROM q CROSS JOIN (SELECT unnest(range(0, {dim})) AS pos) p
+  GROUP BY p.pos
+)""",
+        """cov AS MATERIALIZED (
+  SELECT g.i, g.j, si.n * g.x - si.s * sj.s AS x
+  FROM g JOIN s si ON si.pos = g.i JOIN s sj ON sj.pos = g.j
+)""",
+        """mu AS MATERIALIZED (
+  SELECT pos, CASE WHEN s >= 0 THEN (2 * s + n) // (2 * n)
+                   ELSE -((2 * (-s) + n) // (2 * n)) END AS mu
+  FROM s
+)""",
+        f"u0 {ramp}",
+        f"v0 {ramp}",
+    ]
+    for t in range(1, iters + 1):
+        parts.append(_matvec_cte(f"uw{t}", "cov", f"u{t - 1}"))
+        parts.append(_renorm_cte(f"u{t}", f"uw{t}"))
+    u = f"u{iters}"
+    for t in range(1, iters + 1):
+        parts.append(_matvec_cte(f"vw{t}", "cov", f"v{t - 1}"))
+        parts.append(_renorm_cte(f"vp{t}", f"vw{t}"))
+        parts.append(
+            f"""vg{t} AS MATERIALIZED (
+  SELECT p.pos,
+         p.v * (SELECT sum(v * v) FROM {u})
+           - (SELECT sum(x.v * y.v) FROM vp{t} x JOIN {u} y USING (pos)) * u.v
+           AS g
+  FROM vp{t} p JOIN {u} u USING (pos)
+)"""
+        )
+        parts.append(_renorm_cte(f"v{t}", f"vg{t}", "g"))
+    parts.append(
+        f"""comps AS MATERIALIZED (
+  SELECT (SELECT list(mu ORDER BY pos) FROM mu) AS mu,
+         (SELECT list(v ORDER BY pos) FROM {u}) AS c1,
+         (SELECT list(v ORDER BY pos) FROM v{iters}) AS c2
+)"""
+    )
+    body = ",\n".join(parts)
+    return f"""WITH {body}
+SELECT q.vec_id, q.label,
+       CAST(list_sum(list_transform(list_zip(q.e, comps.mu, comps.c1),
+                                    z -> (z[1] - z[2]) * z[3])) AS BIGINT) AS pc1,
+       CAST(list_sum(list_transform(list_zip(q.e, comps.mu, comps.c2),
+                                    z -> (z[1] - z[2]) * z[3])) AS BIGINT) AS pc2
+FROM q CROSS JOIN comps"""

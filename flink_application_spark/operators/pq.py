@@ -7,9 +7,8 @@ parameters — the memory step that makes billion-vector ANN fit.
 Spark-first shape:
 
 - **codebooks**: per subspace, the deterministic k-smallest-id seed
-  centroids (same no-RNG contract as `operators/kmeans.py`; swap in
-  `kmeans_fit` per subspace for trained codebooks — the assignment
-  machinery is unchanged);
+  centroids (same no-RNG contract as `operators/kmeans.py`; trained
+  codebooks are exact-integer, `operators/pq_exact.py`);
 - **encoding**: per subspace an `array_min( (d2, code) struct )`
   argmin over broadcast literal sub-centroids — scan-local JVM folds,
   zero shuffle, exactly the `assign_clusters` pattern on a slice;
@@ -77,7 +76,7 @@ def seed_codebooks(
     emb: DataFrame, m: int, k: int, dim: int, id_col: str = "vec_id"
 ) -> list[list[list[float]]]:
     """codebooks[s][code] = sub-centroid: the k smallest ids' s-th
-    subvectors (deterministic; per-subspace `kmeans_fit` drops in)."""
+    subvectors (deterministic, no training)."""
     sub_dim = dim // m
     rows = (
         emb.filter(F.col("embedding").isNotNull())
@@ -95,96 +94,6 @@ def seed_codebooks(
         ]
         for s in range(m)
     ]
-
-
-def trained_codebooks(
-    emb: DataFrame,
-    m: int,
-    k: int,
-    dim: int,
-    id_col: str = "vec_id",
-    max_iters: int = 10,
-    method: str = "local",
-    sample_rows: int = 65536,
-) -> list[list[list[float]]]:
-    """Per-subspace Lloyd's k-means codebooks — the QUALITY path the
-    seeded form stands in for (Jégou et al. TPAMI'11 §III trains
-    exactly this: an independent k-means per subquantizer).
-
-    ``method="local"`` (default): ONE TakeOrdered collect of a UNIFORM
-    bottom-`sample_rows`-by-md5(id) sample (see
-    `kmeans.uniform_sample_rows` — an id-prefix would bias training
-    toward the ingest-order head), then numpy Lloyd's per subspace
-    — the bounded-training-sample shape production quantizers use
-    (FAISS trains its PQ on a sample; m·k·sub_dim centroids never
-    justify m·max_iters corpus passes). 18 s → ~1 s for the sf0.1
-    trained-IVFADC bench query, and below `sample_rows` corpus rows
-    the sample IS the corpus, so small-scale results are unchanged in
-    spirit (same seeds, same argmin/empty-cluster/stop semantics as
-    the distributed trainer).
-
-    ``method="distributed"``: each subspace trains on ALL sliced
-    subvectors with `kmeans_fit` (broadcast-literal assignment folds,
-    posexplode partial-sum updates — the shuffle carries k·sub_dim
-    partials, never vectors) — for when the model must see every row.
-
-    Both are initialized from the SAME k-smallest-id seeds as
-    `seed_codebooks`, and Lloyd's updates monotonically reduce
-    within-subspace quantization MSE — trained total recon_d2 ≤
-    seeded recon_d2 by construction (pinned in tests/test_pq.py).
-    Deterministic: no RNG anywhere."""
-    from flink_application_spark.operators.kmeans import kmeans_fit
-
-    sub_dim = dim // m
-    if method == "local":
-        import numpy as np
-
-        from flink_application_spark.operators.kmeans import uniform_sample_rows
-
-        rows = uniform_sample_rows(
-            emb.filter(F.col("embedding").isNotNull()),
-            id_col,
-            ["embedding"],
-            sample_rows,
-        )
-        if len(rows) < k:
-            raise ValueError(f"trained_codebooks: need {k} rows, found {len(rows)}")
-        x = np.array([r[1] for r in rows], dtype=np.float64)
-        books = []
-        for s in range(m):
-            xs = x[:, s * sub_dim : (s + 1) * sub_dim]
-            cents = xs[:k].copy()
-            for _ in range(max_iters):
-                d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-                cl = np.argmin(d2, axis=1)  # first min ⇒ lowest code
-                new = np.zeros_like(cents)
-                for c in range(k):
-                    members = xs[cl == c]
-                    if len(members):
-                        new[c] = members.mean(axis=0)
-                shift = float(((new - cents) ** 2).sum(axis=1).max())
-                cents = new
-                if shift <= 1e-6:
-                    break
-            books.append([[float(v) for v in c] for c in cents])
-        return books
-
-    # persist: every subspace runs max_iters assign+update passes over
-    # its slice — without the barrier the source scan and float decode
-    # re-run ~2·m·max_iters times (the ivfadc `assigned` discipline)
-    base = emb.filter(F.col("embedding").isNotNull()).persist()
-    try:
-        books = []
-        for s in range(m):
-            sliced = base.select(
-                F.col(id_col),
-                _sub(F.col("embedding"), s, sub_dim).alias("embedding"),
-            )
-            cents, _ = kmeans_fit(sliced, k, id_col, max_iters=max_iters)
-            books.append([[float(x) for x in c] for c in cents])
-        return books
-    finally:
-        base.unpersist()
 
 
 def pq_encode(

@@ -6,10 +6,10 @@ Classic PQ (Jégou et al., TPAMI 2011) splits vectors into m subspaces
 and trains a k-means codebook per subspace; ADC scores a query against
 a candidate by summing per-subspace distances between the query's
 subvector and the candidate's ASSIGNED CODEWORD. Conventionally the
-codebooks are float Lloyd's — engine-dependent, hence
-`emb_pq_trained_adc_topk` stayed rows-only. Here every subspace
-codebook is trained by the exact-integer Lloyd's loop
-(`kmeans_exact.kmeans_fit_exact` on the ppm-sliced subvectors), so the
+codebooks are float Lloyd's — engine-dependent, so no oracle can
+replay them. Here every subspace codebook is trained by the
+exact-integer Lloyd's loop (`kmeans_exact.lloyd_ppm` over the
+ppm-sliced subvectors, all subspaces in one job per round), so the
 codebooks, the corpus codes, every ADC table cell, and the final
 ranking are exact BIGINTs — the full PQ lifecycle replays in DuckDB as
 m prefixed copies of the shared training unroll
@@ -23,18 +23,27 @@ designed), never from float nondeterminism. Scale shape: codes are a
 scan-local broadcast-literal expression (corpus vectors never
 shuffle); queries broadcast; the ADC sum is one expression per
 (query, candidate); top-k is a per-query window. Training cost is
-m small independent kmeans_exact loops (8-dim subvectors), driver
-state m·k'·d/m = k'·d integers.
+one Spark job per Lloyd's round for all m subspaces, driver state
+m·k'·d/m = k'·d integers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from flink_application_spark.operators.ivf_exact import (
+    ivf_cell_ctes,
+    ivf_cells,
+    rank_topk,
+    rank_topk_sql,
+)
 from flink_application_spark.operators.kmeans_exact import (
     SCALE,
+    _assign_expr,
+    d2_sql,
+    int_array,
     kmeans_exact_cte_parts_prefixed,
-    kmeans_fit_exact,
+    lloyd_ppm,
     quantize_ppm,
 )
 
@@ -46,27 +55,45 @@ ITERS = 3  # Lloyd's rounds per codebook
 
 def pq_exact_train(emb: DataFrame) -> list[list[list[int]]]:
     """Per-subspace exact-integer codebooks: M lists of KCODE ppm
-    codewords (DSUB ints each). Slicing before quantization equals
+    codewords (DSUB ints each). Slicing after quantization equals
     quantizing then slicing (transform is element-wise), which is what
     the oracle's `e[lo:hi]` slice of the shared quantized base does."""
-    books: list[list[list[int]]] = []
-    for s in range(M):
-        sub = emb.select(
-            "vec_id",
-            F.expr(f"slice(embedding, {s * DSUB + 1}, {DSUB})").alias("embedding"),
+    return lloyd_ppm(quantize_ppm(emb), KCODE, ITERS, M)[0]
+
+
+def _slice(s: int, dsub: int) -> str:
+    return f"slice(e, {s * dsub + 1}, {dsub})"
+
+
+def _codes(books: list[list[list[int]]], dsub: int) -> Column:
+    """``codes``: per subspace, the nearest codeword's index for e."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            _assign_expr(book, _slice(s, dsub)) + ".cluster"
+            for s, book in enumerate(books)
         )
-        cents, _ = kmeans_fit_exact(sub, k=KCODE, iters=ITERS)
-        books.append(cents)
-    return books
+        + ")"
+    ).alias("codes")
 
 
-def _cw_structs(vec_expr: str, book: list[list[int]]) -> str:
-    return ", ".join(
-        "named_struct('d2', aggregate(zip_with(" + vec_expr + ", array("
-        + ", ".join(f"{int(c)}L" for c in cv)
-        + "), (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x), "
-        f"'cluster', {j})"
-        for j, cv in enumerate(book)
+def _adc_tables(books: list[list[list[int]]], dsub: int) -> list[Column]:
+    """``_adc_{s}``: exact d² from e's s-th slice to every codeword of
+    subspace s — the per-query ADC lookup tables."""
+    return [
+        F.expr(
+            "array(" + ", ".join(d2_sql(_slice(s, dsub), cv) for cv in book) + ")"
+        ).alias(f"_adc_{s}")
+        for s, book in enumerate(books)
+    ]
+
+
+def _adc_sum(m: int) -> Column:
+    """A candidate's ADC score: its m codes' entries in the tables."""
+    return F.expr(
+        " + ".join(
+            f"element_at(_adc_{s}, element_at(codes, {s + 1}) + 1)" for s in range(m)
+        )
     )
 
 
@@ -85,51 +112,74 @@ def pq_exact_adc_topk(
             [], "query_id bigint, vec_id bigint, adc_q bigint, rank int"
         )
     q = quantize_ppm(emb)
-    code_exprs = [
-        "element_at(array_sort(array("
-        + _cw_structs(f"slice(e, {s * DSUB + 1}, {DSUB})", books[s])
-        + ")), 1).cluster"
-        for s in range(M)
-    ]
-    coded = q.select(
-        "vec_id", F.expr("array(" + ", ".join(code_exprs) + ")").alias("codes")
-    )
+    coded = q.select("vec_id", _codes(books, DSUB))
     # ADC discipline (same as pq.pq_adc_topk): per QUERY, precompute
     # the KCODE-entry exact-d² table per subspace ONCE — per candidate
     # the score is then m table lookups + adds, never a fold
-    adc_tables = [
-        F.expr(
-            "array("
-            + ", ".join(
-                "aggregate(zip_with(slice(e, "
-                + f"{s * DSUB + 1}, {DSUB}), array("
-                + ", ".join(f"{int(c)}L" for c in cv)
-                + "), (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
-                for cv in books[s]
-            )
-            + ")"
-        ).alias(f"_adc_{s}")
-        for s in range(M)
-    ]
     queries = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), *adc_tables
-    )
-    adc = " + ".join(
-        f"element_at(_adc_{s}, element_at(codes, {s + 1}) + 1)" for s in range(M)
+        F.col("vec_id").alias("query_id"), *_adc_tables(books, DSUB)
     )
     cand = (
         coded.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.expr(adc).alias("adc_q"))
+        .select("query_id", "vec_id", _adc_sum(M).alias("adc_q"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_q").asc(), F.col("vec_id").asc()
+    return rank_topk(cand, "adc_q", k)
+
+
+def _union_cte(name: str, selects) -> str:
+    return f"{name} AS (\n" + "\n  UNION ALL\n".join(selects) + "\n)"
+
+
+def _codebook_ctes(
+    base: str, m: int, dsub: int, k_code: int, iters: int
+) -> list[str]:
+    """The replay of `lloyd_ppm(…, m)` over ``{base}(vec_id, e)``: per
+    subspace s a prefixed kmeans_exact unroll over e[lo:hi] and the
+    rows' codes under its last round, then codes(vec_id, s, code) and
+    books(s, cluster, cv)."""
+    d2 = (
+        "list_sum(list_transform(list_zip(q.e, c.cv),"
+        " p -> (p[1] - p[2]) * (p[1] - p[2])))"
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_q", "rank")
+    parts = []
+    for s in range(m):
+        lo, hi = s * dsub + 1, (s + 1) * dsub
+        parts.extend(
+            kmeans_exact_cte_parts_prefixed(
+                k_code,
+                iters,
+                dsub,
+                prefix=f"s{s}",
+                q_sql=f"""s{s}q AS MATERIALIZED (
+  SELECT vec_id, e[{lo}:{hi}] AS e FROM {base}
+)""",
+            )
+        )
+        # argmin-as-aggregate (the kmeans_exact a{t} encoding): the
+        # packed min(d2·k+code) key replaces the per-vector window
+        # sort measured superlinear in DuckDB at 8× fixture growth
+        parts.append(
+            f"""scode{s} AS (
+  SELECT vec_id, best % {k_code} AS code FROM (
+    SELECT q.vec_id, min({d2} * {k_code} + c.cluster) AS best
+    FROM s{s}q q CROSS JOIN s{s}c{iters} c
+    GROUP BY q.vec_id
+  )
+)"""
+        )
+    parts.append(
+        _union_cte(
+            "codes", (f"  SELECT vec_id, {s} AS s, code FROM scode{s}" for s in range(m))
+        )
     )
+    parts.append(
+        _union_cte(
+            "books",
+            (f"  SELECT {s} AS s, cluster, cv FROM s{s}c{iters}" for s in range(m)),
+        )
+    )
+    return parts
 
 
 def pq_exact_adc_oracle_sql(
@@ -155,54 +205,17 @@ def pq_exact_adc_oracle_sql(
   FROM embeddings WHERE embedding IS NOT NULL
 )"""
     ]
-    for s in range(M):
-        lo, hi = s * DSUB + 1, (s + 1) * DSUB
-        parts.extend(
-            kmeans_exact_cte_parts_prefixed(
-                KCODE,
-                ITERS,
-                DSUB,
-                prefix=f"s{s}",
-                q_sql=f"""s{s}q AS MATERIALIZED (
-  SELECT vec_id, e[{lo}:{hi}] AS e FROM qb
-)""",
-            )
-        )
-        # argmin-as-aggregate (the kmeans_exact a{t} encoding): the
-        # packed min(d2·k+code) key replaces the per-vector window
-        # sort measured superlinear in DuckDB at 8× fixture growth
-        parts.append(
-            f"""scode{s} AS (
-  SELECT vec_id, best % {KCODE} AS code FROM (
-    SELECT q.vec_id, min({d2} * {KCODE} + c.cluster) AS best
-    FROM s{s}q q CROSS JOIN s{s}c{ITERS} c
-    GROUP BY q.vec_id
-  )
-)"""
-        )
+    parts += _codebook_ctes("qb", M, DSUB, KCODE, ITERS)
     parts.append(
-        "codes AS (\n"
-        + "\n  UNION ALL\n".join(
-            f"  SELECT vec_id, {s} AS s, code FROM scode{s}" for s in range(M)
+        _union_cte(
+            "qsub",
+            (
+                f"  SELECT vec_id AS query_id, {s} AS s,"
+                f" e[{s * DSUB + 1}:{(s + 1) * DSUB}] AS qv"
+                f" FROM qb WHERE vec_id < {n_queries}"
+                for s in range(M)
+            ),
         )
-        + "\n)"
-    )
-    parts.append(
-        "books AS (\n"
-        + "\n  UNION ALL\n".join(
-            f"  SELECT {s} AS s, cluster, cv FROM s{s}c{ITERS}" for s in range(M)
-        )
-        + "\n)"
-    )
-    parts.append(
-        "qsub AS (\n"
-        + "\n  UNION ALL\n".join(
-            f"  SELECT vec_id AS query_id, {s} AS s,"
-            f" e[{s * DSUB + 1}:{(s + 1) * DSUB}] AS qv"
-            f" FROM qb WHERE vec_id < {n_queries}"
-            for s in range(M)
-        )
-        + "\n)"
     )
     parts.append(
         """persub AS (
@@ -222,12 +235,113 @@ def pq_exact_adc_oracle_sql(
   FROM persub GROUP BY query_id, vec_id
 )"""
     )
-    body = ",\n".join(parts)
-    return f"""WITH {body}
-SELECT query_id, vec_id, adc_q, CAST(rank AS INT) AS rank FROM (
-  SELECT query_id, vec_id, adc_q,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adc_q ASC, vec_id ASC
-         ) AS rank
-  FROM cand
-) WHERE rank <= {k}"""
+    return rank_topk_sql(parts, "adc_q", k)
+
+
+def ivfadc_exact_topk(
+    emb: DataFrame,
+    coarse: list[list[int]],
+    k: int = 5,
+    *,
+    m: int = 4,
+    k_code: int = 8,
+    iters: int = ITERS,
+    n_probe: int = 3,
+    n_queries: int = 5,
+    dim: int = 64,
+) -> DataFrame:
+    """(query_id, vec_id, est_d2, rank): IVFADC (TPAMI'11 §IV) over
+    exact-integer quantizers. `coarse` holds the trained ppm coarse
+    centroids (`kmeans_fit_exact`); each vector is routed to its
+    nearest one and its RESIDUAL (ppm vector − centroid, exact
+    integers) is product-quantized with `lloyd_ppm` codebooks
+    (m × k_code codewords, `iters` Lloyd's rounds each). Queries probe
+    their n_probe nearest cells; est_d2 sums m lookups in per-(query,
+    cell) exact-d² ADC tables of the query residual — an exact BIGINT,
+    so the whole stack replays in `ivfadc_exact_oracle_sql`."""
+    if not coarse:  # empty / all-NULL corpus: no index, no neighbors
+        return emb.sparkSession.createDataFrame(
+            [], "query_id bigint, vec_id bigint, est_d2 bigint, rank int"
+        )
+    dsub = dim // m
+    table = "array(" + ", ".join(int_array(cv) for cv in coarse) + ")"
+
+    def residual(vec: str) -> Column:
+        return F.expr(f"zip_with({vec}, element_at({table}, cluster + 1), (a, b) -> a - b)")
+
+    assigned, probes = ivf_cells(quantize_ppm(emb), coarse, n_probe, n_queries)
+    res = assigned.select("vec_id", "cluster", residual("e").alias("e"))
+    books = lloyd_ppm(res, k_code, iters, m)[0]
+    coded = res.select("vec_id", "cluster", _codes(books, dsub))
+    # one exact-d² table per (query, probed cell, subspace) of the query
+    # residual; a candidate's score is then m lookups + adds, never a fold
+    probes = probes.select(
+        "query_id", "cluster", residual("qv").alias("e")
+    ).select("query_id", "cluster", *_adc_tables(books, dsub))
+    cand = (
+        coded.join(F.broadcast(probes), "cluster")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _adc_sum(m).alias("est_d2"))
+    )
+    return rank_topk(cand, "est_d2", k)
+
+
+def ivfadc_exact_oracle_sql(
+    k: int = 5,
+    *,
+    n_centroids: int = 8,
+    coarse_iters: int = 5,
+    m: int = 4,
+    k_code: int = 8,
+    iters: int = ITERS,
+    n_probe: int = 3,
+    n_queries: int = 5,
+    dim: int = 64,
+) -> str:
+    """The DuckDB replay of `ivfadc_exact_topk` with the coarse
+    quantizer trained in place: the shared kmeans_exact unroll, the
+    final assignment and residuals, one prefixed residual-codebook
+    unroll per subspace over `r[lo:hi]` slices, then long-format codes,
+    per-(query, cell) residual ADC scores and the top-k window."""
+    dsub = dim // m
+    cf = f"c{coarse_iters}"
+    parts = ivf_cell_ctes(n_centroids, coarse_iters, n_probe, n_queries, dim)
+    parts.append(
+        f"""res AS MATERIALIZED (
+  SELECT a.vec_id, a.cluster,
+         list_transform(list_zip(a.e, c.cv), p -> p[1] - p[2]) AS e
+  FROM af a JOIN {cf} c USING (cluster)
+)"""
+    )
+    parts += _codebook_ctes("res", m, dsub, k_code, iters)
+    parts.append(
+        f"""qres AS (
+  SELECT p.query_id, p.cluster,
+         list_transform(list_zip(p.qv, c.cv), z -> z[1] - z[2]) AS qr
+  FROM pr p JOIN {cf} c USING (cluster)
+)"""
+    )
+    parts.append(
+        _union_cte(
+            "qsub",
+            (
+                f"  SELECT query_id, cluster, {s} AS s,"
+                f" qr[{s * dsub + 1}:{(s + 1) * dsub}] AS qv FROM qres"
+                for s in range(m)
+            ),
+        )
+    )
+    parts.append(
+        """cand AS (
+  SELECT q.query_id, a.vec_id,
+         CAST(sum(list_sum(list_transform(list_zip(q.qv, b.cv),
+                                          z -> (z[1] - z[2]) * (z[1] - z[2]))))
+              AS BIGINT) AS est_d2
+  FROM qsub q
+  JOIN af a ON a.cluster = q.cluster AND a.vec_id <> q.query_id
+  JOIN codes c ON c.vec_id = a.vec_id AND c.s = q.s
+  JOIN books b ON b.s = q.s AND b.cluster = c.code
+  GROUP BY q.query_id, a.vec_id
+)"""
+    )
+    return rank_topk_sql(parts, "est_d2", k)

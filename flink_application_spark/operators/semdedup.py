@@ -201,7 +201,7 @@ def semdedup_flags(
     ``kept`` is false iff some lower-id vector in the same cluster has
     cosine ≥ ``threshold``; the diagnostic columns say how many and how
     close. ``centroids`` defaults to the deterministic k-smallest-id
-    seeds (pass ``kmeans_fit`` output for trained clusters at scale —
+    seeds (pass ``kmeans_fit_exact`` centroids / 1e6 for trained clusters —
     the flags logic is identical). ``max_cluster_size`` enables the
     recursive oversized-cluster split (`assign_with_split`) — the
     skew guard for corpora whose density defeats the seed centroids;

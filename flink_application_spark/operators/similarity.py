@@ -454,9 +454,9 @@ def ivf_topk(
     re-partitionable/bucketable by centroid_id so each probe touches
     only matching partitions (partition pruning on the list id).
     When even the training sample shouldn't bottleneck on the driver,
-    pass `centroids=np.asarray(operators.kmeans.kmeans_fit(...)[0])` —
-    the fully-distributed Lloyd's trainer slots into the same index
-    (recall-tested in tests/test_ivf.py).
+    pass `centroids=np.asarray(kmeans_exact.kmeans_fit_exact(...)[0]) / 1e6`
+    — the fully-distributed exact Lloyd's trainer slots into the same
+    index (recall-tested in tests/test_ivf.py).
     """
     if centroids is None:
         centroids = train_centroids(corpus, n_centroids=n_centroids)

@@ -16,9 +16,9 @@ top-k, kNN classify, label-noise audit, radius search since round 6;
 MMR, triplets, text-search since round 7) runs a DETERMINISTIC
 seeded-centroid IVF index at the gate and carries an exact DuckDB
 oracle (see `_seeded_cand_cte` below; the greedy MMR unrolls via
-plans/mmr_sql.py over integer micro-unit scores). Only
-emb_ivf_ann_topk — whose registered POINT is the trained k-means
-index — stays rows-only. In all cases the trained-centroid path's agreement
+plans/mmr_sql.py over integer micro-unit scores). The TRAINED index is
+exact-integer too (emb_ivf_exact_trained_topk, oracle-checked). In all
+cases the trained-centroid path's agreement
 contracts — full probe ≡ exact, and ≥ 0.9 agreement at partial probe
 on clustered data — are pinned in tests/test_ivf.py and
 tests/test_ann_twins.py. On the driver's
@@ -52,8 +52,8 @@ _ANN = dict(n_centroids=16, n_probe=4)
 # assignment, d2-ranked probes — the emb_ivf_recall_curve machinery,
 # hash-green since r04) with the identical downstream aggregates; the
 # TRAINED-centroid path keeps its pytest recall/agreement contracts
-# (tests/test_ivf.py, tests/test_ann_twins.py) and its rows-only
-# registry entry (emb_ivf_ann_topk).
+# (tests/test_ivf.py, tests/test_ann_twins.py); its registered form is
+# the exact-integer emb_ivf_exact_trained_topk.
 
 _D2 = (
     "list_sum(list_transform(list_zip({a}, {b}),"

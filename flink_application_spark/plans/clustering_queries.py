@@ -7,11 +7,11 @@ bit-for-bit in DuckDB (same pattern as `similarity_queries._COS`).
 `emb_kmeans_assign` pins it against deterministic seed centroids (the
 k smallest vec_ids — no RNG).
 
-Full Lloyd's iterations are NOT cross-engine-reproducible (the
-centroid means are distributed partial aggregates whose summation
-order differs), so `emb_kmeans_fit_profile` is rows-only at the driver
-gate; `tests/test_kmeans.py` pins its semantics against a driver-side
-numpy Lloyd's reference at sf0.001 instead.
+Training is exact-integer Lloyd's (`operators/kmeans_exact.py`):
+float centroid means are distributed partial aggregates whose
+summation order differs across engines, ppm-integer sums are not, so
+`emb_kmeans_fit_exact_profile` replays the whole training trajectory
+in DuckDB.
 
 This centroid machinery is the same coarse-quantizer training IVF ANN
 uses (`operators/similarity.py`) — registering it standalone makes the
@@ -26,9 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.kmeans import (
     assign_clusters,
-    cluster_profile,
     init_centroids,
-    kmeans_fit,
 )
 from flink_application_spark.plans.registry import register
 
@@ -78,24 +76,6 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "emb_kmeans_fit_profile",
-    None,  # Lloyd's means are distributed partial aggs — not bit-reproducible in SQL
-    doc=f"Full Lloyd's k-means (k={_K}, ≤10 iterations, deterministic "
-    "seeding): per-iteration cost is one scan-local assignment fold plus "
-    "a posexplode partial-agg whose shuffle carries k·d partials — "
-    "corpus-size-independent, the 1000-executor iteration shape. Output "
-    "is the per-cluster size/cost profile; semantics pinned against a "
-    "numpy Lloyd's reference in tests/test_kmeans.py.",
-    tags=("embeddings", "clustering"),
-)
-def q_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    emb = emb.filter(F.col("embedding").isNotNull())
-    cents, _ = kmeans_fit(emb, _K, "vec_id", max_iters=10)
-    return cluster_profile(assign_clusters(emb, cents))
-
-
 def _kmeans_exact_oracle() -> str:
     from flink_application_spark.operators.kmeans_exact import (
         kmeans_exact_oracle_sql,
@@ -116,10 +96,8 @@ def _kmeans_exact_oracle() -> str:
     "round. The per-iteration (inertia, centroid-L1) profile pins the "
     "whole training trajectory; DuckDB replays the 5 rounds as "
     "unrolled CTE stages (operators/kmeans_exact.py — the mmr_sql/CEP "
-    "recipe applied to a training loop). The float trainer "
-    "(emb_kmeans_fit_profile) stays registered for conventional-"
-    "pipeline parity; monotone descent + determinism contracts in "
-    "tests/test_kmeans_exact.py.",
+    "recipe applied to a training loop). Monotone descent + "
+    "determinism contracts in tests/test_kmeans_exact.py.",
     tags=("embeddings", "clustering", "training", "deterministic"),
 )
 def q_kmeans_fit_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,21 +49,33 @@ ph AS (
 """
 
 
+def _pca_top2_oracle() -> str:
+    from flink_application_spark.operators.pca_exact import pca_top2_exact_oracle_sql
+
+    return pca_top2_exact_oracle_sql(iters=8, dim=64)
+
+
 @register(
     "emb_pca_top2_projection",
-    None,  # deflated eigen extraction is iterative driver math — rows-only
+    _pca_top2_oracle(),
     doc="Two-component PCA projection (pc1, pc2) of the embedding "
-    "table: one distributed Gram sketch pass, two driver-side "
-    "power-iteration rounds with Hotelling deflation, one broadcast "
-    "projection pass. Components verified against numpy.linalg.eigh "
-    "in tests/test_pca.py (orthogonality + per-vector projections).",
-    tags=("embeddings", "pca"),
+    "table on the exact-integer recipe (operators/pca_exact.py): one "
+    "Gram pass gives n, the coordinate sums s and the Gram G of the "
+    "ppm vectors; the covariance n·G − s·sᵀ is exact; component 1 is "
+    "8 max-|w| power rounds with truncating division, component 2 the "
+    "same rounds plus an integer Gram–Schmidt step against component "
+    "1; pc1/pc2 are exact BIGINT dot products of the mean-centered "
+    "ppm vector with each component. DuckDB replays every stage as "
+    "MATERIALIZED HUGEINT CTEs.",
+    tags=("embeddings", "pca", "training", "deterministic"),
 )
 def q_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.operators.pca import pca_topk_projection
+    from flink_application_spark.operators.pca_exact import pca_top2_exact_projection
 
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    return pca_topk_projection(emb, k=2, dim=64).select("vec_id", "label", "pc1", "pc2")
+    return pca_top2_exact_projection(emb, iters=8, dim=64).select(
+        "vec_id", "label", "pc1", "pc2"
+    )
 
 
 @register(

@@ -23,19 +23,21 @@ from flink_application_spark.operators.opq import (
     pca_rotation_balanced,
     rotate_embeddings,
 )
-from flink_application_spark.operators.pq import pq_encode, trained_codebooks
+from flink_application_spark.operators.kmeans_exact import SCALE, lloyd_ppm, quantize_ppm
+from flink_application_spark.operators.pq import pq_encode
 from flink_application_spark.plans.registry import register
 
 _M = 4
 _K = 8
 _DIM = 64
+_ITERS = 10  # exact Lloyd's rounds per codebook
 
 
 def opq_compare_frame(emb: DataFrame, m: int = _M, k: int = _K, dim: int = _DIM) -> DataFrame:
     """(variant, n_vecs, mse): trained-codebook PQ reconstruction MSE
     on raw vs PCA-rotated-balanced (parametric OPQ) vectors. Identical
-    training protocol on both sides (same seeds-by-smallest-id, same
-    Lloyd's, same sample bound), so the rotation is the ONLY
+    training protocol on both sides (same seeds-by-smallest-id, the
+    same exact-integer Lloyd's rounds), so the rotation is the ONLY
     difference being measured."""
     # localCheckpoint(eager): the rotated frame feeds TWO consumers —
     # the codebook-training collect NOW and the returned lazy union at
@@ -49,7 +51,10 @@ def opq_compare_frame(emb: DataFrame, m: int = _M, k: int = _K, dim: int = _DIM)
     )
     rows = []
     for variant, frame in (("raw", emb), ("opq", rot)):
-        books = trained_codebooks(frame, m, k, dim)
+        books = [
+            [[c / SCALE for c in cv] for cv in book]
+            for book in lloyd_ppm(quantize_ppm(frame), k, _ITERS, m)[0]
+        ]
         rows.append(
             pq_encode(frame, books, dim).agg(
                 F.lit(variant).alias("variant"),
@@ -65,7 +70,8 @@ def opq_compare_frame(emb: DataFrame, m: int = _M, k: int = _K, dim: int = _DIM)
     None,  # data-dependent rotation — see module docstring
     doc=f"Parametric OPQ (Ge CVPR'13) vs plain PQ at m={_M}, k={_K}: "
     "PCA-rotate with eigen-dimensions balance-allocated across "
-    "subspaces, train identical per-subspace codebooks on both, "
+    "subspaces, train identical per-subspace codebooks on both "
+    "(exact-integer Lloyd's, operators/kmeans_exact.py), "
     "report reconstruction MSE per variant. One Gram pass + one "
     "Arrow matmul per batch is the rotation's whole corpus cost; "
     "rows-only with orthogonality/isometry/improvement invariants "

@@ -4,11 +4,10 @@ The scale-relevant piece of distributed PCA is the Gram accumulation
 (`operators/pca.py:gram_long`) — a full-data pass whose shuffle carries
 O(d²) partials per partition instead of rows. That piece IS
 SQL-expressible, so `emb_pca_gram` gets a real DuckDB oracle (position
-cross-join + sum of products). The eigen step runs on the driver and
-is not SQL-expressible; `emb_pca_top_component` is therefore rows-only
-at the driver gate, with `tests/test_pca.py` checking the power
-iteration against `numpy.linalg.eigh` and the end-to-end projection
-against a driver-side numpy reference.
+cross-join + sum of products). The eigen step is exact-integer power
+iteration (`operators/pca_exact.py`), replayed stage by stage in
+DuckDB: `emb_pca_power_exact` here, the two-component projection
+`emb_pca_top2_projection` in `multimodal_extra.py`.
 
 Reference parity note: the sketch-to-driver / broadcast-back shape
 mirrors the enrichment pattern of
@@ -21,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.pca import (
-    gram_long,
-    pca_top_component_projection,
-)
+from flink_application_spark.operators.pca import gram_long
 from flink_application_spark.plans.registry import register
 
 _DIM = 64
@@ -68,24 +64,6 @@ def q_pca_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("i", "j", (F.round(F.col("s"), 4) + F.lit(0.0)).alias("s"), "n")
 
 
-@register(
-    "emb_pca_top_component",
-    None,  # eigen step is iterative driver-side math — not SQL-expressible
-    doc="Top-principal-component projection: Gram sketch to the driver "
-    "(emb_pca_gram's plan), power iteration with convergence residual "
-    "check on the d×d covariance, component broadcast back as a "
-    "literal array and folded JVM-side (zip_with/aggregate — no "
-    "Python in the projection scan). Output is (vec_id, label, pc1). "
-    "Rows-only at the driver gate; tests/test_pca.py verifies the "
-    "component against numpy.linalg.eigh and the projection against "
-    "a numpy reference at sf0.001.",
-    tags=("embeddings", "pca"),
-)
-def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    return pca_top_component_projection(emb, dim=_DIM).select("vec_id", "label", "pc1")
-
-
 def _pca_exact_oracle() -> str:
     from flink_application_spark.operators.pca_exact import (
         pca_power_exact_oracle_sql,
@@ -108,8 +86,7 @@ def _pca_exact_oracle() -> str:
     "MATERIALIZED HUGEINT CTE stages. |cos| ≥ 0.999 vs numpy eigh "
     "pinned on a planted-spike corpus (the fixture is isotropic — "
     "there the guaranteed Rayleigh monotonicity is pinned instead) in "
-    "tests/test_pca_exact.py; the float path (emb_pca_top_component) "
-    "stays registered for conventional parity.",
+    "tests/test_pca_exact.py.",
     tags=("embeddings", "pca", "training", "deterministic"),
 )
 def q_pca_power_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -77,8 +77,8 @@ _CODES_SQL = (
     _CODES_SQL,
     doc=f"Product quantization (TPAMI'11, the FAISS compression step): "
     f"{_DIM}-dim vectors → {_M} codes from {_K}-entry per-subspace "
-    "codebooks (deterministic k-smallest-id seeds; per-subspace "
-    "kmeans_fit drops in). Encoding is a scan-local argmin fold per "
+    "codebooks (deterministic k-smallest-id seeds; the trained form is "
+    "emb_pq_exact_trained_adc_topk). Encoding is a scan-local argmin fold per "
     "subspace — zero shuffle; recon_d2 is the total quantization "
     "error. Every code and error oracle-reproduced.",
     tags=("embeddings", "quantization", "ann"),
@@ -135,29 +135,6 @@ SELECT query_id, vec_id, est_d2, rank FROM (
 def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
     books = seed_codebooks(emb, _M, _K, _DIM)
-    codes = pq_encode(emb, books, _DIM).drop("recon_d2")
-    queries = emb.filter(F.col("vec_id") < _NQ)
-    return pq_adc_topk(queries, codes, books, _DIM, k=_TOPK)
-
-
-@register(
-    "emb_pq_trained_adc_topk",
-    None,  # per-subspace Lloyd's training is iterative → rows-only;
-    # trained-vs-seeded quality (recon_d2 strictly lower, recall@5 not
-    # worse, measured at sf0.1) is pinned in tests/test_pq.py
-    doc=f"PQ ADC search with TRAINED per-subspace codebooks "
-    f"(kmeans_fit on each {_SUB}-dim slice, initialized from the same "
-    "deterministic seeds — TPAMI'11 §III as written): the quality path "
-    "the seeded oracle twin emb_pq_adc_topk stands in for. At sf0.1 "
-    "training cuts total quantization error ~32% (2433→1667) at "
-    "unchanged-or-better recall.",
-    tags=("embeddings", "quantization", "ann", "similarity"),
-)
-def q_pq_trained_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.operators.pq import trained_codebooks
-
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    books = trained_codebooks(emb, _M, _K, _DIM)
     codes = pq_encode(emb, books, _DIM).drop("recon_d2")
     queries = emb.filter(F.col("vec_id") < _NQ)
     return pq_adc_topk(queries, codes, books, _DIM, k=_TOPK)

@@ -190,6 +190,10 @@ def _load_all() -> None:
 # emb_knn_classify_ann / emb_cosine_topk_ann (pair-count-adaptive IVF
 # scorer), doc_dedup_canonical_near / doc_dedup_keep_best_quality /
 # doc_dup_components (shared pair memo), doc_hybrid_rrf_search (bm25).
+#
+# Exact-trainer rotation: emb_ivfadc_trained_topk and
+# emb_pca_top2_projection, rows-only until they moved onto the
+# exact-integer cores, take the last two slots.
 SAMPLE_WINDOW = [
     # round-12 rotation: the r06 residue, sampled first
     "emb_lsh_multiprobe_topk",
@@ -244,8 +248,11 @@ SAMPLE_WINDOW = [
     "emb_ivf_recall_curve",
     "emb_knn_classify",
     "emb_knn_classify_ann",
-    "emb_label_noise_knn_ann",
-    "emb_lsh_ann_topk",
+    # the two queries moved onto the exact-integer trainers, sampled
+    # the round they land (they replaced emb_label_noise_knn_ann and
+    # emb_lsh_ann_topk, both green in r11 and r12)
+    "emb_ivfadc_trained_topk",
+    "emb_pca_top2_projection",
 ]
 
 

@@ -206,23 +206,6 @@ def q_emb_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "emb_ivf_ann_topk",
-    None,  # k-means training is not SQL-expressible → rows-only check;
-           # exactness/recall properties are pinned in tests/test_ivf.py
-    doc="IVF ANN top-5: k-means centroids from a driver-bounded sample, "
-    "corpus inverted-listed by nearest centroid (Arrow-batched pandas "
-    "UDF), queries probe 4/16 lists — candidate set shrinks ~4× with "
-    "high recall; the bucketed layout partition-prunes at scale.",
-    tags=("similarity", "embeddings", "ivf", "ann"),
-)
-def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.operators.similarity import ivf_topk
-
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    return ivf_topk(emb.filter(F.col("vec_id") < 20), emb, k=5, n_centroids=16, n_probe=4)
-
-
-@register(
     "emb_centroid_per_label",
     """
 WITH dims AS (
@@ -324,8 +307,8 @@ WHERE rank <= 5
     "plain exact top-k SQL. This pins the whole IVF machinery "
     "(centroid training, Arrow-batched assignment, probe join, "
     "rank/tie-break) against a closed-form answer; the approximate "
-    "operating point (n_probe < n_centroids) is emb_ivf_ann_topk "
-    "with recall properties in tests/test_ivf.py.",
+    "operating point (n_probe < n_centroids) has its recall "
+    "properties in tests/test_ivf.py.",
     tags=("similarity", "embeddings", "ivf", "ann"),
 )
 def q_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,8 +8,9 @@ checkpointing every 180 s (EnrichmentApp.java:48).
 
 `app.run`'s streaming query hands each micro-batch to one of the
 ``write_arrow(table, batch_id)`` writers here as an Arrow table
-collected on the driver (`_collect_batch`), so no writer runs a Spark
-job and a batch is bounded by ``spark.driver.maxResultSize``:
+collected on the driver (partition columns in their string form), so
+no writer runs a Spark job and a batch is bounded by
+``spark.driver.maxResultSize``:
 
 - parquet: `SizeCalibratedRoller` commits the batch as
   ``_batch=<id>/<partition_by>…`` with pyarrow (`_commit_arrow_batch`:
@@ -60,16 +61,6 @@ def _partition_dir_names(values, col: str):
     ]
     names.append(f"{key}={_HIVE_DEFAULT_PARTITION}")  # the NULL slot
     return pc.take(pa.array(names, pa.string()), pc.fill_null(enc.indices, len(names) - 1))
-
-
-def _collect_batch(batch_df: DataFrame, partition_by: tuple[str, ...]):
-    """The micro-batch as one Arrow table on the driver, partition
-    columns cast to their string form."""
-    if partition_by:
-        batch_df = batch_df.withColumns(
-            {c: batch_df[c].cast("string") for c in partition_by}
-        )
-    return batch_df.toArrow()
 
 
 def _commit_arrow_batch(
@@ -407,9 +398,6 @@ class SizeCalibratedRoller:
             # (over-)estimate of bytes/row → an under-estimate of the cap
             self.max_records = self._cap(buf.tell(), sample.num_rows)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.write_arrow(_collect_batch(batch_df, self.partition_by), batch_id)
-
     def write_arrow(self, table, batch_id: int) -> None:
         """Commit a micro-batch already collected as Arrow, its
         partition columns in their string form (`_collect_batch`)."""
@@ -427,15 +415,17 @@ class SizeCalibratedRoller:
 def memory_table_writer(spark, name: str):
     """A ``write_arrow(table, batch_id)`` for the memory sink: after
     each batch, ``spark.table(name)`` in ``spark`` returns every row
-    written so far. A replayed batch replaces its own rows."""
-    import pyarrow as pa
+    written so far. Each batch's rows reach the JVM once, as their own
+    local relation; the view is the union of those. A replayed batch
+    replaces its own rows."""
+    from functools import reduce
 
-    batches: dict[int, object] = {}
+    batches: dict[int, DataFrame] = {}
 
     def write_arrow(table, batch_id: int) -> None:
-        batches[batch_id] = table
-        rows = pa.concat_tables([batches[b] for b in sorted(batches)])
-        spark.createDataFrame(rows).createOrReplaceTempView(name)
+        batches[batch_id] = spark.createDataFrame(table)
+        frames = [batches[b] for b in sorted(batches)]
+        reduce(DataFrame.unionByName, frames).createOrReplaceTempView(name)
 
     return write_arrow
 

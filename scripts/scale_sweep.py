@@ -98,13 +98,13 @@ OPS = {
 # here pair-joins duplicates, so identical vectors cannot degenerate
 # the plan. The registered query runs VERBATIM against a temp sf_dir
 # holding the replicated table, so the sweep times exactly what the
-# driver gate runs (trained codebooks + probe equi-join + ADC top-k /
-# multi-probe bucket join).
+# driver gate runs (exact-integer trained quantizers + probe equi-join
+# + ADC top-k / multi-probe bucket join).
 EMB_QUERIES = [
     "emb_ivfadc_trained_topk",
     "emb_lsh_multiprobe_topk",
-    # round-8 (verdict item 5): the exact-integer training twins must
-    # match their float siblings' scale shape — broadcast-literal
+    # round-8 (verdict item 5): the exact-integer trainers keep the
+    # float trainers' scale shape — broadcast-literal
     # assignment passes + posexplode partial-agg reductions (kmeans),
     # chunked int64 Gram partials (pca); replicated identical vectors
     # exercise exactly the per-row cost that matters

@@ -14,15 +14,14 @@ import duckdb
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from flink_application_spark.streaming.sinks import (
-    _collect_batch,
-    _commit_arrow_batch,
-)
+from flink_application_spark.streaming.sinks import _commit_arrow_batch
+
+from arrow_batches import collect_batch
 
 
 def _write_batch(df, root, batch_id, partition_by=(), max_records_per_file=None):
     return _commit_arrow_batch(
-        _collect_batch(df, partition_by), root, batch_id, partition_by, max_records_per_file
+        collect_batch(df, partition_by), root, batch_id, partition_by, max_records_per_file
     )
 
 
@@ -36,7 +35,7 @@ def test_one_row_group_per_file_under_the_cap(spark, tmp_path):
     )
     # precondition: the collected table arrives in several record
     # batches, the case that used to cut one row group per batch
-    assert _collect_batch(df, ("p",)).column("id").num_chunks >= 4
+    assert collect_batch(df, ("p",)).column("id").num_chunks >= 4
     files = _write_batch(
         df, str(tmp_path), 0, partition_by=("p",), max_records_per_file=10_000
     )
@@ -168,3 +167,28 @@ def test_replay_replaces_the_batch_and_leaves_no_staging(spark, tmp_path):
     _write_batch(df.filter("id < 4"), root, 0, partition_by=("p",))
     assert sorted(os.listdir(root)) == ["_batch=0"]
     assert spark.read.parquet(root).count() == 4
+
+
+def test_memory_writer_sends_each_batch_once(spark):
+    """The memory sink hands each batch's rows to the JVM once (not
+    every row written so far, again, per batch), and a replayed batch
+    id still replaces its own rows."""
+    import pyarrow as pa
+
+    from flink_application_spark.streaming.sinks import memory_table_writer
+
+    sent = []
+
+    class Spy:
+        def createDataFrame(self, table):
+            sent.append(table.num_rows)
+            return spark.createDataFrame(table)
+
+    write = memory_table_writer(Spy(), "memory_writer_once")
+    batches = [list(range(10 * b, 10 * b + 3 + b)) for b in range(4)]
+    for b, ids in enumerate(batches):
+        write(pa.table({"id": ids}), b)
+    assert sum(sent) == sum(len(ids) for ids in batches)
+    write(pa.table({"id": [100, 101]}), 2)  # replay of batch 2
+    got = sorted(r.id for r in spark.table("memory_writer_once").collect())
+    assert got == sorted(batches[0] + batches[1] + [100, 101] + batches[3])

@@ -24,6 +24,8 @@ from flink_application_spark.streaming.sinks import (
     committed_batch_dirs,
 )
 
+from arrow_batches import collect_batch
+
 
 def _run_once(spark, src, out, ckpt):
     q = (
@@ -76,9 +78,12 @@ def test_stateful_restart_equals_batch(spark, sf_dir, tmp_path):
             gap="1 hour",
             watermark_delay="0 seconds",
         )
-        roller = SizeCalibratedRoller(out, ("event_date", "probe"), 110 * 1024 * 1024)
+        part = ("event_date", "probe")
+        roller = SizeCalibratedRoller(out, part, 110 * 1024 * 1024)
         q = (
-            enriched.writeStream.foreachBatch(roller)
+            enriched.writeStream.foreachBatch(
+                lambda df, bid: roller.write_arrow(collect_batch(df, part), bid)
+            )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()

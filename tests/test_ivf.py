@@ -158,19 +158,20 @@ def test_centroids_deterministic(spark, sf_dir):
 
 
 def test_ivf_with_distributed_lloyd_centroids(spark):
-    """IVF composed with the DISTRIBUTED k-means (`operators/kmeans`)
-    instead of the driver-sample trainer: on clustered data, partial
-    probe must keep >= 0.9 recall vs brute force — proving the
-    no-driver-bottleneck training path slots into the same index."""
+    """IVF composed with the DISTRIBUTED exact-integer k-means
+    (`operators/kmeans_exact`) instead of the driver-sample trainer: on
+    clustered data, partial probe must keep >= 0.9 recall vs brute
+    force — proving the no-driver-bottleneck training path slots into
+    the same index."""
     import numpy as np
 
-    from flink_application_spark.operators.kmeans import kmeans_fit
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
 
     emb = _clustered_corpus(spark)
-    cents, _ = kmeans_fit(emb, k=10, id_col="vec_id", max_iters=8)
+    cents, _ = kmeans_fit_exact(emb, k=10, iters=8)
     q = emb.filter(F.col("vec_id") % 30 == 0)
     exact = brute_force_topk(q, emb, k=5)
-    ivf = ivf_topk(q, emb, k=5, n_probe=3, centroids=np.asarray(cents))
+    ivf = ivf_topk(q, emb, k=5, n_probe=3, centroids=np.asarray(cents) / 1e6)
     e = {(r.query_id, r.vec_id) for r in exact.collect()}
     g = {(r.query_id, r.vec_id) for r in ivf.collect()}
     recall = len(e & g) / len(e)

@@ -1,5 +1,6 @@
-"""k-means semantics pinned against a driver-side numpy Lloyd's
-reference (same deterministic seeding, same argmin tie-break)."""
+"""k-means semantics pinned against driver-side numpy references
+(same deterministic seeding, same argmin tie-break): the float
+assignment pass, and the exact-integer Lloyd's trainer."""
 
 from __future__ import annotations
 
@@ -10,10 +11,7 @@ from pyspark.sql import functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.kmeans import (
     assign_clusters,
-    cluster_profile,
     init_centroids,
-    kmeans_fit,
-    update_centroids,
 )
 
 K = 8
@@ -38,15 +36,17 @@ def _np_assign(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return d2.argmin(axis=1)  # argmin takes the first (lowest) index on ties
 
 
-def _np_lloyd(x: np.ndarray, k: int, iters: int):
+def _np_lloyd_ppm(x: np.ndarray, k: int, iters: int):
+    """numpy replica of the exact trainer on ppm rows: integer sums,
+    mean rounded half away from zero, empty cluster keeps its centroid."""
     cents = x[:k].copy()
     for _ in range(iters):
         a = _np_assign(x, cents)
-        new = np.zeros_like(cents)
         for c in range(k):
             m = a == c
-            new[c] = x[m].mean(axis=0) if m.any() else 0.0
-        cents = new
+            if m.any():
+                s = x[m].sum(axis=0)
+                cents[c] = np.sign(s) * np.floor(np.abs(s / m.sum()) + 0.5)
     return cents, _np_assign(x, cents)
 
 
@@ -61,45 +61,20 @@ def test_assign_matches_numpy(emb, xs):
     assert got == {int(i): int(c) for i, c in zip(ids, want)}
 
 
-def test_update_centroids_matches_numpy_means(emb, xs):
-    ids, x = xs
-    cents = init_centroids(emb, K, "vec_id")
-    assigned = assign_clusters(emb, cents)
-    new = np.array(update_centroids(assigned, K))
-    a = _np_assign(x, np.array(cents))
-    for c in range(K):
-        m = a == c
-        assert m.any()
-        np.testing.assert_allclose(new[c], x[m].mean(axis=0), rtol=0, atol=1e-9)
-
-
-def test_fit_cost_non_increasing(emb, xs):
-    ids, x = xs
-    cents = init_centroids(emb, K, "vec_id")
-    costs = []
-    for _ in range(4):
-        assigned = assign_clusters(emb, cents)
-        costs.append(assigned.agg(F.sum("d2")).collect()[0][0])
-        cents = update_centroids(assigned, K)
-    assert all(b <= a + 1e-9 for a, b in zip(costs, costs[1:])), costs
-
-
 def test_fit_matches_numpy_lloyd(emb, xs):
-    ids, x = xs
-    cents, iters = kmeans_fit(emb, K, "vec_id", max_iters=5, tol=0.0)
-    ref_cents, ref_assign = _np_lloyd(x, K, iters)
-    np.testing.assert_allclose(np.array(cents), ref_cents, rtol=0, atol=1e-7)
-    prof = {r["cluster"]: r["n"] for r in cluster_profile(assign_clusters(emb, cents)).collect()}
-    ref_prof = {int(c): int((ref_assign == c).sum()) for c in range(K) if (ref_assign == c).any()}
-    assert prof == ref_prof
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
 
-
-def test_empty_cluster_keeps_zero_vector(spark):
-    # two far groups, k=3: the third seed is swallowed by reassignment
-    rows = [(i, [0.0, 0.0]) for i in range(3)] + [(10 + i, [100.0, 100.0]) for i in range(3)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    cents, _ = kmeans_fit(df, 3, "vec_id", max_iters=3)
-    assert cents[2] == [0.0, 0.0] or cents[1] == [0.0, 0.0]  # an emptied seed zeroed
+    _, x = xs
+    q = np.round(x * 1e6).astype(np.int64)  # exact int64 sums below
+    cents, prof = kmeans_fit_exact(emb, K, iters=5)
+    ref_cents, _ = _np_lloyd_ppm(q, K, 5)
+    assert np.array_equal(np.array(cents), ref_cents)
+    # round 1's inertia is the seeds' assignment cost; the last L1 mass
+    # is the final centroids'
+    seed_d2 = ((q[:, None, :] - q[None, :K, :]) ** 2).sum(axis=2).min(axis=1)
+    assert [r[0] for r in prof] == [1, 2, 3, 4, 5]
+    assert prof[0][1] == int(seed_d2.sum())
+    assert prof[-1][2] == int(np.abs(ref_cents).sum())
 
 
 def test_assign_arrow_bit_equals_fold(spark, sf_dir):
@@ -174,40 +149,3 @@ def test_uniform_sample_is_md5_bottom_k_not_id_prefix(spark):
     assert got != list(range(k))
     # returned id-sorted so k-smallest-id-in-sample seeding stays deterministic
     assert got == sorted(got)
-
-
-def test_fit_local_full_coverage_matches_distributed(emb):
-    """When sample_rows ≥ corpus rows the sample IS the corpus, so the
-    local trainer must still match kmeans_fit bit-for-bit after the
-    uniform-sampling change (the md5 ordering is undone by the id sort)."""
-    from flink_application_spark.operators.kmeans import kmeans_fit, kmeans_fit_local
-
-    dist, _ = kmeans_fit(emb, K, "vec_id", max_iters=4, tol=0.0)
-    local, _ = kmeans_fit_local(
-        emb, K, "vec_id", max_iters=4, tol=0.0, sample_rows=1 << 20
-    )
-    np.testing.assert_allclose(np.array(local), np.array(dist), rtol=0, atol=1e-9)
-
-
-def test_fit_local_subsample_uses_uniform_rows(spark):
-    """Under a strict subsample the trainer must see md5-sampled rows:
-    with ids 0..99 and a 1-D embedding equal to the id, the mean of the
-    trained single centroid equals the mean of the md5-bottom-50 ids —
-    which differs visibly from the mean of ids 0..49 (the old prefix)."""
-    import hashlib
-
-    from flink_application_spark.operators.kmeans import kmeans_fit_local
-
-    n, s = 100, 50
-    df = spark.createDataFrame(
-        [(i, [float(i)]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    cents, _ = kmeans_fit_local(
-        df, 1, "vec_id", max_iters=3, tol=0.0, sample_rows=s
-    )
-    picked = sorted(
-        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
-    )[:s]
-    assert abs(cents[0][0] - float(np.mean(picked))) < 1e-9
-    assert abs(cents[0][0] - float(np.mean(range(s)))) > 1.0

@@ -31,7 +31,8 @@ from flink_application_spark.streaming.pipeline import (
     lookup_projection,
     ms_ip_lookup_dim,
 )
-from flink_application_spark.streaming.sinks import _collect_batch
+
+from arrow_batches import collect_batch
 
 SRC = (
     "start_time timestamp, measuring_probe_name string, imsi bigint, "
@@ -106,7 +107,7 @@ def _frames(spark, tmp_path):
 @pytest.mark.parametrize("how", ["inner", "left"])
 def test_arrow_lookups_equal_spark_candidates(spark, tmp_path, how):
     src, imsi, ms_ip = _frames(spark, tmp_path)
-    want = _collect_batch(enrichment_candidates(src, imsi, ms_ip, path_a_how=how), PART)
+    want = collect_batch(enrichment_candidates(src, imsi, ms_ip, path_a_how=how), PART)
     got = lookup_candidates(
         lookup_projection(src, PART).toArrow(),
         imsi_lookup_dim(imsi).toArrow(),

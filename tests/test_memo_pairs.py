@@ -62,3 +62,26 @@ def test_near_dup_pairs_memo_keeps_one_live_entry_per_application(spark, sf_dir)
     # the components derived from the replaced pair frame go with it
     assert not [k for k in _memo._COMPONENTS if k[0] == app_id]
     assert comp.storageLevel == StorageLevel.NONE
+
+
+def test_kmeans_and_count_memos_keep_one_application(monkeypatch):
+    """A new application id evicts the old one's k-means fits and
+    corpus counts: a long-lived driver that restarts sessions holds one
+    application's entries, not one per session ever started."""
+    from types import SimpleNamespace
+
+    from flink_application_spark.operators import kmeans_exact
+
+    monkeypatch.setattr(
+        kmeans_exact, "kmeans_fit_exact", lambda emb, k, iters: ([[k]], [iters])
+    )
+    monkeypatch.setattr(_memo, "_KMEANS", {})
+    monkeypatch.setattr(_memo, "_NVEC", {})
+    emb = SimpleNamespace(count=lambda: 7)
+    for app in ("app-1", "app-2"):
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+        assert _memo.kmeans_fit_exact_cached(spark, emb, "/sf", 8, 5) == ([[8]], [5])
+        _memo.kmeans_fit_exact_cached(spark, emb, "/sf", 4, 5)
+        assert _memo.corpus_count_cached(spark, emb, "/sf") == 7
+    assert sorted(_memo._KMEANS) == [("app-2", "/sf", 4, 5), ("app-2", "/sf", 8, 5)]
+    assert list(_memo._NVEC) == [("app-2", "/sf")]

@@ -86,13 +86,7 @@ def test_rows_only_queries_run(spark, sf_dir):
 ROWS_ONLY = {
     "agg_approx_sketches",
     "doc_compression_ratio",
-    "emb_ivf_ann_topk",
-    "emb_ivfadc_trained_topk",
-    "emb_kmeans_fit_profile",
     "emb_opq_pq_compare",
-    "emb_pca_top2_projection",
-    "emb_pca_top_component",
-    "emb_pq_trained_adc_topk",
     "events_hll_user_rollup",
 }
 

@@ -1,7 +1,7 @@
-"""Distributed PCA: Gram sketch, power iteration vs numpy eigh,
-end-to-end projection vs a numpy reference, and the failure modes the
-round-1 advice flagged (dim mismatch, null embeddings, axis-aligned
-start vectors)."""
+"""PCA: the float Gram sketch, the exact-integer top-2 components vs
+numpy eigh, the exact projection vs a numpy reference, and the failure
+modes the round-1 advice flagged (dim mismatch, null embeddings,
+start vectors orthogonal to an eigenvector)."""
 
 from __future__ import annotations
 
@@ -17,11 +17,12 @@ from pyspark.sql.types import (
 )
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.pca import (
-    collect_gram,
-    mean_vector,
-    pca_top_component_projection,
-    top_component,
+from flink_application_spark.operators.kmeans_exact import quantize_ppm
+from flink_application_spark.operators.pca import collect_gram, mean_vector
+from flink_application_spark.operators.pca_exact import (
+    int_moments,
+    pca_top2_exact_projection,
+    top2_components_exact,
 )
 
 _SCHEMA = StructType(
@@ -54,32 +55,41 @@ def test_gram_matches_numpy(spark):
     np.testing.assert_allclose(g, x.T @ x, rtol=1e-10, atol=1e-8)
 
 
+def _int_cov(spark, x):
+    """Exact integer covariance n·G − s·sᵀ of the ppm-quantized rows."""
+    n, sums, g = int_moments(quantize_ppm(_df(spark, x)), dim=x.shape[1])
+    d = x.shape[1]
+    return [[n * g[i][j] - sums[i] * sums[j] for j in range(d)] for i in range(d)]
+
+
+def _eigh_top(x, i):
+    _, vecs = np.linalg.eigh(np.cov(x, rowvar=False, bias=True))
+    return vecs[:, -1 - i]
+
+
+def _abs_cos(a, b) -> float:
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    return abs(float(a @ b)) / (np.linalg.norm(a) * np.linalg.norm(b))
+
+
 def test_top_component_matches_eigh(spark):
     x = _rng_mat()
-    mu = x.mean(axis=0)
-    g, n = collect_gram(_df(spark, x), dim=8)
-    v = top_component(g, n, mu)
-    cov = g / n - np.outer(mu, mu)
-    w, vecs = np.linalg.eigh(cov)
-    ref = vecs[:, -1]
-    if ref[int(np.argmax(np.abs(ref)))] < 0:
-        ref = -ref
-    np.testing.assert_allclose(v, ref, atol=1e-5)
-    lam = v @ cov @ v
-    assert np.linalg.norm(cov @ v - lam * v) <= 1e-6 * abs(lam)
+    u, _ = top2_components_exact(_int_cov(spark, x), iters=30)
+    assert _abs_cos(u, _eigh_top(x, 0)) >= 1 - 1e-9
+    assert max(abs(c) for c in u) == 10**6  # max-|w| renormalized
 
 
 def test_top_component_survives_ones_orthogonal_eigenvector():
-    """The old all-ones start was orthogonal to any eigenvector with
-    zero sum — e.g. a pure difference direction. The sin-ramp start
-    must still find it."""
+    """An all-ones start is orthogonal to any eigenvector with zero
+    sum — e.g. a pure difference direction — and exact arithmetic has
+    no rounding noise to escape it. The ramp start must still find it."""
     d = 4
     ref = np.zeros(d)
     ref[0], ref[1] = 1 / np.sqrt(2), -1 / np.sqrt(2)  # sums to zero
-    cov = 10.0 * np.outer(ref, ref) + np.eye(d)
-    gram = cov  # pretend n=1, mean=0
-    v = top_component(gram, 1, np.zeros(d))
-    assert abs(abs(v @ ref) - 1.0) < 1e-6
+    cov = (10**6 * (10.0 * np.outer(ref, ref) + np.eye(d))).round().astype(int)
+    u, _ = top2_components_exact(cov.tolist(), iters=30)
+    assert _abs_cos(u, ref) >= 1 - 1e-9
 
 
 def test_gram_dim_mismatch_raises(spark):
@@ -90,36 +100,43 @@ def test_gram_dim_mismatch_raises(spark):
 
 def test_projection_null_consistency(spark):
     """Null embeddings are filtered once up front: output excludes them
-    and the stats match the no-null run exactly."""
+    and the projections match the no-null run exactly."""
     x = _rng_mat(n=50)
-    clean = pca_top_component_projection(_df(spark, x), dim=8)
-    dirty = pca_top_component_projection(_df(spark, x, with_null=True), dim=8)
-    a = {r["vec_id"]: r["pc1"] for r in clean.collect()}
-    b = {r["vec_id"]: r["pc1"] for r in dirty.collect()}
-    assert a == b
+    clean = pca_top2_exact_projection(_df(spark, x), dim=8)
+    dirty = pca_top2_exact_projection(_df(spark, x, with_null=True), dim=8)
+    a = {r["vec_id"]: (r["pc1"], r["pc2"]) for r in clean.collect()}
+    b = {r["vec_id"]: (r["pc1"], r["pc2"]) for r in dirty.collect()}
+    assert a == b and len(a) == 50
 
 
 def test_projection_matches_numpy_reference(spark, sf_dir):
+    """On the fixture the moments equal numpy's int64 ones exactly, and
+    pc1/pc2 are the exact dot products of the ppm vector minus the
+    rounded ppm mean with the two components."""
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    rows = emb.filter(F.col("embedding").isNotNull()).collect()
-    x = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    ids = np.asarray([r["vec_id"] for r in rows])
-    mu = x.mean(axis=0)
-    cov = np.cov(x, rowvar=False, bias=True)
-    _, vecs = np.linalg.eigh(cov)
-    ref = vecs[:, -1]
-    if ref[int(np.argmax(np.abs(ref)))] < 0:
-        ref = -ref
-    expected = dict(zip(ids.tolist(), np.round((x - mu) @ ref, 4).tolist()))
-    got = {
-        r["vec_id"]: r["pc1"]
-        for r in pca_top_component_projection(emb, dim=64).collect()
-    }
-    assert len(got) == len(expected)
-    mismatches = [
-        k for k in expected if abs(got[k] - expected[k]) > 2e-4
+    rows = emb.filter(F.col("embedding").isNotNull()).orderBy("vec_id").collect()
+    e = np.rint(np.array([r["embedding"] for r in rows], dtype=np.float64) * 1e6)
+    e = e.astype(np.int64)
+    n, sums, g = int_moments(quantize_ppm(emb), dim=64)
+    assert n == len(rows)
+    assert sums == e.sum(axis=0).tolist()
+    assert g == (e.T @ e).tolist()
+    cov = [[n * g[i][j] - sums[i] * sums[j] for j in range(64)] for i in range(64)]
+    comps = top2_components_exact(cov, iters=8)
+    mu = [
+        (1 if v >= 0 else -1) * ((2 * abs(v) + n) // (2 * n)) for v in sums
     ]
-    assert not mismatches, mismatches[:5]
+    want = {
+        r["vec_id"]: tuple(
+            sum((int(a) - m) * c for a, m, c in zip(row, mu, comp)) for comp in comps
+        )
+        for r, row in zip(rows, e.tolist())
+    }
+    got = {
+        r["vec_id"]: (r["pc1"], r["pc2"])
+        for r in pca_top2_exact_projection(emb, iters=8, dim=64).collect()
+    }
+    assert got == want
 
 
 def test_mean_vector(spark):
@@ -129,46 +146,32 @@ def test_mean_vector(spark):
 
 
 def test_top_components_match_eigh(spark):
-    from flink_application_spark.operators.pca import top_components
-
     x = _rng_mat()
     x[:, 1] *= 3.0  # second dominant direction so top-2 is unambiguous
-    mu = x.mean(axis=0)
-    g, n = collect_gram(_df(spark, x), dim=8)
-    comps = top_components(g, n, mu, k=2)
-    cov = g / n - np.outer(mu, mu)
-    w, vecs = np.linalg.eigh(cov)
-    for i in range(2):
-        ref = vecs[:, -1 - i]
-        if ref[int(np.argmax(np.abs(ref)))] < 0:
-            ref = -ref
-        np.testing.assert_allclose(comps[i], ref, atol=1e-4)
-    # orthogonality of extracted components
-    assert abs(float(comps[0] @ comps[1])) < 1e-6
+    u, v = top2_components_exact(_int_cov(spark, x), iters=30)
+    assert _abs_cos(u, _eigh_top(x, 0)) >= 1 - 1e-9
+    assert _abs_cos(v, _eigh_top(x, 1)) >= 1 - 1e-9
+    # the Gram–Schmidt step keeps component 2 orthogonal to component 1
+    assert _abs_cos(u, v) < 1e-5
 
 
 def test_topk_projection_matches_numpy(spark):
-    from flink_application_spark.operators.pca import pca_topk_projection
-
     x = _rng_mat(n=60)
     x[:, 1] *= 3.0
-    mu = x.mean(axis=0)
-    cov = np.cov(x, rowvar=False, bias=True)
-    _, vecs = np.linalg.eigh(cov)
-    refs = []
-    for i in range(2):
-        r = vecs[:, -1 - i]
-        if r[int(np.argmax(np.abs(r)))] < 0:
-            r = -r
-        refs.append(r)
+    comps = top2_components_exact(_int_cov(spark, x), iters=30)
     got = {
         r["vec_id"]: (r["pc1"], r["pc2"])
-        for r in pca_topk_projection(_df(spark, x), k=2, dim=8).collect()
+        for r in pca_top2_exact_projection(_df(spark, x), iters=30, dim=8).collect()
     }
-    centered = x - mu
-    for i in range(60):
-        assert abs(got[i][0] - round(float(centered[i] @ refs[0]), 4)) <= 2e-4
-        assert abs(got[i][1] - round(float(centered[i] @ refs[1]), 4)) <= 2e-4
+    centered = x - x.mean(axis=0)
+    for k, comp in enumerate(comps):
+        c = np.asarray(comp, dtype=np.float64)
+        # sign and scale of the float projection on the same direction
+        want = centered @ (c / np.linalg.norm(c))
+        scale = 1e6 * np.linalg.norm(c)
+        for i in range(60):
+            assert abs(got[i][k] / scale - want[i]) <= 1e-4, (k, i)
+        assert _abs_cos(c, _eigh_top(x, k)) >= 1 - 1e-9
 
 
 def test_gram_skips_null_embeddings(spark):

@@ -47,7 +47,6 @@ INTENTIONALLY_QUADRATIC = {
     "emb_label_noise_knn",  # twin: emb_label_noise_knn_ann
     "doc_text_search_topk",  # twin: doc_text_search_topk_ann
     "emb_pq_adc_topk",  # twin: emb_ivfadc_topk (probe-pruned ADC, oracle-checked)
-    "emb_pq_trained_adc_topk",  # flat-PQ scan like its seeded oracle; pruned form is emb_ivfadc_trained_topk
     "emb_pq_exact_trained_adc_topk",  # flat-PQ ADC by design (round 8); probe-pruned exact sibling is emb_ivf_exact_trained_topk
     "emb_binary_hamming_topk",  # binary codes FLAT scan by design (two popcounts/candidate — FAISS IndexBinaryFlat)
     "emb_radius_search",  # twin: emb_radius_search_ann (IVF probe candidates, same radius filter)

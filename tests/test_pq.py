@@ -76,14 +76,22 @@ def test_trained_codebooks_beat_seeded(spark):
     deterministic placeholder — per-subspace Lloyd's training must
     strictly cut total quantization error (guaranteed: it initializes
     FROM the seeds and Lloyd's monotonically reduces MSE) and must not
-    lose recall vs the seeds at the bench scale (sf0.1; measured
-    uplift 0.09→0.10 recall@5 and 2433→1667 recon_d2 at m=4,k=8)."""
-    from flink_application_spark.operators.pq import trained_codebooks
+    lose recall vs the seeds at the bench scale (sf0.1, m=4, k=8).
+    The training is the exact-integer Lloyd's loop; its ppm codewords
+    scale back to floats for the float encoder."""
+    from flink_application_spark.operators.kmeans_exact import (
+        SCALE,
+        lloyd_ppm,
+        quantize_ppm,
+    )
 
     sf = "/root/testdata/sf0.1"
     emb = register_views(spark, sf, tables=("embeddings",))["embeddings"]
     seed = seed_codebooks(emb, m=4, k=8, dim=_DIM)
-    trained = trained_codebooks(emb, m=4, k=8, dim=_DIM, max_iters=10)
+    trained = [
+        [[c / SCALE for c in cv] for cv in book]
+        for book in lloyd_ppm(quantize_ppm(emb), 8, 10, 4)[0]
+    ]
 
     recon = {}
     for name, books in (("seed", seed), ("trained", trained)):
@@ -135,23 +143,3 @@ def test_pq_encode_arrow_bit_equals_fold(spark, sf_dir):
     fold = {r["vec_id"]: tuple(r)[1:] for r in pq_encode(emb, books, _DIM, impl="fold").collect()}
     arrow = {r["vec_id"]: tuple(r)[1:] for r in pq_encode(emb, books, _DIM, impl="arrow").collect()}
     assert fold == arrow
-
-
-def test_trained_codebooks_local_equals_distributed_at_full_coverage(spark):
-    """method='local' (default, uniform md5 bottom-k sample) must equal
-    method='distributed' bit-for-bit when the sample covers the corpus
-    — the guarantee that makes 'local' a pure speed choice at fixture
-    scales (and an unbiased sample above them, see
-    kmeans.uniform_sample_rows)."""
-    import numpy as np
-
-    from flink_application_spark.operators.pq import trained_codebooks
-
-    emb = register_views(spark, "/root/testdata/sf0.001", tables=("embeddings",))[
-        "embeddings"
-    ]
-    loc = trained_codebooks(emb, m=4, k=8, dim=_DIM, max_iters=4, method="local")
-    dist = trained_codebooks(
-        emb, m=4, k=8, dim=_DIM, max_iters=4, method="distributed"
-    )
-    np.testing.assert_allclose(np.array(loc), np.array(dist), rtol=0, atol=1e-9)

@@ -29,6 +29,9 @@ from flink_application_spark.plans.registry import REGISTRY, _load_all
 # (the full window is pinned exactly by
 # test_first_50_is_exactly_the_curated_window).
 MUST_BE_IN_WINDOW = {
+    # the two queries ported onto the exact-integer trainers
+    "emb_ivfadc_trained_topk",
+    "emb_pca_top2_projection",
     # round-12 rotation: the r06 residue (oldest driver rows left)
     "emb_lsh_multiprobe_topk",
     "emb_multiprobe_recall_curve",
@@ -66,6 +69,12 @@ RENAMED = {
     # became the exact-integer ridge trainer profile with a full
     # MATERIALIZED-CTE training-replay oracle.
     "emb_lr_train_profile": "emb_lr_train_exact_profile",
+    # the float k-means, PQ, IVF and PCA trainers' queries, retired
+    # onto their exact-integer twins (the last one's pc1 column)
+    "emb_kmeans_fit_profile": "emb_kmeans_fit_exact_profile",
+    "emb_pq_trained_adc_topk": "emb_pq_exact_trained_adc_topk",
+    "emb_ivf_ann_topk": "emb_ivf_exact_trained_topk",
+    "emb_pca_top_component": "emb_pca_top2_projection",
 }
 
 

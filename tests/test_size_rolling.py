@@ -20,9 +20,10 @@ from pyspark.sql import functions as F
 from flink_application_spark.sources.streams import file_stream
 from flink_application_spark.streaming.sinks import (
     SizeCalibratedRoller,
-    _collect_batch,
     _commit_arrow_batch,
 )
+
+from arrow_batches import collect_batch
 
 _TARGET = 64 * 1024  # 64 KiB stand-in for the 110 MB production cap
 
@@ -31,7 +32,7 @@ def _write_batch(df, root, batch_id, partition_by=()):
     """Commit ``df`` as ``root/_batch=<batch_id>``, one file per
     partition directory."""
     return _commit_arrow_batch(
-        _collect_batch(df, partition_by), root, batch_id, partition_by, None
+        collect_batch(df, partition_by), root, batch_id, partition_by, None
     )
 
 
@@ -61,7 +62,11 @@ def test_size_rolled_sink_respects_byte_ceiling(spark, wide_rows_dir, tmp_path):
     out = str(tmp_path / "sink")
     stream = file_stream(spark, str(wide_rows_dir), max_files_per_trigger=1)
     q = (
-        stream.writeStream.foreachBatch(SizeCalibratedRoller(out, (), _TARGET, 50))
+        stream.writeStream.foreachBatch(
+            lambda df, bid, roller=SizeCalibratedRoller(out, (), _TARGET, 50): (
+                roller.write_arrow(collect_batch(df, ()), bid)
+            )
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -86,9 +91,10 @@ def test_size_rolled_sink_batch_replay_is_noop(spark, tmp_path):
     out = str(tmp_path / "sink")
     roller = SizeCalibratedRoller(out, (), _TARGET, 100)
     batch = spark.range(100).select(F.col("id"), F.md5(F.col("id").cast("string")).alias("h"))
-    roller(batch, 7)
+    roller.write_arrow(collect_batch(batch, ()), 7)
     n1 = spark.read.parquet(out).count()
-    roller(batch, 7)  # checkpoint replay overwrites its own _batch dir
+    # checkpoint replay overwrites its own _batch dir
+    roller.write_arrow(collect_batch(batch, ()), 7)
     assert spark.read.parquet(out).count() == n1 == 100
 
 
@@ -101,7 +107,7 @@ def test_first_batch_ceiling_holds_for_wide_rows(spark, tmp_path):
     roller = SizeCalibratedRoller(out, (), _TARGET)  # no initial cap
     payload = F.concat(*[F.md5(F.concat(F.col("id"), F.lit(i))) for i in range(256)])
     wide = spark.range(200).select(F.col("id"), payload.alias("payload"))
-    roller(wide, 0)
+    roller.write_arrow(collect_batch(wide, ()), 0)
     sizes = [os.path.getsize(f) for f in _data_files(out)]
     assert sizes and max(sizes) <= _TARGET * 1.25, sizes
 
