@@ -61,6 +61,45 @@ def test_assign_matches_numpy(emb, xs):
     assert got == {int(i): int(c) for i, c in zip(ids, want)}
 
 
+def test_update_centroids_matches_numpy_means(emb, xs):
+    """One exact round's centroids are the seed assignment's integer
+    coordinate means, rounded half away from zero — equal to numpy's
+    float means to within half a ppm step."""
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
+
+    _, x = xs
+    q = np.round(x * 1e6).astype(np.int64)
+    cents, _ = kmeans_fit_exact(emb, K, iters=1)
+    new = np.array(cents)
+    a = _np_assign(q, q[:K])
+    for c in range(K):
+        m = a == c
+        assert m.any()
+        mean = q[m].sum(axis=0) / m.sum()
+        assert np.array_equal(new[c], np.sign(mean) * np.floor(np.abs(mean) + 0.5))
+        assert np.abs(new[c] - mean).max() <= 0.5
+
+
+def test_fit_cost_non_increasing(emb, xs):
+    """Each round's inertia matches the numpy replica exactly and never
+    grows by more than the ppm rounding of the means can add: moving a
+    cluster's centroid from its mean to the rounded mean costs at most
+    n_c·d/4, so inertia_{t+1} <= inertia_t + N·d/4."""
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
+
+    _, x = xs
+    q = np.round(x * 1e6).astype(np.int64)
+    _, prof = kmeans_fit_exact(emb, K, iters=4)
+    costs = [r[1] for r in prof]
+    want = []
+    for t in range(4):
+        cents, _ = _np_lloyd_ppm(q, K, t)
+        want.append(int(((q[:, None, :] - cents[None]) ** 2).sum(axis=2).min(axis=1).sum()))
+    assert costs == want
+    slack = q.shape[0] * q.shape[1] // 4
+    assert all(b <= a + slack for a, b in zip(costs, costs[1:])), costs
+
+
 def test_fit_matches_numpy_lloyd(emb, xs):
     from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
 
@@ -75,6 +114,19 @@ def test_fit_matches_numpy_lloyd(emb, xs):
     assert [r[0] for r in prof] == [1, 2, 3, 4, 5]
     assert prof[0][1] == int(seed_d2.sum())
     assert prof[-1][2] == int(np.abs(ref_cents).sum())
+
+
+def test_empty_cluster_keeps_zero_vector(spark):
+    """Two far groups, k=3: all three seeds sit at the origin, so
+    clusters 1 and 2 start empty (ties go to cluster 0). An empty
+    cluster keeps its previous centroid — here the zero vector — while
+    cluster 1 later takes the origin group."""
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
+
+    rows = [(i, [0.0, 0.0]) for i in range(3)] + [(10 + i, [100.0, 100.0]) for i in range(3)]
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    cents, _ = kmeans_fit_exact(df, 3, iters=3)
+    assert cents == [[100_000_000, 100_000_000], [0, 0], [0, 0]]
 
 
 def test_assign_arrow_bit_equals_fold(spark, sf_dir):
