@@ -52,6 +52,18 @@ DSUB = 8  # dims per subspace (m · dsub = 64)
 KCODE = 8  # codewords per subspace
 ITERS = 3  # Lloyd's rounds per codebook
 
+# emb_ivfadc_trained_topk's shape, read by both `ivfadc_exact_topk` and
+# its replay: coarse cells and their exact Lloyd's rounds, residual
+# subspaces (KCODE codewords, ITERS rounds each), probed cells, queries
+# and neighbours per query
+IVF_CELLS = 8
+IVF_COARSE_ITERS = 5
+IVF_M = 4
+IVF_PROBE = 3
+IVF_QUERIES = 5
+IVF_TOPK = 5
+_IVF_DSUB = M * DSUB // IVF_M
+
 
 def pq_exact_train(emb: DataFrame) -> list[list[list[int]]]:
     """Per-subspace exact-integer codebooks: M lists of KCODE ppm
@@ -238,74 +250,55 @@ def pq_exact_adc_oracle_sql(
     return rank_topk_sql(parts, "adc_q", k)
 
 
-def ivfadc_exact_topk(
-    emb: DataFrame,
-    coarse: list[list[int]],
-    k: int = 5,
-    *,
-    m: int = 4,
-    k_code: int = 8,
-    iters: int = ITERS,
-    n_probe: int = 3,
-    n_queries: int = 5,
-    dim: int = 64,
-) -> DataFrame:
+def ivfadc_exact_topk(emb: DataFrame) -> DataFrame:
     """(query_id, vec_id, est_d2, rank): IVFADC (TPAMI'11 §IV) over
-    exact-integer quantizers. `coarse` holds the trained ppm coarse
-    centroids (`kmeans_fit_exact`); each vector is routed to its
-    nearest one and its RESIDUAL (ppm vector − centroid, exact
-    integers) is product-quantized with `lloyd_ppm` codebooks
-    (m × k_code codewords, `iters` Lloyd's rounds each). Queries probe
-    their n_probe nearest cells; est_d2 sums m lookups in per-(query,
-    cell) exact-d² ADC tables of the query residual — an exact BIGINT,
-    so the whole stack replays in `ivfadc_exact_oracle_sql`."""
+    exact-integer quantizers, trained in the call. The IVF_CELLS coarse
+    ppm centroids are IVF_COARSE_ITERS `lloyd_ppm` rounds; each vector
+    is routed to its nearest one and its RESIDUAL (ppm vector −
+    centroid, exact integers) is product-quantized with `lloyd_ppm`
+    codebooks (IVF_M × KCODE codewords, ITERS rounds each). Queries
+    probe their IVF_PROBE nearest cells; est_d2 sums IVF_M lookups in
+    per-(query, cell) exact-d² ADC tables of the query residual — an
+    exact BIGINT, so the whole stack replays in
+    `ivfadc_exact_oracle_sql`."""
+    q = quantize_ppm(emb)
+    coarse = lloyd_ppm(q, IVF_CELLS, IVF_COARSE_ITERS)[0][0]
     if not coarse:  # empty / all-NULL corpus: no index, no neighbors
         return emb.sparkSession.createDataFrame(
             [], "query_id bigint, vec_id bigint, est_d2 bigint, rank int"
         )
-    dsub = dim // m
     table = "array(" + ", ".join(int_array(cv) for cv in coarse) + ")"
 
     def residual(vec: str) -> Column:
         return F.expr(f"zip_with({vec}, element_at({table}, cluster + 1), (a, b) -> a - b)")
 
-    assigned, probes = ivf_cells(quantize_ppm(emb), coarse, n_probe, n_queries)
+    assigned, probes = ivf_cells(q, coarse, IVF_PROBE, IVF_QUERIES)
     res = assigned.select("vec_id", "cluster", residual("e").alias("e"))
-    books = lloyd_ppm(res, k_code, iters, m)[0]
-    coded = res.select("vec_id", "cluster", _codes(books, dsub))
+    books = lloyd_ppm(res, KCODE, ITERS, IVF_M)[0]
+    coded = res.select("vec_id", "cluster", _codes(books, _IVF_DSUB))
     # one exact-d² table per (query, probed cell, subspace) of the query
     # residual; a candidate's score is then m lookups + adds, never a fold
     probes = probes.select(
         "query_id", "cluster", residual("qv").alias("e")
-    ).select("query_id", "cluster", *_adc_tables(books, dsub))
+    ).select("query_id", "cluster", *_adc_tables(books, _IVF_DSUB))
     cand = (
         coded.join(F.broadcast(probes), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _adc_sum(m).alias("est_d2"))
+        .select("query_id", "vec_id", _adc_sum(IVF_M).alias("est_d2"))
     )
-    return rank_topk(cand, "est_d2", k)
+    return rank_topk(cand, "est_d2", IVF_TOPK)
 
 
-def ivfadc_exact_oracle_sql(
-    k: int = 5,
-    *,
-    n_centroids: int = 8,
-    coarse_iters: int = 5,
-    m: int = 4,
-    k_code: int = 8,
-    iters: int = ITERS,
-    n_probe: int = 3,
-    n_queries: int = 5,
-    dim: int = 64,
-) -> str:
+def ivfadc_exact_oracle_sql() -> str:
     """The DuckDB replay of `ivfadc_exact_topk` with the coarse
     quantizer trained in place: the shared kmeans_exact unroll, the
     final assignment and residuals, one prefixed residual-codebook
     unroll per subspace over `r[lo:hi]` slices, then long-format codes,
     per-(query, cell) residual ADC scores and the top-k window."""
-    dsub = dim // m
-    cf = f"c{coarse_iters}"
-    parts = ivf_cell_ctes(n_centroids, coarse_iters, n_probe, n_queries, dim)
+    cf = f"c{IVF_COARSE_ITERS}"
+    parts = ivf_cell_ctes(
+        IVF_CELLS, IVF_COARSE_ITERS, IVF_PROBE, IVF_QUERIES, M * DSUB
+    )
     parts.append(
         f"""res AS MATERIALIZED (
   SELECT a.vec_id, a.cluster,
@@ -313,7 +306,7 @@ def ivfadc_exact_oracle_sql(
   FROM af a JOIN {cf} c USING (cluster)
 )"""
     )
-    parts += _codebook_ctes("res", m, dsub, k_code, iters)
+    parts += _codebook_ctes("res", IVF_M, _IVF_DSUB, KCODE, ITERS)
     parts.append(
         f"""qres AS (
   SELECT p.query_id, p.cluster,
@@ -326,8 +319,8 @@ def ivfadc_exact_oracle_sql(
             "qsub",
             (
                 f"  SELECT query_id, cluster, {s} AS s,"
-                f" qr[{s * dsub + 1}:{(s + 1) * dsub}] AS qv FROM qres"
-                for s in range(m)
+                f" qr[{s * _IVF_DSUB + 1}:{(s + 1) * _IVF_DSUB}] AS qv FROM qres"
+                for s in range(IVF_M)
             ),
         )
     )
@@ -344,4 +337,4 @@ def ivfadc_exact_oracle_sql(
   GROUP BY q.query_id, a.vec_id
 )"""
     )
-    return rank_topk_sql(parts, "est_d2", k)
+    return rank_topk_sql(parts, "est_d2", IVF_TOPK)

@@ -78,10 +78,9 @@ _GRAPH_SCHEMA = "vec_id bigint, nbr_id bigint, d2 bigint, rank int"
 # makes the honest per-call cost cheap instead. The memos below hold
 # driver-side TRAINING artifacts; they are keyed by applicationId
 # (never survive a process) and every invocation of bench.py/the
-# driver gate recomputes them from parquet. One headline query reads
-# one: emb_ivfadc_trained_topk takes its coarse quantizer from the
-# kmeans memo, so bench.py's 2nd and 3rd timed runs of it (the median)
-# skip the coarse training its 1st run did.
+# driver gate recomputes them from parquet. No bench-headline query
+# reads them: emb_ivfadc_trained_topk trains its own coarse quantizer
+# in the call.
 
 
 def near_dup_pairs_cached(

@@ -27,6 +27,12 @@ from flink_application_spark.operators.pq import (
     pq_encode,
 )
 from flink_application_spark.operators.pq_exact import (
+    ITERS,
+    IVF_CELLS,
+    IVF_COARSE_ITERS,
+    IVF_M,
+    IVF_PROBE,
+    KCODE,
     ivfadc_exact_oracle_sql,
     ivfadc_exact_topk,
 )
@@ -258,38 +264,18 @@ def q_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_ivfadc_trained_topk",
-    ivfadc_exact_oracle_sql(
-        _TOPK,
-        n_centroids=_NC,
-        m=_M,
-        k_code=_KC,
-        n_probe=_PROBE,
-        n_queries=_NQ,
-        dim=_DIM,
-    ),
+    ivfadc_exact_oracle_sql(),
     doc=f"IVFADC with TRAINED quantizers (TPAMI'11 §IV as written), "
-    f"exact-integer end to end: the {_NC}-cell coarse quantizer is 5 "
-    "exact Lloyd's rounds over ppm vectors (the kmeans_exact memo "
-    f"shared with emb_ivf_exact_trained_topk), the {_M}×{_KC} residual "
-    "codebooks 3 exact rounds over integer ppm residuals; codes, "
-    f"{_PROBE}-probe choice and the BIGINT ADC estimates follow. Same "
+    f"exact-integer end to end and trained in the call: the "
+    f"{IVF_CELLS}-cell coarse quantizer is {IVF_COARSE_ITERS} exact "
+    f"Lloyd's rounds over ppm vectors, the {IVF_M}×{KCODE} residual "
+    f"codebooks {ITERS} exact rounds over integer ppm residuals; codes, "
+    f"{IVF_PROBE}-probe choice and the BIGINT ADC estimates follow. Same "
     "plan shape as the seeded twin emb_ivfadc_topk (equi probe join, "
     "codes-only ADC); DuckDB replays the whole lifecycle (coarse "
     "unroll + one prefixed residual unroll per subspace).",
     tags=("embeddings", "quantization", "ann", "similarity", "training", "exact"),
 )
 def q_ivfadc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.plans._memo import kmeans_fit_exact_cached
-
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    coarse, _ = kmeans_fit_exact_cached(spark, emb, sf_dir, _NC, 5)
-    return ivfadc_exact_topk(
-        emb,
-        coarse,
-        _TOPK,
-        m=_M,
-        k_code=_KC,
-        n_probe=_PROBE,
-        n_queries=_NQ,
-        dim=_DIM,
-    )
+    return ivfadc_exact_topk(emb)

@@ -52,7 +52,7 @@ ph AS (
 def _pca_top2_oracle() -> str:
     from flink_application_spark.operators.pca_exact import pca_top2_exact_oracle_sql
 
-    return pca_top2_exact_oracle_sql(iters=8, dim=64)
+    return pca_top2_exact_oracle_sql()
 
 
 @register(
@@ -62,18 +62,20 @@ def _pca_top2_oracle() -> str:
     "table on the exact-integer recipe (operators/pca_exact.py): one "
     "Gram pass gives n, the coordinate sums s and the Gram G of the "
     "ppm vectors; the covariance n·G − s·sᵀ is exact; component 1 is "
-    "8 max-|w| power rounds with truncating division, component 2 the "
-    "same rounds plus an integer Gram–Schmidt step against component "
-    "1; pc1/pc2 are exact BIGINT dot products of the mean-centered "
-    "ppm vector with each component. DuckDB replays every stage as "
-    "MATERIALIZED HUGEINT CTEs.",
+    "TOP2_ITERS (500) max-|w| power rounds with truncating division, "
+    "component 2 the same rounds plus an integer Gram–Schmidt step "
+    "against component 1 (|cos| to numpy eigh's top two ≥ 1 − 1e-9 on "
+    "the sf0.001 fixture, tests/test_pca.py); pc1/pc2 are exact BIGINT "
+    "dot products of the mean-centered ppm vector with each component. "
+    "DuckDB replays the moments as MATERIALIZED HUGEINT CTEs and the "
+    "power rounds as recursive CTEs over HUGEINT lists.",
     tags=("embeddings", "pca", "training", "deterministic"),
 )
 def q_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.pca_exact import pca_top2_exact_projection
 
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    return pca_top2_exact_projection(emb, iters=8, dim=64).select(
+    return pca_top2_exact_projection(emb).select(
         "vec_id", "label", "pc1", "pc2"
     )
 

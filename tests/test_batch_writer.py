@@ -192,3 +192,27 @@ def test_memory_writer_sends_each_batch_once(spark):
     write(pa.table({"id": [100, 101]}), 2)  # replay of batch 2
     got = sorted(r.id for r in spark.table("memory_writer_once").collect())
     assert got == sorted(batches[0] + batches[1] + [100, 101] + batches[3])
+
+
+def test_memory_writer_folds_batches(spark, monkeypatch):
+    """Every MEMORY_FOLD_BATCHES batches the memory sink folds its
+    per-batch relations into one local checkpoint, so the view's plan
+    has a bounded number of leaves; a replay of a folded batch and of
+    a recent one still replaces their rows, each row once."""
+    import pyarrow as pa
+
+    from flink_application_spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "MEMORY_FOLD_BATCHES", 2)
+    write = sinks.memory_table_writer(spark, "memory_writer_fold")
+    batches = {b: [10 * b, 10 * b + 1] for b in range(7)}
+    for b, ids in batches.items():
+        write(pa.table({"id": ids}), b)
+        plan = spark.table("memory_writer_fold")._jdf.queryExecution().analyzed()
+        assert plan.collectLeaves().size() <= 2, b
+    batches[1] = [100]  # folded
+    batches[6] = [106, 107, 108]  # not yet folded
+    for b in (1, 6):
+        write(pa.table({"id": batches[b]}), b)
+    got = sorted(r.id for r in spark.table("memory_writer_fold").collect())
+    assert got == sorted(i for ids in batches.values() for i in ids)

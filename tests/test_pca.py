@@ -20,6 +20,7 @@ from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
 from flink_application_spark.operators.pca import collect_gram, mean_vector
 from flink_application_spark.operators.pca_exact import (
+    TOP2_ITERS,
     int_moments,
     pca_top2_exact_projection,
     top2_components_exact,
@@ -110,19 +111,27 @@ def test_projection_null_consistency(spark):
 
 
 def test_projection_matches_numpy_reference(spark, sf_dir):
-    """On the fixture the moments equal numpy's int64 ones exactly, and
-    pc1/pc2 are the exact dot products of the ppm vector minus the
-    rounded ppm mean with the two components."""
+    """On the fixture the registered query computes the two principal
+    components: its moments equal numpy's int64 ones exactly, the two
+    TOP2_ITERS-round components match numpy eigh's top two
+    (|cos| ≥ 1 − 1e-9, though the fixture's top eigenvalue ratio is
+    only ≈ 1.07), and pc1/pc2 are the exact dot products of the ppm
+    vector minus the rounded ppm mean with them, within 2e-4 of the
+    float projection onto eigh's components."""
+    from flink_application_spark.plans.registry import REGISTRY_GET
+
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
     rows = emb.filter(F.col("embedding").isNotNull()).orderBy("vec_id").collect()
-    e = np.rint(np.array([r["embedding"] for r in rows], dtype=np.float64) * 1e6)
-    e = e.astype(np.int64)
+    x = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    e = np.rint(x * 1e6).astype(np.int64)
     n, sums, g = int_moments(quantize_ppm(emb), dim=64)
     assert n == len(rows)
     assert sums == e.sum(axis=0).tolist()
     assert g == (e.T @ e).tolist()
     cov = [[n * g[i][j] - sums[i] * sums[j] for j in range(64)] for i in range(64)]
-    comps = top2_components_exact(cov, iters=8)
+    comps = top2_components_exact(cov, iters=TOP2_ITERS)
+    for k, comp in enumerate(comps):
+        assert _abs_cos(comp, _eigh_top(x, k)) >= 1 - 1e-9, k
     mu = [
         (1 if v >= 0 else -1) * ((2 * abs(v) + n) // (2 * n)) for v in sums
     ]
@@ -134,9 +143,17 @@ def test_projection_matches_numpy_reference(spark, sf_dir):
     }
     got = {
         r["vec_id"]: (r["pc1"], r["pc2"])
-        for r in pca_top2_exact_projection(emb, iters=8, dim=64).collect()
+        for r in REGISTRY_GET("emb_pca_top2_projection").spark(spark, sf_dir).collect()
     }
     assert got == want
+    centered = x - x.mean(axis=0)
+    for k, comp in enumerate(comps):
+        c = np.asarray(comp, dtype=np.float64)
+        ref = _eigh_top(x, k)
+        ref = ref if ref @ c > 0 else -ref
+        scale = 1e6 * np.linalg.norm(c)
+        for r, proj in zip(rows, centered @ ref):
+            assert abs(got[r["vec_id"]][k] / scale - proj) <= 2e-4, (k, r["vec_id"])
 
 
 def test_mean_vector(spark):
