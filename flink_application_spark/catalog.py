@@ -1,8 +1,16 @@
-"""Table loading / view registration for the driver's parquet testdata.
+"""Table handles for the driver's parquet testdata.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file each under a
 scale-factor directory.
+
+`table` is the one entry point. It keeps one handle per (application,
+table path, the file's inode / mtime_ns / size): a plan, not data —
+nothing is persisted, and a file rewritten at the same path is listed
+and loaded again. Every call also (re)binds the temp view named after
+the table, so a dropped view comes back and a second sf_dir re-points
+it. A new application forgets the handles of the ones before it
+(`_keep_application`, the rule every session memo follows).
 """
 
 from __future__ import annotations
@@ -67,17 +75,30 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view named after the table.
+def _keep_application(memo: dict[tuple, object], app_id: str) -> None:
+    """Forget the entries of every application but ``app_id`` — a
+    stopped session's values can never be read again."""
+    for key in [k for k in memo if k[0] != app_id]:
+        del memo[key]
 
-    Views are session-scoped; re-registering with a different sf_dir
-    re-points them (used by tests that sweep scale factors).
-    """
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+
+# (applicationId, path, st_ino, st_mtime_ns, st_size) -> loaded frame
+_HANDLES: dict[tuple, DataFrame] = {}
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``name`` table of ``sf_dir``, bound as the temp view ``name``.
+
+    Calls `load_table` once per file version per application; later
+    calls return the same handle."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, path, st.st_ino, st.st_mtime_ns, st.st_size)
+    df = _HANDLES.get(key)
+    if df is None:
+        _keep_application(_HANDLES, key[0])
+        for stale in [k for k in _HANDLES if k[1] == path]:
+            del _HANDLES[stale]  # an older version of this file
+        df = _HANDLES[key] = load_table(spark, sf_dir, name)
+    df.createOrReplaceTempView(name)
+    return df

@@ -3,10 +3,12 @@ shared by several registered queries (the lr_queries `_FIT_CACHE`
 pattern, hoisted so different plan modules can share one run).
 
 Every cached value is a pure function of (application, sf_dir,
-params) — bit-deterministic by the operators' own contracts. The
-kmeans memo is genuinely bounded driver state (k·d integers), and it
-and the corpus-count memo hold the current application's entries
-only. The
+params) — bit-deterministic by the operators' own contracts. Every
+module memo — these, lr_queries' fit cache and `catalog.table`'s
+handles — follows one rule: it holds the current application's
+entries only (`catalog._keep_application`), so a stopped session's
+values never outlive the next one's first call. The kmeans memo is
+genuinely bounded driver state (k·d integers). The
 kNN-graph memo holds n·k edge ids — corpus-proportional — so it is
 CAPPED (round-9 verdict item 2): up to ``MEMO_EDGE_BUDGET`` edges the
 rows are collected and frames rebuilt per call via
@@ -21,7 +23,9 @@ cache is not."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from flink_application_spark.catalog import _keep_application, table
 
 _KMEANS: dict[tuple, tuple[list[list[int]], list]] = {}
 # value is ("rows", edge_rows, profile) | ("frame", persisted_df, profile)
@@ -44,11 +48,11 @@ def _drop_application(memo: dict[tuple, DataFrame], app_id: str) -> None:
         memo.pop(key).unpersist()
 
 
-def _keep_application(memo: dict[tuple, object], app_id: str) -> None:
-    """Forget the entries of every application but ``app_id`` — a
-    stopped session's values can never be read again."""
-    for key in [k for k in memo if k[0] != app_id]:
-        del memo[key]
+def nonnull_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sf_dir embeddings rows whose vector is not NULL — the corpus
+    every memo consumer and graph/quantizer query reads (a NULL cell
+    would break their dense numpy batches and integer unrolls)."""
+    return table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
 
 def corpus_count_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> int:
@@ -170,6 +174,7 @@ def _cache_edge_frame(
     from pyspark import StorageLevel
 
     if key not in _GRAPH:
+        _keep_application(_GRAPH, key[0])
         prof: list = []
         g = build(prof)
         if n_vertices * k <= MEMO_EDGE_BUDGET:

@@ -34,11 +34,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.ivf_exact import (
     ivf_exact_trained_oracle_sql,
 )
 from flink_application_spark.operators.pq_exact import pq_exact_adc_oracle_sql
+from flink_application_spark.plans._memo import (
+    corpus_count_cached,
+    kmeans_fit_exact_cached,
+    nonnull_embeddings,
+)
 from flink_application_spark.plans.registry import register
 
 _ANN = dict(n_centroids=16, n_probe=4)
@@ -127,16 +132,6 @@ cand AS MATERIALIZED (
 )"""
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL embeddings are filtered here (like every exact counterpart):
-    # the IVF assignment UDF builds a dense numpy batch and would raise
-    # on a None cell, breaking the "same downstream logic" twin contract
-    # asymmetrically
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
-
-
 @register(
     "emb_cosine_topk_ann",
     f"""
@@ -162,7 +157,7 @@ SELECT query_id, vec_id, cosine, rank FROM (
 def q_cosine_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import ivf_topk_seeded
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     return ivf_topk_seeded(emb.filter(F.col("vec_id") < 5), emb, k=10, **_ANN)
 
 
@@ -206,7 +201,7 @@ def q_knn_classify_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_vote,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     topk = ivf_topk_seeded(
         emb.filter(F.col("vec_id") < 10),
         emb.filter(F.col("vec_id") >= 10),
@@ -251,7 +246,7 @@ def q_mmr_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         mmr_rerank_cands,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     cands = ivf_topk_seeded(emb.filter(F.col("vec_id") < 5), emb, k=20, **_ANN)
     return mmr_rerank_cands(
         cands.select("query_id", "vec_id", "cosine"), emb, k_final=5, lam=0.7
@@ -313,7 +308,7 @@ def q_contrastive_triplets_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         mine_triplets,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     cands = ivf_topk_seeded(emb.filter(F.col("vec_id") < 20), emb, k=50, **_ANN)
     return mine_triplets(
         cands.select("query_id", "vec_id", "cosine"),
@@ -357,9 +352,8 @@ def q_label_noise_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_seeded,
         label_agreement,
     )
-    from flink_application_spark.plans._memo import corpus_count_cached
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     # full corpus as queries → candidate pairs ≈ n · n_probe · (n/k):
     # the one consumer whose pair volume clears the Arrow-scorer
     # threshold (~1M at sf0.1 — round-11's 19 s → 5.5 s A/B win). The
@@ -392,7 +386,7 @@ def q_radius_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_candidates_seeded,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     cand = ivf_candidates_seeded(emb.filter(F.col("vec_id") < 5), emb, **_ANN)
     return cand.filter(F.col("cosine") >= 0.25)
 
@@ -440,7 +434,7 @@ def q_text_search_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashing_trick_features,
     )
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     vecs = (
         hashing_trick_features(docs)
         .select(F.col("doc_id").alias("vec_id"), "embedding")
@@ -473,9 +467,8 @@ def q_ivf_exact_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.ivf_exact import (
         ivf_exact_trained_topk,
     )
-    from flink_application_spark.plans._memo import kmeans_fit_exact_cached
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     # shared with emb_kmeans_fit_exact_profile (same table, k, iters)
     cents, _ = kmeans_fit_exact_cached(spark, emb, sf_dir, 8, 5)
     return ivf_exact_trained_topk(
@@ -501,5 +494,5 @@ def q_ivf_exact_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pq_exact_trained_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.pq_exact import pq_exact_adc_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     return pq_exact_adc_topk(emb, k=10, n_queries=5)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.asof import asof_join
 from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.operators.enrichment import (
@@ -86,7 +86,7 @@ ASOF JOIN signups s ON c.user_id = s.user_id AND c.ts >= s.ts
     tags=("asof", "events", "join"),
 )
 def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     signups = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id", "ts")
@@ -136,7 +136,7 @@ JOIN (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click') c
 def q_events_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.streaming.interval_join import interval_join
 
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
     )

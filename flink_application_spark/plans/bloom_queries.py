@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _M = 1 << 16
@@ -208,5 +208,5 @@ FROM cover c JOIN exact e USING (doc_id)
     tags=("documents", "dedup", "bloom", "audit"),
 )
 def q_bloom_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return bloom_dedup_frame(docs)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import word_ngrams
 from flink_application_spark.plans.registry import register
 
@@ -63,7 +63,7 @@ WHERE rank <= {_TOP} AND n_docs >= 2
 def q_source_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.catalog import fan_out
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # the 5-gram transform is an interpreted HOF over every token
     # position — spread the single-row-group scan first
     grams = (

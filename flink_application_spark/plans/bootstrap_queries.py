@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import quality_score
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.text_queries import _QUALITY_SQL
@@ -214,5 +214,5 @@ def ci_report(partials: DataFrame) -> DataFrame:
     tags=("documents", "quality", "statistics", "bootstrap", "audit"),
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return ci_report(bootstrap_partials(scored_docs(docs)))

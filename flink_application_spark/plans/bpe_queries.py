@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.bpe import (
     bpe_learn,
     bpe_oracle_sql,
@@ -70,7 +70,7 @@ SELECT lhs, rhs, n_pairs, rank FROM ranked WHERE rank <= {_TOPK}
     tags=("documents", "vocab", "bpe"),
 )
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     counts = pair_counts(word_symbol_counts(docs))
     top = counts.orderBy(
         F.col("n_pairs").desc(), F.col("lhs"), F.col("rhs")
@@ -96,7 +96,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("documents", "vocab", "bpe"),
 )
 def q_bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rules = bpe_learn(docs, n_merges=_N_MERGES)
     return spark.createDataFrame(
         [
@@ -124,7 +124,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import tokens
     from flink_application_spark.operators.bpe import bpe_segment
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rules = bpe_learn(docs, n_merges=_N_MERGES)
     vocab = bpe_segment(word_symbol_counts(docs), rules).select("word", "n_sym")
     doc_words = docs.select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.operators.enrichment import (
     coalesce_enrich,
@@ -98,7 +98,7 @@ def fixture_cte(*names: str, extra: dict[str, str] | None = None) -> str:
 
 def cdr_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register base tables + derived CDR fixture views; return handles."""
-    register_views(spark, sf_dir, tables=("events",))
+    table(spark, sf_dir, "events")
     out: dict[str, DataFrame] = {}
     for name, sql in FIXTURE_VIEWS.items():
         df = spark.sql(sql)

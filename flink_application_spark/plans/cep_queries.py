@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.cep import match_pattern
 from flink_application_spark.plans.registry import register
 
@@ -225,7 +225,7 @@ WHERE NOT EXISTS (
     tags=("events", "cep"),
 )
 def q_signup_purchase_no_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type") == "signup").select(
         "user_id",
         F.col("ts").alias("signup_ts"),
@@ -276,7 +276,7 @@ def q_signup_purchase_no_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "cep"),
 )
 def q_cep_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     out = match_pattern(
         ev,
         key_col="user_id",
@@ -304,7 +304,7 @@ def q_cep_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "cep"),
 )
 def q_cep_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     out = match_pattern(
         ev,
         key_col="user_id",
@@ -332,7 +332,7 @@ def q_cep_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "cep"),
 )
 def q_cep_clean_checkout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     out = match_pattern(
         ev,
         key_col="user_id",

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -92,7 +92,7 @@ FROM chunks
     tags=("documents", "chunking", "rag"),
 )
 def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return chunk_windows(docs)
 
 
@@ -133,7 +133,7 @@ HAVING count(*) > 1
     tags=("documents", "chunking", "dedup"),
 )
 def q_chunk_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return (
         chunk_windows(docs)
         .groupBy("chunk_md5")
@@ -206,7 +206,7 @@ GROUP BY doc_id
     tags=("documents", "dedup", "chunking", "cdc"),
 )
 def q_cdc_chunk_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return cdc_chunk_report_frame(docs)
 
 

@@ -22,7 +22,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.vectors import dot
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.vectorize_queries import (
@@ -83,7 +83,7 @@ FROM scored
     tags=("documents", "classifier", "quality"),
 )
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     feats = hashing_trick_features(docs)
     s = linear_score(F.col("embedding"), classifier_weights(), _BIAS)
     return feats.select(

@@ -27,13 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, *tables: str):
-    views = register_views(spark, sf_dir, tables=tables)
-    return [views[t] for t in tables]
 
 
 # --------------------------------------------------------------------------
@@ -85,7 +80,7 @@ FROM scrubbed
     tags=("text", "cleaning", "documents"),
 )
 def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     planted = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -142,7 +137,7 @@ FROM toks
     tags=("text", "cleaning", "documents"),
 )
 def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     blocked = F.filter(toks, lambda x: x.isin(BLOCKLIST))
     return docs.select(
@@ -201,7 +196,7 @@ FROM spine s LEFT JOIN daily d USING (day)
     tags=("sql", "timeseries", "orders"),
 )
 def q_daily_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min(F.col("o_orderdate").cast("date")).alias("d0"),
         F.max(F.col("o_orderdate").cast("date")).alias("d1"),
@@ -267,7 +262,7 @@ GROUP BY user_id
     tags=("sql", "timeseries", "events"),
 )
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     seq = events.select(
@@ -320,7 +315,7 @@ FROM events
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.maintenance import zvalue_expr
 
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     x = F.col("user_id").bitwiseAND(F.lit(255))
     y = F.floor("value").cast("long").bitwiseAND(F.lit(255))
     return events.select(
@@ -405,7 +400,7 @@ FROM planted
     tags=("text", "cleaning", "pii", "documents"),
 )
 def q_pii_luhn_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     seeded = docs.withColumn(
         "base15",
         F.lpad(

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans import (
     assign_clusters,
     init_centroids,
@@ -68,7 +68,7 @@ FROM best WHERE rn = 1
     tags=("embeddings", "clustering"),
 )
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     emb = emb.filter(F.col("embedding").isNotNull())
     cents = init_centroids(emb, _K, "vec_id")
     return assign_clusters(emb, cents).select(
@@ -103,7 +103,7 @@ def _kmeans_exact_oracle() -> str:
 def q_kmeans_fit_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.plans._memo import kmeans_fit_exact_cached
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     # shared with emb_ivf_exact_trained_topk (same table, k, iters):
     # the fit is pure, so one training run serves both queries
     _, prof = kmeans_fit_exact_cached(spark, emb, sf_dir, _K, 5)

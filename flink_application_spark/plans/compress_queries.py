@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _LEVEL = 6  # zlib default — pinned so results are reproducible
@@ -75,5 +75,5 @@ def compression_signals(docs: DataFrame) -> DataFrame:
     tags=("documents", "quality"),
 )
 def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return compression_signals(docs)

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.vectors import cosine
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.similarity_queries import _COS
@@ -65,7 +65,7 @@ WHERE p.rn = 1 AND p.cand_label = p.query_label
     tags=("embeddings", "similarity", "training-prep"),
 )
 def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _STEPS = 4  # 1-hour window, 15-minute cumulate step
@@ -62,7 +62,7 @@ GROUP BY window_start, window_end, event_type
     tags=("sql", "window", "events", "streaming-op", "flink-parity"),
 )
 def q_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     return (
         cumulate_window(ev)
         .groupBy("window_start", "window_end", "event_type")

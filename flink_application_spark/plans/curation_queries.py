@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.classifier_queries import (
     _BIAS,
     classifier_weights,
@@ -157,5 +157,5 @@ FROM canonical WHERE rn = 1
     tags=("documents", "pipeline", "curation"),
 )
 def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return curate_corpus(docs)[1]

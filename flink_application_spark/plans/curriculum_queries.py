@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.lm_queries import LM_SCORE_SQL, bigram_lm_scores
 from flink_application_spark.plans.registry import register
 
@@ -42,7 +42,7 @@ FROM lm
 def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.ranks import global_ntile
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     scores = bigram_lm_scores(docs).select("doc_id", "mean_nll")
     # distributed ntile (two-phase rank + the standard SQL bucket
     # split) — the single-task global window doesn't survive a

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import fingerprint, tokens
 from flink_application_spark.plans.gate_queries import quality_gate_audit
 from flink_application_spark.plans.registry import register
@@ -67,7 +67,7 @@ GROUP BY d.source, d.lang
 def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     gates = quality_gate_audit(docs).select("doc_id", "passed")
     w = Window.partitionBy(fingerprint(F.col("text"))).orderBy("doc_id")
     fp = docs.select("doc_id", F.row_number().over(w).alias("rn"))

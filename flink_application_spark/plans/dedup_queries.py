@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import fingerprint
 from flink_application_spark.operators.minhash import (
     DEFAULT_BANDS,
@@ -123,7 +123,7 @@ GROUP BY 1
     tags=("dedup", "documents"),
 )
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select(fingerprint(F.col("text")).alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
@@ -150,7 +150,7 @@ FROM mh m JOIN sigs s ON m.doc_id = s.doc_id
     tags=("dedup", "minhash"),
 )
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     sig = with_band_keys(with_minhash_signature(with_shingles(docs)))
     return sig.select(
         "doc_id",
@@ -182,7 +182,7 @@ WHERE jaccard >= {NEAR_DUP_THRESHOLD}
     tags=("dedup", "minhash", "lsh"),
 )
 def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return verified_near_dup_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
 
 
@@ -220,7 +220,7 @@ GROUP BY source_lo, source_hi
 def q_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.plans._memo import near_dup_pairs_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     pairs = near_dup_pairs_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
     src = docs.select("doc_id", "source")
     return (
@@ -269,7 +269,7 @@ def _simhash_oracle(n_bits: int) -> str:
     tags=("dedup", "simhash"),
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return with_shingles(docs).select("doc_id", simhash_expr(16).alias("simhash"))
 
 
@@ -296,7 +296,7 @@ WHERE {JACCARD_SQL} >= 0.5
 def q_jaccard_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.setjoin import jaccard_similarity_join
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return jaccard_similarity_join(docs, 0.5)
 
 
@@ -334,7 +334,7 @@ SELECT id_a, id_b, jaccard, rank FROM ranked WHERE rank <= 20
 def q_jaccard_topk_thresholded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.setjoin import jaccard_similarity_join
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     pairs = jaccard_similarity_join(docs, 0.05)
     top = pairs.orderBy(
         F.col("jaccard").desc(), F.col("id_a").asc(), F.col("id_b").asc()
@@ -381,7 +381,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         containment_similarity_join,
     )
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return containment_similarity_join(docs, 0.8)
 
 
@@ -404,7 +404,7 @@ WHERE rn = 1
     tags=("dedup", "documents"),
 )
 def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     w = Window.partitionBy(fingerprint(F.col("text"))).orderBy(F.col("doc_id").asc())
     return (
         docs.withColumn("rn", F.row_number().over(w))
@@ -453,7 +453,7 @@ SELECT v AS doc_id, min(lbl) AS component FROM reach GROUP BY v
 def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.plans._memo import near_dup_components_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return near_dup_components_cached(
         spark, docs, sf_dir, NEAR_DUP_THRESHOLD
     ).select(F.col("v").alias("doc_id"), "component")
@@ -507,7 +507,7 @@ GROUP BY c.component, d.lang, d.n_chars
 def q_dedup_canonical_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.plans._memo import near_dup_components_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # gate-only consumer: pair set AND component map come from the
     # shared session memos (round-11 verdict item 7) — the headline
     # queries keep their inline pipelines
@@ -596,7 +596,7 @@ def q_dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import quality_score
     from flink_application_spark.plans._memo import near_dup_components_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     comp = near_dup_components_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
     scored = comp.join(
         docs.select("doc_id", quality_score(F.col("text")).alias("quality")),
@@ -644,7 +644,7 @@ WHERE levenshtein(da.text, db.text) * 10 <= greatest(length(da.text), length(db.
     tags=("dedup", "levenshtein", "lsh"),
 )
 def q_near_dup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     from flink_application_spark.operators.minhash import lsh_candidate_pairs, with_shingles
 
     sh = with_shingles(docs)
@@ -719,7 +719,7 @@ SELECT (SELECT count(*) FROM documents) AS n_raw,
     tags=("dedup", "pipeline", "documents"),
 )
 def q_dedup_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     survivors_ids = (
         docs.select(fingerprint(F.col("text")).alias("fp"), "doc_id")
         .groupBy("fp")
@@ -783,7 +783,7 @@ JOIN sh sb ON sb.doc_id = p.id_b
 def q_minhash_estimate_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.minhash import jaccard_column, lsh_candidate_pairs
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # sign ONCE and persist: the signature fold (k interpreted md5-min
     # HOFs) previously ran three times — inside candidate generation and
     # once per pair side — because each consumer re-derived it from the
@@ -862,7 +862,7 @@ FROM e, v, c
     tags=("dedup", "minhash", "lsh", "eval"),
 )
 def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return lsh_recall_audit_frame(docs)
 
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _ETA = 8.0
@@ -84,7 +84,7 @@ ORDER BY source
     tags=("corpus", "mixture", "documents"),
 )
 def q_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return doremi_reweight_frame(docs)
 
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -168,7 +168,7 @@ FROM toks t LEFT JOIN per_doc p ON p.doc_id = t.doc_id
     tags=("documents", "curation", "dsir"),
 )
 def q_dsir_log_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return dsir_log_weights(docs, F.col("source").isin(*_TARGET))
 
 
@@ -233,7 +233,7 @@ SELECT doc_id, mean_lr, sel_rank FROM ranked WHERE sel_rank <= 50
 def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     w = dsir_log_weights(docs, F.col("source").isin(*_TARGET))
     pool = (
         w.filter(~F.col("is_target") & (F.col("n_tok") >= 1))

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 
@@ -43,7 +43,7 @@ SELECT user_id, n_events, round(h, 6) + 0.0 AS entropy FROM agg
     tags=("events", "analytics", "entropy"),
 )
 def q_user_activity_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )

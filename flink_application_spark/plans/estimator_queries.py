@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _BUDGET = 100  # total sample size across strata
@@ -66,7 +66,7 @@ WHERE r.strat_rank <= a.take_n
     tags=("documents", "sampling"),
 )
 def q_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     strat = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_h"),
         F.round(F.count(F.lit(1)) * F.stddev_pop("n_chars"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _ALPHA = 0.3
@@ -64,7 +64,7 @@ FROM folded, unnest(generate_series(1, len(days))) AS t(i)
     tags=("events", "monitoring", "timeseries"),
 )
 def q_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))

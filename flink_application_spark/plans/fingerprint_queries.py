@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import fan_out, table
 from flink_application_spark.plans.registry import register
 
 _K = 8      # k-gram length (chars)
@@ -110,14 +110,8 @@ def _winnow_fingerprints(docs: DataFrame) -> DataFrame:
             ).astype({"doc_id": "int64", "fp": "int64", "pos": "int64"})
 
     # a small corpus arrives as ONE parquet split, which would serialize
-    # the Arrow stage on a single core (measured 1.5 s -> 0.5 s at
-    # sf0.1); at 100 TB the scan is already multi-split and this is one
-    # tiny (doc_id, text) shuffle
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    inp = docs.select("doc_id", "text")
-    if inp.rdd.getNumPartitions() < n:
-        inp = inp.repartition(n)
-    return inp.mapInPandas(
+    # the Arrow stage on a single core (measured 1.5 s -> 0.5 s at sf0.1)
+    return fan_out(docs.select("doc_id", "text")).mapInPandas(
         part, schema="doc_id bigint, fp bigint, pos bigint"
     )
 
@@ -133,7 +127,7 @@ def _winnow_fingerprints(docs: DataFrame) -> DataFrame:
     tags=("text", "fingerprint", "dedup"),
 )
 def q_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return _winnow_fingerprints(docs)
 
 
@@ -154,7 +148,7 @@ HAVING count(DISTINCT a.fp) >= 40
     tags=("text", "fingerprint", "dedup"),
 )
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # join on DISTINCT (doc_id, fp): a fingerprint kept at m positions in
     # A and n in B would otherwise contribute m·n join rows that
     # countDistinct then throws away — measured 46 s → join on the set

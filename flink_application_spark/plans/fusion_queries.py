@@ -22,7 +22,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans import text_queries
 from flink_application_spark.plans.registry import REGISTRY, register
@@ -103,7 +103,7 @@ FROM (SELECT * FROM fused ORDER BY rrf_score DESC, doc_id LIMIT {_TOPK})
     tags=("text", "search", "fusion", "documents"),
 )
 def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
 
     bm = text_queries.q_bm25_search(spark, sf_dir).select(
         "doc_id", F.col("rank").alias("bm_rank")

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import EN_STOPWORDS, stopword_ratio, tokens
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.text_queries import _TOKS, _in_list
@@ -82,7 +82,7 @@ def quality_gate_audit(docs: DataFrame) -> DataFrame:
     tags=("documents", "quality", "audit"),
 )
 def q_gate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return quality_gate_audit(docs)
 
 
@@ -99,7 +99,7 @@ FROM verdicts GROUP BY first_fail
     tags=("documents", "quality", "audit"),
 )
 def q_gate_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return (
         quality_gate_audit(docs)
         .groupBy("first_fail")

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.graph_ann import (
     exact_topk_int,
     graph_ann_oracle_sql,
@@ -29,6 +28,7 @@ from flink_application_spark.operators.graph_ann import (
 from flink_application_spark.plans._memo import (
     kmeans_fit_exact_cached,
     nn_descent_graph_cached,
+    nonnull_embeddings,
 )
 from flink_application_spark.plans.registry import register
 
@@ -41,12 +41,6 @@ _HOPS = 3
 # them together would silently desync Spark/oracle if either moved).
 _GRAPH_ITERS = 3
 _NQ = 5
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
 
 
 @register(
@@ -73,7 +67,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "similarity", "ann", "knn-graph", "serving", "exact"),
 )
 def q_graph_ann_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g, _ = nn_descent_graph_cached(spark, emb, sf_dir, _K, _GRAPH_ITERS)
     return graph_ann_search_topk(
         emb, k=_K, beam=_BEAM, hops=_HOPS, n_queries=_NQ, graph=g
@@ -108,7 +102,7 @@ def q_graph_ann_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
           "routing", "exact"),
 )
 def q_graph_ann_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g, _ = nn_descent_graph_cached(spark, emb, sf_dir, _K, _GRAPH_ITERS)
     cents, _ = kmeans_fit_exact_cached(spark, emb, sf_dir, 8, 5)
     return graph_ann_routed_search_topk(
@@ -137,7 +131,7 @@ def q_graph_ann_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "similarity", "ann", "knn-graph", "audit", "exact"),
 )
 def q_graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g, _ = nn_descent_graph_cached(spark, emb, sf_dir, _K, _GRAPH_ITERS)
     got = graph_ann_search_topk(
         emb, k=_K, beam=_BEAM, hops=_HOPS, n_queries=_NQ, graph=g

@@ -17,10 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.graph_ann import graph_ann_search_topk
 from flink_application_spark.operators.graph_delete import graph_delete_oracle_sql
-from flink_application_spark.plans._memo import graph_delete_repaired_cached
+from flink_application_spark.plans._memo import (
+    graph_delete_repaired_cached,
+    nonnull_embeddings,
+)
 from flink_application_spark.plans.registry import register
 
 _K = 6
@@ -34,14 +36,8 @@ _SEARCH_HOPS = 3
 _NQ = 5
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
-
-
 def _repaired(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     return graph_delete_repaired_cached(
         spark,
         emb,
@@ -108,7 +104,7 @@ def q_graph_ann_delete_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
           "serving", "exact"),
 )
 def q_graph_ann_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g = _repaired(spark, sf_dir)
     # exclude the deleted ids from the search corpus: coords of
     # deleted vertices must not score (they are gone). The operator's

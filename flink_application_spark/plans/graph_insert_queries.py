@@ -16,12 +16,14 @@ beam chain + every re-prune unroll as MATERIALIZED CTE stages.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.graph_ann import graph_ann_search_topk
 from flink_application_spark.operators.graph_insert import graph_insert_oracle_sql
-from flink_application_spark.plans._memo import graph_insert_updated_cached
+from flink_application_spark.plans._memo import (
+    graph_insert_updated_cached,
+    nonnull_embeddings,
+)
 from flink_application_spark.plans.registry import register
 
 _K = 6
@@ -36,14 +38,8 @@ _SEARCH_HOPS = 3
 _NQ = 5
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
-
-
 def _updated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     return graph_insert_updated_cached(
         spark,
         emb,
@@ -110,7 +106,7 @@ def q_graph_ann_insert_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
           "serving", "exact"),
 )
 def q_graph_ann_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g = _updated(spark, sf_dir)
     return graph_ann_search_topk(
         emb,

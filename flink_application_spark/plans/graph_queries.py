@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.minhash import verified_near_dup_pairs
 from flink_application_spark.plans.dedup_queries import NEAR_DUP_THRESHOLD
 from flink_application_spark.plans.registry import register
@@ -52,7 +52,7 @@ edges AS (
 def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.plans._memo import near_dup_pairs_cached
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # gate-only consumer of the shared pair memo (round-11 verdict
     # item 7); the pagerank loop itself stays per-call
     pairs = near_dup_pairs_cached(spark, docs, sf_dir, NEAR_DUP_THRESHOLD)
@@ -161,7 +161,7 @@ FROM tri CROSS JOIN w
     tags=("documents", "graph", "dedup"),
 )
 def q_simgraph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     edges = verified_near_dup_pairs(docs, threshold=NEAR_DUP_THRESHOLD).select(
         "id_a", "id_b"
     ).persist()

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans import assign_clusters, init_centroids
 from flink_application_spark.operators.pq import (
     adc_table_expr,
@@ -63,7 +63,7 @@ def _residual(emb_col: Column, cents: list[list[float]], cluster: Column) -> Col
 
 
 def _ivfadc_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     emb = emb.filter(F.col("embedding").isNotNull())
     coarse = init_centroids(emb, _NC, "vec_id")
 
@@ -277,5 +277,5 @@ def q_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "quantization", "ann", "similarity", "training", "exact"),
 )
 def q_ivfadc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return ivfadc_exact_topk(emb)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import brute_force_topk
 from flink_application_spark.plans.registry import register
 
@@ -60,7 +60,7 @@ GROUP BY t.query_id, ql.label
     tags=("embeddings", "labels", "quality"),
 )
 def q_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     topk = brute_force_topk(emb, emb, k=_K).select("query_id", "vec_id")
     labels = emb.select("vec_id", "label")
     joined = (

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.minhash import verified_near_dup_pairs
 from flink_application_spark.plans.dedup_queries import (
     JACCARD_SQL,
@@ -78,7 +78,7 @@ WHERE v.jaccard >= {NEAR_DUP_THRESHOLD}
     tags=("pipeline", "dedup", "leakage", "documents"),
 )
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     pairs = verified_near_dup_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
     splits = docs.select("doc_id", _split_col().alias("split"))
     return (
@@ -151,7 +151,7 @@ FROM comp
 def q_split_by_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.components import connected_components
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     pairs = verified_near_dup_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
     comp = connected_components(
         pairs, vertices=docs, src="id_a", dst="id_b", vertex_col="doc_id"
@@ -197,7 +197,7 @@ GROUP BY o.doc_id
 def q_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.minhash import with_shingles
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     occ = (
         with_shingles(docs)
         .select("doc_id", F.explode("shingles").alias("s"))

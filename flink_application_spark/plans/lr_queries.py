@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import _keep_application, table
 from flink_application_spark.operators.lr_exact import (
     lr_exact_oracle_sql,
     lr_exact_predictions,
@@ -50,10 +50,6 @@ _SPLIT_DUCK = (
 )
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-
-
 # The fit is a pure function of (table, subset): memoize per session so
 # the three registered queries don't re-run the 8-round loop three
 # times in one driver window (training cost is real; the cache is not —
@@ -66,7 +62,8 @@ def _fit_cached(
 ) -> tuple[list[list[int]], list]:
     key = (spark.sparkContext.applicationId, sf_dir, subset)
     if key not in _FIT_CACHE:
-        emb = _emb(spark, sf_dir)
+        _keep_application(_FIT_CACHE, key[0])
+        emb = table(spark, sf_dir, "embeddings")
         if subset == "train":
             emb = emb.filter(F.expr(_SPLIT_SPARK) == F.lit("train"))
         _FIT_CACHE[key] = lr_fit_exact(emb, k_classes=_CLASSES, iters=_ITERS)
@@ -109,7 +106,7 @@ def q_lr_train_exact_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "classifier", "training", "eval", "exact"),
 )
 def q_lr_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = table(spark, sf_dir, "embeddings")
     weights, _ = _fit_cached(spark, sf_dir, "full")
     return (
         lr_exact_predictions(emb, weights)
@@ -140,7 +137,7 @@ def q_lr_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "classifier", "training", "eval", "exact"),
 )
 def q_lr_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = table(spark, sf_dir, "embeddings")
     weights, _ = _fit_cached(spark, sf_dir, "train")
     scored = lr_exact_predictions(emb, weights).withColumn(
         "split", F.expr(_SPLIT_SPARK)

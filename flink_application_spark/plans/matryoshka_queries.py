@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import brute_force_topk_fold
 from flink_application_spark.plans.registry import register
 
@@ -100,5 +100,5 @@ _ORACLE = (
     tags=("embeddings", "similarity", "eval"),
 )
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return matryoshka_recall(emb)

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.merge import apply_changelog
 from flink_application_spark.plans.registry import register
 
@@ -121,8 +121,7 @@ WHERE w.c_custkey IS NULL OR w.op IN ('I', 'U')
     tags=("customer", "cdc", "merge"),
 )
 def q_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = register_views(spark, sf_dir, tables=("customer", "orders"))
-    cust, orders = v["customer"], v["orders"]
+    cust, orders = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     snapshot = cust.select(
         "c_custkey",
         "c_name",

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.training_prep_queries import (
     q_temperature_mixture,
@@ -85,7 +85,7 @@ FROM decided WHERE n_copies >= 1
     tags=("documents", "training-prep", "mixture"),
 )
 def q_mixture_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rates = q_temperature_mixture(spark, sf_dir).select("lang", "sample_rate")
     frac = F.col("sample_rate") - F.floor(F.col("sample_rate"))
     return (

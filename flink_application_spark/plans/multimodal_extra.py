@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.multimodal import (
     PHASH_BINS,
     image_phash,
@@ -74,7 +74,7 @@ def _pca_top2_oracle() -> str:
 def q_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.pca_exact import pca_top2_exact_projection
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return pca_top2_exact_projection(emb).select(
         "vec_id", "label", "pc1", "pc2"
     )
@@ -91,7 +91,7 @@ def q_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "binary", "dedup"),
 )
 def q_mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return image_phash(synth_media(docs))
 
 
@@ -117,7 +117,7 @@ FROM ph a JOIN ph b
     tags=("multimodal", "binary", "dedup", "simhash"),
 )
 def q_mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     sigs = image_phash(synth_media(docs)).persist()
     bands = sigs.select(
         "doc_id",

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.multimodal import (
     audio_window_features,
     decode_meta,
@@ -44,7 +44,7 @@ _META_ORACLE_COLS = """
     tags=("multimodal", "binary"),
 )
 def q_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return decode_meta(synth_media(docs))
 
 
@@ -62,7 +62,7 @@ FROM documents
     tags=("multimodal", "binary"),
 )
 def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return extract_features(synth_media(docs))
 
 
@@ -92,7 +92,7 @@ FROM frames
     tags=("multimodal", "binary", "video"),
 )
 def q_mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return sample_frames(synth_media(docs), frame_len=256, stride=4)
 
 
@@ -127,7 +127,7 @@ GROUP BY doc_id, window_idx
     tags=("multimodal", "binary", "audio"),
 )
 def q_mm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return audio_window_features(synth_audio(docs))
 
 
@@ -167,7 +167,7 @@ QUALIFY abs(delta) > 200 OR delta IS NULL
 def q_mm_frame_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     frames = sample_frames(synth_media(docs), frame_len=256, stride=4)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     return (

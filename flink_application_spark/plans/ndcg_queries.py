@@ -17,7 +17,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import brute_force_topk_fold, lsh_ann_topk
 from flink_application_spark.plans.registry import register
 
@@ -115,7 +115,7 @@ FROM idcg i LEFT JOIN dcg d ON d.query_id = i.query_id
     tags=("embeddings", "similarity", "eval"),
 )
 def q_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _NQ)
     # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
     # Arrow matrix path's fixed round-trip here (round-12 same-session

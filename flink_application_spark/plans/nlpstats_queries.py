@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -64,7 +64,7 @@ SELECT w1, w2, n_pair, round(pmi, 6) AS pmi, rank FROM (
     tags=("documents", "text", "nlp"),
 )
 def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         F.filter(tokens(F.col("text")), lambda t: t != "").alias("toks")
     )
@@ -137,7 +137,7 @@ SELECT trigram, n, rank FROM (
     tags=("events", "sequence", "paths"),
 )
 def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     seqs = ev.groupBy("user_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
@@ -193,7 +193,7 @@ GROUP BY t.v, t.n
     tags=("documents", "vocab", "stats"),
 )
 def q_vocab_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     counts = (
         docs.select(
             F.explode(F.filter(tokens(F.col("text")), lambda t: t != "")).alias(
@@ -266,7 +266,7 @@ FROM sig
     tags=("documents", "quality", "stats"),
 )
 def q_doc_signal_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     sig = (
         docs.select(
             "n_chars",

@@ -20,22 +20,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.nndescent_exact import (
     knn_graph_exact_int,
     nn_descent_exact_oracle_sql,
 )
-from flink_application_spark.plans._memo import nn_descent_graph_cached
+from flink_application_spark.plans._memo import (
+    nn_descent_graph_cached,
+    nonnull_embeddings,
+)
 from flink_application_spark.plans.registry import register
 
 _K = 6
 _ITERS = 3
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
 
 
 @register(
@@ -55,7 +51,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     g, _ = nn_descent_graph_cached(
-        spark, _emb(spark, sf_dir), sf_dir, _K, _ITERS
+        spark, nonnull_embeddings(spark, sf_dir), sf_dir, _K, _ITERS
     )
     return g.select("vec_id", "nbr_id", "d2", "rank")
 
@@ -75,7 +71,7 @@ def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embeddings", "similarity", "knn-graph", "ann", "audit", "exact"),
 )
 def q_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     g, _ = nn_descent_graph_cached(spark, emb, sf_dir, _K, _ITERS)
     approx = g.select("vec_id", "nbr_id")
     exact = knn_graph_exact_int(emb, k=_K).select("vec_id", "nbr_id")
@@ -109,7 +105,7 @@ def q_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_nn_descent_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, prof = nn_descent_graph_cached(
-        spark, _emb(spark, sf_dir), sf_dir, _K, _ITERS
+        spark, nonnull_embeddings(spark, sf_dir), sf_dir, _K, _ITERS
     )
     return spark.createDataFrame(
         prof, "iteration int, new_edges bigint, kept_d2_sum bigint"

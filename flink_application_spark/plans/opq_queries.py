@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.opq import (
     pca_rotation_balanced,
     rotate_embeddings,
@@ -79,5 +79,5 @@ def opq_compare_frame(emb: DataFrame, m: int = _M, k: int = _K, dim: int = _DIM)
     tags=("embeddings", "quantization", "opq"),
 )
 def q_opq_pq_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return opq_compare_frame(emb)

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.operators.packing import packed_spans, packing_stats
 from flink_application_spark.plans.registry import register
@@ -52,7 +52,7 @@ FROM spans
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.filter(tokens(F.col("text")), lambda t: t != ""))

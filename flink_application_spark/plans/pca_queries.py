@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.pca import gram_long
 from flink_application_spark.plans.registry import register
 
@@ -59,7 +59,7 @@ FROM cells
     tags=("embeddings", "pca", "sketch"),
 )
 def q_pca_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     g = gram_long(emb.filter(F.col("embedding").isNotNull()), dim=_DIM)
     return g.select("i", "j", (F.round(F.col("s"), 4) + F.lit(0.0)).alias("s"), "n")
 
@@ -94,5 +94,5 @@ def q_pca_power_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         pca_power_exact_trajectory,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return pca_power_exact_trajectory(emb, iters=8, dim=_DIM)

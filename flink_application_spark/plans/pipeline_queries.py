@@ -21,14 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import token_count
 from flink_application_spark.plans.dedup_queries import _simhash_oracle
 from flink_application_spark.plans.registry import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("documents",))["documents"]
 
 
 def _md5_bucket(col: F.Column, lo: int, width: int, mod: int) -> F.Column:
@@ -83,7 +79,7 @@ GROUP BY 1, 2
     tags=("pipeline", "sampling", "documents"),
 )
 def q_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     bucket = _md5_bucket(F.col("doc_id"), 1, 8, 100)
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
@@ -129,7 +125,7 @@ WHERE rn <= CAST(ceil(0.1 * n_strata) AS BIGINT)
     tags=("pipeline", "sampling", "documents"),
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang", "source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -190,7 +186,7 @@ GROUP BY 1, 2
     tags=("pipeline", "packing", "documents"),
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         _md5_bucket(F.col("doc_id"), 9, 4, _PACK_SHARDS).alias("shard"),
@@ -257,7 +253,7 @@ FROM s a JOIN s b
 def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.minhash import with_shingles, with_simhash64
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     # persist() is load-bearing twice over: (a) the a/b self-join below
     # reads the signatures twice — without it the whole shingle+hash
     # lineage runs once per side; (b) the join/filter predicates make
@@ -350,7 +346,7 @@ FROM per_user
     tags=("events", "funnel", "analytics"),
 )
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
 
     def first_ts(kind: str) -> F.Column:
         return F.min(F.when(F.col("event_type") == kind, F.col("ts")))
@@ -403,7 +399,7 @@ FROM per_lang
     tags=("pipeline", "sampling", "documents"),
 )
 def q_corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     per_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count(F.col("text")).cast("bigint")).alias("n_tokens"),
@@ -471,7 +467,7 @@ GROUP BY 1, 2
     tags=("pipeline", "sketch", "documents"),
 )
 def q_count_min_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     from flink_application_spark.functions.text import tokens
 
     occ = (
@@ -542,7 +538,7 @@ FROM q
     tags=("pipeline", "quantization", "embeddings"),
 )
 def q_int8_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     v = emb.filter(F.col("vec_id") < 500).select("vec_id", e.alias("e"))
     s = v.select(
@@ -611,7 +607,7 @@ FROM conv
     tags=("events", "funnel", "latency", "percentile"),
 )
 def q_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
     views = (
         events.filter(F.col("event_type") == "view")
         .groupBy("user_id")

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.pq import pq_adc_topk, pq_encode, seed_codebooks
 from flink_application_spark.plans.registry import register
 
@@ -84,7 +84,7 @@ _CODES_SQL = (
     tags=("embeddings", "quantization", "ann"),
 )
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     books = seed_codebooks(emb, _M, _K, _DIM)
     return pq_encode(emb, books, _DIM)
 
@@ -133,7 +133,7 @@ SELECT query_id, vec_id, est_d2, rank FROM (
     tags=("embeddings", "quantization", "ann", "similarity"),
 )
 def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     books = seed_codebooks(emb, _M, _K, _DIM)
     codes = pq_encode(emb, books, _DIM).drop("recon_d2")
     queries = emb.filter(F.col("vec_id") < _NQ)

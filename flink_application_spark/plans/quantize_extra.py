@@ -23,18 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.plans._memo import nonnull_embeddings
 from flink_application_spark.plans.registry import register
 
 _DIM = 64
 _NQ = 5
 _TOPK = 10
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
 
 
 @register(
@@ -65,7 +59,7 @@ FROM vals v JOIN stats s ON s.pos = v.pos
     tags=("embeddings", "quantization"),
 )
 def q_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     vals = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).select("vec_id", "pos", F.col("v").cast("double").alias("val"))
@@ -111,7 +105,7 @@ FROM coded GROUP BY vec_id
     tags=("embeddings", "quantization", "eval"),
 )
 def q_sq8_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     vals = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).select("vec_id", "pos", F.col("v").cast("double").alias("val"))
@@ -179,7 +173,7 @@ WHERE rank <= {_TOPK}
     tags=("embeddings", "quantization", "ann", "similarity"),
 )
 def q_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     packed = emb.select(
         "vec_id",
         _pack_half_col(F.col("embedding"), 0).alias("b_lo"),
@@ -254,7 +248,7 @@ SELECT query_id, vec_id, est_d2, rank FROM (
     tags=("embeddings", "quantization", "ann", "similarity"),
 )
 def q_sq8_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = nonnull_embeddings(spark, sf_dir)
     vals = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).select("vec_id", "pos", F.col("v").cast("double").alias("val"))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.rangejoin import interval_point_join
 from flink_application_spark.plans.registry import register
 
@@ -54,7 +54,7 @@ GROUP BY p.event_id
     tags=("events", "rangejoin"),
 )
 def q_global_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     j = interval_point_join(
         _clicks(ev),
         _purchases(ev),

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 
@@ -44,7 +44,7 @@ FROM walk GROUP BY custkey
     tags=("customer", "sql-surface", "recursive"),
 )
 def q_recursive_tree_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, tables=("customer",))
+    table(spark, sf_dir, "customer")
     return spark.sql(
         """
 WITH RECURSIVE walk(custkey, cur, depth) AS (

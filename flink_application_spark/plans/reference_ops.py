@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.plans.registry import register
 
@@ -42,7 +42,7 @@ FROM part
     tags=("sql", "scalar"),
 )
 def q_scalar_lib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = register_views(spark, sf_dir, tables=("part",))["part"]
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
@@ -77,7 +77,7 @@ WHERE rn = 1
     tags=("sql", "dedup", "events"),
 )
 def q_events_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     return argmax_dedup(
         ev.select("user_id", "event_id", "ts", "event_type", "value"),
         ["user_id"],

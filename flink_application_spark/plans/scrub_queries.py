@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -163,5 +163,5 @@ FROM toks t LEFT JOIN rebuilt r ON r.doc_id = t.doc_id
     tags=("documents", "cleaning", "dedup"),
 )
 def q_repeated_ngram_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return repeated_ngram_scrub(docs)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 _SPIKE = 3.0  # flag events above 3× their slot median
@@ -53,7 +53,7 @@ GROUP BY b.event_type, b.dow, b.hr, b.n, b.median_value
     tags=("events", "anomaly", "seasonal"),
 )
 def q_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     slotted = ev.select(
         "event_type",
         F.expr("extract(DAYOFWEEK_ISO FROM ts)").cast("bigint").alias("dow"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.semdedup import semdedup_flags
 from flink_application_spark.plans.registry import register
 
@@ -63,7 +63,7 @@ def _flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow pair stage (operators/semdedup._close_pairs_arrow) makes
     the honest per-call cost ~1.1 s at sf0.1 (was ~6 s), cheap enough
     to pay every time."""
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return semdedup_flags(emb, threshold=_T, k=_K)
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.vectors import norm
 from flink_application_spark.operators.semdedup import semdedup_flags
 from flink_application_spark.plans.registry import register
@@ -86,7 +86,7 @@ FROM assigned s LEFT JOIN drops d ON d.id_b = s.vec_id
     tags=("documents", "dedup", "clustering", "vectorize"),
 )
 def q_doc_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     vecs = (
         hashing_trick_features(docs)
         .select(F.col("doc_id").alias("vec_id"), "embedding")

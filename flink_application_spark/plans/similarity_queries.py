@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import (
     brute_force_topk,
     brute_force_topk_fold,
@@ -54,7 +54,7 @@ WHERE rank <= 10
     tags=("similarity", "embeddings"),
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     # |Q| = 5 → ~10k pairs: the small-pair regime where the JVM fold
     # beats the Arrow matrix path's fixed round-trip (round-12 A/B:
     # 0.71–0.80 s vs 0.90–1.21 s at sf0.1; bit-identical — pinned by
@@ -84,7 +84,7 @@ WHERE cosine >= 0.25
 def q_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import radius_search
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return radius_search(emb.filter(F.col("vec_id") < 5), emb, 0.25)
 
 
@@ -114,7 +114,7 @@ WHERE rank <= 5
     tags=("similarity", "embeddings", "lsh"),
 )
 def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return lsh_ann_topk(emb.filter(F.col("vec_id") < 20), emb, k=5, n_bits=8)
 
 
@@ -161,7 +161,7 @@ WHERE ({" OR ".join(_band_eq_sql(i, _ND_BITS) for i in range(_ND_BANDS))})
     tags=("similarity", "dedup", "embeddings"),
 )
 def q_cos_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return cosine_near_dup_pairs(
         emb, threshold=_ND_THRESHOLD, n_bands=_ND_BANDS, band_bits=_ND_BITS
     )
@@ -196,7 +196,7 @@ SELECT v AS vec_id, min(lbl) AS component FROM reach GROUP BY v
 def q_emb_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.components import connected_components
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     pairs = cosine_near_dup_pairs(
         emb, threshold=_ND_THRESHOLD, n_bands=_ND_BANDS, band_bits=_ND_BITS
     )
@@ -227,7 +227,7 @@ GROUP BY e.label, dims.pos
     tags=("similarity", "embeddings", "agg"),
 )
 def q_emb_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return (
         emb.select("label", F.posexplode("embedding").alias("pos", "val"))
         .groupBy("label", "pos")
@@ -275,7 +275,7 @@ WHERE rn = 1
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import knn_classify
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return knn_classify(
         emb.filter(F.col("vec_id") < 10),
         emb.filter(F.col("vec_id") >= 10),
@@ -314,7 +314,7 @@ WHERE rank <= 5
 def q_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import ivf_topk
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return ivf_topk(
         emb.filter(F.col("vec_id") < 5), emb, k=5, n_centroids=8, n_probe=8
     ).select("query_id", "vec_id", "cosine", "rank")
@@ -361,7 +361,7 @@ tk AS MATERIALIZED (
 def q_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import mmr_rerank
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return mmr_rerank(
         emb.filter(F.col("vec_id") < 5), emb, k_retrieve=20, k_final=5, lam=0.7
     )
@@ -483,7 +483,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         brute_force_topk_fold,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     emb = emb.filter(F.col("embedding").isNotNull())
     cents = init_centroids(emb, _RC_NC, "vec_id")
     assigned = assign_clusters(emb, cents).select("vec_id", "embedding", "cluster")
@@ -626,7 +626,7 @@ WHERE rank <= 5
 def q_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.similarity import lsh_multiprobe_topk
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     return lsh_multiprobe_topk(
         emb.filter(F.col("vec_id") < 20), emb, k=5, n_bits=_MP_BITS, probes=_MP_PROBES
     )
@@ -731,7 +731,7 @@ def q_multiprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         multiprobe_buckets,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _MPC_NQ)
     qp = queries.select(
         F.col("vec_id").alias("query_id"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
 
 
@@ -63,7 +63,7 @@ def rollup_sketches(daily: DataFrame) -> DataFrame:
     tags=("events", "sketch", "approx"),
 )
 def q_hll_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
     return rollup_sketches(daily_user_sketches(events)).select(
         "event_type",
         F.col("est_users").cast("bigint").alias("est_users"),
@@ -164,7 +164,7 @@ def q_hll_det_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_sketches,
     )
 
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
     ev = events.select("event_type", F.to_date("ts").alias("day"), "user_id")
     daily_sketch = det_hll_sketch(ev, "user_id", ["event_type", "day"])
     est = det_hll_estimate(

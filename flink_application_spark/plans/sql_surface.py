@@ -16,13 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tables = register_views(spark, sf_dir, tables=tuple(names))
-    return [tables[n] for n in names]
 
 
 def _rev():
@@ -51,7 +46,7 @@ GROUP BY l_returnflag, l_linestatus
     tags=("sql", "agg"),
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -90,7 +85,7 @@ LIMIT 10
     tags=("sql", "join", "topn"),
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, o, c = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    li, o, c = (table(spark, sf_dir, t) for t in ("lineitem", "orders", "customer"))
     return (
         c.filter(F.col("c_mktsegment") == "BUILDING")
         .join(o, c.c_custkey == o.o_custkey)
@@ -127,8 +122,9 @@ GROUP BY n.n_name
     tags=("sql", "join"),
 )
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, o, c, s, n, r = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation", "region"
+    li, o, c, s, n, r = (
+        table(spark, sf_dir, t)
+        for t in ("lineitem", "orders", "customer", "supplier", "nation", "region")
     )
     return (
         r.filter(F.col("r_name") == "ASIA")
@@ -161,7 +157,10 @@ LIMIT 20
     tags=("sql", "join", "topn"),
 )
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, o, c, n = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
+    li, o, c, n = (
+        table(spark, sf_dir, t)
+        for t in ("lineitem", "orders", "customer", "nation")
+    )
     return (
         c.join(o, o.o_custkey == c.c_custkey)
         .join(li.filter(F.col("l_returnflag") == "R"), li.l_orderkey == o.o_orderkey)
@@ -191,7 +190,7 @@ GROUP BY l_returnflag
     tags=("sql", "agg"),
 )
 def q_distinct_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("distinct_parts"),
         F.countDistinct("l_suppkey").alias("distinct_supps"),
@@ -218,7 +217,7 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     tags=("sql", "agg", "rollup"),
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (o,) = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -254,7 +253,7 @@ WHERE l_suppkey <= 3
     tags=("sql", "window"),
 )
 def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     w = (
         W.partitionBy("l_suppkey")
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
@@ -290,7 +289,7 @@ WHERE rn <= 3
     tags=("sql", "window", "topn"),
 )
 def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (p,) = _t(spark, sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     w = W.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey").asc()
     )
@@ -321,7 +320,7 @@ FROM events
     tags=("sql", "window", "events"),
 )
 def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     return ev.select(
@@ -348,7 +347,7 @@ SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
     tags=("sql", "setops"),
 )
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o = _t(spark, sf_dir, "customer", "orders")
+    c, o = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     building = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     f_orders = o.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("c_custkey")
@@ -375,7 +374,7 @@ LEFT JOIN (SELECT DISTINCT o_custkey FROM orders) o
     tags=("sql", "join"),
 )
 def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o = _t(spark, sf_dir, "customer", "orders")
+    c, o = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     semi = (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_name")
@@ -407,7 +406,7 @@ WHERE o_orderkey % 10 = 0
     tags=("sql", "scalar", "date"),
 )
 def q_date_lib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (o,) = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("order_date"),
@@ -436,7 +435,7 @@ GROUP BY date_trunc('hour', ts), event_type
     tags=("sql", "events", "window-agg"),
 )
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("window_start"),
         "event_type",
@@ -480,7 +479,7 @@ GROUP BY user_id, session_id
     tags=("sql", "events", "session"),
 )
 def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.lag(us).over(w)
@@ -528,7 +527,7 @@ WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
     tags=("sql", "agg", "tpch"),
 )
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp_ntz"))
@@ -559,7 +558,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     tags=("sql", "join", "tpch"),
 )
 def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
+    li, part = (table(spark, sf_dir, t) for t in ("lineitem", "part"))
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(
@@ -595,7 +594,7 @@ HAVING sum(l_quantity) > 120
     tags=("sql", "join", "agg", "tpch"),
 )
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, li = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    cust, orders, li = (table(spark, sf_dir, t) for t in ("customer", "orders", "lineitem"))
     return (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -628,7 +627,7 @@ GROUP BY o_orderpriority
     tags=("sql", "join", "semi", "tpch"),
 )
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, li = _t(spark, sf_dir, "orders", "lineitem")
+    orders, li = (table(spark, sf_dir, t) for t in ("orders", "lineitem"))
     semi = orders.join(
         li,
         (F.col("o_orderkey") == F.col("l_orderkey"))
@@ -656,7 +655,7 @@ GROUP BY 1
     tags=("sql", "pivot", "events"),
 )
 def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     wide = (
         ev.withColumn("cohort", F.col("user_id") % 10)
         .groupBy("cohort")
@@ -684,7 +683,7 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
     tags=("sql", "agg", "cube"),
 )
 def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -714,7 +713,7 @@ GROUP BY event_type
     tags=("sql", "json", "events"),
 )
 def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select("event_type", k.alias("k"))
@@ -751,7 +750,7 @@ GROUP BY event_type
     tags=("sql", "json", "variant", "events"),
 )
 def q_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     v = F.parse_json("props")
     k = F.expr("variant_get(v, '$.k', 'bigint')")
     return (
@@ -783,7 +782,7 @@ GROUP BY l_returnflag
     tags=("sql", "agg", "percentile"),
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         *[
             F.round(F.expr(f"percentile(l_quantity, {q})"), 4).alias(f"p{int(q*100)}")
@@ -808,7 +807,7 @@ GROUP BY 1, 2
     tags=("sql", "join", "outer"),
 )
 def q_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
+    cust, orders = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     j = cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "full_outer")
     return (
         j.groupBy(
@@ -842,7 +841,7 @@ GROUP BY 1, 2, 3
     tags=("sql", "window", "events", "streaming-op"),
 )
 def q_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = F.window("ts", "10 minutes", "5 minutes")
     return (
         ev.groupBy(w.alias("w"), "event_type")
@@ -877,7 +876,7 @@ GROUP BY l_returnflag
 def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.skew import salted_aggregate
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     out = salted_aggregate(
         li,
         keys=["l_returnflag"],
@@ -918,7 +917,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "approx", "sketch"),
 )
 def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     q = F.percentile_approx("l_extendedprice", [0.5, 0.95], 10000)
     return (
         li.groupBy("l_returnflag")
@@ -968,7 +967,7 @@ GROUP BY user_id, date_trunc('day', bucket_hour)
     tags=("events", "rollup", "timeseries"),
 )
 def q_two_level_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket_hour"))
         .agg(
@@ -1010,7 +1009,7 @@ ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def q_stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -1045,7 +1044,7 @@ ORDER BY event_type, bucket
     tags=("events", "histogram", "profiling"),
 )
 def q_events_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     bucket = F.width_bucket(F.col("value"), F.lit(0.0), F.lit(1000.0), F.lit(20))
     return (
         ev.groupBy("event_type", bucket.cast("int").alias("bucket"))
@@ -1093,7 +1092,7 @@ ORDER BY change_type
     tags=("cdc", "diff", "join"),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (o,) = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     old = o.filter(
         F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz")
     ).select(
@@ -1147,7 +1146,7 @@ ORDER BY g_status, g_priority, o_orderstatus, o_orderpriority
     tags=("sql", "agg", "grouping"),
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (o,) = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("_orders_gs")
     return o.sparkSession.sql(
         """
@@ -1185,7 +1184,7 @@ WHERE vec_id < 200
     tags=("sql", "array", "functions"),
 )
 def q_collection_library(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     e = F.col("embedding")
     dbl = F.transform(e, lambda x: x.cast("double"))
     return emb.filter(F.col("vec_id") < 200).select(
@@ -1236,7 +1235,7 @@ HAVING count(DISTINCT a.l_orderkey) >= 2
     tags=("sql", "basket", "lineitem"),
 )
 def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
     b = li.select(F.col("l_orderkey").alias("ok_b"), F.col("l_partkey").alias("part_b"))
     return (
@@ -1274,7 +1273,7 @@ GROUP BY cohort_week, week_offset
     tags=("sql", "retention", "events"),
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     first_seen = events.groupBy("user_id").agg(F.min("ts").alias("t0"))
     acts = events.join(first_seen, "user_id").select(
         "user_id",
@@ -1319,7 +1318,7 @@ GROUP BY e.event_type
     tags=("sql", "anomaly", "events"),
 )
 def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     stats = events.groupBy("event_type").agg(
         F.avg("value").alias("mu"),
         F.stddev_pop("value").alias("sigma"),
@@ -1363,7 +1362,7 @@ FROM events
     tags=("sql", "window", "events"),
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = (
         W.partitionBy("user_id")
@@ -1403,7 +1402,7 @@ GROUP BY o_orderpriority, quartile
     tags=("sql", "window"),
 )
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         orders.select(
@@ -1447,7 +1446,7 @@ SELECT l_returnflag, l_linestatus, metric, value FROM (
     tags=("sql", "reshape"),
 )
 def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).cast("double").alias("sum_qty"),
         F.round(F.sum("l_extendedprice"), 2).cast("double").alias("sum_price"),
@@ -1489,7 +1488,7 @@ GROUP BY prev_type, event_type
     tags=("sql", "events", "sequence"),
 )
 def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "event_type",
         F.lag("event_type")
@@ -1534,7 +1533,7 @@ FROM (
     tags=("sql", "skew", "diagnostics", "events"),
 )
 def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     per_key = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     tot = events.agg(F.count(F.lit(1)).alias("total"))
     top = (
@@ -1580,8 +1579,9 @@ FROM nat
     tags=("sql", "window", "orders"),
 )
 def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, customer, nation, region = _t(
-        spark, sf_dir, "orders", "customer", "nation", "region"
+    orders, customer, nation, region = (
+        table(spark, sf_dir, t)
+        for t in ("orders", "customer", "nation", "region")
     )
     nat = (
         orders.join(customer, orders.o_custkey == customer.c_custkey)
@@ -1633,7 +1633,7 @@ GROUP BY event_type
     tags=("sql", "stats", "events"),
 )
 def q_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     med = events.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med_value")
     )
@@ -1685,7 +1685,7 @@ FROM (
     tags=("sql", "segmentation", "orders"),
 )
 def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("d_max"))
     rfm = (
         orders.groupBy(F.col("o_custkey").alias("custkey"))
@@ -1757,7 +1757,7 @@ LIMIT 100
     tags=("dedup", "jaccard"),
 )
 def q_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # both sides of the all-pairs join scan the shingle table — persist
     # so shingling runs once (the quadratic pair loop still dominates)
     sh = _with_shingles(docs).select("doc_id", "shingles").persist()
@@ -1794,7 +1794,7 @@ ORDER BY l_returnflag
     tags=("sql", "pipe-syntax", "surface"),
 )
 def q_pipe_syntax_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem")
+    table(spark, sf_dir, "lineitem")
     return spark.sql(
         """
 FROM lineitem

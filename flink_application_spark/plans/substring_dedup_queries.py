@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -82,7 +82,7 @@ FROM toks t LEFT JOIN removed r ON r.doc_id = t.doc_id
     tags=("documents", "dedup", "scrub"),
 )
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.filter(tokens(F.col("text")), lambda t: t != "").alias("toks"),
@@ -204,7 +204,7 @@ GROUP BY doc_id
 def q_segment_dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.dedup import segment_dedup_scrub
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return segment_dedup_scrub(docs, seg=_SEG)
 
 
@@ -249,7 +249,7 @@ GROUP BY source
 def q_source_segment_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.dedup import segment_rows
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     # source rides the segmentation scan (passthrough) — a doc_id-keyed
     # re-join here was this round's only SMJ in PLAN_AUDIT (exch 6→4)
     segs = segment_rows(docs, seg=_SEG, passthrough=("source",))

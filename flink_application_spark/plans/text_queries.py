@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import (
     EN_STOPWORDS,
     LANG_MARKERS,
@@ -20,10 +20,6 @@ from flink_application_spark.functions.text import (
     token_count,
 )
 from flink_application_spark.plans.registry import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return register_views(spark, sf_dir, tables=("documents",))["documents"]
 
 
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -62,7 +58,7 @@ FROM documents
     tags=("text", "documents"),
 )
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     t = F.col("text")
     return docs.select(
         "doc_id",
@@ -90,7 +86,7 @@ FROM documents
     tags=("text", "documents"),
 )
 def q_subword_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     low = F.lower(F.col("text"))
     subs = F.regexp_extract_all(low, F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
     words = F.regexp_extract_all(low, F.lit(r"[a-z]+"), 0)
@@ -117,7 +113,7 @@ FROM documents
     tags=("text", "quality"),
 )
 def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     t = F.col("text")
     return docs.select(
         "doc_id",
@@ -153,7 +149,7 @@ GROUP BY t10
     tags=("text", "quality", "curation"),
 )
 def q_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     # exchange barrier: the quality HOF fold is referenced by three
     # aggregates downstream of the explode — behind the repartition it
     # is ONE evaluation per doc, not 3×10 (attributes cross exchanges,
@@ -207,7 +203,7 @@ FROM scored
     tags=("text", "langid"),
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     scores = lang_scores(F.col("text"), LANG_MARKERS)
     out = docs.select(
         "doc_id",
@@ -241,7 +237,7 @@ FROM documents
     tags=("text", "fingerprint", "documents"),
 )
 def q_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     codes = F.transform(F.split(F.col("text"), ""), lambda c: F.ascii(c).cast("bigint"))
     h = F.aggregate(
         codes,
@@ -281,7 +277,7 @@ def q_top_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import tokens
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
@@ -341,7 +337,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from flink_application_spark.functions.text import tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
@@ -379,7 +375,7 @@ WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
     tags=("text", "sampling", "documents"),
 )
 def q_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     return docs.filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin("0", "1")
     ).select("doc_id", "lang", "source", "n_chars")
@@ -417,7 +413,7 @@ WHERE chunk_idx * 25 < len(t)
 def q_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n = F.size("t")
     n_chunks = F.ceil(n / F.lit(25.0)).cast("int")
@@ -484,7 +480,7 @@ LIMIT 50
 def q_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     base = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= 2)
     pairs = base.select(
@@ -557,7 +553,7 @@ def q_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import token_count
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", "lang", token_count(F.col("text")).cast("bigint").alias("n_tok")
     )
@@ -617,7 +613,7 @@ def q_vocab_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.functions.text import tokens
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.col("w") != "")
@@ -688,7 +684,7 @@ def q_decontaminate_vs_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.catalog import fan_out
     from flink_application_spark.functions.text import word_ngrams
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     # the 5-gram HOF is the whole cost: spread the one-row-group scan,
     # and persist — BOTH the eval side and the corpus side read `grams`
     # (unpersisted, the interpreted transform ran twice)
@@ -786,7 +782,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return F.aggregate(F.array_sort(arr), acc0, step, lambda a: a["best"])
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n = F.size(toks)
     empty = F.array().cast("array<string>")
@@ -877,7 +873,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flink_application_spark.catalog import fan_out
 
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     toks = F.filter(
         tokens(F.col("text")), lambda t: (t != "") & t.isNotNull()
     )
@@ -1016,7 +1012,7 @@ FROM scored
     tags=("text", "quality", "eval"),
 )
 def q_source_quality_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     good = F.when(quality_score(F.col("text")) >= 0.5, 1).otherwise(0)
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1089,7 +1085,7 @@ FROM alloc
     tags=("corpus", "quality", "curation", "sampling"),
 )
 def q_token_budget_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     scored = docs.select(
         "source",
         token_count(F.col("text")).alias("tok"),

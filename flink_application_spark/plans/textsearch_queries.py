@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.vectors import norm
 from flink_application_spark.operators.similarity import brute_force_topk_fold
 from flink_application_spark.plans.registry import register
@@ -67,7 +67,7 @@ WHERE rank <= {_K}
     tags=("documents", "vectorize", "similarity", "search"),
 )
 def q_text_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     vecs = (
         hashing_trick_features(docs)
         .select(F.col("doc_id").alias("vec_id"), "embedding")

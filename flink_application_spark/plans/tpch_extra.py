@@ -37,13 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tables = register_views(spark, sf_dir, tables=tuple(names))
-    return [tables[n] for n in names]
 
 
 def _rev():
@@ -79,7 +74,10 @@ ORDER BY supp_nation, cust_nation, l_year
     tags=("sql", "join", "agg"),
 )
 def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, s, o, c, n = _t(spark, sf_dir, "lineitem", "supplier", "orders", "customer", "nation")
+    li, s, o, c, n = (
+        table(spark, sf_dir, t)
+        for t in ("lineitem", "supplier", "orders", "customer", "nation")
+    )
     n1 = n.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
     pair = (
@@ -131,8 +129,9 @@ ORDER BY o_year
     tags=("sql", "join", "agg"),
 )
 def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p, s, o, c, n, r = _t(
-        spark, sf_dir, "lineitem", "part", "supplier", "orders", "customer", "nation", "region"
+    li, p, s, o, c, n, r = (
+        table(spark, sf_dir, t)
+        for t in ("lineitem", "part", "supplier", "orders", "customer", "nation", "region")
     )
     n1 = n.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("n2_key"), F.col("n_regionkey").alias("n2_region"))
@@ -187,7 +186,10 @@ ORDER BY nation, o_year DESC
     tags=("sql", "join", "agg"),
 )
 def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p, s, o, n = _t(spark, sf_dir, "lineitem", "part", "supplier", "orders", "nation")
+    li, p, s, o, n = (
+        table(spark, sf_dir, t)
+        for t in ("lineitem", "part", "supplier", "orders", "nation")
+    )
     return (
         li.join(F.broadcast(p.filter(F.col("p_name").like("%red%"))), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -226,7 +228,7 @@ ORDER BY custdist DESC, c_count DESC
     tags=("sql", "join", "agg"),
 )
 def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o = _t(spark, sf_dir, "customer", "orders")
+    c, o = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     per_cust = (
         c.join(
             o,
@@ -268,7 +270,7 @@ ORDER BY s_suppkey
     tags=("sql", "join", "agg", "subquery"),
 )
 def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, s = _t(spark, sf_dir, "lineitem", "supplier")
+    li, s = (table(spark, sf_dir, t) for t in ("lineitem", "supplier"))
     revenue = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -306,7 +308,7 @@ WHERE p.p_brand = 'Brand#23'
     tags=("sql", "join", "subquery"),
 )
 def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p = _t(spark, sf_dir, "lineitem", "part")
+    li, p = (table(spark, sf_dir, t) for t in ("lineitem", "part"))
     brand_parts = p.filter(F.col("p_brand") == "Brand#23").select("p_partkey")
     # Decorrelated: per-part average over ONLY the parts that survive the
     # brand filter (semi-join prune before the big agg).
@@ -344,7 +346,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
     tags=("sql", "join", "pushdown"),
 )
 def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p = _t(spark, sf_dir, "lineitem", "part")
+    li, p = (table(spark, sf_dir, t) for t in ("lineitem", "part"))
     qty = F.col("l_quantity")
     cond = (
         (
@@ -401,7 +403,7 @@ LIMIT 20
     tags=("sql", "join", "subquery", "topn"),
 )
 def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, s, o = _t(spark, sf_dir, "lineitem", "supplier", "orders")
+    li, s, o = (table(spark, sf_dir, t) for t in ("lineitem", "supplier", "orders"))
     l1 = li.alias("l1")
     l2 = li.select(F.col("l_orderkey").alias("l2_okey"), F.col("l_suppkey").alias("l2_skey"))
     l3 = li.filter(F.col("l_returnflag") == "R").select(
@@ -459,7 +461,7 @@ ORDER BY cntrycode
     tags=("sql", "join", "subquery"),
 )
 def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o = _t(spark, sf_dir, "customer", "orders")
+    c, o = (table(spark, sf_dir, t) for t in ("customer", "orders"))
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("_avg_bal"))
     return (
         c.join(F.broadcast(avg_bal))
@@ -510,7 +512,7 @@ ORDER BY p_type
     tags=("sql", "join", "window"),
 )
 def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p, s = _t(spark, sf_dir, "lineitem", "part", "supplier")
+    li, p, s = (table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier"))
     unit = F.col("l_extendedprice") / F.col("l_quantity")
     w = W.partitionBy("p_type").orderBy(
         F.col("unit_price").asc(),
@@ -554,7 +556,7 @@ ORDER BY l_returnflag
     tags=("sql", "join", "agg"),
 )
 def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, o = _t(spark, sf_dir, "lineitem", "orders")
+    li, o = (table(spark, sf_dir, t) for t in ("lineitem", "orders"))
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.filter(
@@ -594,7 +596,7 @@ ORDER BY part_revenue DESC, l_partkey
     tags=("sql", "agg", "subquery"),
 )
 def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     part_rev = (
         li.groupBy("l_partkey")
         .agg(F.round(F.sum(_rev()), 2).alias("part_revenue"))
@@ -633,7 +635,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     tags=("sql", "agg", "subquery"),
 )
 def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p, s = _t(spark, sf_dir, "lineitem", "part", "supplier")
+    li, p, s = (table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier"))
     bad = s.filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         li.join(
@@ -681,7 +683,7 @@ ORDER BY s_name
     tags=("sql", "subquery", "semi"),
 )
 def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, p, s = _t(spark, sf_dir, "lineitem", "part", "supplier")
+    li, p, s = (table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier"))
     heavy = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp_ntz"))
@@ -731,7 +733,7 @@ SELECT 'negative_prices',
     tags=("dq", "audit"),
 )
 def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, o, c = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    li, o, c = (table(spark, sf_dir, t) for t in ("lineitem", "orders", "customer"))
 
     def one(name: str, cnt_df: DataFrame) -> DataFrame:
         return cnt_df.select(F.lit(name).alias("check_name"), F.col("violations"))

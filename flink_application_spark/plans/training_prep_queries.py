@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -55,7 +55,7 @@ FROM ranked
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.export import with_epoch_shards
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return with_epoch_shards(
         docs.select("doc_id"), "doc_id", _EPOCH, _DOCS_PER_SHARD
     ).select("doc_id", "shard", "offset_in_shard")
@@ -95,7 +95,7 @@ FROM powed CROSS JOIN total
     tags=("documents", "training-prep", "mixture"),
 )
 def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     per_lang = docs.groupBy("lang").agg(
         F.sum(_n_tokens()).cast("bigint").alias("tokens")
     )
@@ -166,7 +166,7 @@ FROM sharded GROUP BY shard
 def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.export import with_epoch_shards
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     sharded = with_epoch_shards(
         docs.select("doc_id"), "doc_id", _EPOCH, _DOCS_PER_SHARD
     ).join(docs.select("doc_id", _n_tokens().cast("bigint").alias("n_tokens")), "doc_id")

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.registry import register
 
@@ -184,7 +184,7 @@ FROM ({_oracle_sql()})
     tags=("documents", "vectorize", "embeddings"),
 )
 def q_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return hashing_trick_features(docs).select(
         "doc_id",
         F.array_join(

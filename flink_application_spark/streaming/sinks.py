@@ -70,7 +70,8 @@ def _commit_arrow_batch(
     partition_by: tuple[str, ...],
     max_records_per_file: int | None,
 ) -> list[tuple[str, int, int]]:
-    """Write ``table`` (from `_collect_batch`) as ``root/_batch=<id>``:
+    """Write ``table`` (an Arrow table collected on the driver, its
+    partition columns in their string form) as ``root/_batch=<id>``:
     stage, swap in, then ``_SUCCESS``. Returns (path, rows, bytes) per
     data file."""
     import os
@@ -399,8 +400,8 @@ class SizeCalibratedRoller:
             self.max_records = self._cap(buf.tell(), sample.num_rows)
 
     def write_arrow(self, table, batch_id: int) -> None:
-        """Commit a micro-batch already collected as Arrow, its
-        partition columns in their string form (`_collect_batch`)."""
+        """Commit a micro-batch already collected as Arrow on the
+        driver, its partition columns in their string form."""
         if self.max_records is None:
             self._sample_calibrate(table)
         files = _commit_arrow_batch(

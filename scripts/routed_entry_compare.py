@@ -20,11 +20,9 @@ from __future__ import annotations
 import sys
 import time
 
-from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-from flink_application_spark.catalog import register_views  # noqa: E402
 from flink_application_spark.operators.graph_ann import (  # noqa: E402
     exact_topk_int,
     graph_ann_routed_search_topk,
@@ -33,6 +31,7 @@ from flink_application_spark.operators.graph_ann import (  # noqa: E402
 from flink_application_spark.plans._memo import (  # noqa: E402
     kmeans_fit_exact_cached,
     nn_descent_graph_cached,
+    nonnull_embeddings,
 )
 from flink_application_spark.session import get_spark  # noqa: E402
 
@@ -43,9 +42,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 50
     spark = get_spark("routed-entry-compare")
-    emb = register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    emb = nonnull_embeddings(spark, sf_dir)
     g, _ = nn_descent_graph_cached(spark, emb, sf_dir, _K, 3)
     g = g.persist()
     g.count()

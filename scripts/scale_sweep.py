@@ -215,10 +215,10 @@ def sweep_doc_queries(spark, sf_dir: str, replicas: list[int]) -> dict:
     import shutil
     import tempfile
 
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.plans.registry import REGISTRY_GET
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     results: dict[str, dict[int, float]] = {name: {} for name in DOC_QUERIES}
     root = tempfile.mkdtemp(prefix="scale_sweep_doc_")
     try:
@@ -257,10 +257,10 @@ def sweep_emb_queries(spark, sf_dir: str, replicas: list[int]) -> dict:
     import shutil
     import tempfile
 
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.plans.registry import REGISTRY_GET
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     results: dict[str, dict[int, float]] = {name: {} for name in EMB_QUERIES}
     root = tempfile.mkdtemp(prefix="scale_sweep_emb_")
     try:
@@ -291,14 +291,14 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     replicas = [int(a) for a in sys.argv[2:]] or [1, 2, 4, 8]
 
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.session import get_spark
 
     spark = get_spark(
         "scale-sweep", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
 
     results: dict[str, dict[int, float]] = {}
     for name, op in OPS.items():

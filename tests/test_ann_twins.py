@@ -91,10 +91,10 @@ def test_label_noise_exact_form_matches_operator(spark, sf_dir):
     brute-force form) and the operator's use_ann=False path must be the
     same audit — pin them against each other on driver data so the twin
     pair can't drift."""
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.plans.registry import REGISTRY_GET
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     via_op = label_noise_audit(
         emb, emb.select("vec_id", "label"), k=5, use_ann=False
     )

@@ -8,7 +8,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.bpe import (
     END,
     apply_merge,
@@ -49,7 +49,7 @@ def _py_bpe(word_counts: dict[str, int], n_merges: int):
 
 
 def _word_counts(spark, sf_dir) -> dict[str, int]:
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rows = (
         docs.select(
             F.explode(
@@ -66,14 +66,14 @@ def _word_counts(spark, sf_dir) -> dict[str, int]:
 
 
 def test_bpe_learn_matches_python_reference(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     got = bpe_learn(docs, n_merges=8)
     want, _ = _py_bpe(_word_counts(spark, sf_dir), 8)
     assert got == want
 
 
 def test_bpe_segment_matches_python_vocab(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rules = bpe_learn(docs, n_merges=8)
     seg = bpe_segment(word_symbol_counts(docs), rules)
     got = {r["word"]: r["syms"] for r in seg.collect()}
@@ -107,7 +107,7 @@ def test_bpe_token_counts_match_python(spark, sf_dir):
         r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
         for r in REGISTRY_GET("doc_bpe_token_counts").spark(spark, sf_dir).collect()
     }
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     rows = docs.select(
         "doc_id",
         F.filter(F.split(F.lower(F.trim("text")), r"\s+"), lambda t: t != "").alias(

@@ -8,7 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.cep import match_pattern
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -100,7 +100,7 @@ def test_single_step_pattern(spark):
 
 @pytest.mark.parametrize("within", [None, 3600])
 def test_corpus_agrees_with_reference(spark, sf_dir, within):
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     rows = [
         (r["user_id"], (r["ts"] - T0.replace(year=2024)).total_seconds(), r["event_type"])
         for r in ev.select("user_id", "ts", "event_type", "event_id")

@@ -4,13 +4,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.functions.text import tokens
 from flink_application_spark.plans.chunk_queries import _STRIDE, _WINDOW, chunk_windows
 
 
 def test_chunk_coverage_and_bounds(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     chunks = chunk_windows(docs).cache()
 
     # exact size law: chunk_tok == min(window, n_doc_tokens - start)

@@ -5,12 +5,12 @@ from __future__ import annotations
 
 import zlib
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.compress_queries import _LEVEL, compression_signals
 
 
 def test_compression_matches_python_zlib(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     got = {
         r["doc_id"]: (r["raw_bytes"], r["zlib_bytes"], r["ratio_ppm"])
         for r in compression_signals(docs).collect()

@@ -8,13 +8,13 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.export import read_shard, write_training_shards
 from flink_application_spark.plans.curation_queries import curate_corpus
 
 
 def test_curate_then_export_shards(spark, sf_dir, tmp_path):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     curated, funnel = curate_corpus(docs)
     stats = funnel.collect()[0]
     path = os.path.join(tmp_path, "curated_shards")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.dsir_queries import _TARGET, dsir_log_weights
 
 
@@ -13,7 +13,7 @@ def test_dsir_target_scores_higher_on_average(spark, sf_dir):
     per-token log ratio than the rest of the pool — that is the whole
     point of the likelihood-ratio scorer (the target's own tokens are
     upweighted in p_target)."""
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     w = dsir_log_weights(docs, F.col("source").isin(*_TARGET)).filter(
         F.col("n_tok") >= 1
     )
@@ -27,7 +27,7 @@ def test_dsir_target_scores_higher_on_average(spark, sf_dir):
 
 
 def test_dsir_every_doc_scored_once(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     w = dsir_log_weights(docs, F.col("source").isin(*_TARGET)).cache()
     assert w.count() == docs.count()
     assert w.select("doc_id").distinct().count() == docs.count()

@@ -17,7 +17,7 @@ import time
 
 import pyspark.sql.functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.sources.streams import file_stream
 
 _GAP_CLICK_S = 600     # 10 min
@@ -61,7 +61,7 @@ def _batch_reference(ev):
 
 def test_dynamic_gap_stream_equals_reference(spark, sf_dir, tmp_path):
     ev = (
-        register_views(spark, sf_dir, tables=("events",))["events"]
+        table(spark, sf_dir, "events")
         .select("event_id", "user_id", "ts", "event_type")
         .filter(F.col("user_id") < 40)  # keep the reference loop small
         .cache()

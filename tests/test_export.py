@@ -6,7 +6,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.export import (
     read_shard,
     with_epoch_shards,
@@ -15,7 +15,7 @@ from flink_application_spark.operators.export import (
 
 
 def test_shard_layout_and_counts(spark, sf_dir, tmp_path):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     path = os.path.join(tmp_path, "shards")
     n_shards = write_training_shards(docs, path, docs_per_shard=64)
     n_docs = docs.count()
@@ -31,7 +31,7 @@ def test_shard_layout_and_counts(spark, sf_dir, tmp_path):
 
 
 def test_shard_read_is_in_sample_order(spark, sf_dir, tmp_path):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     path = os.path.join(tmp_path, "shards")
     write_training_shards(docs, path, docs_per_shard=64)
     got = [r["offset_in_shard"] for r in read_shard(spark, path, 0).collect()]
@@ -39,7 +39,7 @@ def test_shard_read_is_in_sample_order(spark, sf_dir, tmp_path):
 
 
 def test_same_epoch_deterministic_different_epoch_reshuffles(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     a1 = {
         (r["doc_id"], r["shard"], r["offset_in_shard"])
         for r in with_epoch_shards(docs, "doc_id", 1, 64).collect()

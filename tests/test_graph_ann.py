@@ -8,7 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.graph_ann import (
     exact_topk_int,
     graph_ann_oracle_sql,
@@ -21,9 +21,7 @@ _K, _BEAM, _HOPS, _NQ = 6, 8, 3, 5
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    return table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
 
 def test_topk_matches_oracle(spark, sf_dir):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.graph_exact import (
     DAMP_PCT,
     TOTAL,
@@ -18,7 +18,7 @@ from flink_application_spark.operators.minhash import verified_near_dup_pairs
 
 
 def _edges(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return verified_near_dup_pairs(docs, threshold=0.5).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )

@@ -16,16 +16,14 @@ pytestmark = _pytest_tier.mark.slow  # e2e store tests — slow tier
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.graph_insert import graph_insert_waves
 
 _K, _BEAM, _HOPS, _NI, _NW = 6, 8, 2, 4, 2
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    return table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
 
 def _split(spark, sf_dir):

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
@@ -13,7 +13,7 @@ from flink_application_spark.operators.similarity import (
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    return table(spark, sf_dir, "embeddings")
 
 
 def test_full_probe_equals_bruteforce(spark, sf_dir):

@@ -18,9 +18,9 @@ _K = 10
 
 
 def _emb(spark):
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
 
-    return register_views(spark, _SF, tables=("embeddings",))["embeddings"]
+    return table(spark, _SF, "embeddings")
 
 
 @pytest.fixture(scope="module")

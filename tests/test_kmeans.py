@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans import (
     assign_clusters,
     init_centroids,
@@ -19,7 +19,7 @@ K = 8
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    df = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    df = table(spark, sf_dir, "embeddings")
     return df.filter(F.col("embedding").isNotNull()).cache()
 
 
@@ -134,15 +134,13 @@ def test_assign_arrow_bit_equals_fold(spark, sf_dir):
     (same left-to-right float64 accumulation, first-min argmin) — this
     equality is what lets the default impl change without touching any
     oracle."""
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.operators.kmeans import (
         assign_clusters,
         init_centroids,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     cents = init_centroids(emb, 8, "vec_id")
     fold = {
         r["vec_id"]: (r["cluster"], r["d2"])

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans_exact import (
     SCALE,
     kmeans_fit_exact_profile,
@@ -16,7 +16,7 @@ from flink_application_spark.operators.kmeans_exact import (
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    return table(spark, sf_dir, "embeddings")
 
 
 def test_inertia_non_increasing(spark, sf_dir):

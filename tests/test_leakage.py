@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.minhash import verified_near_dup_pairs
 from flink_application_spark.plans.dedup_queries import NEAR_DUP_THRESHOLD
 from flink_application_spark.plans.registry import REGISTRY_GET
@@ -20,7 +20,7 @@ def test_audit_finds_planted_leakage(spark, sf_dir):
 
 
 def test_component_split_has_zero_leakage(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     splits = REGISTRY_GET("doc_split_by_component").spark(spark, sf_dir)
     pairs = verified_near_dup_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
     crossing = (

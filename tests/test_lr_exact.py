@@ -19,9 +19,9 @@ _STEP, _L2 = 1.5, 0.001
 
 
 def _emb(spark):
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
 
-    return register_views(spark, _SF, tables=("embeddings",))["embeddings"]
+    return table(spark, _SF, "embeddings")
 
 
 def _round_half_away(x: np.ndarray) -> np.ndarray:

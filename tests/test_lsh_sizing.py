@@ -68,13 +68,11 @@ def test_chosen_scheme_achieves_measured_recall_on_corpus(spark):
         NEAR_DUP_THRESHOLD,
         lsh_recall_audit_frame,
     )
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
 
     target = 0.95
     k, r, b = size_lsh_for_recall(NEAR_DUP_THRESHOLD, target)
-    docs = register_views(spark, "/root/testdata/sf0.01", tables=("documents",))[
-        "documents"
-    ]
+    docs = table(spark, "/root/testdata/sf0.01", "documents")
     row = lsh_recall_audit_frame(docs, k=k, bands=b).collect()[0]
     assert row.n_exact > 0, "fixture must contain planted near-dups"
     assert row.recall_ppm >= int(target * 1_000_000), (
@@ -91,12 +89,12 @@ def test_registry_default_scheme_measured_vs_curve(spark, sf_dir):
         NEAR_DUP_THRESHOLD,
         lsh_recall_audit_frame,
     )
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
 
     predicted = lsh_candidate_recall(
         NEAR_DUP_THRESHOLD, DEFAULT_K // DEFAULT_BANDS, DEFAULT_BANDS
     )
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     row = lsh_recall_audit_frame(docs).collect()[0]
     assert row.n_exact > 0
     assert row.recall_ppm >= int(predicted * 1_000_000)

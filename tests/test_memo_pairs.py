@@ -7,7 +7,7 @@ tier — two sf0.001 LSH pipelines, seconds."""
 
 from __future__ import annotations
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans import _memo
 
 
@@ -16,7 +16,7 @@ def test_near_dup_pairs_memo_matches_inline_and_builds_once(spark, sf_dir):
         verified_near_dup_pairs,
     )
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     got = _memo.near_dup_pairs_cached(spark, docs, sf_dir, 0.5)
     again = _memo.near_dup_pairs_cached(spark, docs, sf_dir, 0.5)
     assert got is again  # memo hit — one pipeline per session/key
@@ -34,7 +34,7 @@ def test_near_dup_components_memo_matches_inline(spark, sf_dir):
         verified_near_dup_pairs,
     )
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     got = _memo.near_dup_components_cached(spark, docs, sf_dir, 0.5)
     again = _memo.near_dup_components_cached(spark, docs, sf_dir, 0.5)
     assert got is again  # memo hit — one CC loop per session/key
@@ -50,7 +50,7 @@ def test_near_dup_components_memo_matches_inline(spark, sf_dir):
 def test_near_dup_pairs_memo_keeps_one_live_entry_per_application(spark, sf_dir):
     from pyspark import StorageLevel
 
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     app_id = spark.sparkContext.applicationId
     first = _memo.near_dup_pairs_cached(spark, docs, sf_dir, 0.6)
     comp = _memo.near_dup_components_cached(spark, docs, sf_dir, 0.6)

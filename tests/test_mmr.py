@@ -6,12 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.similarity import brute_force_topk, mmr_rerank
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    return table(spark, sf_dir, "embeddings")
 
 
 def test_lambda_one_equals_cosine_ranking(spark, sf_dir):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.multimodal import (
     HEADER_LEN,
     decode_meta,
@@ -20,7 +20,7 @@ from flink_application_spark.operators.multimodal import (
 
 @pytest.fixture(scope="module")
 def media(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     return synth_media(docs).cache()
 
 
@@ -41,7 +41,7 @@ def test_synth_media_schema_and_magic(spark, media):
 
 
 def test_decode_meta_matches_construction(spark, media, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     meta = decode_meta(media)
     joined = meta.join(docs.select("doc_id", "n_chars"), "doc_id")
     bad = joined.filter(

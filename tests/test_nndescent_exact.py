@@ -11,7 +11,7 @@ import duckdb
 import numpy as np
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
 from flink_application_spark.operators.nndescent_exact import (
     knn_graph_exact_int,
@@ -25,9 +25,7 @@ _ITERS = 3
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    return table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
 
 def _oracle(sf_dir: str, mode: str):

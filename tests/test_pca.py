@@ -16,7 +16,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
 from flink_application_spark.operators.pca import collect_gram, mean_vector
 from flink_application_spark.operators.pca_exact import (
@@ -120,7 +120,7 @@ def test_projection_matches_numpy_reference(spark, sf_dir):
     float projection onto eigh's components."""
     from flink_application_spark.plans.registry import REGISTRY_GET
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     rows = emb.filter(F.col("embedding").isNotNull()).orderBy("vec_id").collect()
     x = np.array([r["embedding"] for r in rows], dtype=np.float64)
     e = np.rint(x * 1e6).astype(np.int64)

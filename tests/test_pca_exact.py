@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
 from flink_application_spark.operators.pca_exact import (
     int_gram_long,
@@ -16,9 +16,7 @@ from flink_application_spark.operators.pca_exact import (
 
 
 def _emb(spark, sf_dir):
-    return register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    return table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
 
 def test_int_gram_matches_numpy_reference(spark, sf_dir):

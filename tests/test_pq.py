@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.pq import pq_adc_topk, pq_encode, seed_codebooks
 
 _DIM = 64
@@ -14,7 +14,7 @@ def test_pq_seed_vectors_reconstruct_exactly(spark, sf_dir):
     """The k seed vectors ARE codebook entries in every subspace, so
     their quantization error is exactly zero; everyone else's is > 0
     (distinct vectors) and recon error never goes negative."""
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     books = seed_codebooks(emb, m=4, k=8, dim=_DIM)
     codes = pq_encode(emb, books, _DIM).cache()
     seed_ids = [
@@ -39,7 +39,7 @@ def test_pq_adc_beats_random_ranking(spark, sf_dir):
     """ADC with an 8-entry codebook is coarse, but its top-5 must still
     overlap the EXACT L2 top-5 far better than chance (sanity floor:
     >= 20% average overlap; chance is 5/499 ≈ 1%)."""
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     books = seed_codebooks(emb, m=4, k=8, dim=_DIM)
     codes = pq_encode(emb, books, _DIM).drop("recon_d2")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -86,7 +86,7 @@ def test_trained_codebooks_beat_seeded(spark):
     )
 
     sf = "/root/testdata/sf0.1"
-    emb = register_views(spark, sf, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf, "embeddings")
     seed = seed_codebooks(emb, m=4, k=8, dim=_DIM)
     trained = [
         [[c / SCALE for c in cv] for cv in book]
@@ -138,7 +138,7 @@ def test_pq_encode_arrow_bit_equals_fold(spark, sf_dir):
     """Arrow encode must be bit-identical to the literal-fold form
     (codes AND recon_d2) — the equality that keeps the oracle rows
     green across the default-impl switch."""
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     books = seed_codebooks(emb, m=4, k=8, dim=_DIM)
     fold = {r["vec_id"]: tuple(r)[1:] for r in pq_encode(emb, books, _DIM, impl="fold").collect()}
     arrow = {r["vec_id"]: tuple(r)[1:] for r in pq_encode(emb, books, _DIM, impl="arrow").collect()}

@@ -25,11 +25,9 @@ def test_sq8_recon_error_bounded_by_half_step(spark, sf_dir):
     """Dequantization error per coordinate is ≤ scale/2 by construction,
     so per-vector recon_d2 ≤ dim·(max_scale/2)² — a hard bound, not a
     statistical one."""
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     vals = emb.select(F.posexplode("embedding").alias("pos", "v")).select(
         "pos", F.col("v").cast("double").alias("val")
     )
@@ -52,13 +50,11 @@ def test_binary_hamming_self_is_zero_and_beats_chance(spark, sf_dir):
     """A vector's Hamming distance to itself is 0 (packing is total and
     deterministic), and binary top-10 must overlap the exact cosine
     top-10 far better than chance (sign bits encode direction)."""
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.operators.similarity import brute_force_topk
     from flink_application_spark.plans.quantize_extra import _pack_half_col
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))[
-        "embeddings"
-    ].filter(F.col("embedding").isNotNull())
+    emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     packed = emb.select(
         "vec_id",
         _pack_half_col(F.col("embedding"), 0).alias("b_lo"),

@@ -7,13 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.rangejoin import interval_point_join
 
 
 @pytest.fixture(scope="module")
 def sides(spark, sf_dir):
-    ev = register_views(spark, sf_dir, tables=("events",))["events"]
+    ev = table(spark, sf_dir, "events")
     points = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
     )

@@ -4,14 +4,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.semdedup import semdedup_flags
 
 _T = 0.3
 
 
 def test_semdedup_verdict_contracts(spark, sf_dir):
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     flags = semdedup_flags(emb, threshold=_T, k=8).cache()
 
     # every vector gets exactly one verdict
@@ -53,7 +53,7 @@ def test_close_pairs_arrow_bit_equals_fold(spark, sf_dir):
     )
     from flink_application_spark.operators.semdedup import _close_pairs_arrow
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     e = emb.filter(F.col("embedding").isNotNull())
     cents = init_centroids(e, 8, "vec_id")
     assigned = (
@@ -91,7 +91,7 @@ def test_close_pairs_arrow_multi_block_identical(spark, sf_dir, monkeypatch):
         init_centroids,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     e = emb.filter(F.col("embedding").isNotNull())
     cents = init_centroids(e, 8, "vec_id")
     assigned = (
@@ -106,7 +106,7 @@ def test_close_pairs_arrow_multi_block_identical(spark, sf_dir, monkeypatch):
 
 def test_semdedup_threshold_monotone(spark, sf_dir):
     """Raising the threshold can only keep MORE vectors."""
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     kept_loose = semdedup_flags(emb, threshold=0.25, k=8).filter("kept").count()
     kept_tight = semdedup_flags(emb, threshold=0.4, k=8).filter("kept").count()
     assert kept_tight >= kept_loose
@@ -122,7 +122,7 @@ def test_semdedup_split_caps_cluster_size(spark, sf_dir):
         semdedup_flags,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     cap = 60
     assigned = assign_with_split(emb, k=8, max_cluster_size=cap)
     sizes = assigned.groupBy("cluster").count()

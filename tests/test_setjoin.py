@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.minhash import jaccard_column, with_shingles
 from flink_application_spark.operators.setjoin import jaccard_similarity_join
 
@@ -56,7 +56,7 @@ def test_exact_dup_pair_found(spark, synth_docs):
 
 
 def test_matches_bruteforce_on_testdata(spark, sf_dir):
-    docs = register_views(spark, sf_dir, tables=("documents",))["documents"]
+    docs = table(spark, sf_dir, "documents")
     exact = _rows(jaccard_similarity_join(docs, 0.5))
     assert exact == _rows(_brute(docs, 0.5))
     assert len(exact) > 0, "threshold too high for testdata — weak test"

@@ -8,14 +8,14 @@ def test_multiprobe_recall_at_least_single_bucket(spark, sf_dir):
     dead weight)."""
     from pyspark.sql import functions as F
 
-    from flink_application_spark.catalog import register_views
+    from flink_application_spark.catalog import table
     from flink_application_spark.operators.similarity import (
         brute_force_topk,
         lsh_ann_topk,
         lsh_multiprobe_topk,
     )
 
-    emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
+    emb = table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 20)
     exact = {
         (r["query_id"], r["vec_id"])

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.plans.sketch_queries import (
     daily_user_sketches,
     rollup_sketches,
@@ -15,7 +15,7 @@ def test_hll_rollup_within_error_bounds(spark, sf_dir):
     """Union-merged per-type estimates must sit within HLL's error
     envelope of the exact distinct counts (default lgK=12 → ~1.6%
     standard error; assert a generous 5%)."""
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
     est = {
         r["event_type"]: r["est_users"]
         for r in rollup_sketches(daily_user_sketches(events)).collect()
@@ -35,7 +35,7 @@ def test_hll_merge_equals_direct_sketch(spark, sf_dir):
     """Merging daily sketches must estimate the same as sketching the
     whole slice directly — the mergeability contract that makes the
     sketch table a valid substitute for re-scanning raw data."""
-    events = register_views(spark, sf_dir, tables=("events",))["events"]
+    events = table(spark, sf_dir, "events")
     merged = {
         r["event_type"]: r["est_users"]
         for r in rollup_sketches(daily_user_sketches(events)).collect()

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_application_spark.catalog import register_views
+from flink_application_spark.catalog import table
 from flink_application_spark.operators.skew import (
     replicate_small_side,
     salted_aggregate,
@@ -29,8 +29,7 @@ def test_replicate_small_side(spark):
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
-    t = register_views(spark, sf_dir, tables=("orders", "customer"))
-    orders, cust = t["orders"], t["customer"]
+    orders, cust = (table(spark, sf_dir, t) for t in ("orders", "customer"))
     plain = orders.join(
         cust.select(F.col("c_custkey").alias("ck"), "c_name"),
         F.col("o_custkey") == F.col("ck"),
@@ -55,7 +54,7 @@ def test_salted_left_join_keeps_unmatched(spark):
 
 
 def test_salted_aggregate_avg_decomposition(spark, sf_dir):
-    li = register_views(spark, sf_dir, tables=("lineitem",))["lineitem"]
+    li = table(spark, sf_dir, "lineitem")
     out = salted_aggregate(
         li, ["l_linestatus"], [("l_quantity", "sum"), ("*", "count")], n_salts=8
     ).withColumn("avg_qty", F.round(F.col("sum_l_quantity") / F.col("count_star"), 6))
