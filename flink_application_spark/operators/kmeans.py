@@ -1,6 +1,6 @@
 """Float k-means ASSIGNMENT against given centroids, plus the
-deterministic seeding and sampling helpers — the pieces the seeded
-(untrained) index queries use. Training is exact-integer Lloyd's
+deterministic seeding helper — the pieces the seeded (untrained)
+index queries use. Training is exact-integer Lloyd's
 (`operators/kmeans_exact.py`).
 
 Assignment is a scan-local fold against *broadcast literal*
@@ -136,30 +136,3 @@ def init_centroids(
         raise ValueError(f"init_centroids: need {k} rows, found {len(rows)}")
     return [[float(x) for x in r[0]] for r in rows]
 
-
-def uniform_sample_rows(
-    df: DataFrame,
-    id_col: str,
-    cols: list[str],
-    sample_rows: int,
-) -> list:
-    """Deterministic UNIFORM bounded sample: bottom-`sample_rows` by
-    md5(id) rank (ties broken by id), returned sorted by id. md5 is
-    uncorrelated with ingest order, so unlike an id-prefix
-    (orderBy(id).limit(n)) this matches FAISS's uniform training-sample
-    discipline — ids typically correlate with source/time, and a prefix
-    would train codebooks on a biased head of the corpus. Spark plans
-    the orderBy+limit as a distributed TakeOrdered (no global sort),
-    and when sample_rows ≥ corpus rows the sample IS the corpus, so
-    small-scale results are bit-identical to the unsampled path. The
-    id-sorted return keeps k-smallest-id centroid seeding deterministic
-    (a bottom-k-by-md5 sample)."""
-    rank = F.md5(F.col(id_col).cast("string"))
-    rows = (
-        df.select(id_col, *cols)
-        .orderBy(rank, F.col(id_col))
-        .limit(sample_rows)
-        .collect()
-    )
-    rows.sort(key=lambda r: r[0])
-    return rows

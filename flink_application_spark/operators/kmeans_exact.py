@@ -25,8 +25,9 @@ Lloyd's rounds as CTE stages (`kmeans_exact_oracle_sql`) and must
 reproduce every number bit-for-bit. Quantization costs ~1e-6 relative
 coordinate error — irrelevant next to k-means' own local-optimum
 variance — and buys a verifiable trainer. The PQ codebooks
-(`pq_exact`), the IVF and IVFADC coarse quantizers and the OPQ
-comparison all train through `lloyd_ppm`.
+(`pq_exact`), the IVF and IVFADC coarse quantizers, the trained-IVF
+centroids of `similarity.train_centroids` and the OPQ comparison all
+train through `lloyd_ppm`.
 
 Scale shape: one broadcast-literal assignment pass fused with one
 posexplode partial-agg reduction per iteration (a single Spark job,

@@ -346,41 +346,29 @@ def train_centroids(
     n_centroids: int = 16,
     n_iter: int = 10,
     sample_cap: int = 8192,
-    seed: int = 42,
 ):
-    """Lloyd's k-means on a bounded, deterministic UNIFORM sample.
+    """IVF centroids from the exact-integer Lloyd's core
+    (`kmeans_exact.kmeans_fit_exact`) on a bounded UNIFORM sample.
 
-    Scale contract: only `sample_cap` vectors ever reach the driver —
-    sampled bottom-k by md5(vec_id) (`kmeans.uniform_sample_rows`, the
-    repo's one sanctioned bounded-sample primitive), NOT an id-prefix:
-    ids correlate with source/ingest order, so an orderBy(id).limit
-    head trains the quantizer on a biased slice of the corpus (the
-    round-4 ADVICE defect, fixed here too). The clustering itself is
-    O(sample × k × iter) numpy — the corpus is never collected. The
-    default cap is 512 samples per centroid at k=16 (FAISS guidance is
-    ~39-256 per centroid, so 8192 is conservative); below the cap the
-    sample IS the id-sorted corpus, bit-identical to the previous
-    full-collect behavior on the test fixtures. Returns a (k, dim)
-    float64 ndarray.
-    """
+    Only the bottom-`sample_cap` rows by md5(vec_id) are trained on,
+    and that hash is the core's id column, so its k-smallest-id seeds
+    are md5-uniform too. An id-prefix is not: ids correlate with
+    source/ingest order, so an orderBy(id).limit head trains the
+    quantizer on a biased slice of the corpus (with id-prefix seeds the
+    clustered partial-probe tests in tests/test_ann_twins.py lose
+    triplets). Spark plans the sample as a distributed TakeOrdered; each
+    Lloyd's round is one Spark job and the driver holds k·d integers.
+    The default cap is 512 samples per centroid at k=16 (FAISS guidance
+    is ~39-256). Returns the ppm centroids / 1e6 as a (k, dim) float64
+    ndarray."""
     import numpy as np
 
-    from flink_application_spark.operators.kmeans import uniform_sample_rows
+    from flink_application_spark.operators.kmeans_exact import kmeans_fit_exact
 
-    sample = uniform_sample_rows(corpus, "vec_id", ["embedding"], sample_cap)
-    x = np.array([r.embedding for r in sample], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(n_iter):
-        # assign to nearest centroid by cosine (normalize both sides)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-        assign = np.argmax(xn @ cn.T, axis=1)
-        for c in range(len(cents)):
-            members = x[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return cents
+    h = F.md5(F.col("vec_id").cast("string")).alias("h")
+    sample = corpus.select(h, "embedding").orderBy("h").limit(sample_cap)
+    cents, _ = kmeans_fit_exact(sample, n_centroids, n_iter, id_col="h")
+    return np.asarray(cents, dtype=np.float64) / 1e6
 
 
 def _assign_udf(centroids, n_probe: int):
@@ -434,30 +422,22 @@ def _pair_cosine(qv: Column, emb: Column, est_pairs: int | None) -> Column:
     return F.round(cosine(qv, emb), 6)
 
 
-def ivf_topk(
+def ivf_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int = 5,
+    *,
     n_centroids: int = 16,
     n_probe: int = 4,
     centroids=None,
     est_pairs: int | None = None,
 ) -> DataFrame:
-    """IVF ANN: corpus vectors are inverted-listed under their nearest
+    """IVF candidate generation + cosine scoring over trained
+    centroids: corpus vectors are inverted-listed under their nearest
     centroid (1 assignment pass, Arrow-batched); queries probe their
     `n_probe` nearest centroids and only scan those lists (equi-join on
-    centroid id — no cross product). n_probe = n_centroids degrades to
-    exact brute force; recall tunes monotonically in between.
-
-    At 100 TB: centroids come from a driver-bounded sample, the corpus
-    assignment is a narrow scan writing (centroid_id, vec) —
-    re-partitionable/bucketable by centroid_id so each probe touches
-    only matching partitions (partition pruning on the list id).
-    When even the training sample shouldn't bottleneck on the driver,
-    pass `centroids=np.asarray(kmeans_exact.kmeans_fit_exact(...)[0]) / 1e6`
-    — the fully-distributed exact Lloyd's trainer slots into the same
-    index (recall-tested in tests/test_ivf.py).
-    """
+    centroid id — no cross product). Returns distinct (query_id,
+    vec_id, cosine) with cosine rounded to 6 — self-matches excluded.
+    Centroids default to `train_centroids(corpus, n_centroids)`."""
     if centroids is None:
         centroids = train_centroids(corpus, n_centroids=n_centroids)
 
@@ -471,7 +451,7 @@ def ivf_topk(
         F.col("embedding").alias("qv"),
         F.explode(assignp(F.col("embedding"))).alias("cluster"),
     )
-    scored = (
+    return (
         c.join(F.broadcast(q), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -488,7 +468,40 @@ def ivf_topk(
         )
         .distinct()  # a (query, vec) pair can meet in several probed lists
     )
-    return _topk_per_query(scored, k)
+
+
+def ivf_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    n_centroids: int = 16,
+    n_probe: int = 4,
+    centroids=None,
+    est_pairs: int | None = None,
+) -> DataFrame:
+    """IVF ANN top-k over `ivf_candidates`. n_probe = n_centroids
+    degrades to exact brute force; recall tunes monotonically in
+    between.
+
+    At 100 TB: centroids come from a driver-bounded sample trained by
+    the exact-integer Lloyd's core (`train_centroids`), the corpus
+    assignment is a narrow scan writing (centroid_id, vec) —
+    re-partitionable/bucketable by centroid_id so each probe touches
+    only matching partitions (partition pruning on the list id). Pass
+    `centroids=` to reuse an index trained elsewhere (recall-tested in
+    tests/test_ivf.py).
+    """
+    return _topk_per_query(
+        ivf_candidates(
+            queries,
+            corpus,
+            n_centroids=n_centroids,
+            n_probe=n_probe,
+            centroids=centroids,
+            est_pairs=est_pairs,
+        ),
+        k,
+    )
 
 
 def ivf_candidates_seeded(
@@ -680,29 +693,12 @@ def radius_search(
     from flink_application_spark.functions.vectors import dot, norm
 
     if use_ann:
-        if centroids is None:
-            centroids = train_centroids(corpus, n_centroids=n_centroids)
-        assign1 = _assign_udf(centroids, 1)
-        c = corpus.select(
-            "vec_id",
-            "embedding",
-            F.element_at(assign1(F.col("embedding")), 1).alias("cluster"),
-        )
-        assignp = _assign_udf(centroids, n_probe)
-        q = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.explode(assignp(F.col("embedding"))).alias("cluster"),
-        )
-        scored = (
-            c.join(F.broadcast(q), "cluster")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-            )
-            .distinct()  # a (query, vec) pair can meet in several probed lists
+        scored = ivf_candidates(
+            queries,
+            corpus,
+            n_centroids=n_centroids,
+            n_probe=n_probe,
+            centroids=centroids,
         )
     else:
         q = F.broadcast(

@@ -56,9 +56,11 @@ _ANN = dict(n_centroids=16, n_probe=4)
 # centroids = embeddings of the k smallest corpus vec_ids, argmin-d2
 # assignment, d2-ranked probes — the emb_ivf_recall_curve machinery,
 # hash-green since r04) with the identical downstream aggregates; the
-# TRAINED-centroid path keeps its pytest recall/agreement contracts
-# (tests/test_ivf.py, tests/test_ann_twins.py); its registered form is
-# the exact-integer emb_ivf_exact_trained_topk.
+# TRAINED-centroid path (`similarity.train_centroids`, exact-integer
+# Lloyd's on an md5-uniform sample) keeps its pytest recall/agreement
+# contracts (tests/test_ivf.py, tests/test_ann_twins.py); its
+# registered forms are emb_ivf_full_probe_exact and the all-integer
+# emb_ivf_exact_trained_topk.
 
 _D2 = (
     "list_sum(list_transform(list_zip({a}, {b}),"

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_application_spark.catalog import table
+from flink_application_spark.catalog import _keep_application, table
 from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.operators.enrichment import (
     coalesce_enrich,
@@ -96,15 +96,26 @@ def fixture_cte(*names: str, extra: dict[str, str] | None = None) -> str:
     return "WITH " + ",\n".join(parts)
 
 
+# (applicationId, sf_dir) -> (events handle, derived fixture frames)
+_FIXTURES: dict[tuple, tuple[DataFrame, dict[str, DataFrame]]] = {}
+
+
 def cdr_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register base tables + derived CDR fixture views; return handles."""
-    table(spark, sf_dir, "events")
-    out: dict[str, DataFrame] = {}
-    for name, sql in FIXTURE_VIEWS.items():
-        df = spark.sql(sql)
+    """Register base tables + derived CDR fixture views; return handles.
+
+    The derived frames are built once per `events` handle: a rewritten
+    file or a new application gets a new handle from `catalog.table`,
+    which rebuilds them. The temp views are re-bound on every call."""
+    events = table(spark, sf_dir, "events")
+    key = (spark.sparkContext.applicationId, sf_dir)
+    hit = _FIXTURES.get(key)
+    if hit is None or hit[0] is not events:
+        _keep_application(_FIXTURES, key[0])
+        frames = {name: spark.sql(sql) for name, sql in FIXTURE_VIEWS.items()}
+        hit = _FIXTURES[key] = (events, frames)
+    for name, df in hit[1].items():
         df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+    return dict(hit[1])
 
 
 # Canonical output schema: src columns + partition columns

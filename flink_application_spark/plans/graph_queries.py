@@ -6,8 +6,7 @@ member of a boilerplate family is the best canonical representative
 (and the strongest removal signal for the rest). Composes the existing
 near-dup machinery (`verified_near_dup_pairs`) with the exact-integer
 `operators/graph_exact.py:pagerank_exact` loop, whose rounds DuckDB
-replays as MATERIALIZED CTE stages — both PageRank queries carry an
-oracle.
+replays as MATERIALIZED CTE stages.
 """
 
 from __future__ import annotations
@@ -20,7 +19,11 @@ from flink_application_spark.plans.dedup_queries import NEAR_DUP_THRESHOLD
 from flink_application_spark.plans.registry import register
 
 
-def _pagerank_exact_oracle(iters: int) -> str:
+# PageRank rounds, run by the query and replayed by its oracle
+ROUNDS = 15
+
+
+def _pagerank_exact_oracle() -> str:
     from flink_application_spark.operators.graph_exact import (
         pagerank_exact_oracle_sql,
     )
@@ -46,7 +49,7 @@ edges AS (
   WHERE {JACCARD_SQL} >= {NEAR_DUP_THRESHOLD}
 )"""
     )
-    return "WITH " + pagerank_exact_oracle_sql(edge_cte, iters=iters)
+    return "WITH " + pagerank_exact_oracle_sql(edge_cte, iters=ROUNDS)
 
 
 def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +68,7 @@ def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # division of exact integers below 2^53 on both engines, so the
     # double hashes identically without a round()
     "SELECT doc_id, CAST(rank AS DOUBLE) / 1e12 AS rank FROM ("
-    + _pagerank_exact_oracle(15)
+    + _pagerank_exact_oracle()
     + ")",
     doc="PageRank over the verified near-dup pair graph (damping 0.85, "
     "15 rounds), rank as a fraction of unit mass: the exact-integer "
@@ -79,34 +82,10 @@ def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_application_spark.operators.graph_exact import TOTAL, pagerank_exact
 
-    pr = pagerank_exact(_near_dup_edges(spark, sf_dir), iters=15)
+    pr = pagerank_exact(_near_dup_edges(spark, sf_dir), iters=ROUNDS)
     return pr.select(
         F.col("id").alias("doc_id"),
         (F.col("rank").cast("double") / F.lit(float(TOTAL))).alias("rank"),
-    )
-
-
-@register(
-    "doc_simgraph_pagerank_exact",
-    _pagerank_exact_oracle(12),
-    doc="Exact-integer PageRank over the verified near-dup graph "
-    "(operators/graph_exact.py) — the graph-iteration blocker class "
-    "made oracle-verifiable: rank mass in integer 1e12 units, "
-    "contributions shipped as truncating rank div deg, damped update "
-    "(15·T)//(100·n) + (85·inflow)//100 — every reduction an exact "
-    "integer sum (order-free), so the 12-round fixpoint is "
-    "bit-deterministic and DuckDB replays it as MATERIALIZED CTE "
-    "stages over the same shingle/LSH/verify edge SQL the graph "
-    "siblings use. doc_simgraph_pagerank reads the same core at 15 "
-    "rounds as a fraction; numpy-PageRank agreement + Python-reference "
-    "parity in tests/test_graph_exact.py.",
-    tags=("documents", "graph", "dedup", "deterministic"),
-)
-def q_simgraph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.operators.graph_exact import pagerank_exact
-
-    return pagerank_exact(_near_dup_edges(spark, sf_dir), iters=12).select(
-        F.col("id").alias("doc_id"), "rank"
     )
 
 

@@ -208,7 +208,8 @@ SAMPLE_WINDOW = [
     # the full 13-name r05-evidence residue from the round-10 comment
     "emb_semdedup_cluster_stats",
     "events_funnel_time_to_convert",
-    "events_hll_user_rollup",
+    # the oracle-checked HLL rollup, in its retired twin's slot
+    "events_hll_det_rollup",
     "events_props_variant_stats",
     "events_seasonal_baseline_anomaly",
     "market_basket_part_pairs",

@@ -1,18 +1,13 @@
-"""Re-aggregatable distinct-count sketches (Apache DataSketches HLL,
-exposed by Spark as ``hll_sketch_agg`` / ``hll_union_agg``).
+"""Re-aggregatable distinct-count sketches: the deterministic
+mergeable HLL of `operators/hll.py`.
 
 This is the 100 TB cardinality shape: build a tiny sketch PER PARTITION
 SLICE (here per event-type × day), persist/ship the sketches, and
-re-aggregate by UNION — rollups over any dimension subset without
-re-scanning the raw events. A plain ``approx_count_distinct`` answers
-one query; a sketch TABLE answers every rollup after one corpus pass
-(the sketch column is mergeable state, same philosophy as the
-streaming heavy-hitters' additive count-min partials).
-
-Estimates are engine-specific (DataSketches internals), so the query is
-rows-only at the driver gate; `tests/test_sketches.py` pins the
-estimate within HLL's published error bounds against the exact
-distinct count and proves union-merge == direct-sketch on the union.
+re-aggregate by register-wise max — rollups over any dimension subset
+without re-scanning the raw events. A plain ``approx_count_distinct``
+answers one query; a sketch TABLE answers every rollup after one corpus
+pass (the sketch is mergeable state). Every step is integer or exact
+string surgery on md5, so the DuckDB oracle replays it bit-for-bit.
 """
 
 from __future__ import annotations
@@ -21,55 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import table
 from flink_application_spark.plans.registry import register
-
-
-def daily_user_sketches(events: DataFrame) -> DataFrame:
-    """(event_type, day, sketch, n_rows): one HLL sketch of user_id per
-    type × day slice — the mergeable building block."""
-    return (
-        events.select(
-            "event_type", F.to_date("ts").alias("day"), "user_id"
-        )
-        .groupBy("event_type", "day")
-        .agg(
-            F.hll_sketch_agg("user_id").alias("sketch"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-def rollup_sketches(daily: DataFrame) -> DataFrame:
-    """Union-merge the daily sketches up to per-type totals — no
-    re-scan of the raw table, just sketch state."""
-    return (
-        daily.groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("est_users"),
-            F.sum("n_rows").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_days"),
-        )
-    )
-
-
-@register(
-    "events_hll_user_rollup",
-    None,  # DataSketches estimates are engine-specific — bounds pinned in pytest
-    doc="Mergeable HLL distinct-user rollup: per (event_type, day) "
-    "sketches built in ONE events pass, union-aggregated to per-type "
-    "totals. The sketch table is the scale artifact — any dimensional "
-    "rollup afterwards merges kilobyte sketches instead of re-scanning "
-    "100 TB. Estimate accuracy and merge-equals-direct pinned in "
-    "tests/test_sketches.py.",
-    tags=("events", "sketch", "approx"),
-)
-def q_hll_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table(spark, sf_dir, "events")
-    return rollup_sketches(daily_user_sketches(events)).select(
-        "event_type",
-        F.col("est_users").cast("bigint").alias("est_users"),
-        "n_rows",
-        "n_days",
-    )
 
 
 def _det_hll_oracle() -> str:
@@ -149,9 +95,9 @@ FROM scored s JOIN totals t ON t.event_type = s.event_type
     "sketches (md5 register/rank by exact string surgery, rank capped "
     "at 32 so the harmonic sum is an exact BIGINT), max-merged to "
     "per-type sketches, then the α·m²·2³²/S estimate with the "
-    "small-range linear-counting correction. Same 100 TB "
-    "merge-not-rescan shape as events_hll_user_rollup, but every bit "
-    "is engine-portable — the oracle replays it exactly (the sketch "
+    "small-range linear-counting correction. The 100 TB "
+    "merge-not-rescan shape, with every bit engine-portable — the "
+    "oracle replays it exactly (the sketch "
     "analogue of the seeded-IVF/integer-MMR determinism recipe). "
     "Accuracy vs exact distinct + merge==direct + Python parity in "
     "tests/test_det_hll.py.",

@@ -144,7 +144,7 @@ DOC_QUERIES = [
     # round-8: exact-integer PageRank over the near-dup graph — the
     # replica token-suffix keeps shingle spaces disjoint, so the graph
     # is r disjoint copies and edges grow linearly
-    "doc_simgraph_pagerank_exact",
+    "doc_simgraph_pagerank",
 ]
 
 # Exact twins whose DuckDB oracle wall is recorded SEPARATELY
@@ -154,7 +154,7 @@ DOC_QUERIES = [
 ORACLE_TIMED = {
     "emb_kmeans_fit_exact_profile",
     "emb_pca_power_exact",
-    "doc_simgraph_pagerank_exact",
+    "doc_simgraph_pagerank",
     # round-9 unrolled oracles (authored MATERIALIZED from the start;
     # the kmeans-replay lesson says measure, don't assume)
     "emb_knn_graph_nndescent",

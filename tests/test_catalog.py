@@ -1,6 +1,7 @@
 """catalog.table — one handle per table file version per application,
-its temp view bound on every call — and the one-application rule every
-session memo follows."""
+its temp view bound on every call — the CDR fixture frames built once
+per `events` handle, and the one-application rule every session memo
+follows."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 
 from flink_application_spark import catalog
 from flink_application_spark.operators import kmeans_exact, nndescent_exact
-from flink_application_spark.plans import _memo, lr_queries
+from flink_application_spark.plans import _memo, cdr, lr_queries
 
 
 @pytest.fixture
@@ -125,3 +126,48 @@ def test_a_new_application_evicts_the_last_ones_entries(memo, fill, tmp_path, mo
     assert {k[0] for k in getattr(module, name)} == {"app-a"}
     fill(_App("app-b"), tmp_path, monkeypatch)
     assert {k[0] for k in getattr(module, name)} == {"app-b"}
+
+
+@pytest.fixture
+def cdr_fixture_views(spark, sf_dir):
+    """Leave ``events`` and the CDR fixture views on the session's
+    testdata after the test."""
+    yield
+    cdr.cdr_views(spark, sf_dir)
+
+
+def _write_events(sf: str, n: int) -> None:
+    import datetime as dt
+
+    ts = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": list(range(n)),
+                "ts": [ts] * n,
+                "user_id": list(range(n)),
+                "event_type": ["signup"] * n,
+            }
+        ),
+        f"{sf}/events.parquet",
+    )
+
+
+def test_cdr_fixture_frames_are_built_once_and_views_rebound(
+    spark, sf_dir, cdr_fixture_views
+):
+    first = cdr.cdr_views(spark, sf_dir)
+    spark.catalog.dropTempView("ms_ip")
+    again = cdr.cdr_views(spark, sf_dir)
+    assert all(again[n] is first[n] for n in cdr.FIXTURE_VIEWS)
+    assert spark.sql("FROM ms_ip").count() == first["ms_ip"].count()
+
+
+def test_cdr_fixture_frames_follow_a_rewritten_events_file(
+    spark, tmp_path, cdr_fixture_views
+):
+    _write_events(str(tmp_path), 3)
+    assert cdr.cdr_views(spark, str(tmp_path))["cdr_src"].count() == 3
+    _write_events(str(tmp_path), 5)
+    assert cdr.cdr_views(spark, str(tmp_path))["cdr_src"].count() == 5
+    assert spark.sql("FROM ms_ip").count() == 5

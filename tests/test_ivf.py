@@ -176,3 +176,23 @@ def test_ivf_with_distributed_lloyd_centroids(spark):
     g = {(r.query_id, r.vec_id) for r in ivf.collect()}
     recall = len(e & g) / len(e)
     assert recall >= 0.9, f"recall {recall:.2f} too low"
+
+
+def test_centroids_train_on_the_md5_bottom_k_sample(spark):
+    """Above `sample_cap` only the bottom-cap rows by md5(vec_id) reach
+    the trainer: with k = 1 and one round the centroid is the sample's
+    rounded ppm mean, not the corpus mean nor the id-prefix mean."""
+    import hashlib
+
+    n, cap = 40, 12
+    df = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(n)], "vec_id long, embedding array<double>"
+    )
+    bottom = sorted(range(n), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    got = train_centroids(df, n_centroids=1, n_iter=1, sample_cap=cap)
+
+    def mean_ppm(ids):  # Spark's HALF_UP round of a nonnegative quotient
+        return int(sum(i * 1_000_000 for i in ids) / len(ids) + 0.5) / 1e6
+
+    assert got.tolist() == [[mean_ppm(bottom[:cap])]]
+    assert mean_ppm(bottom[:cap]) not in (mean_ppm(range(n)), mean_ppm(range(cap)))

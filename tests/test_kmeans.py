@@ -175,27 +175,3 @@ def test_assign_null_embedding_is_null_both_impls(spark):
         assert rows[2] == (None, None), (impl, rows[2])
         assert rows[1] == (1, 0.0), (impl, rows[1])
 
-
-def test_uniform_sample_is_md5_bottom_k_not_id_prefix(spark):
-    """uniform_sample_rows must take the bottom-k by md5(id) — a
-    UNIFORM deterministic sample — not the k smallest ids (round-4
-    ADVICE: ids correlate with ingest order, so an id-prefix trains
-    codebooks on a biased head of the corpus; FAISS samples uniformly)."""
-    import hashlib
-
-    from flink_application_spark.operators.kmeans import uniform_sample_rows
-
-    n, k = 200, 40
-    df = spark.createDataFrame(
-        [(i, [float(i)]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    got = [r[0] for r in uniform_sample_rows(df, "vec_id", ["embedding"], k)]
-    expect = sorted(
-        sorted(range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:k]
-    )
-    assert got == expect
-    # and it is NOT the id-prefix the old implementation took
-    assert got != list(range(k))
-    # returned id-sorted so k-smallest-id-in-sample seeding stays deterministic
-    assert got == sorted(got)

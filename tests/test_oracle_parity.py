@@ -87,7 +87,6 @@ ROWS_ONLY = {
     "agg_approx_sketches",
     "doc_compression_ratio",
     "emb_opq_pq_compare",
-    "events_hll_user_rollup",
 }
 
 

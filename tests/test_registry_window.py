@@ -45,7 +45,7 @@ MUST_BE_IN_WINDOW = {
     # the r05-evidence residue (oldest driver rows in the registry)
     "emb_semdedup_cluster_stats",
     "events_funnel_time_to_convert",
-    "events_hll_user_rollup",
+    "events_hll_det_rollup",
     "events_props_variant_stats",
     "events_seasonal_baseline_anomaly",
     "market_basket_part_pairs",
@@ -75,6 +75,11 @@ RENAMED = {
     "emb_pq_trained_adc_topk": "emb_pq_exact_trained_adc_topk",
     "emb_ivf_ann_topk": "emb_ivf_exact_trained_topk",
     "emb_pca_top_component": "emb_pca_top2_projection",
+    # twins of one computation: the rows-only DataSketches HLL rollup
+    # and the 12-round integer PageRank, each kept as its
+    # oracle-backed, already driver-sampled twin
+    "events_hll_user_rollup": "events_hll_det_rollup",
+    "doc_simgraph_pagerank_exact": "doc_simgraph_pagerank",
 }
 
 
